@@ -20,7 +20,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import sys
 import time
 
@@ -80,7 +79,8 @@ def build_spark(cpus: int, app: str) -> SparkSession:
                 os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark_local"))
         .config("spark.ui.enabled", "false")
         # lz4 snapshots: measured vs snappy/zstd/uncompressed on the 21M
-        # row snapshot (scripts/exp_write_scaling.py) — fastest encode at
+        # row snapshot (A/B script in commit 0faac79,
+        # scripts/exp_write_scaling.py) — fastest encode at
         # BOTH parallelism levels and near-best size; uncompressed writes
         # scale at 0.30 (tmpfs page traffic), compression is a scaling
         # feature here, not just a size one
@@ -89,7 +89,7 @@ def build_spark(cpus: int, app: str) -> SparkSession:
         # bucket-sorted snapshots are written with exactly one file per
         # bucket (pre-repartitioned on the bucket key), so the scan can
         # expose the per-bucket sort order and the politeness rank's
-        # window runs sort-free (see snapshot_bucket_sorted)
+        # window runs sort-free (SnapshotStore.write_table_bucketed)
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.session.timeZone", "UTC")
     )
@@ -126,197 +126,61 @@ def cpu_probe() -> float:
 
 SNAP_DIR = os.environ.get("SPARK_GRAFT_SNAP_DIR", "/dev/shm/spark_graft_bench")
 
-# first_occurrence physical strategy for the frontier jobs: "window"
-# because a scheduling round's input frontier is unique-heavy (see
-# operators/dedup.py docstring) — the engine's own link-expansion dedup
-# keeps the "agg" default, where duplicates ARE collapsed map-side.
-DEDUP_STRATEGY = os.environ.get("SPARK_GRAFT_DEDUP_STRATEGY", "window")
+# Frontier-job shape, measured and fixed (A/B scripts and their results:
+# BENCH/NOTES_r0*.md, BENCH/history.json):
+#
+# * first_occurrence strategy "window": a scheduling round's input
+#   frontier is unique-heavy (see operators/dedup.py), so the min-struct
+#   agg's map-side sort collapses nothing — measured 46.0 s (agg) vs
+#   34.4 s (window) at c16, 111.6 vs 116.6 at c4 on the 32M core.
+# * round snapshot bucket-sorted on (host, _salt) through
+#   SnapshotStore.write_table_bucketed: the rank's single payload
+#   exchange moves BEFORE the write, and the read-back scan satisfies the
+#   rank's clustering AND ordering, so rank_presalted runs with no
+#   payload exchange, no sort and no driver stats barrier. Clean-pair
+#   schedule job moved from eff ~0.59 (flat parquet + adaptive rank) to
+#   0.80.
 
-# round-snapshot layout:
-#  * "flat"       — plain parquet; the rank then exchanges + sorts.
-#  * "bucketed"   — BUCKETED BY (host, _salt), NO pre-shuffle: MEASURED
-#    WORSE (8M rows, local[16], clean probes): write 49.6 s vs flat
-#    8.9 s (64 map tasks × 256 buckets = 16k parquet writers), rank over
-#    the 16k-file scan 22.4 s vs 7.4 s adaptive-over-flat.
-#  * "bucketsort" — repartition(n, host, _salt) THEN bucketBy(n).sortBy
-#    (host, _salt, priority, seq): the same single payload exchange the
-#    rank used to do, moved BEFORE the write, yielding exactly ONE file
-#    per bucket (repartition and bucketBy share the Murmur3 pmod);
-#    the read-back scan then satisfies the rank's clustering AND
-#    ordering (legacy.bucketedTableScan.outputOrdering + single file per
-#    bucket), so rank_presalted runs with ZERO payload exchange, ZERO
-#    sort, and no driver stats barrier. Cluster analog: the Iceberg
-#    frontier snapshot bucket-sorted on (host-hash, seq-range).
-#    SHIPPED DEFAULT — clean-pair schedule job moved from eff ~0.59
-#    (flat) to 0.80: the layout turns the rank's exchange+sort+stats
-#    barrier into write-side work that scales with cores.
-SNAPSHOT_LAYOUT = os.environ.get("SPARK_GRAFT_SNAPSHOT_LAYOUT", "bucketsort")
-
-# where the frontier jobs compute the host column: "early" (at canon
-# time, before the dedup exchange) or "late" (after dedup + seen
-# anti-join, before the layout exchange that needs it). Host is a pure
-# function of the URL, so both are result-identical; the trade is
-# shuffle width vs fixed stage cost. "late" keeps ~18B/row of host
-# strings out of the job's biggest shuffle and only extracts hosts for
-# surviving rows — it wins when shuffle bandwidth is the contended
-# resource (in-JVM alternating A/B, scripts/exp_host_late.py, 32M rows:
-# late/early median 0.91 over 8 pairs at c16, 0.96 at c4). But at the
-# driver's small shape (2M rows, local[32]) the shuffle is cheap and
-# late's extra projection stage dominates: early won all 3 interleaved
-# rounds, median 6.0 s vs 8.2 s (BENCH/driver_shape_ab.jsonl, r04).
-# Default "auto" picks by INPUT SIZE ONLY (never by core count): a
-# cluster job's physical plan must be a function of the data, not the
-# cluster size, or an N->4N scaling comparison compares two different
-# engines. Measured bracketing: early wins at 2M rows, late wins at 32M
-# (both c4 and c16); the 4M threshold keeps every scaling shape (6M
-# round / 32M schedule) on the measured late branch while the driver's
-# 2M shape gets early. Explicit "early"/"late" still force one branch.
-HOST_STAGE = os.environ.get("SPARK_GRAFT_HOST_STAGE", "auto")
-if HOST_STAGE not in ("early", "late", "auto"):
-    # a typo'd value would silently skip host extraction in BOTH branches
-    # and fail much later with an opaque unresolved-column error at
-    # presalt/snapshot time (ADVICE r03)
-    raise ValueError(
-        "SPARK_GRAFT_HOST_STAGE must be 'early', 'late' or 'auto', "
-        f"got {HOST_STAGE!r}")
-
-# total-rows crossover for HOST_STAGE="auto" (see bracketing above)
-HOST_AUTO_MAX_EARLY_ROWS = int(
-    os.environ.get("SPARK_GRAFT_HOST_AUTO_ROWS", str(4_000_000)))
+# total-rows crossover for resolve_host_stage
+HOST_MAX_EARLY_ROWS = 4_000_000
 
 
 def resolve_host_stage(n_rows: int, cpus: int) -> str:
-    """Resolve HOST_STAGE="auto" to early/late for a concrete job shape.
+    """Where the frontier jobs compute the host column: "early" (at canon
+    time, before the dedup exchange) or "late" (after dedup + seen
+    anti-join, before the layout exchange that needs it). Host is a pure
+    function of the URL, so both are result-identical; the trade is
+    shuffle width vs fixed stage cost. "late" keeps ~18B/row of host
+    strings out of the job's biggest shuffle and only extracts hosts for
+    surviving rows — it wins when shuffle bandwidth is the contended
+    resource (32M rows: late/early median 0.91 over 8 pairs at c16, 0.96
+    at c4; A/B script in commit ec1bc1b, scripts/exp_host_late.py). At
+    the driver's small shape (2M rows, local[32]) late's extra projection
+    stage dominates: early won all 3 interleaved rounds, median 6.0 s vs
+    8.2 s (BENCH/driver_shape_ab.jsonl).
 
-    Deliberately ignores ``cpus``: the resolved plan must be identical
-    at every parallelism level so scaling-efficiency pairs compare the
-    same work graph."""
+    Picks by INPUT SIZE ONLY and deliberately ignores ``cpus``: a cluster
+    job's physical plan must be a function of the data, not the cluster
+    size, or an N->4N scaling comparison compares two different engines.
+    The 4M threshold keeps every scaling shape (6M round / 32M schedule)
+    on the measured late branch while the driver's 2M shape gets early."""
     del cpus
-    if HOST_STAGE != "auto":
-        return HOST_STAGE
-    return "early" if n_rows <= HOST_AUTO_MAX_EARLY_ROWS else "late"
-
-# presalt width denominator: salt_width = max(2^14, n_rows // DENOM), so
-# DENOM bounds the salts-per-host the rank's offsets frame can carry
-# (offsets rows = hosts x n/salt_width). 64 won the pinned c4/c16 A/B at
-# 32M rows (exp_rank_variants2); env-gated so the driver's unpinned
-# local[32]/2M shape can A/B it too (r03 VERDICT item 2).
-SALT_DENOM = int(os.environ.get("SPARK_GRAFT_SALT_DENOM", "64"))
+    return "early" if n_rows <= HOST_MAX_EARLY_ROWS else "late"
 
 
-def snapshot(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
-    """Materialize a round snapshot as parquet on tmpfs and read it back —
-    exactly what the engine's SnapshotStore does per round, with RAM-backed
-    storage standing in for the cluster's distributed object store.
+def snapshot_layout(spark: SparkSession, df: DataFrame, name: str,
+                    buckets: int) -> DataFrame:
+    """Materialize a round snapshot on tmpfs the way the engine does
+    (SnapshotStore.write_table_bucketed) and read it back as a
+    bucket-sorted scan; RAM-backed storage stands in for the cluster's
+    distributed object store."""
+    from crawler_service_spark.engine import CrawlEngine
+    from crawler_service_spark.sources.storage import SnapshotStore
 
-    Round 1 used ``.persist()+count()`` here; measured at local[16] that
-    columnar cache build costs 25.7 s where the parquet write costs 5.0 s
-    (vs 4.7 s for no materialization at all) — the cache build was the
-    single biggest scaling inversion in the whole bench."""
-    path = f"{SNAP_DIR}/{name}"
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def snapshot_bucketed(spark: SparkSession, df: DataFrame, name: str,
-                      buckets: int, cols: list[str]) -> DataFrame:
-    """Round snapshot written BUCKETED BY ``cols`` (parquet saveAsTable,
-    files on tmpfs) and read back as a bucketed scan: downstream
-    operators that need ClusteredDistribution on ``cols`` — the
-    presalted politeness rank's count aggregate and row_number window —
-    run with ZERO payload exchange. The write itself needs no shuffle
-    either (each map task buckets locally), so the rank's repartition
-    exchange is gone from the round, not merely moved into the write.
-    Cluster analog: the Iceberg frontier table bucketed on
-    (host-hash, seq-range)."""
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    (df.write.mode("overwrite").format("parquet")
-     .bucketBy(buckets, *cols)
-     .option("path", f"{SNAP_DIR}/{name}")
-     .saveAsTable(name))
-    return spark.table(name)
-
-
-def bucketize_files(path: str, buckets: int) -> None:
-    """Stamp plain-write part files with the bucket-id suffix Spark's
-    bucketed scan parses from filenames. Valid because the write was
-    pre-repartitioned on the bucket columns with the bucket count —
-    repartition's HashPartitioning and bucketBy's bucket id share the
-    same Murmur3 pmod, so partition i IS bucket i. Cluster analog:
-    Iceberg's bucket-transform metadata names the bucket in table
-    metadata rather than the filename. Raises unless every data file
-    matched and bucket ids are unique and < ``buckets`` (r03 VERDICT
-    item 4; same invariants as SnapshotStore._bucketize_files)."""
-    pat = re.compile(r"^part-(\d{5})-([0-9a-f\-]+)-c000(\..*)?\.parquet$")
-    seen_ids: set[int] = set()
-    for f in os.listdir(path):
-        m = pat.match(f)
-        if m:
-            bid = int(m.group(1))
-            if bid >= buckets or bid in seen_ids:
-                raise ValueError(
-                    f"bucketize: part file {f!r} violates the "
-                    f"one-file-per-bucket layout (id {bid}, count {buckets})")
-            seen_ids.add(bid)
-            ext = m.group(3) or ""
-            os.rename(
-                os.path.join(path, f),
-                os.path.join(path, f"part-{m.group(1)}-{m.group(2)}"
-                                   f"_{bid:05d}.c000{ext}.parquet"))
-        elif f.endswith(".crc"):   # orphaned RawLocalFileSystem checksums
-            os.remove(os.path.join(path, f))
-        elif f.endswith(".parquet"):
-            raise ValueError(
-                f"bucketize: data file {f!r} does not match the expected "
-                f"part-file naming — a bucketed scan would silently skip it")
-
-
-def snapshot_bucket_sorted(spark: SparkSession, df: DataFrame, name: str,
-                           buckets: int, cols: list[str],
-                           sort_cols: list[str]) -> DataFrame:
-    """Round snapshot whose LAYOUT does the rank's work: one payload
-    exchange (repartition on the bucket key — the very exchange the rank
-    would otherwise run after the read) feeds a sorted write producing
-    exactly one file per bucket (repartition and bucketing share Murmur3
-    pmod, so each task holds one bucket). The read-back scan then
-    reports HashPartitioning(cols) AND per-bucket sort order, so
-    rank_presalted plans with no exchange, no sort, and no driver stats
-    barrier.
-
-    r03: the files are written by a PLAIN sorted parquet write, stamped
-    with bucket-id filenames (see bucketize_files), and registered via
-    one CREATE TABLE DDL — measured against the bucketBy+sortBy
-    saveAsTable path this removes pure overhead at both levels (c4
-    29.2→20.4 s, c16 8.2→6.2 s on the 21M-row snapshot,
-    scripts/exp_rank_variants2.py): saveAsTable's bucketed write path
-    re-sorts by (bucketId, sort_cols…) through a second sorter pass and
-    pays catalog round-trips inside the timed region.
-    ``SPARK_GRAFT_BUCKETSORT_WRITE=saveAsTable`` selects the native
-    bucketed write instead (A/B lever, r03 VERDICT item 2)."""
-    path = f"{SNAP_DIR}/{name}"
-    write_mode = os.environ.get("SPARK_GRAFT_BUCKETSORT_WRITE", "rename")
-    if write_mode == "saveAsTable":
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (df.repartition(buckets, *[F.col(c) for c in cols])
-         .write.mode("overwrite").format("parquet")
-         .bucketBy(buckets, *cols).sortBy(*sort_cols)
-         .option("path", path).saveAsTable(name))
-        return spark.table(name)
-    if write_mode != "rename":
-        raise ValueError(
-            f"SPARK_GRAFT_BUCKETSORT_WRITE must be 'rename' or "
-            f"'saveAsTable', got {write_mode!r}")
-    (df.repartition(buckets, *[F.col(c) for c in cols])
-     .sortWithinPartitions(*sort_cols)
-     .write.mode("overwrite").parquet(path))
-    bucketize_files(path, buckets)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(
-        f"CREATE TABLE {name} ({df.schema.toDDL()}) USING parquet "
-        f"CLUSTERED BY ({', '.join(cols)}) "
-        f"SORTED BY ({', '.join(sort_cols)}) "
-        f"INTO {buckets} BUCKETS LOCATION '{path}'")
-    return spark.table(name)
+    store = SnapshotStore(f"{SNAP_DIR}/{name}")
+    layout = (buckets, ["host", "_salt"], CrawlEngine._FRONTIER_SORT)
+    store.write_table_bucketed(df, "frontier", 0, *layout)
+    return store.read_table_bucketed(spark, "frontier", 0, *layout)
 
 
 def settle(spark: SparkSession) -> None:
@@ -413,9 +277,9 @@ def run_schedule_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
     # with the layout the sort is gone and 256 one-bucket files only buy
     # scheduling latency — a 256-task counts scan (bucketed scans cannot
     # coalesce), 256 write commits, 256-file listings. 64 measured ~9%
-    # faster at c16 and neutral at c4 (in-JVM alternating A/B,
-    # /tmp-less: scripts/exp_sched_actions.py + ab pairs).
-    rank_parts = int(os.environ.get("SPARK_GRAFT_RANK_PARTS", "64"))
+    # faster at c16 and neutral at c4 (in-JVM alternating A/B script in
+    # commit 39ef1e8, scripts/exp_sched_actions.py).
+    rank_parts = 64
 
     # resolved ONCE from the MEASURED n: the 1/40-scale warmup must
     # exercise the same early/late branch as the timed run, or the late
@@ -431,11 +295,9 @@ def run_schedule_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
             b = b.withColumn("host", host_native(F.col("url")))
         # window strategy: the round's input frontier is unique-heavy
         # (link-expansion dedup already ran when these URLs were
-        # discovered), so the min-struct agg's map-side sort collapses
-        # nothing and just burns a second DRAM pass — measured 46.0s(agg)
-        # vs 34.4s(window) at c16, 111.6 vs 116.6 at c4 on the 32M core
+        # discovered) — see the frontier-job notes above
         b = first_occurrence(b, ["canon_url"], ["discovery_seq"],
-                             keep_hash=True, strategy=DEDUP_STRATEGY)
+                             keep_hash=True, strategy="window")
         b = anti_join_seen(b, seen_df, ["canon_url"],
                            shuffle_hash=True, hash_key=True)
         if host_stage == "late":
@@ -443,50 +305,24 @@ def run_schedule_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
             # dedup exchange + anti-join keeps ~18B/row of host strings
             # out of the job's biggest shuffle and runs the extraction
             # regex on the surviving ~2/3 of rows only — shuffle bytes
-            # are the box's non-scaling resource (exp_eventlog_sched)
+            # are the box's non-scaling resource (BENCH/NOTES_r05.md
+            # "Where the residual inefficiency lives")
             b = b.withColumn("host", host_native(F.col("url")))
         # width n/64 (was n/256): the offsets frame the rank broadcasts is
         # hosts x (n/width) rows — 4x smaller here, measured rank c4
-        # 8.05->6.14 s / c16 3.75->3.14 s (exp_rank_variants2); write
-        # balance unhurt (64 salts/host still spread over all buckets)
-        salt_width = max(1 << 14, n_rows // SALT_DENOM)
-        if SNAPSHOT_LAYOUT in ("bucketed", "bucketsort"):
-            # snapshot layout IS the scheduling layout: written bucketed
-            # on (host, _salt), so the rank needs no exchange and no
-            # driver stats barrier (rank_presalted); "bucketsort" also
-            # pre-repartitions and sorts in-bucket so the rank is
-            # additionally sort-free over one file per bucket
-            # rank counts come from the bucketed scan itself: the 2x2
-            # matrix A/B (scripts/exp_sched_matrix.py) measured the
-            # plain-parquet counts_src alternative SLOWER end-to-end at
-            # both levels (c4 median 110.7 vs 115.4 s, c16 31.7 vs
-            # 32.4 s) — the re-scan + tiny exchange costs what the
-            # per-bucket reader setup costs, so keep the simpler
-            # exchange-free plan
-            if SNAPSHOT_LAYOUT == "bucketsort":
-                b = snapshot_bucket_sorted(
-                    spark, presalt(b, salt_width), "sched_round",
-                    rank_parts, ["host", "_salt"],
-                    ["host", "depth", "_salt", "discovery_seq"])
-            else:
-                b = snapshot_bucketed(spark, presalt(b, salt_width),
-                                      "sched_round", rank_parts,
-                                      ["host", "_salt"])
-            admitted, _ = schedule_round(
-                b, None, default_limit=10, default_window_s=60,
-                round_epoch=0.0, priority_col="depth",
-                rank_strategy="presalted",
-            )
-        else:
-            # round snapshot: tmpfs parquet (see `snapshot`) — the
-            # schedule's branches then re-read columnar parquet
-            b = snapshot(spark, b, "sched_round")
-            admitted, _ = schedule_round(
-                b, None, default_limit=10, default_window_s=60,
-                round_epoch=0.0, priority_col="depth",
-                shuffle_partitions=rank_parts,
-                salt_width=salt_width,
-            )
+        # 8.05->6.14 s / c16 3.75->3.14 s (A/B script in commit ed7456c,
+        # scripts/exp_rank_variants2.py); write balance unhurt (64
+        # salts/host still spread over all buckets)
+        salt_width = max(1 << 14, n_rows // 64)
+        # snapshot layout IS the scheduling layout: the rank needs no
+        # exchange, no sort and no driver stats barrier
+        b = snapshot_layout(spark, presalt(b, salt_width), "sched_round",
+                            rank_parts)
+        admitted, _ = schedule_round(
+            b, None, default_limit=10, default_window_s=60,
+            round_epoch=0.0, priority_col="depth",
+            rank_strategy="presalted",
+        )
         force(admitted)
         return b
 
@@ -539,7 +375,7 @@ def run_round_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
     from crawler_service_spark.operators.politeness import presalt, schedule_round
 
     parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-    rank_parts = int(os.environ.get("SPARK_GRAFT_RANK_PARTS", "64"))
+    rank_parts = 64  # see run_schedule_job
     cfg = CrawlConfig()
 
     def mk_store(src: DataFrame) -> DataFrame:
@@ -569,39 +405,17 @@ def run_round_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
         if host_stage == "early":
             b = b.withColumn("host", host_native(F.col("url")))
         b = first_occurrence(b, ["canon_url"], ["discovery_seq"],
-                             keep_hash=True, strategy=DEDUP_STRATEGY)
+                             keep_hash=True, strategy="window")
         b = anti_join_seen(b, seen_df, ["canon_url"],
                            shuffle_hash=True, hash_key=True)
         if host_stage == "late":
             b = b.withColumn("host", host_native(F.col("url")))
-        # width n/64 (was n/256): the offsets frame the rank broadcasts is
-        # hosts x (n/width) rows — 4x smaller here, measured rank c4
-        # 8.05->6.14 s / c16 3.75->3.14 s (exp_rank_variants2); write
-        # balance unhurt (64 salts/host still spread over all buckets)
-        salt_width = max(1 << 14, n_rows // SALT_DENOM)
-        if SNAPSHOT_LAYOUT in ("bucketed", "bucketsort"):
-            # counts from the bucketed scan — the plain counts_src
-            # alternative measured slower at both levels (see the
-            # schedule job above / scripts/exp_sched_matrix.py)
-            if SNAPSHOT_LAYOUT == "bucketsort":
-                b = snapshot_bucket_sorted(
-                    spark, presalt(b, salt_width), "round_batch",
-                    rank_parts, ["host", "_salt"],
-                    ["host", "depth", "_salt", "discovery_seq"])
-            else:
-                b = snapshot_bucketed(spark, presalt(b, salt_width),
-                                      "round_batch", rank_parts,
-                                      ["host", "_salt"])
-            admitted, _ = schedule_round(
-                b, None, priority_col="depth", rank_strategy="presalted",
-            )
-        else:
-            # round snapshot: tmpfs parquet (see `snapshot`)
-            b = snapshot(spark, b, "round_batch")
-            admitted, _ = schedule_round(
-                b, None, priority_col="depth",
-                shuffle_partitions=rank_parts, salt_width=salt_width,
-            )
+        salt_width = max(1 << 14, n_rows // 64)  # see run_schedule_job
+        b = snapshot_layout(spark, presalt(b, salt_width), "round_batch",
+                            rank_parts)
+        admitted, _ = schedule_round(
+            b, None, priority_col="depth", rank_strategy="presalted",
+        )
         fetched = (
             # pre-align the (html-free) admitted side with the store's
             # hash partitioning: the join output then inherits `parts`
@@ -609,7 +423,8 @@ def run_round_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
             # Arrow extraction fuses into the join stage — the previous
             # post-join round-robin repartition pushed every html-bearing
             # row through a second full exchange (measured 9-13% of the
-            # fetch+extract phase at c16, scripts/exp_fetch_join.py).
+            # fetch+extract phase at c16; A/B script in commit 39ef1e8,
+            # scripts/exp_fetch_join.py).
             # The explicit partition count also pins the stage against
             # AQE byte-based coalescing (extraction cost is per ROW).
             admitted.drop("_salt")

@@ -81,9 +81,8 @@ class CrawlConfig:
     shuffle_partitions: int = 32
     bloom_num_bits: int = 1 << 20         # seen-filter prefilter bitmap size
     bloom_num_hashes: int = 3
-    bloom_shards: int = 16                # >0: sharded DataFrame-resident
-                                          # filter (scale path); 0: legacy
-                                          # driver bitmap
+    bloom_shards: int = 16                # shard count of the DataFrame-
+                                          # resident filter (≥ 1)
     # cumulative-seen row count past which (a) the seen anti-join flips
     # to a shuffled-hash build and (b) the bloom prefilter engages —
     # below it the planner's broadcast-anti plan is already free and the
@@ -92,21 +91,22 @@ class CrawlConfig:
     # prefilter on from round 0 (tests / A-Bs).
     large_seen_threshold: int = 2_000_000
 
-    # frontier snapshot layout (north-rule scale path): "bucketsort"
-    # writes each frontier snapshot hash-clustered on (host, _salt =
+    # frontier snapshots are written hash-clustered on (host, _salt =
     # discovery_seq div frontier_salt_width) AND in-bucket-sorted
-    # depth-major on (host, depth, _salt, discovery_seq), exactly one
-    # file per bucket — the next round's politeness rank then plans
-    # with no payload exchange, no sort, and no driver stats barrier
-    # (operators/politeness.rank_presalted). Composes with deferral
-    # (budget_rounds set) since r03: the rank partitions by
-    # (host, depth, _salt), so mixed-depth frontiers from deferred
-    # re-entries rank correctly over the same layout. "flat" = plain
-    # parquet + adaptive hot-host rank. Result-identical either way.
-    frontier_layout: str = "bucketsort"
+    # depth-major on (host, depth, _salt, discovery_seq), exactly one file
+    # per bucket — the next round's politeness rank then plans with no
+    # payload exchange, no sort, and no driver stats barrier
+    # (operators/politeness.rank_presalted). Composes with deferral: the
+    # rank partitions by (host, depth, _salt), so mixed-depth frontiers
+    # from deferred re-entries rank correctly over the same layout.
     frontier_salt_width: int = 1 << 18
 
     # virtual-clock origin for deterministic scheduling timestamps
     round_epoch: float = 0.0
 
     skip_extensions: tuple[str, ...] = field(default=SKIP_EXTENSIONS)
+
+    def __post_init__(self) -> None:
+        if self.bloom_shards < 1:
+            raise ValueError(
+                f"bloom_shards must be >= 1, got {self.bloom_shards}")

@@ -45,7 +45,6 @@ from crawler_service_spark.functions.urls import (
     url_parts_udf,
 )
 from crawler_service_spark.operators.dedup import (
-    BloomPrefilter,
     ShardedBloomFilter,
     anti_join_seen,
     first_occurrence,
@@ -86,21 +85,20 @@ class CrawlEngine:
         self.spark = spark
         self.cfg = cfg
         self.policy = policy
-        if cfg.frontier_layout == "bucketsort":
-            # let bucketed scans expose their per-bucket sort order (the
-            # engine writes exactly one file per bucket, the shape Spark
-            # requires to honor it) — without this the politeness rank
-            # re-sorts data the snapshot layout already sorted.
-            # SESSION-LEVEL side effect, deliberately not restored: the
-            # flag must be live at PLANNING time of every downstream query
-            # that scans a frontier snapshot (not just inside
-            # _read_frontier), and it is harmless-but-nonfree for
-            # unrelated bucketed scans sharing the session (planning-time
-            # file listing). Engines in this repo run in their own
-            # sessions; callers embedding CrawlEngine in a shared session
-            # with other bucketed workloads should be aware (ADVICE r02).
-            spark.conf.set(
-                "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+        # let bucketed scans expose their per-bucket sort order (the
+        # engine writes exactly one file per bucket, the shape Spark
+        # requires to honor it) — without this the politeness rank
+        # re-sorts data the snapshot layout already sorted.
+        # SESSION-LEVEL side effect, deliberately not restored: the flag
+        # must be live at PLANNING time of every downstream query that
+        # scans a frontier snapshot (not just inside _read_frontier), and
+        # it is harmless-but-nonfree for unrelated bucketed scans sharing
+        # the session (planning-time file listing). Engines in this repo
+        # run in their own sessions; callers embedding CrawlEngine in a
+        # shared session with other bucketed workloads should be aware
+        # (ADVICE r02).
+        spark.conf.set(
+            "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         self.storage = SnapshotStore(checkpoint_dir)
         self.use_bloom = use_bloom
         self.max_rounds = max_rounds
@@ -153,55 +151,36 @@ class CrawlEngine:
         return f.select(FRONTIER_COLS)
 
     # ------------------------------------------------------ frontier layout
-    @property
-    def _use_layout(self) -> bool:
-        # bucket-sorted frontier snapshots compose with deferral since
-        # r03: the rank partitions by (host, depth, _salt) and orders
-        # buckets depth-major (rank_presalted), so frontiers mixing
-        # depths within a host — deferred re-entries — rank correctly
-        # over the same exchange-free layout
-        return self.cfg.frontier_layout == "bucketsort"
-
-    # depth-major in-bucket sort: matches rank_presalted's window
+    # Frontier snapshots are bucket-sorted on (host, _salt): the rank's
+    # repartition is paid once by the snapshot write, and the next
+    # round's politeness rank plans with no payload exchange. The
+    # depth-major in-bucket sort matches rank_presalted's window
     # (partitionBy host, depth, _salt / orderBy discovery_seq), keeping
-    # the rank sort-free even when deferral mixes depths per host
+    # the rank sort-free even when deferral mixes depths per host.
     _FRONTIER_SORT = ["host", "depth", "_salt", "discovery_seq"]
 
     def _write_frontier(self, df: DataFrame, rnd: int) -> None:
-        if self._use_layout:
-            self.storage.write_table_bucketed(
-                presalt(df, self.cfg.frontier_salt_width), "frontier", rnd,
-                self.cfg.shuffle_partitions, ["host", "_salt"],
-                self._FRONTIER_SORT,
-            )
-        else:
-            self.storage.write_table(df, "frontier", rnd)
+        self.storage.write_table_bucketed(
+            presalt(df, self.cfg.frontier_salt_width), "frontier", rnd,
+            self.cfg.shuffle_partitions, ["host", "_salt"],
+            self._FRONTIER_SORT,
+        )
 
     def _read_frontier(self, rnd: int) -> DataFrame:
-        if self._use_layout:
-            return self.storage.read_table_bucketed(
-                self.spark, "frontier", rnd,
-                self.cfg.shuffle_partitions, ["host", "_salt"],
-                self._FRONTIER_SORT,
-            )
-        return self.storage.read_table(self.spark, "frontier", rnd)
+        return self.storage.read_table_bucketed(
+            self.spark, "frontier", rnd,
+            self.cfg.shuffle_partitions, ["host", "_salt"],
+            self._FRONTIER_SORT,
+        )
 
     # ----------------------------------------------------------------- crawl
     def crawl(self, seeds: DataFrame | None = None, resume: bool = False) -> CrawlTables:
         cfg = self.cfg
         counters: list[dict] = []
-        # sharded (DataFrame-resident) filter by default — the driver
-        # bitmap variant remains for tiny crawls / A-B tests via
-        # cfg.bloom_shards == 0
-        if not self.use_bloom:
-            bloom = None
-        elif cfg.bloom_shards > 0:
-            bloom = ShardedBloomFilter(
-                self.spark, cfg.bloom_num_bits, cfg.bloom_num_hashes,
-                n_shards=cfg.bloom_shards,
-            )
-        else:
-            bloom = BloomPrefilter(cfg.bloom_num_bits, cfg.bloom_num_hashes)
+        bloom = ShardedBloomFilter(
+            self.spark, cfg.bloom_num_bits, cfg.bloom_num_hashes,
+            n_shards=cfg.bloom_shards,
+        ) if self.use_bloom else None
 
         if resume:
             latest = self.storage.latest_round()
@@ -337,14 +316,7 @@ class CrawlEngine:
                 shuffle_partitions=cfg.shuffle_partitions,
                 # over a bucket-sorted frontier snapshot the rank plans
                 # with no payload exchange/sort/driver barrier
-                rank_strategy="presalted" if self._use_layout else None,
-                # rank counts come from the bucketed frontier scan
-                # itself (counts_src=None): serving them from a plain
-                # column-pruned re-read of the same files was A/B'd and
-                # measured SLOWER end-to-end at both parallelism levels
-                # (scripts/exp_sched_matrix.py) — the re-scan + small
-                # aggregate exchange costs what the per-bucket reader
-                # setup costs, so keep the exchange-free plan
+                rank_strategy="presalted",
             )
             admitted = admitted.drop("_salt")
 
@@ -354,7 +326,8 @@ class CrawlEngine:
             # hashes uniformly) and the Arrow extraction fuses into the
             # join stage — a post-join repartition would push every
             # html-bearing row through a second full exchange (measured
-            # 9-13% of the fetch+extract phase, scripts/exp_fetch_join.py).
+            # 9-13% of the fetch+extract phase; A/B script in commit
+            # 39ef1e8, scripts/exp_fetch_join.py).
             # The explicit partition count also pins the stage against AQE
             # byte-based coalescing: extraction cost is per ROW (Python
             # parse per page) — byte-coalescing once shrank this stage to
@@ -444,7 +417,7 @@ class CrawlEngine:
                 # to the filter's value) so the round's biggest shuffles
                 # move ~40B/row less — the schedule-core A/B measured
                 # post-dedup host extraction worth ~9% at 16 cores
-                # (scripts/exp_host_late.py)
+                # (A/B script in commit ec1bc1b, scripts/exp_host_late.py)
                 cand = cand.drop("host", "path")
                 # single-scan strategy: cand is computed lineage
                 # (explode→filter); the union strategy would re-execute
@@ -520,6 +493,9 @@ class CrawlEngine:
                 round_counters,
             )
             counters.append({"round": rnd, **round_counters})
+            # this round's frontier is consumed: release its catalog entry
+            # (the files stay; resume re-registers what it reads)
+            self.storage.drop_bucketed(self.spark, "frontier", rnd)
 
             prev_base = seq_base
             if not wrote_frontier:

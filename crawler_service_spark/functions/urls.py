@@ -161,8 +161,8 @@ def host_frame(df, url_col: str = "url", out_col: str = "host"):
 
     Exists so the engine can compute ``host`` AFTER the link-dedup and
     seen-anti-join exchanges instead of carrying ~18B/row of host
-    strings through them (host is a pure function of the URL; see
-    scripts/exp_host_late.py). The UDF input is nulled for eligible
+    strings through them (host is a pure function of the URL; A/B
+    script in commit ec1bc1b, scripts/exp_host_late.py). The UDF input is nulled for eligible
     rows (the `canonicalize_frame(single_scan=True)` pattern) so Python
     sees mostly nulls."""
     eligible = native_canon_eligible(F.col(url_col))

@@ -17,11 +17,8 @@ D2 (in-batch): the reference's O(n) pending-queue scan
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 
 def with_key_hash(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -126,75 +123,9 @@ def first_occurrence(
     return m.select(*head, "_m._row.*")
 
 
-class BloomPrefilter:
-    """Broadcastable bloom bitmap over a key column.
-
-    Built distributively: the seen table is hashed JVM-side
-    (``xxhash64(key, seed_i) mod num_bits``) and only the *distinct bit
-    positions* (≤ num_bits rows, independent of table size) are collected;
-    the bitmap itself is a numpy array captured by the probe UDF's closure
-    (Spark broadcasts closures to executors once per stage).
-    """
-
-    def __init__(self, num_bits: int = 1 << 20, num_hashes: int = 3):
-        self.num_bits = int(num_bits)
-        self.num_hashes = int(num_hashes)
-        self.bits = np.zeros(self.num_bits, dtype=bool)
-        self.fitted = False
-
-    def _positions(self, df: DataFrame, key: str) -> DataFrame:
-        cols = [
-            F.pmod(F.xxhash64(F.col(key), F.lit(i)), F.lit(self.num_bits)).alias(f"p{i}")
-            for i in range(self.num_hashes)
-        ]
-        stacked = df.select(cols)
-        exploded = stacked.select(
-            F.explode(F.array(*[F.col(f"p{i}") for i in range(self.num_hashes)])).alias("pos")
-        )
-        return exploded.distinct()
-
-    def fit(self, seen: DataFrame, key: str = "canon_url") -> "BloomPrefilter":
-        pos = [r["pos"] for r in self._positions(seen, key).collect()]
-        self.bits[np.asarray(pos, dtype=np.int64)] = True if pos else self.bits
-        self.fitted = True
-        return self
-
-    def update(self, new_rows: DataFrame, key: str = "canon_url") -> None:
-        pos = [r["pos"] for r in self._positions(new_rows, key).collect()]
-        if pos:
-            self.bits[np.asarray(pos, dtype=np.int64)] = True
-        self.fitted = True
-
-    def probe_col(self, key_col):
-        """Native column: True iff all bloom bits for the key are set.
-
-        Uses the same JVM-side xxhash64 as `fit`, then an array lookup via
-        a tiny pandas UDF over the bit positions (Arrow-batched).
-        """
-        bits = self.bits
-
-        @F.pandas_udf(BooleanType())
-        def _all_set(*pos_cols: pd.Series) -> pd.Series:
-            res = np.ones(len(pos_cols[0]), dtype=bool)
-            for p in pos_cols:
-                res &= bits[p.to_numpy(dtype=np.int64)]
-            return pd.Series(res)
-
-        pos = [
-            F.pmod(F.xxhash64(key_col, F.lit(i)), F.lit(self.num_bits))
-            for i in range(self.num_hashes)
-        ]
-        return _all_set(*pos)
-
-    def annotate(self, batch: DataFrame, key_col: str) -> DataFrame:
-        """Append ``_maybe_seen`` (the common prefilter interface)."""
-        return batch.withColumn("_maybe_seen", self.probe_col(F.col(key_col)))
-
-
 class ShardedBloomFilter:
     """Partitioned bloom prefilter — the 10^10-scale D1 path (SURVEY
-    §7.5's sharded design; replaces the driver-sided bitmap the round-1
-    VERDICT flagged).
+    §7.5's sharded design; no filter bytes ever sit on the driver).
 
     The filter lives as a DataFrame of ``(shard, widx, word: long)``
     rows — the NON-ZERO 64-bit words of a bitmap partitioned into
@@ -232,9 +163,9 @@ class ShardedBloomFilter:
 
     Exactness contract unchanged: this is a PREFILTER. All-bits-set ⇒
     "maybe seen" ⇒ pay the exact anti-join; any-bit-clear ⇒ definitely
-    new. Bit positions use the same JVM-side ``xxhash64(key, i)`` family
-    as :class:`BloomPrefilter`, but modulo ``bits_per_shard`` within the
-    key's shard (equivalent to a partitioned global bitmap).
+    new. Bit positions are JVM-side ``xxhash64`` values taken modulo
+    ``bits_per_shard`` within the key's shard (equivalent to a
+    partitioned global bitmap).
     """
 
     def __init__(
@@ -465,17 +396,16 @@ def anti_join_seen(
     batch: DataFrame,
     seen: DataFrame,
     key_cols: list[str],
-    bloom: "BloomPrefilter | ShardedBloomFilter | None" = None,
+    bloom: ShardedBloomFilter | None = None,
     bloom_key: str = "canon_url",
     shuffle_hash: bool = False,
     hash_key: bool = False,
 ) -> DataFrame:
     """D1: rows of ``batch`` whose key is NOT in ``seen`` (exact).
 
-    With a fitted bloom prefilter (driver bitmap or sharded — both expose
-    ``annotate``), definitely-new rows bypass the shuffle; the exact
-    anti-join runs only on the maybe-seen remainder and the result is
-    their union (no false drops possible).
+    With a fitted :class:`ShardedBloomFilter`, definitely-new rows bypass
+    the shuffle; the exact anti-join runs only on the maybe-seen
+    remainder and the result is their union (no false drops possible).
 
     ``shuffle_hash=True`` hints the seen side into a shuffled-hash build:
     once both sides outgrow the planner's local-map threshold it falls to

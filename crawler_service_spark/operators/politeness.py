@@ -27,42 +27,18 @@ Deferral mode (``budget_rounds``): optionally admit only the first
 frontier for the next scheduling round — they keep their original
 ``discovery_seq``, so total order is preserved (SURVEY §2.5).
 
-Skew note (north rule): the window ranks one partition per host — hot
-hosts make hot partitions. ``schedule_round`` therefore repartitions by
-``xxhash64(host)`` first so hosts spread uniformly over shuffle
-partitions; within one host the rank is a linear scan. AQE's skew-join
-handling covers the fetch join that follows.
+Skew note (north rule): a plain per-host window ranks one partition per
+host — hot hosts make hot partitions. The skew-safe rank
+(:func:`rank_presalted`) salts every host by contiguous
+``discovery_seq`` ranges, so a hot host spreads over many tasks; the
+engine's frontier snapshots carry that salt in their bucket layout.
+AQE's skew-join handling covers the fetch join that follows.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# Physical strategy for joining the tiny per-bucket offsets frame back
-# onto the presalted rank's payload (rank_presalted):
-#
-# * "broadcast" — offsets are collected to the driver and broadcast.
-#   The hash-relation build is DRIVER-SIDE and single-threaded, and the
-#   join is a barrier: no payload task starts until the build finishes.
-#   With salt width n/64 the offsets frame is ~hosts × 64 rows, so this
-#   is a FLAT multi-second cost that does not shrink with cores —
-#   event-log attribution shows the rank step scaling at ~0.57 under it.
-# * "shuffle_hash" — the payload side is ALREADY hash-clustered on
-#   (host, _salt) by the bucketed snapshot scan, and (host, _salt) is a
-#   subset of the join keys, so Spark reuses that partitioning and
-#   shuffles ONLY the tiny offsets side to match
-#   (spark.sql.requireAllClusterKeysForCoPartition=false, the 3.3+
-#   default): zero payload exchange, the 64 per-partition hash builds
-#   are distributed, and there is no driver barrier. Cluster analog:
-#   a bucket-local dimension join against an Iceberg bucketed table.
-OFFSETS_JOIN = os.environ.get("SPARK_GRAFT_OFFSETS_JOIN", "broadcast")
-if OFFSETS_JOIN not in ("broadcast", "shuffle_hash"):
-    raise ValueError(
-        "SPARK_GRAFT_OFFSETS_JOIN must be 'broadcast' or 'shuffle_hash', "
-        f"got {OFFSETS_JOIN!r}")
 
 
 def with_host_policy(
@@ -99,142 +75,13 @@ def with_host_policy(
     )
 
 
-def skew_resistant_host_rank(
-    b: DataFrame,
-    priority_col: str,
-    n_parts: int,
-    salt_width: int = 1 << 18,
-) -> DataFrame:
-    """Per-host FIFO rank without a per-host serial task — the hot-host
-    killer the north rule demands.
-
-    ``Window.partitionBy('host')`` puts ALL of a host's rows in one task;
-    under a Zipf frontier the head host alone holds ~10% of the batch and
-    that single task bounds the whole stage (measured: scaling efficiency
-    capped at 0.42). Adaptive plan — salt ONLY the hot hosts:
-
-    1. per-host counts (map-side partial agg, tiny shuffle) split hosts
-       at ``salt_width`` rows; the ≤ n/salt_width hot hosts are COLLECTED
-       (tiny by construction when salt_width scales ∝ n, as the engine
-       sets it) so membership is a literal InSet predicate, not a join —
-       round 1's broadcast-join chain (hot → offsets → main query) was
-       three serialized driver-coordinated builds and measured FLAT
-       across core counts;
-    2. hot hosts get ``salt = discovery_seq div salt_width`` — a pure
-       function of the sort key, so salt buckets are *contiguous seq
-       ranges* (no sampling pass, unlike ``repartitionByRange``, whose
-       range-bounds job re-executes the whole upstream lineage); local
-       ``row_number`` within (host, salt) spreads the host over
-       ≈ max_seq/salt_width tasks;
-    3. per-(host, salt) counts (≤ n_hot × n_buckets rows, collected) →
-       exclusive prefix sums built driver-side → shipped back as a
-       literal broadcast dimension; global rank = local rank + offset.
-       Cold and hot branches then have no inter-stage dependencies and
-       run concurrently.
-
-    PRECONDITION (checked, not just documented): salting is only valid
-    when ``priority_col`` is constant within a host's batch — salt
-    buckets are contiguous ``discovery_seq`` ranges, so a higher-priority
-    row in a later seq range would rank after lower-priority rows. The
-    hot-host split therefore requires ``min(priority) == max(priority)``
-    per host (computed in the same stats pass as the counts); a hot
-    host with mixed priorities — e.g. deferred rows re-entering a later
-    frontier — safely falls back to the plain per-host window.
-
-    SHAPE (round 2): round 1's version scanned ``b`` four times (host
-    counts, hot-bucket counts, cold filter, hot filter) with two window
-    shuffles unioned and three serialized driver barriers — measured as
-    the flattest stage in the schedule job's scaling profile. Now:
-
-    1. ONE stats pass, ONE action: ``groupBy(host, seq div salt_width)``
-       counts + priority extremes (map-side combine collapses the scan
-       to ≤ one short row per touched (host, bucket) pair), re-grouped
-       per host with the bucket list carried as ``collect_list`` — hot
-       hosts AND their bucket prefix-sum offsets come back in a single
-       collect of ≤ n/salt_width rows; never row data, no persist.
-    2. ONE ranking pass: every row gets ``_salt = hot ? seq div width
-       : 0`` and a single ``row_number() over (host, _salt)`` window —
-       cold hosts rank in their (host, 0) partition exactly as the
-       plain window would; hot hosts spread over ≈ max_seq/salt_width
-       tasks. A broadcast left join adds each hot bucket's exclusive
-       prefix-sum offset (cold rows coalesce to 0). One shuffle, one
-       sort, no union.
-    """
-    salt = F.floor(F.col("discovery_seq") / F.lit(int(salt_width))).cast("long")
-
-    # hot = total rows ≥ salt_width AND constant priority across the host
-    # (mixed-priority hosts fall back to the plain window, ADVICE r01);
-    # ≤ n/salt_width result rows by construction — collectable at any
-    # scale, each carrying its own (bucket, count) list
-    hot_rows = (
-        b.groupBy("host", salt.alias("_salt"))
-        .agg(
-            F.count("*").alias("_c"),
-            F.min(priority_col).alias("_pmin"),
-            F.max(priority_col).alias("_pmax"),
-        )
-        .groupBy("host")
-        .agg(
-            F.sum("_c").alias("_hc"),
-            F.min("_pmin").alias("_pn"),
-            F.max("_pmax").alias("_px"),
-            F.collect_list(F.struct("_salt", "_c")).alias("_buckets"),
-        )
-        .filter((F.col("_hc") >= int(salt_width)) & (F.col("_pn") == F.col("_px")))
-        .select("host", "_buckets").collect()
-    )
-    hot_hosts = [r["host"] for r in hot_rows]
-
-    # explicit exchange width for the window shuffle: the window otherwise
-    # inherits spark.sql.shuffle.partitions, which is sized for the
-    # row-heavy aggregate stages; the rank's SORT tasks want finer grain
-    # (smaller per-task sorts, shorter straggler tail — measured 13.5 s →
-    # 9.8 s at 16 cores with no cost at 4). A user repartition with an
-    # explicit count also pins the stage against AQE byte-based
-    # coalescing, which would cap the stage's parallelism.
-    w_cold = Window.partitionBy("host").orderBy(priority_col, "discovery_seq")
-    if not hot_hosts:
-        if n_parts:
-            b = b.repartition(n_parts, F.col("host"))
-        return b.withColumn(
-            "host_rank", F.row_number().over(w_cold).cast("long"))
-
-    # hot buckets' exclusive prefix sums, built driver-side from the same
-    # single collect and shipped back as a literal broadcast dimension
-    offset_rows = []
-    for r in hot_rows:
-        running = 0
-        for s, c in sorted((p["_salt"], p["_c"]) for p in r["_buckets"]):
-            offset_rows.append((r["host"], int(s), running))
-            running += int(c)
-    offsets = b.sparkSession.createDataFrame(
-        offset_rows, "host string, _salt long, _off long")
-
-    is_hot = F.col("host").isin(hot_hosts)
-    w_local = Window.partitionBy("host", "_salt").orderBy(
-        priority_col, "discovery_seq")
-    salted = b.withColumn("_salt", F.when(is_hot, salt).otherwise(F.lit(0)))
-    if n_parts:
-        salted = salted.repartition(n_parts, F.col("host"), F.col("_salt"))
-    return (
-        salted
-        .withColumn("_lrn", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), ["host", "_salt"], "left")
-        .withColumn(
-            "host_rank",
-            (F.col("_lrn") + F.coalesce(F.col("_off"), F.lit(0))).cast("long"),
-        )
-        .select(*b.columns, "host_rank")
-    )
-
-
 def presalt(b: DataFrame, salt_width: int) -> DataFrame:
     """Materialize the rank salt as a layout column before snapshotting.
 
-    ``_salt = discovery_seq div salt_width`` — the same contiguous-range
-    salting ``skew_resistant_host_rank`` computes on the fly, but stored,
-    so the snapshot can be written BUCKETED BY (host, _salt) and the
-    politeness rank consumes the layout instead of re-shuffling
+    ``_salt = discovery_seq div salt_width`` — contiguous seq ranges, so
+    a hot host spreads over many rank tasks. Stored as a column, the
+    snapshot can be written BUCKETED BY (host, _salt) and the politeness
+    rank consumes the layout instead of re-shuffling
     (`rank_presalted`). Cluster analog: the Iceberg frontier table is
     bucketed on (host-hash, seq-range) — scheduling reads then never
     exchange the payload."""
@@ -244,17 +91,14 @@ def presalt(b: DataFrame, salt_width: int) -> DataFrame:
     )
 
 
-def rank_presalted(
-    b: DataFrame, priority_col: str, counts_src: DataFrame | None = None,
-) -> DataFrame:
+def rank_presalted(b: DataFrame, priority_col: str) -> DataFrame:
     """Per-host FIFO rank over a frame ALREADY carrying ``_salt`` and
     (ideally) already hash-clustered by (host, _salt) — e.g. a snapshot
-    written ``bucketBy(n, "host", "_salt")``. Differences from
-    ``skew_resistant_host_rank``:
+    written ``bucketBy(n, "host", "_salt")``:
 
-    * EVERY host is salted (not just hot ones) — with the layout doing
-      the clustering there is no cost to salting cold hosts, and no
-      hot-host detection scan is needed at all;
+    * EVERY host is salted — with the layout doing the clustering there
+      is no cost to salting cold hosts, and no hot-host detection scan
+      is needed at all;
     * bucket offsets come from a window cumsum over the per-
       (host, priority, _salt) count frame (tiny: one short row per
       touched bucket) broadcast back — NO driver collect, NO literal
@@ -267,34 +111,22 @@ def rank_presalted(
       with the snapshot in-bucket-sorted on (host, priority, _salt,
       discovery_seq) the window is also sort-free.
 
-    MIXED PRIORITIES ARE VALID (r02 VERDICT item 5 — the old variant
-    raised): the local window partitions by (host, priority, _salt), so
-    priority is constant within every rank partition by construction,
-    and the offset cumsum orders buckets priority-major then by salt
-    range — exactly the (priority, discovery_seq) global order per host
-    even when deferred rows re-enter a frontier at an older depth.
-    ``_salt`` must be a non-decreasing function of ``discovery_seq``
-    (``presalt``'s ``seq div width`` is), so within one (host, priority)
-    the salt buckets are contiguous seq ranges.
+    MIXED PRIORITIES ARE VALID: the local window partitions by
+    (host, priority, _salt), so priority is constant within every rank
+    partition by construction, and the offset cumsum orders buckets
+    priority-major then by salt range — exactly the (priority,
+    discovery_seq) global order per host even when deferred rows
+    re-enter a frontier at an older depth. ``_salt`` must be a
+    non-decreasing function of ``discovery_seq`` (``presalt``'s ``seq
+    div width`` is), so within one (host, priority) the salt buckets are
+    contiguous seq ranges.
 
-    ``counts_src`` (optional): an alternative DataFrame holding the SAME
-    rows to aggregate the bucket counts from — e.g. the snapshot files
-    as a plain column-pruned parquet read instead of the bucketed scan.
-    Event-log stage attribution suggested the bucketed counts scan pays
-    a flat per-bucket reader setup (~1.8 s at every core count,
-    scripts/exp_eventlog_sched.py), but the assembled-pipeline 2x2 A/B
-    (scripts/exp_sched_matrix.py) measured the plain-scan alternative
-    SLOWER end-to-end at both 4 and 16 cores (the re-scan + aggregate
-    exchange ≈ the setup it removes), so callers default to None. The
-    parameter stays for the cluster analog where it genuinely wins:
-    Iceberg metadata tables serve these bucket counts without touching
-    data files at all. A counts_src whose rows DON'T cover ``b`` fails
-    loudly (left join + raise on a missing bucket) instead of silently
-    dropping the uncovered admitted rows (ADVICE r03).
+    The offsets join is a broadcast hash join (an alternative that
+    shuffled only the offsets side onto the bucket partitioning measured
+    ~12% slower at 16 cores, BENCH/NOTES_r05.md "Offsets-join /
+    window-buffer / GC A/B").
     """
-    counts = (counts_src if counts_src is not None else b).groupBy(
-        "host", priority_col, "_salt"
-    ).agg(
+    counts = b.groupBy("host", priority_col, "_salt").agg(
         F.count("*").alias("_c"),
     )
     w_off = Window.partitionBy("host").orderBy(priority_col, "_salt")
@@ -305,88 +137,24 @@ def rank_presalted(
     w_local = Window.partitionBy("host", priority_col, "_salt").orderBy(
         "discovery_seq")
     ranked = b.withColumn("_lrn", F.row_number().over(w_local))
-    if counts_src is None:
-        # counts derive from b itself: every bucket is covered by
-        # construction, the inner equi-join is free of the guard branch
-        if OFFSETS_JOIN == "shuffle_hash":
-            # join on EXACTLY the bucket keys (host, _salt) — the payload
-            # side's HashPartitioning then satisfies the join's required
-            # distribution verbatim, so only the tiny offsets side
-            # shuffles and the per-partition hash builds are distributed
-            # (no driver-side broadcast build, no barrier). The priority
-            # column rides as payload and is matched by a RESIDUAL
-            # condition: counts derive from b, so every (host, _salt,
-            # priority) row of `ranked` has exactly one matching offsets
-            # row — the residual drops only the cross-priority pairs the
-            # narrower join key admits (≤ #priorities per bucket).
-            # The residual avoids a plain `l == r` / `l <=> r` between
-            # the two sides: either would be extracted back into the
-            # equi-join keys by Catalyst (ExtractEquiJoinKeys handles
-            # both EqualTo and EqualNullSafe), re-shuffling the payload
-            # on all three columns — exactly the exchange this branch
-            # removes. The OR form below is null-safe equality written
-            # as a pure residual: NULL priorities match only NULL
-            # offsets rows (least/greatest alone SKIP nulls, so a bare
-            # least==greatest would cross-match every NULL row against
-            # every priority in its bucket).
-            off = offsets.withColumnRenamed(
-                priority_col, "_off_prio").hint("shuffle_hash")
-            l, r = F.col(priority_col), F.col("_off_prio")
-            prio_match = (
-                (l.isNull() & r.isNull())
-                | (l.isNotNull() & r.isNotNull()
-                   & (F.least(l, r) == F.greatest(l, r))))
-            ranked = (
-                ranked.join(off, ["host", "_salt"])
-                .filter(prio_match)
-                .drop("_off_prio")
-            )
-        else:
-            # null-safe on priority: a using-columns join would silently
-            # drop NULL-priority rows (NULL keys never equi-match); the
-            # docstring declares mixed — including NULL — priorities
-            # valid, and the plain-window strategy ranks them (NULLS
-            # FIRST), so this strategy must too. EqualNullSafe is a
-            # first-class hash-join key, same BroadcastHashJoin shape.
-            off = (offsets.withColumnRenamed(priority_col, "_off_prio")
-                   .withColumnRenamed("host", "_off_host")
-                   .withColumnRenamed("_salt", "_off_salt"))
-            ranked = (
-                ranked.join(
-                    F.broadcast(off),
-                    (F.col("host") == F.col("_off_host"))
-                    & (F.col("_salt") == F.col("_off_salt"))
-                    & F.col(priority_col).eqNullSafe(F.col("_off_prio")))
-                .drop("_off_host", "_off_salt", "_off_prio")
-            )
-        ranked = ranked.withColumn(
-            "host_rank", (F.col("_lrn") + F.col("_off")).cast("long"))
-    else:
-        # external counts: a bucket present in b but missing from
-        # counts_src means the caller broke the SAME-rows contract —
-        # raise in-plan rather than silently dropping those rows
-        # guard path stays broadcast: the left-join missing-bucket raise
-        # needs full-key matching, and counts_src is the non-default
-        # cluster-metadata variant where the frame is tiny by contract
-        off = (offsets.withColumnRenamed(priority_col, "_off_prio")
-               .withColumnRenamed("host", "_off_host")
-               .withColumnRenamed("_salt", "_off_salt"))
-        ranked = ranked.join(
+    # null-safe on priority: a using-columns join would silently drop
+    # NULL-priority rows (NULL keys never equi-match); the plain-window
+    # strategy ranks them (NULLS FIRST), so this one must too.
+    # EqualNullSafe is a first-class hash-join key, same
+    # BroadcastHashJoin shape.
+    off = (offsets.withColumnRenamed(priority_col, "_off_prio")
+           .withColumnRenamed("host", "_off_host")
+           .withColumnRenamed("_salt", "_off_salt"))
+    ranked = (
+        ranked.join(
             F.broadcast(off),
             (F.col("host") == F.col("_off_host"))
             & (F.col("_salt") == F.col("_off_salt"))
-            & F.col(priority_col).eqNullSafe(F.col("_off_prio")),
-            "left",
-        ).drop("_off_host", "_off_salt", "_off_prio").withColumn(
-            "host_rank",
-            F.when(F.col("_off").isNotNull(),
-                   F.col("_lrn") + F.col("_off"))
-            .otherwise(F.raise_error(F.concat(
-                F.lit("rank_presalted: counts_src is missing bucket (host="),
-                F.col("host"), F.lit(", salt="), F.col("_salt"),
-                F.lit(") present in b — counts_src must hold the SAME rows"),
-            ))).cast("long"),
-        )
+            & F.col(priority_col).eqNullSafe(F.col("_off_prio")))
+        .drop("_off_host", "_off_salt", "_off_prio")
+    )
+    ranked = ranked.withColumn(
+        "host_rank", (F.col("_lrn") + F.col("_off")).cast("long"))
     return ranked.select(*b.columns, "host_rank")
 
 
@@ -403,38 +171,33 @@ def schedule_round(
     skew_safe: bool = True,
     salt_width: int = 1 << 18,
     rank_strategy: str | None = None,
-    counts_src: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """RL1: returns (admitted, deferred).
 
     ``admitted`` gains ``host_rank`` and ``virtual_fetch_time``;
     ``deferred`` is the over-budget remainder (empty when
     ``budget_rounds`` is None) with scheduling columns dropped so it can
-    re-enter the frontier unchanged. ``skew_safe`` picks the two-level
-    rank (same result, no per-host serial task); the single-window
-    variant remains for small batches and as the parity reference.
+    re-enter the frontier unchanged. Both rank shapes give the same
+    ranks:
 
-    ``rank_strategy`` overrides the rank's physical shape:
-
-    * ``None`` — ``skew_safe`` picks adaptive (default) or plain window;
-    * ``"presalted"`` — the batch ALREADY carries ``_salt`` (see
-      :func:`presalt`) and, ideally, arrives hash-clustered on
-      ``(host, _salt)`` from a bucketed snapshot: the rank then runs with
-      no payload exchange and no driver stats barrier
-      (:func:`rank_presalted`). Requires ``priority_col`` constant per
-      host (raises otherwise) — valid for every non-deferral round,
-      where the whole frontier sits at one depth.
+    * ``skew_safe=True`` — the salted rank (:func:`rank_presalted`), no
+      per-host serial task. With ``rank_strategy="presalted"`` the batch
+      ALREADY carries ``_salt`` (see :func:`presalt`) and, ideally,
+      arrives hash-clustered on ``(host, _salt)`` from a bucketed
+      snapshot: the rank then runs with no payload exchange, and
+      ``_salt`` stays on both returned frames. Otherwise the batch is
+      salted here by ``salt_width`` and ``_salt`` is dropped again; the
+      planner sizes the rank's exchanges (the window's payload exchange
+      plus a partially aggregated count exchange).
+    * ``skew_safe=False`` — one plain per-host window, kept as the
+      parity reference; ``shuffle_partitions`` sizes its exchange.
     """
     b = with_host_policy(batch, policy, default_limit, default_window_s)
 
     if rank_strategy == "presalted":
-        # counts_src needs only (host, priority_col, _salt) — all data
-        # columns, so no policy join on the counts path
-        b = rank_presalted(b, priority_col, counts_src=counts_src)
+        b = rank_presalted(b, priority_col)
     elif skew_safe:
-        b = skew_resistant_host_rank(
-            b, priority_col, shuffle_partitions or 32, salt_width=salt_width
-        )
+        b = rank_presalted(presalt(b, salt_width), priority_col).drop("_salt")
     else:
         if shuffle_partitions:
             b = b.repartition(shuffle_partitions, F.xxhash64("host"))

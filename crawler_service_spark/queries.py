@@ -171,10 +171,10 @@ SQL_F1 = """
 # per-shard array probe, the bloom entry's remaining gap vs the plain
 # anti-join at sf0.1 is FIXED per-invocation cost (plan build + one
 # extra broadcast barrier on a ~0.15 s job). Steady-state plans measure
-# ratio 0.99 at 150k rows, 1.19 at 1.5M, 1.25 at 6M
-# (scripts/exp_bloom_scale.py) — and at sf0.1's 50k-row seen set the
-# engine's shipped policy would take the plain broadcast anti-join
-# anyway; the sharded bloom engages past large_seen_threshold, where
+# ratio 0.99 at 150k rows, 1.19 at 1.5M, 1.25 at 6M (BENCH/NOTES_r05.md
+# "d1_bloom_sharded vs d1_seen_antijoin") — and at sf0.1's 50k-row seen
+# set the engine's shipped policy would take the plain broadcast
+# anti-join anyway; the sharded bloom engages past large_seen_threshold, where
 # its point is shrinking the seen-side SHUFFLE.
 def _session_cache(spark, attr: str) -> dict:
     """Per-session memo dict stored ON the session object: its lifetime
@@ -293,9 +293,10 @@ def q_rl1_budget_rank(spark, sf_dir):
 
 
 def q_rl1_budget_rank_salted(spark, sf_dir):
-    """Same rank, HOT path: salt_width=50 makes every 100-row host "hot",
-    so the DuckDB oracle also gates the salted two-level rank (the cold
-    path is what sf0.01 data exercises by default)."""
+    """Same rank, MULTI-BUCKET: salt_width=50 splits every 100-row host
+    over several salt buckets, so the DuckDB oracle also gates the salted
+    rank's cross-bucket offsets (at the default width every host fits in
+    one bucket)."""
     ev = load(spark, sf_dir, "events")
     batch = ev.select(
         F.concat(F.lit("h"), (F.col("user_id") % 100).cast("string")).alias("host"),
@@ -318,8 +319,8 @@ def q_rl1_budget_rank_presalted(spark, sf_dir):
     """Same rank through the LAYOUT path: the batch carries a
     materialized ``_salt`` column (presalt) and ranks with the
     exchange-free offsets-join rank (rank_presalted) — the shape a
-    bucketed/Iceberg frontier snapshot enables. Identical oracle: all
-    three rank strategies must be row-identical."""
+    bucketed/Iceberg frontier snapshot enables. Identical oracle: the
+    plain, salted and presalted entries must be row-identical."""
     from crawler_service_spark.operators.politeness import presalt
     ev = load(spark, sf_dir, "events")
     batch = ev.select(
@@ -676,7 +677,8 @@ def q_dedup_minhash_sig(spark, sf_dir):
     than one seeded md5 per lane. The shared hash array is built in its
     own projection; CollapseProject keeps the expensive producer out of
     the four consumers (optimized plan carries exactly one md5 node —
-    measured 9.3s -> 3.2s at sf0.1, scripts/exp_minhash_lanes.py).
+    measured 9.3s -> 3.2s at sf0.1, BENCH/NOTES_r05.md
+    "dedup_minhash_sig — hash once, slice the digest").
     At scale the whole map is native expressions, no shuffle."""
     doc = load(spark, sf_dir, "documents")
     hs = doc.select("doc_id", F.expr(_MH_SHINGLES).alias("_hs"))
@@ -963,7 +965,7 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # rounds (r03 VERDICT item 7): r03 ran d2_first_occurrence_window
     # (green r02+r03; strategies stay pinned row-identical by
     # tests/test_dedup_strategies.py), r04 hands that slot to the salted
-    # rank so all three RL1 strategies have oracle rows over r01–r04
+    # rank so all three RL1 entries have oracle rows over r01–r04
     # (salted stays pinned by tests/test_politeness_rank.py::
     # test_salted_rank_equals_plain_window regardless).
     "rl1_budget_rank": q_rl1_budget_rank,

@@ -57,9 +57,17 @@ class SnapshotStore:
         entries, so without this a fresh crawl that dies early would
         leave the old crawl's later rounds in the manifest — and a
         subsequent resume would silently merge the two crawls' seen
-        sets and pages."""
+        sets and pages. This store's bucketed catalog entries go too
+        (external tables: dropping them never touches files)."""
         import shutil
 
+        spark = SparkSession.getActiveSession()
+        if spark is not None:
+            for row in spark.sql(
+                f"SHOW TABLES LIKE '{self._bucket_table_prefix()}*'"
+            ).collect():
+                if not row["isTemporary"]:
+                    spark.sql(f"DROP TABLE IF EXISTS {row['tableName']}")
         for entry in os.listdir(self.root):
             p = self.root / entry
             # only remove dirs that are store tables (round=NNNNNN
@@ -101,12 +109,14 @@ class SnapshotStore:
         return spark.read.parquet(self._table_path(table, rnd))
 
     # -- bucketed snapshots (frontier layout) --------------------------------
-    def _bucket_table_name(self, table: str, rnd: int) -> str:
+    def _bucket_table_prefix(self) -> str:
         # catalog entry per (store root, table, round): the md5 prefix
         # keeps concurrent engines over different checkpoint dirs from
         # colliding in the shared session catalog
-        h = hashlib.md5(str(self.root).encode()).hexdigest()[:8]
-        return f"snap_{h}_{table}_{rnd:06d}"
+        return f"snap_{hashlib.md5(str(self.root).encode()).hexdigest()[:8]}_"
+
+    def _bucket_table_name(self, table: str, rnd: int) -> str:
+        return f"{self._bucket_table_prefix()}{table}_{rnd:06d}"
 
     @staticmethod
     def _bucketize_files(path: str, buckets: int) -> None:
@@ -176,7 +186,7 @@ class SnapshotStore:
         saveAsTable bucketed-write path re-sorts by (bucketId,
         sort_cols…) and pays catalog round-trips per round; measured
         c4 29.2→20.4 s / c16 8.2→6.2 s on the 21M-row bench snapshot
-        (scripts/exp_rank_variants2.py)."""
+        (A/B script in commit ed7456c, scripts/exp_rank_variants2.py)."""
         spark = df.sparkSession
         name = self._bucket_table_name(table, rnd)
         path = self._table_path(table, rnd)
@@ -236,6 +246,12 @@ class SnapshotStore:
                 f"LOCATION '{self._sql_str(self._table_path(table, rnd))}'"
             )
         return spark.table(name)
+
+    def drop_bucketed(self, spark: SparkSession, table: str, rnd: int) -> None:
+        """Release a consumed bucketed snapshot's catalog entry. The
+        table is external, so its files stay and
+        ``read_table_bucketed`` can re-register them."""
+        spark.sql(f"DROP TABLE IF EXISTS {self._bucket_table_name(table, rnd)}")
 
     def commit_round(self, rnd: int, tables: list[str], counters: dict) -> None:
         """Atomic-enough commit: manifest written last, via rename."""

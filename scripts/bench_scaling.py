@@ -42,6 +42,10 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# first line of the hand-written BENCH/BASELINE.md addendum that report
+# regeneration keeps verbatim
+ADDENDUM_SENTINEL = (
+    "<!-- ADDENDUM: preserved verbatim by scripts/bench_scaling.py report")
 
 """Job sizes: large enough that per-run fixed costs (driver planning,
 catalog ops, broadcast builds, stage scheduling — fitted f ≈ 12-14 s,
@@ -432,15 +436,17 @@ scaling efficiency {eff:.3f}** (best-vs-best: {best_speedup:.2f}×, {best_eff:.3
 """)
 
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    # a hand-written "<!-- ADDENDUM" block at the end of the report
+    # a hand-written addendum block at the end of the report
     # (post-campaign analysis that must not be lost) survives
-    # regeneration verbatim
+    # regeneration verbatim; it starts at the full sentinel line
     addendum = ""
     if os.path.exists(path):
-        prev = open(path).read()
-        idx = prev.find("<!-- ADDENDUM")
-        if idx != -1:
-            addendum = "\n" + prev[idx:]
+        with open(path) as f:
+            prev = f.read().splitlines(keepends=True)
+        for i, line in enumerate(prev):
+            if line.rstrip("\n") == ADDENDUM_SENTINEL:
+                addendum = "\n" + "".join(prev[i:])
+                break
     with open(path, "w") as f:
         f.write(f"""# BENCH — two-parallelism scaling evidence (north rule)
 
@@ -507,46 +513,47 @@ A/Bs (host drift cancels pair-wise):
 1. **Window-strategy dedup** for the unique-heavy frontier: the agg's
    map-side sort collapses nothing there and burns a second full pass
    whose cost grows with concurrency — trades ~4% at 4 cores for 25%
-   at 16 (scripts/exp_dedup_strategy.py).
+   at 16 (A/B script in commit 19c7ad8, scripts/exp_dedup_strategy.py).
 2. **Bucket-sorted round snapshot + presalted rank**: the adaptive
    rank over a flat snapshot measured FLAT across cores (9.6 s at c4 →
    9.2 s at c16 on 5.3M rows — driver stats collect, exchange and sort
    are fixed-ish latency). Writing the snapshot repartitioned on
    (host, seq-salt) with bucketBy+sortBy (one file per bucket) makes
    the rank exchange-free and sort-free; the moved work rides the
-   write, which scales (scripts/exp_bucketed_phases.py,
-   exp_round_phases.py).
+   write, which scales (A/B scripts in commit 39ef1e8,
+   scripts/exp_bucketed_phases.py and exp_round_phases.py).
 3. **Pre-join alignment of the fetch join**: repartitioning the
    html-free admitted side on canon_url before joining the
    pre-partitioned store (instead of round-robin repartitioning the
    joined html-bearing rows) removes a full exchange of page bytes —
    9–13% of the fetch+extract phase at c16, neutral at c4
-   (scripts/exp_fetch_join.py).
+   (A/B script in commit 39ef1e8, scripts/exp_fetch_join.py).
 4. **Post-dedup host extraction** (rev 7): host is a pure function of
    the URL, so computing it AFTER the dedup exchange + seen anti-join
    keeps ~18B/row of host strings out of the job's largest shuffle and
    only runs the extraction regex on surviving rows — late/early
    median 0.91 over 8 in-JVM pairs at c16 vs 0.96 at c4
-   (scripts/exp_host_late.py), confirmed by the 2×2 matrix
-   (exp_sched_matrix.py): it pays most exactly where shuffle
-   bandwidth is the contended resource. The engine's crawl loop ships
-   the same shape (engine.py drops host+path before the expansion
-   dedup and recomputes via the hybrid `host_frame`).
+   (A/B script in commit ec1bc1b, scripts/exp_host_late.py), confirmed
+   by the 2×2 matrix (commit 2ee2c90, scripts/exp_sched_matrix.py): it
+   pays most exactly where shuffle bandwidth is the contended resource.
+   The engine's crawl loop ships the same shape (engine.py drops
+   host+path before the expansion dedup and recomputes via the hybrid
+   `host_frame`).
 5. **A documented negative** (rev 8): serving the rank's bucket counts
    from a plain column-pruned re-read of the snapshot (instead of the
    one-task-per-bucket bucketed scan) looked attractive from event-log
    stage attribution but measured SLOWER end-to-end at BOTH levels in
    the in-JVM 2×2 matrix (c4 median 110.7 s bucketed vs 115.4 s plain;
-   c16 31.7 vs 32.4 — exp_sched_matrix.py). The re-scan + aggregate
-   exchange costs what the per-bucket reader setup costs; the
-   exchange-free bucketed plan stays. Isolated-stage attribution
-   proposes, assembled-pipeline A/B disposes.
+   c16 31.7 vs 32.4 — commit 2ee2c90, scripts/exp_sched_matrix.py).
+   The re-scan + aggregate exchange costs what the per-bucket reader
+   setup costs; the exchange-free bucketed plan stays. Isolated-stage
+   attribution proposes, assembled-pipeline A/B disposes.
 
 The lesson generalizes to the 100 TB cluster: these are exactly the
 layout decisions an Iceberg frontier table (bucket-sorted on
 host-hash/seq-range) and a bucketed content store give for free — the
 bench proves the plan shapes, the engine ships them
-(CrawlConfig.frontier_layout, engine.py fetch join).
+(engine.py's bucket-sorted frontier snapshots and fetch join).
 """)
         f.write(addendum)
     print(json.dumps({"jobs": summary, "report": path}))

@@ -87,7 +87,7 @@ def main() -> None:
         fo,
     )
 
-    # 4. politeness schedule — adaptive skew-safe rank
+    # 4. politeness schedule — skew-safe salted rank
     frontier = spark.range(20_000).select(
         F.concat(F.lit("h"), (F.col("id") % 7).cast("string")).alias("host"),
         F.lit(0).alias("depth"),
@@ -95,16 +95,18 @@ def main() -> None:
     )
     sched, _ = schedule_round(frontier, None, shuffle_partitions=8, salt_width=2000)
     add(
-        "RL1 politeness rank (adaptive hot-host salting)",
-        "Cold hosts rank in a plain window; hot hosts (>= salt_width rows) "
-        "rank per contiguous seq-bucket with broadcast offsets — "
-        "`BroadcastHashJoin` joins the membership and offset sides back, "
-        "and no per-host serial task survives.",
+        "RL1 politeness rank (salted on the fly)",
+        "Every host is salted by contiguous discovery_seq ranges "
+        "(salt_width rows per bucket): one payload exchange feeds the "
+        "local window, a partially aggregated per-bucket count feeds "
+        "the offsets cumsum, and a single `BroadcastHashJoin` adds each "
+        "bucket's prefix-sum offset — no per-host serial task and no "
+        "driver collect.",
         sched,
     )
 
     # 4b. presalted rank over a bucket-sorted frontier snapshot — the
-    # engine's shipped layout path (frontier_layout="bucketsort")
+    # engine's layout path (CrawlEngine._write_frontier)
     import tempfile
 
     from crawler_service_spark.operators.politeness import presalt

@@ -8,7 +8,7 @@ consecutive probes under --max-probe seconds AND 1-min loadavg under
 --max-load. Exits nonzero if the window never opens within --timeout.
 
     python scripts/probe_gate.py --max-probe 0.5 -- \
-        taskset -c 0-15 python scripts/exp_sched_phases.py --cpus 16
+        env SPARK_GRAFT_CPUS=16 taskset -c 0-15 python bench.py --job schedule
 """
 from __future__ import annotations
 

@@ -174,6 +174,11 @@ def test_empty_seed_frontier_raises(spark):
                         checkpoint_dir=ck).crawl(seeds)
 
 
+def test_bloom_shards_below_one_rejected():
+    with pytest.raises(ValueError, match="bloom_shards"):
+        CrawlConfig(bloom_shards=0)
+
+
 def test_politeness_windows_disjoint_across_rounds(spark):
     """Merging ALL rounds' pages must still satisfy <= limit virtual
     fetches per host per window: the virtual clock resumes past the

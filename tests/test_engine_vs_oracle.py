@@ -203,32 +203,6 @@ def test_engine_matches_oracle_with_deferral(spark):
         _compare_seen(tables, oracle)
 
 
-def test_engine_deferral_flat_vs_bucketsort_layout(spark):
-    """r03: deferral composes with the bucketsort layout (the rank is
-    depth-major per bucket). Both layouts must produce identical fetch
-    order and seen sets on a deferral-heavy crawl."""
-    from crawler_service_spark.engine import fetch_order
-
-    def run(layout):
-        cfg = CrawlConfig(
-            max_depth=0, follow_links=True, respect_robots=False,
-            budget_rounds=1, default_rate_limit=10, frontier_layout=layout,
-        )
-        with tempfile.TemporaryDirectory() as tmp:
-            store = build_store_df(spark, 60, 1)
-            seeds = build_seeds_df(spark, 60, 1, 1)
-            engine = CrawlEngine(spark, cfg, store, checkpoint_dir=tmp)
-            tables = engine.crawl(seeds)
-            pages = fetch_order(tables.pages).select(
-                "task_id", "fetch_seq", "url", "depth", "round",
-                "virtual_fetch_time").collect()
-            seen = {(r["task_id"], r["canon_url"])
-                    for r in tables.seen.collect()}
-            return sorted(tuple(r) for r in pages), seen
-
-    assert run("bucketsort") == run("flat")
-
-
 def test_politeness_invariant(spark):
     """≤ limit virtual fetches per host per window (rate_limiter.py:67-90)."""
     from crawler_service_spark.operators.politeness import schedule_round

@@ -1,37 +1,46 @@
-"""Bucket-sorted frontier snapshots (CrawlConfig.frontier_layout).
+"""Bucket-sorted frontier snapshots (CrawlEngine._write_frontier).
 
-The layout is a pure physical-plan property: crawl results must be
-row-identical between "bucketsort" (default) and "flat", the rank over a
-layout snapshot must plan with no payload exchange and no sort, and a
-resume in a session whose catalog lost the table must re-register it
-from the files (the Iceberg-spec analog).
+The layout is a pure physical-plan property: the rank over a layout
+snapshot must plan with no payload exchange and no sort, the layout's
+``_salt`` column never reaches the pages, consumed snapshots release
+their catalog entries, and a resume in a session whose catalog lost the
+table must re-register it from the files (the Iceberg-spec analog).
 """
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import os
+
+import pytest
 
 from crawler_service_spark.config import CrawlConfig
 from crawler_service_spark.engine import CrawlEngine, fetch_order
 from crawler_service_spark.sources.corpus import build_seeds_df, build_store_df
+from crawler_service_spark.sources.storage import SnapshotStore
 
 
-def _crawl(spark, tmp_path, layout, sub):
-    cfg = CrawlConfig(max_depth=2, follow_links=True, frontier_layout=layout,
-                      shuffle_partitions=8)
-    eng = CrawlEngine(spark, cfg, build_store_df(spark, 120, 5),
-                      checkpoint_dir=str(tmp_path / sub))
-    return eng.crawl(build_seeds_df(spark, 120, 5, 3))
+def _engine(spark, tmp_path, sub):
+    cfg = CrawlConfig(max_depth=2, follow_links=True, shuffle_partitions=8)
+    return CrawlEngine(spark, cfg, build_store_df(spark, 120, 5),
+                       checkpoint_dir=str(tmp_path / sub))
 
 
-def test_layout_matches_flat(spark, tmp_path):
-    t_b = _crawl(spark, tmp_path, "bucketsort", "b")
-    t_f = _crawl(spark, tmp_path, "flat", "f")
-    cols = ["task_id", "canon_url", "depth", "discovery_seq", "fetch_seq",
-            "host_rank", "virtual_fetch_time", "title", "text_content"]
-    rows_b = {tuple(r) for r in fetch_order(t_b.pages).select(cols).collect()}
-    rows_f = {tuple(r) for r in fetch_order(t_f.pages).select(cols).collect()}
-    assert rows_b == rows_f
-    assert "_salt" not in t_b.pages.columns
+def _snap_tables(spark, store):
+    prefix = store._bucket_table_prefix()
+    return [t.name for t in spark.catalog.listTables()
+            if t.name.startswith(prefix)]
+
+
+def test_layout_releases_consumed_catalog_entries(spark, tmp_path):
+    """Each round's frontier snapshot registers a catalog table; once the
+    round commits the entry is dropped (files stay), and a fresh crawl's
+    reset drops whatever the store left behind."""
+    eng = _engine(spark, tmp_path, "leak")
+    t = eng.crawl(build_seeds_df(spark, 120, 5, 3))
+    assert len(t.round_counters) == 3
+    assert len(_snap_tables(spark, eng.storage)) <= 1
+    assert os.path.isdir(eng.storage.table_path("frontier", 1))
+    eng.storage.reset()
+    assert _snap_tables(spark, eng.storage) == []
 
 
 def test_layout_frontier_scan_rank_plan(spark, tmp_path):
@@ -77,6 +86,7 @@ def test_layout_resume_reregisters_catalog(spark, tmp_path):
     got = {tuple(r) for r in fetch_order(resumed.pages)
            .select("task_id", "canon_url", "fetch_seq").collect()}
     assert got == want
+    assert "_salt" not in resumed.pages.columns
 
 
 def test_bucketize_rejects_poisoned_and_duplicate_files(tmp_path):
@@ -84,10 +94,6 @@ def test_bucketize_rejects_poisoned_and_duplicate_files(tmp_path):
     item 4): a data file that doesn't match Spark's part-file naming, a
     bucket id >= the declared count, or two files for one bucket would
     each make the registered bucketed scan silently misgroup/skip rows."""
-    import pytest
-
-    from crawler_service_spark.sources.storage import SnapshotStore
-
     uuid = "0123abcd-89ab-cdef-0123-456789abcdef"
 
     def mk(files):
@@ -103,7 +109,6 @@ def test_bucketize_rejects_poisoned_and_duplicate_files(tmp_path):
     ok = mk([f"part-{i:05d}-{uuid}-c000.lz4.parquet" for i in range(4)]
             + ["_SUCCESS"])
     SnapshotStore._bucketize_files(ok, 4)
-    import os
     assert sorted(os.listdir(ok)) == sorted(
         [f"part-{i:05d}-{uuid}_{i:05d}.c000.lz4.parquet" for i in range(4)]
         + ["_SUCCESS"])
@@ -130,5 +135,6 @@ def test_layout_checkpoint_dir_with_apostrophe(spark, tmp_path):
     """LOCATION literals are escaped: a checkpoint dir containing an
     apostrophe (legal in POSIX paths, common in macOS user dirs) must
     not break the bucketed write/read DDL."""
-    t = _crawl(spark, tmp_path, "bucketsort", "bob's crawl")
+    t = _engine(spark, tmp_path, "bob's crawl").crawl(
+        build_seeds_df(spark, 120, 5, 3))
     assert fetch_order(t.pages).count() > 0

@@ -1,27 +1,23 @@
-"""Equality pins for the skew-resistant host rank (RL1, north rule).
+"""Equality pins for the skew-safe salted host rank (RL1, north rule).
 
-The salted two-level rank must produce EXACTLY the ranks of the plain
-per-host window — including hot hosts (≥ salt_width rows), mixed-priority
-hosts (which must fall back to the plain window per the precondition
-guard), and the budget-deferral split built on top of the ranks.
+The salted rank must produce EXACTLY the ranks of the plain per-host
+window — including hot hosts (many salt buckets), mixed-priority hosts,
+NULL priorities, and the budget-deferral split built on top of the ranks.
 """
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-import pytest
-
 from crawler_service_spark.operators.politeness import (
     presalt,
     rank_presalted,
     schedule_round,
-    skew_resistant_host_rank,
 )
 
 
 def _mixed_batch(spark, n=20_000):
-    """One hot host (~1/3 of rows), one mixed-priority host (hot-sized
-    but must fall back), a ring of cold hosts."""
+    """One hot host (~1/3 of rows), one hot-sized mixed-priority host, a
+    ring of cold hosts."""
     return spark.range(n).select(
         F.when(F.col("id") % 3 == 0, "hot.example.com")
         .when(F.col("id") % 7 == 0, "mixed.example.com")
@@ -37,15 +33,17 @@ def _mixed_batch(spark, n=20_000):
 
 def test_salted_rank_equals_plain_window(spark):
     b = _mixed_batch(spark)
-    ranked = skew_resistant_host_rank(b, "depth", 8, salt_width=1000)
-    w = Window.partitionBy("host").orderBy("depth", "discovery_seq")
-    ref = b.withColumn("host_rank", F.row_number().over(w).cast("long"))
-    got = {tuple(r) for r in ranked.collect()}
-    want = {tuple(r) for r in ref.collect()}
+    salted, _ = schedule_round(b, None, skew_safe=True, shuffle_partitions=8,
+                               salt_width=1000)
+    plain, _ = schedule_round(b, None, skew_safe=False, shuffle_partitions=8)
+    cols = b.columns + ["host_rank", "virtual_fetch_time"]
+    got = {tuple(r) for r in salted.select(cols).collect()}
+    want = {tuple(r) for r in plain.select(cols).collect()}
     assert got == want
     # column order is part of the operator contract (callers select by
-    # name, but unioning code paths must agree)
-    assert ranked.columns == b.columns + ["host_rank"]
+    # name, but unioning code paths must agree); the salt never leaks
+    assert salted.columns == plain.columns
+    assert "_salt" not in salted.columns
 
 
 def test_schedule_round_salted_vs_unsalted_budget_split(spark):
@@ -56,11 +54,13 @@ def test_schedule_round_salted_vs_unsalted_budget_split(spark):
         shuffle_partitions=8, salt_width=1000)
     adm_p, def_p = schedule_round(
         b, None, default_limit=5, budget_rounds=2,
-        shuffle_partitions=8, salt_width=10 ** 9)  # nothing hot → plain
+        shuffle_partitions=8, skew_safe=False)
     assert ({tuple(r) for r in adm_s.select(cols).collect()}
             == {tuple(r) for r in adm_p.select(cols).collect()})
     assert ({tuple(r) for r in def_s.select("host", "discovery_seq").collect()}
             == {tuple(r) for r in def_p.select("host", "discovery_seq").collect()})
+    assert "_salt" not in adm_s.columns and "_salt" not in def_s.columns
+
 
 def _const_priority_batch(spark, n=20_000):
     """Hot host + cold ring, priority constant per host (the presalted
@@ -109,7 +109,7 @@ def test_schedule_round_presalted_matches_plain(spark):
         rank_strategy="presalted")
     adm_p, def_p = schedule_round(
         b, None, default_limit=5, budget_rounds=2,
-        shuffle_partitions=8, salt_width=10 ** 9)  # nothing hot → plain
+        shuffle_partitions=8, skew_safe=False)
     assert ({tuple(r) for r in adm_s.select(cols).collect()}
             == {tuple(r) for r in adm_p.select(cols).collect()})
     assert ({tuple(r) for r in def_s.select("host", "discovery_seq").collect()}
@@ -139,24 +139,10 @@ def test_presalted_rank_over_bucketed_snapshot_no_exchange(spark, tmp_path):
     assert got == want
     # plan: the only exchanges allowed feed the tiny offsets branch
     # (count frame + its window); the payload side must scan → window
-    # with no Exchange in between — under EITHER offsets-join strategy
-    from crawler_service_spark.operators import politeness as pol
-
+    # with no Exchange in between
     plan = ranked._jdf.queryExecution().executedPlan().toString()
-    if pol.OFFSETS_JOIN == "broadcast":
-        payload = plan.split("BroadcastExchange")[0]
-        assert "Exchange" not in payload, payload
-    else:
-        # shuffle_hash: the streamed (payload) side is the join's FIRST
-        # child — every line of its subtree is prefixed with the ':'
-        # tree-continuation marker; offsets-side lines are not
-        lines = plan.splitlines()
-        j = next(i for i, ln in enumerate(lines) if "ShuffledHashJoin" in ln)
-        payload_lines = [ln for ln in lines[j + 1:] if ln.lstrip().startswith(":")]
-        assert payload_lines, plan
-        assert not any("Exchange" in ln for ln in payload_lines), plan
-        # and the whole plan carries no broadcast barrier for the rank
-        assert "BroadcastExchange" not in plan, plan
+    payload = plan.split("BroadcastExchange")[0]
+    assert "Exchange" not in payload, payload
     spark.sql("DROP TABLE IF EXISTS t_presalt_snap")
 
 
@@ -180,32 +166,11 @@ def test_presalted_rank_cross_bucket_priority(spark):
             assert rank == 2000 + seq + 1
 
 
-def test_presalted_counts_src_covering_and_mismatched(spark):
-    """ADVICE r03: an external counts_src holding the SAME rows ranks
-    identically to self-derived counts; one MISSING a bucket present in
-    b raises in-plan instead of silently dropping the uncovered rows."""
-    b = presalt(_mixed_batch(spark, 5_000), 500)
-    want = {(r["host"], r["discovery_seq"], r["host_rank"])
-            for r in rank_presalted(b, "depth").collect()}
-    got = {(r["host"], r["discovery_seq"], r["host_rank"])
-           for r in rank_presalted(b, "depth", counts_src=b).collect()}
-    assert got == want
-
-    partial = b.filter(F.col("host") != "hot.example.com")
-    with pytest.raises(Exception, match="counts_src is missing bucket"):
-        rank_presalted(b, "depth", counts_src=partial).collect()
-
-
-def test_presalted_rank_null_priority_both_strategies(spark, monkeypatch):
+def test_presalted_rank_null_priority_both_strategies(spark):
     """NULL priorities are a group of their own (plain-window NULLS FIRST
-    semantics) under BOTH offsets-join strategies. Regression (r05 code
-    review): the broadcast arm's using-columns equi-join silently DROPPED
-    NULL-priority rows (NULL keys never equi-match), and the
-    shuffle_hash residual's bare least==greatest — least/greatest SKIP
-    nulls — cross-matched every NULL row against every priority in its
-    bucket, duplicating rows and corrupting host_rank."""
-    import crawler_service_spark.operators.politeness as pol
-
+    semantics). Regression (r05 code review): a using-columns equi-join
+    on the offsets silently DROPPED NULL-priority rows (NULL keys never
+    equi-match); the broadcast offsets join is null-safe."""
     b = _mixed_batch(spark, 5_000).withColumn(
         "depth",
         F.when(F.col("discovery_seq") % 5 == 0, F.lit(None))
@@ -214,26 +179,6 @@ def test_presalted_rank_null_priority_both_strategies(spark, monkeypatch):
     want = {tuple(r) for r in
             b.withColumn("host_rank",
                          F.row_number().over(w).cast("long")).collect()}
-    for strategy in ("broadcast", "shuffle_hash"):
-        monkeypatch.setattr(pol, "OFFSETS_JOIN", strategy)
-        ranked = rank_presalted(presalt(b, 500), "depth")
-        got = {tuple(r) for r in ranked.drop("_salt").collect()}
-        assert got == want, f"strategy={strategy}"
-
-
-def test_presalted_counts_src_null_priority_covered(spark):
-    """The counts_src guard path must null-safe-match NULL-priority
-    buckets: a covering counts_src containing them must NOT raise the
-    missing-bucket error (the old using-columns left join never matched
-    NULL keys and raised spuriously)."""
-    b = presalt(
-        _mixed_batch(spark, 2_000).withColumn(
-            "depth",
-            F.when(F.col("discovery_seq") % 5 == 0, F.lit(None))
-            .otherwise(F.col("depth")).cast("int")),
-        500)
-    want = {(r["host"], r["discovery_seq"], r["host_rank"])
-            for r in rank_presalted(b, "depth").collect()}
-    got = {(r["host"], r["discovery_seq"], r["host_rank"])
-           for r in rank_presalted(b, "depth", counts_src=b).collect()}
+    ranked = rank_presalted(presalt(b, 500), "depth")
+    got = {tuple(r) for r in ranked.drop("_salt").collect()}
     assert got == want

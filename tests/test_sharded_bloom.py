@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_service_spark.operators.dedup import (
-    BloomPrefilter,
     ShardedBloomFilter,
     anti_join_seen,
 )
@@ -181,15 +180,3 @@ def test_ten_million_keys_driver_flat(spark):
     got = anti_join_seen(batch, seen, ["canon_url"], bloom=sb,
                          bloom_key="canon_url")
     assert got.count() == 5000
-
-
-def test_legacy_bloom_annotate_parity(spark):
-    """BloomPrefilter.annotate (driver bitmap) and ShardedBloomFilter
-    agree with the exact join on the same data."""
-    seen = keys(spark, 0, 2000)
-    batch = keys(spark, 1000, 4000, extra_cols=True)
-    legacy = BloomPrefilter(num_bits=1 << 16).fit(seen, "canon_url")
-    out = anti_join_seen(batch, seen, ["canon_url"], bloom=legacy,
-                         bloom_key="canon_url")
-    assert collect_keys(out) == collect_keys(
-        anti_join_seen(batch, seen, ["canon_url"]))
