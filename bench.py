@@ -4,11 +4,14 @@ Default mode runs the headline query suite at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints
 ONE JSON line ``{"metric", "value", "unit": "sec", "queries", "sf"}``.
 
-``--job schedule`` runs only the north-rule job — canonicalize + dedup +
-politeness-schedule a common-host-skewed synthetic frontier — and reports
-URLs scheduled+deduped/sec. ``scripts/bench_scaling.py`` runs that job at
-two parallelism levels (local[8] vs local[32]) in clean subprocesses and
-writes the scaling-efficiency report to ``BENCH/BASELINE.md``.
+``--job schedule`` runs only the north-rule job: a common-host-skewed
+synthetic link batch through the engine's link-to-frontier step
+(``engine.links_to_frontier``), its bucket-sorted frontier snapshot and
+the presalted politeness rank; it reports URLs scheduled/sec.
+``--job round`` adds the fetch join and the extraction stage.
+``scripts/bench_scaling.py`` runs these jobs at two parallelism levels
+in clean subprocesses and writes the scaling-efficiency report to
+``BENCH/BASELINE.md``.
 
 Every query is forced end-to-end with a noop sink
 (``df.write.format("noop")``) so Catalyst cannot prune work the way a
@@ -27,6 +30,21 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from crawler_service_spark.config import CrawlConfig
+from crawler_service_spark.engine import CrawlEngine, links_to_frontier, seen_key
+from crawler_service_spark.functions.urls import canonicalize_frame
+from crawler_service_spark.operators.dedup import ShardedBloomFilter
+from crawler_service_spark.operators.extract import extract_pages
+from crawler_service_spark.operators.politeness import presalt, schedule_round
+from crawler_service_spark.sources.storage import SnapshotStore
+
+# shuffle partitions are sized to the DATA (fixed across parallelism
+# levels), not to the core count: the scaling comparison must run the
+# identical work graph at both levels, differing only in how many tasks
+# execute concurrently
+SHUFFLE_PARTS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
+LINKS_PER_PARENT = 16
 
 HEADLINE = [
     # crawler-shaped core (SURVEY §2)
@@ -53,15 +71,10 @@ HEADLINE = [
 
 
 def build_spark(cpus: int, app: str) -> SparkSession:
-    # shuffle partitions are sized to the DATA (fixed across parallelism
-    # levels), not to the core count: the scaling comparison must run the
-    # identical work graph at both levels, differing only in how many
-    # tasks execute concurrently
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(parts))
+        .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -126,62 +139,6 @@ def cpu_probe() -> float:
 
 SNAP_DIR = os.environ.get("SPARK_GRAFT_SNAP_DIR", "/dev/shm/spark_graft_bench")
 
-# Frontier-job shape, measured and fixed (A/B scripts and their results:
-# BENCH/NOTES_r0*.md, BENCH/history.json):
-#
-# * first_occurrence strategy "window": a scheduling round's input
-#   frontier is unique-heavy (see operators/dedup.py), so the min-struct
-#   agg's map-side sort collapses nothing — measured 46.0 s (agg) vs
-#   34.4 s (window) at c16, 111.6 vs 116.6 at c4 on the 32M core.
-# * round snapshot bucket-sorted on (host, _salt) through
-#   SnapshotStore.write_table_bucketed: the rank's single payload
-#   exchange moves BEFORE the write, and the read-back scan satisfies the
-#   rank's clustering AND ordering, so rank_presalted runs with no
-#   payload exchange, no sort and no driver stats barrier. Clean-pair
-#   schedule job moved from eff ~0.59 (flat parquet + adaptive rank) to
-#   0.80.
-
-# total-rows crossover for resolve_host_stage
-HOST_MAX_EARLY_ROWS = 4_000_000
-
-
-def resolve_host_stage(n_rows: int, cpus: int) -> str:
-    """Where the frontier jobs compute the host column: "early" (at canon
-    time, before the dedup exchange) or "late" (after dedup + seen
-    anti-join, before the layout exchange that needs it). Host is a pure
-    function of the URL, so both are result-identical; the trade is
-    shuffle width vs fixed stage cost. "late" keeps ~18B/row of host
-    strings out of the job's biggest shuffle and only extracts hosts for
-    surviving rows — it wins when shuffle bandwidth is the contended
-    resource (32M rows: late/early median 0.91 over 8 pairs at c16, 0.96
-    at c4; A/B script in commit ec1bc1b, scripts/exp_host_late.py). At
-    the driver's small shape (2M rows, local[32]) late's extra projection
-    stage dominates: early won all 3 interleaved rounds, median 6.0 s vs
-    8.2 s (BENCH/driver_shape_ab.jsonl).
-
-    Picks by INPUT SIZE ONLY and deliberately ignores ``cpus``: a cluster
-    job's physical plan must be a function of the data, not the cluster
-    size, or an N->4N scaling comparison compares two different engines.
-    The 4M threshold keeps every scaling shape (6M round / 32M schedule)
-    on the measured late branch while the driver's 2M shape gets early."""
-    del cpus
-    return "early" if n_rows <= HOST_MAX_EARLY_ROWS else "late"
-
-
-def snapshot_layout(spark: SparkSession, df: DataFrame, name: str,
-                    buckets: int) -> DataFrame:
-    """Materialize a round snapshot on tmpfs the way the engine does
-    (SnapshotStore.write_table_bucketed) and read it back as a
-    bucket-sorted scan; RAM-backed storage stands in for the cluster's
-    distributed object store."""
-    from crawler_service_spark.engine import CrawlEngine
-    from crawler_service_spark.sources.storage import SnapshotStore
-
-    store = SnapshotStore(f"{SNAP_DIR}/{name}")
-    layout = (buckets, ["host", "_salt"], CrawlEngine._FRONTIER_SORT)
-    store.write_table_bucketed(df, "frontier", 0, *layout)
-    return store.read_table_bucketed(spark, "frontier", 0, *layout)
-
 
 def settle(spark: SparkSession) -> None:
     """Drain leftover state between warmup and the timed region: measured
@@ -200,11 +157,16 @@ def settle(spark: SparkSession) -> None:
 
 
 def synth_frontier(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
-    """Deterministic common-host-skewed frontier (Zipf(1) over hosts).
+    """Deterministic common-host-skewed link batch (Zipf(1) over hosts),
+    shaped like the engine's expansion output after the link filters:
+    ``task_id, seed_netloc, depth, parent_seq, link_pos, url``, every
+    column a function of the row id.
 
     u = hash(id)/2^20 in [0,1); host = floor(n_hosts^u) has density ~ 1/x
-    — a few hot hosts dominate, per the BASELINE.json metric. URLs carry
-    the dirty-variant cycle exercised by the canonicalizer (ports, case,
+    — a few hot hosts dominate, per the BASELINE.json metric. Each host
+    is its own task (so every link is internal to its seed's host), and
+    row id = parent_seq * LINKS_PER_PARENT + link_pos. URLs carry the
+    dirty-variant cycle exercised by the canonicalizer (ports, case,
     trailing slash, unsorted query).
 
     Partition count is pinned to SPARK_GRAFT_SHUFFLE_PARTS (not
@@ -213,8 +175,7 @@ def synth_frontier(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
     ties partitions to the core count, which handed c4 coarse 8-way
     scans and c16 32-way ones.
     """
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-    df = spark.range(0, n, 1, parts).withColumn(
+    df = spark.range(0, n, 1, SHUFFLE_PARTS).withColumn(
         "u", (F.pmod(F.xxhash64("id"), F.lit(1 << 20))) / F.lit(float(1 << 20))
     )
     host_id = F.floor(F.pow(F.lit(float(n_hosts)), F.col("u"))).cast("long")
@@ -229,10 +190,63 @@ def synth_frontier(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
         .otherwise(F.concat(F.lit("https://h"), k, F.lit(".example.com/p/"), nstr, F.lit("?b=2&a=1")))
     )
     return df.select(
-        F.col("id").alias("discovery_seq"),
-        F.lit(0).alias("depth"),
+        F.concat(F.lit("task"), k).alias("task_id"),
+        F.concat(F.lit("h"), k, F.lit(".example.com")).alias("seed_netloc"),
+        F.lit(1).alias("depth"),
+        F.expr(f"id DIV {LINKS_PER_PARENT}").alias("parent_seq"),
+        (F.col("id") % LINKS_PER_PARENT).cast("int").alias("link_pos"),
         url.alias("url"),
     )
+
+
+def _link_id():
+    return F.col("parent_seq") * LINKS_PER_PARENT + F.col("link_pos")
+
+
+def synth_seen(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
+    """A seen set holding every third URL of ``synth_frontier(n)``."""
+    links = synth_frontier(spark, n, n_hosts).filter(_link_id() % 3 == 0)
+    return canonicalize_frame(links, "url").select("task_id", "canon_url")
+
+
+def fit_bloom(spark: SparkSession, cfg: CrawlConfig, seen: DataFrame,
+              n_seen: int) -> ShardedBloomFilter | None:
+    """The engine's prefilter policy: a bloom over the seen keys only
+    once the seen set is past ``large_seen_threshold``."""
+    if n_seen <= cfg.large_seen_threshold:
+        return None
+    bloom = ShardedBloomFilter(spark, cfg.bloom_num_bits, cfg.bloom_num_hashes,
+                               n_shards=cfg.bloom_shards)
+    return bloom.fit(seen.select(seen_key().alias("k")), "k")
+
+
+def schedule_links(spark: SparkSession, cfg: CrawlConfig, store: SnapshotStore,
+                   links: DataFrame, n_links: int, seen: DataFrame,
+                   bloom: ShardedBloomFilter | None, n_seen: int) -> DataFrame:
+    """The engine's link-to-frontier step over ``links`` (the output of
+    ``synth_frontier(n_links)``), then its bucket-sorted frontier
+    snapshot in ``store`` and the presalted politeness rank over the
+    read-back scan (``CrawlEngine.crawl``). Returns the admitted rows."""
+    n_parents = -(-n_links // LINKS_PER_PARENT)
+    frontier = links_to_frontier(links, seen, cfg, bloom=bloom,
+                                 seen_total=n_seen, seq_base=n_parents,
+                                 seq_min=0)
+    layout = (cfg.shuffle_partitions, ["host", "_salt"],
+              CrawlEngine._FRONTIER_SORT)
+    store.write_table_bucketed(presalt(frontier, cfg.frontier_salt_width),
+                               "frontier", 0, *layout)
+    admitted, _ = schedule_round(
+        store.read_table_bucketed(spark, "frontier", 0, *layout),
+        None,
+        default_limit=cfg.default_rate_limit,
+        default_window_s=cfg.rate_limit_window_s,
+        round_epoch=cfg.round_epoch,
+        budget_rounds=cfg.budget_rounds,
+        priority_col="depth",
+        shuffle_partitions=cfg.shuffle_partitions,
+        rank_strategy="presalted",
+    )
+    return admitted.drop("_salt")
 
 
 def timed_reps(spark, run, n: int, reps: int) -> dict:
@@ -255,131 +269,21 @@ def timed_reps(spark, run, n: int, reps: int) -> dict:
     return {"sec": best, "urls_per_sec": round(n / best, 1), "rep_runs": runs}
 
 
-def run_schedule_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
-                     reps: int = 1) -> dict:
-    """The north-rule job, structured like one engine round (engine.py
-    crawl loop): the round's INPUT frontier arrives materialized (the
-    previous round's snapshot — persisted here, so the fast/slow canon
-    union and the rank's offset branch re-read memory, not lineage);
-    the built batch is materialized again before scheduling (the round
-    snapshot). Materializations use memory persist rather than the
-    single local disk: on a cluster the snapshot write is distributed
-    object-store IO that scales with executors, but one laptop disk
-    does not — a disk-bound stage would benchmark the disk, not the
-    engine (BENCH/BASELINE.md documents this proxy choice)."""
-    from crawler_service_spark.functions.urls import canonicalize_frame, host_native
-    from crawler_service_spark.operators.dedup import with_key_hash, anti_join_seen, first_occurrence
-    from crawler_service_spark.operators.politeness import presalt, schedule_round
+def frontier_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
+                 reps: int = 1, fetch: bool = False) -> dict:
+    """The north-rule job: ``schedule_links`` over an ``n``-link batch
+    against a seen set of a third of it. With ``fetch`` (the round job)
+    the admitted rows also go through the fetch join against a content
+    store and the mapInPandas extraction (X1–X8) — the compute-dense
+    half of a crawl round. The inputs are persisted and the bloom, if
+    the seen set is big enough for one, is fitted before the timed
+    region; memory persist stands in for the cluster's distributed
+    storage (BENCH/BASELINE.md documents this proxy choice)."""
+    cfg = CrawlConfig(shuffle_partitions=SHUFFLE_PARTS)
+    store = SnapshotStore(f"{SNAP_DIR}/frontier_job")
 
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-    # bucket count for the bucket-sorted snapshot. 256 dates from the
-    # adaptive rank's separate SORT stage (finer sorts, shorter tails);
-    # with the layout the sort is gone and 256 one-bucket files only buy
-    # scheduling latency — a 256-task counts scan (bucketed scans cannot
-    # coalesce), 256 write commits, 256-file listings. 64 measured ~9%
-    # faster at c16 and neutral at c4 (in-JVM alternating A/B script in
-    # commit 39ef1e8, scripts/exp_sched_actions.py).
-    rank_parts = 64
-
-    # resolved ONCE from the MEASURED n: the 1/40-scale warmup must
-    # exercise the same early/late branch as the timed run, or the late
-    # branch's first-use codegen/broadcast setup lands in the timed
-    # region (ADVICE r04 medium)
-    host_stage = resolve_host_stage(n, cpus)
-
-    def run_pipeline(src: DataFrame, seen_df: DataFrame, n_rows: int):
-        """Identical pipeline (same host_stage branch) for warmup and the
-        measured run; only the input size differs."""
-        b = canonicalize_frame(src, "url")
-        if host_stage == "early":
-            b = b.withColumn("host", host_native(F.col("url")))
-        # window strategy: the round's input frontier is unique-heavy
-        # (link-expansion dedup already ran when these URLs were
-        # discovered) — see the frontier-job notes above
-        b = first_occurrence(b, ["canon_url"], ["discovery_seq"],
-                             keep_hash=True, strategy="window")
-        b = anti_join_seen(b, seen_df, ["canon_url"],
-                           shuffle_hash=True, hash_key=True)
-        if host_stage == "late":
-            # host is a pure function of the URL: computing it AFTER the
-            # dedup exchange + anti-join keeps ~18B/row of host strings
-            # out of the job's biggest shuffle and runs the extraction
-            # regex on the surviving ~2/3 of rows only — shuffle bytes
-            # are the box's non-scaling resource (BENCH/NOTES_r05.md
-            # "Where the residual inefficiency lives")
-            b = b.withColumn("host", host_native(F.col("url")))
-        # width n/64 (was n/256): the offsets frame the rank broadcasts is
-        # hosts x (n/width) rows — 4x smaller here, measured rank c4
-        # 8.05->6.14 s / c16 3.75->3.14 s (A/B script in commit ed7456c,
-        # scripts/exp_rank_variants2.py); write balance unhurt (64
-        # salts/host still spread over all buckets)
-        salt_width = max(1 << 14, n_rows // 64)
-        # snapshot layout IS the scheduling layout: the rank needs no
-        # exchange, no sort and no driver stats barrier
-        b = snapshot_layout(spark, presalt(b, salt_width), "sched_round",
-                            rank_parts)
-        admitted, _ = schedule_round(
-            b, None, default_limit=10, default_window_s=60,
-            round_epoch=0.0, priority_col="depth",
-            rank_strategy="presalted",
-        )
-        force(admitted)
-        return b
-
-    frontier = synth_frontier(spark, n, n_hosts).persist()
-    frontier.count()
-    # a pre-existing seen set covering ~1/3 of the frontier (cached once;
-    # its build cost is excluded from the timed region)
-    seen = (
-        canonicalize_frame(
-            synth_frontier(spark, n, n_hosts).filter(F.col("discovery_seq") % 3 == 0),
-            "url",
-        )
-        .select("canon_url")
-    )
-    # pre-partitioned on the composite hash-prefixed key the anti-join
-    # uses: the persisted seen side then joins with NO per-round exchange
-    # (cluster analog: a bucketed/Iceberg seen table bucketed on the key)
-    seen = with_key_hash(seen.select("canon_url"), ["canon_url"])
-    seen = seen.repartition(parts, "_kh", "canon_url").persist()
-    seen.count()
-
-    # warmup (excluded): same pipeline at 1/40 scale — forks the Python
-    # worker pool, JIT-compiles the generated code, and exercises the
-    # broadcast path once, so the timed region measures throughput, not
-    # first-use setup (which is identical at every parallelism level and
-    # would otherwise swamp the faster one)
-    wf = synth_frontier(spark, max(100_000, n // 40), n_hosts)
-    run_pipeline(wf, seen, max(100_000, n // 40))
-    settle(spark)
-
-    res = timed_reps(spark, lambda: run_pipeline(frontier, seen, n), n, reps)
-    seen.unpersist()
-    frontier.unpersist()
-    return {"n_urls": n, "n_hosts": n_hosts, "cpus": cpus, **res}
-
-
-def run_round_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
-                  reps: int = 1) -> dict:
-    """One FULL engine round: schedule core (canonicalize → dedup → seen
-    anti-join → politeness rank) PLUS the fetch join against a content
-    store and the mapInPandas extraction stage (X1–X8) — the
-    compute-dense half of a real crawl round. The schedule-only job
-    isolates the shuffle core; this one is the engine's representative
-    per-round workload (extraction dominates at real page sizes, and
-    Arrow-batched Python workers scale near-linearly with cores)."""
-    from crawler_service_spark.config import CrawlConfig
-    from crawler_service_spark.functions.urls import canonicalize_frame, host_native
-    from crawler_service_spark.operators.dedup import with_key_hash, anti_join_seen, first_occurrence
-    from crawler_service_spark.operators.extract import extract_pages
-    from crawler_service_spark.operators.politeness import presalt, schedule_round
-
-    parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-    rank_parts = 64  # see run_schedule_job
-    cfg = CrawlConfig()
-
-    def mk_store(src: DataFrame) -> DataFrame:
-        nstr = F.col("discovery_seq").cast("string")
+    def mk_content(links: DataFrame) -> DataFrame:
+        nstr = _link_id().cast("string")
         html = F.concat(
             F.lit("<html><head><title>Doc "), nstr,
             F.lit("</title><meta name=\"description\" content=\"synthetic page "), nstr,
@@ -391,72 +295,53 @@ def run_round_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
             F.lit("1\">go</a></body></html>"),
         )
         return (
-            canonicalize_frame(src, "url")
+            canonicalize_frame(links, "url")
             .select("canon_url", html.alias("html"))
-            .repartition(parts, "canon_url")   # bucketed-store analog
+            .repartition(cfg.shuffle_partitions, "canon_url")   # bucketed-store analog
         )
 
-    # resolved ONCE from the MEASURED n — see run_schedule_job (ADVICE r04)
-    host_stage = resolve_host_stage(n, cpus)
+    seen = synth_seen(spark, n, n_hosts).persist()
+    n_seen = seen.count()
+    bloom = fit_bloom(spark, cfg, seen, n_seen)
+    content = None
+    if fetch:
+        content = mk_content(synth_frontier(spark, n, n_hosts)).persist()
+        content.count()
 
-    def run_pipeline(src: DataFrame, seen_df: DataFrame, store_df: DataFrame,
-                     n_rows: int) -> None:
-        b = canonicalize_frame(src, "url")
-        if host_stage == "early":
-            b = b.withColumn("host", host_native(F.col("url")))
-        b = first_occurrence(b, ["canon_url"], ["discovery_seq"],
-                             keep_hash=True, strategy="window")
-        b = anti_join_seen(b, seen_df, ["canon_url"],
-                           shuffle_hash=True, hash_key=True)
-        if host_stage == "late":
-            b = b.withColumn("host", host_native(F.col("url")))
-        salt_width = max(1 << 14, n_rows // 64)  # see run_schedule_job
-        b = snapshot_layout(spark, presalt(b, salt_width), "round_batch",
-                            rank_parts)
-        admitted, _ = schedule_round(
-            b, None, priority_col="depth", rank_strategy="presalted",
-        )
+    def run_pipeline(links: DataFrame, n_links: int) -> None:
+        admitted = schedule_links(spark, cfg, store, links, n_links, seen,
+                                  bloom, n_seen)
+        if not fetch:
+            force(admitted)
+            return
         fetched = (
             # pre-align the (html-free) admitted side with the store's
-            # hash partitioning: the join output then inherits `parts`
-            # uniform partitions (canon_url hashes uniformly) and the
-            # Arrow extraction fuses into the join stage — the previous
-            # post-join round-robin repartition pushed every html-bearing
-            # row through a second full exchange (measured 9-13% of the
-            # fetch+extract phase at c16; A/B script in commit 39ef1e8,
-            # scripts/exp_fetch_join.py).
-            # The explicit partition count also pins the stage against
-            # AQE byte-based coalescing (extraction cost is per ROW).
-            admitted.drop("_salt")
-            .repartition(parts, F.col("canon_url"))
-            .join(store_df, "canon_url", "left")
+            # hash partitioning, as the engine does: the join output
+            # inherits uniform partitions and the Arrow extraction fuses
+            # into the join stage
+            admitted.repartition(cfg.shuffle_partitions, F.col("canon_url"))
+            .join(content, "canon_url", "left")
             .withColumn("is_error", F.col("html").isNull())
         )
         pages = extract_pages(fetched, cfg)
         force(pages.select("canon_url", "title", "text_content", "links", "spans"))
 
-    frontier = synth_frontier(spark, n, n_hosts).persist()
-    frontier.count()
-    seen = (
-        canonicalize_frame(
-            synth_frontier(spark, n, n_hosts).filter(F.col("discovery_seq") % 3 == 0),
-            "url",
-        ).select("canon_url")
-    )
-    seen = with_key_hash(seen.select("canon_url"), ["canon_url"])
-    seen = seen.repartition(parts, "_kh", "canon_url").persist()
-    seen.count()
-    store = mk_store(synth_frontier(spark, n, n_hosts)).persist()
-    store.count()
+    links = synth_frontier(spark, n, n_hosts).persist()
+    links.count()
 
-    # warmup at 1/40 scale (excluded) — see run_schedule_job
+    # warmup (excluded): same pipeline at 1/40 scale — forks the Python
+    # worker pool, JIT-compiles the generated code, and exercises the
+    # broadcast path once, so the timed region measures throughput, not
+    # first-use setup (which is identical at every parallelism level and
+    # would otherwise swamp the faster one)
     wn = max(50_000, n // 40)
-    run_pipeline(synth_frontier(spark, wn, n_hosts), seen, store, wn)
+    run_pipeline(synth_frontier(spark, wn, n_hosts), wn)
     settle(spark)
 
-    res = timed_reps(spark, lambda: run_pipeline(frontier, seen, store, n), n, reps)
-    for df in (frontier, seen, store):
-        df.unpersist()
+    res = timed_reps(spark, lambda: run_pipeline(links, n), n, reps)
+    for df in (links, seen, content):
+        if df is not None:
+            df.unpersist()
     return {"n_urls": n, "n_hosts": n_hosts, "cpus": cpus, **res}
 
 
@@ -481,8 +366,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.job in ("schedule", "round"):
-        fn = run_schedule_job if args.job == "schedule" else run_round_job
-        res = fn(spark, args.n_urls, args.n_hosts, cpus, reps=args.reps)
+        res = frontier_job(spark, args.n_urls, args.n_hosts, cpus,
+                           reps=args.reps, fetch=args.job == "round")
         res["job"] = args.job
         print(json.dumps(res))
         spark.stop()
@@ -530,11 +415,11 @@ def main() -> None:
     # 17 queries above — r03/r04 recorded 21.5/18.6 s here while the
     # same job standalone measured 4.3–8.6 s. Per-rep walls + spin
     # probes are disclosed below so a slow host window is attributable.
-    sched = run_schedule_job(spark, args.n_urls, args.n_hosts, cpus,
-                             reps=max(2, args.reps))
+    sched = frontier_job(spark, args.n_urls, args.n_hosts, cpus,
+                         reps=max(2, args.reps))
     timings["frontier_schedule_dedup"] = sched["sec"]
-    rnd = run_round_job(spark, max(200_000, args.n_urls // 8), args.n_hosts, cpus,
-                        reps=max(2, args.reps))
+    rnd = frontier_job(spark, max(200_000, args.n_urls // 8), args.n_hosts,
+                       cpus, reps=max(2, args.reps), fetch=True)
     timings["frontier_full_round"] = rnd["sec"]
 
     total = round(sum(timings.values()), 3)

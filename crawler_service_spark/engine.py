@@ -64,6 +64,78 @@ FRONTIER_COLS = [
 ]
 
 
+def seen_key():
+    """The URL-seen key as one string column: the bloom filter's key."""
+    return F.concat_ws("\x01", F.col("task_id"), F.col("canon_url"))
+
+
+def links_to_frontier(
+    cand: DataFrame,
+    seen: DataFrame,
+    cfg: CrawlConfig,
+    *,
+    bloom: ShardedBloomFilter | None,
+    seen_total: int,
+    seq_base: int,
+    seq_min: int,
+) -> DataFrame:
+    """One round's link batch to next-round frontier rows: P1
+    canonicalize, D2 first occurrence, D1 seen anti-join, O1 dense
+    ``discovery_seq`` and P2 host, projected to ``FRONTIER_COLS``.
+
+    ``cand`` carries ``task_id``, ``seed_netloc``, ``url``, ``depth``,
+    ``parent_seq`` and ``link_pos``; ``seen`` carries ``(task_id,
+    canon_url)``. ``seen_total`` (an upper bound on the seen rows) picks
+    the anti-join's physical plan; the parents' sequence numbers span
+    ``[seq_min, seq_base)`` and new rows are numbered from ``seq_base``.
+    """
+    # cand is computed lineage (explode→filter): one scan of it
+    cand = canonicalize_frame(
+        cand, "url", "canon_url", cfg.sort_query_params,
+        single_scan=True,
+    )
+    # keep_hash/hash_key: dedup groups and the anti-join join on
+    # (xxhash64(key), key…) — the random-long sort prefix resolves
+    # SortAggregate comparisons that full-compare on the shared
+    # "https://…" prefix otherwise, and the anti-join reuses the
+    # aggregate's exchange
+    cand = first_occurrence(
+        cand, ["task_id", "canon_url"], ["parent_seq", "link_pos"],
+        keep_hash=True,
+    )
+    cand = anti_join_seen(
+        cand.withColumn("_bloom_key", seen_key()),
+        seen,
+        ["task_id", "canon_url"],
+        bloom=bloom,
+        bloom_key="_bloom_key",
+        # hash-build the seen side once it is too big to broadcast
+        # anyway (count known from round counters — no extra job);
+        # below that, leave the planner its broadcast-anti plan
+        shuffle_hash=seen_total > cfg.large_seen_threshold,
+        hash_key=True,
+    ).drop("_bloom_key")
+    # discovery_seq is GLOBAL: per-round dense rank over (parent_seq,
+    # link_pos) shifted by seq_base, so ordering and first-occurrence
+    # stay well-defined when deferred rows from earlier rounds share
+    # the frontier.
+    # base=seq_min: parents span [seq_min, seq_base), so bucketing over
+    # the cumulative [0, seq_base) range would collapse late rounds'
+    # candidates into 1-2 buckets and serialize the dense-seq window
+    # (the two-level scheme's whole point is that no executor sees more
+    # than one bucket)
+    cand = assign_dense_seq(
+        cand, "parent_seq", "link_pos", seq_base,
+        cfg.seq_buckets, base=seq_min,
+    ).withColumn(
+        "discovery_seq", F.col("discovery_seq") + F.lit(seq_base)
+    )
+    # recompute host only for rows that survived dedup + seen
+    # filtering (deferred frontier rows keep theirs)
+    cand = host_frame(cand, "url")
+    return cand.select(FRONTIER_COLS)
+
+
 @dataclass
 class CrawlTables:
     pages: DataFrame          # all rounds, unordered; order key = (task_id, depth, discovery_seq)
@@ -117,9 +189,6 @@ class CrawlEngine:
         ).repartition(cfg.shuffle_partitions, "canon_url")
 
     # ------------------------------------------------------------------ util
-    def _seen_key(self):
-        return F.concat_ws("", F.col("task_id"), F.col("canon_url"))
-
     def _read_seen(self, rounds: list[int]) -> DataFrame | None:
         if not rounds:
             return None
@@ -381,13 +450,13 @@ class CrawlEngine:
                 if not bloom.fitted:
                     bloom.fit(
                         self._read_seen(seen_rounds)
-                        .select(self._seen_key().alias("k")),
+                        .select(seen_key().alias("k")),
                         "k",
                     )
                 else:
                     bloom.update(
                         self.storage.read_table(self.spark, "seen", rnd)
-                        .select(self._seen_key().alias("k")),
+                        .select(seen_key().alias("k")),
                         "k",
                     )
             seen = self._read_seen(seen_rounds)
@@ -413,61 +482,17 @@ class CrawlEngine:
                     cand = filter_robots(cand, self.policy)
                 # host and path are pure functions of the URL: drop them
                 # before the dedup + anti-join + dense-seq exchanges
-                # (host is recomputed below by `host_frame`, byte-equal
-                # to the filter's value) so the round's biggest shuffles
-                # move ~40B/row less — the schedule-core A/B measured
-                # post-dedup host extraction worth ~9% at 16 cores
+                # (links_to_frontier recomputes host with `host_frame`,
+                # byte-equal to the filter's value) so the round's
+                # biggest shuffles move ~40B/row less — the schedule-core
+                # A/B measured post-dedup host extraction worth ~9% at
+                # 16 cores
                 # (A/B script in commit ec1bc1b, scripts/exp_host_late.py)
                 cand = cand.drop("host", "path")
-                # single-scan strategy: cand is computed lineage
-                # (explode→filter); the union strategy would re-execute
-                # it once per branch
-                cand = canonicalize_frame(
-                    cand, "url", "canon_url", cfg.sort_query_params,
-                    single_scan=True,
-                )
-                # keep_hash/hash_key: dedup groups and the anti-join join
-                # on (xxhash64(key), key…) — the random-long sort prefix
-                # resolves SortAggregate comparisons that full-compare on
-                # the shared "https://…" prefix otherwise, and the
-                # anti-join reuses the aggregate's exchange
-                cand = first_occurrence(
-                    cand, ["task_id", "canon_url"], ["parent_seq", "link_pos"],
-                    keep_hash=True,
-                )
-                cand = anti_join_seen(
-                    cand.withColumn("_bloom_key", self._seen_key()),
-                    seen,
-                    ["task_id", "canon_url"],
-                    bloom=bloom,
-                    bloom_key="_bloom_key",
-                    # hash-build the seen side once it is too big to
-                    # broadcast anyway (count known from round counters —
-                    # no extra job); below that, leave the planner its
-                    # broadcast-anti plan
-                    shuffle_hash=seen_total > cfg.large_seen_threshold,
-                    hash_key=True,
-                ).drop("_bloom_key")
-                # discovery_seq is GLOBAL: per-round dense rank over
-                # (parent_seq, link_pos) shifted by seq_base, so ordering
-                # and first-occurrence stay well-defined when deferred
-                # rows from earlier rounds share the frontier
-                # base=seq_min: parents span [seq_min, seq_base), so
-                # bucketing over the cumulative [0, seq_base) range
-                # would collapse late rounds' candidates into 1-2
-                # buckets and serialize the dense-seq window (the
-                # two-level scheme's whole point is that no executor
-                # sees more than one bucket)
-                cand = assign_dense_seq(
-                    cand, "parent_seq", "link_pos", seq_base,
-                    cfg.seq_buckets, base=seq_min,
-                ).withColumn(
-                    "discovery_seq", F.col("discovery_seq") + F.lit(seq_base)
-                )
-                # recompute host only for rows that survived dedup +
-                # seen filtering (deferred rows below kept theirs)
-                cand = host_frame(cand, "url")
-                frontier_parts.append(cand.select(FRONTIER_COLS))
+                frontier_parts.append(links_to_frontier(
+                    cand, seen, cfg, bloom=bloom, seen_total=seen_total,
+                    seq_base=seq_base, seq_min=seq_min,
+                ))
             if deferral:
                 frontier_parts.append(deferred.select(FRONTIER_COLS))
             if frontier_parts:

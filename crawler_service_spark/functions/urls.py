@@ -11,9 +11,14 @@ Two tiers:
 
 * **pandas UDFs** (`make_canon_udf`, `url_parts_udf`, `host_udf`) — exact
   `urllib.parse` parity, the engine's source of truth.
-* **native column expressions** (`host_native`, …) — JVM-side/codegen fast
-  paths used in SQL-oracle-checkable queries; unit tests pin them to the
-  pandas-UDF outputs on representative URL shapes.
+* **native column expressions** (`canonicalize_native`, `host_frame`'s
+  fast path) — JVM-side/codegen, applied only to rows
+  `native_canon_eligible` proves byte-identical; unit tests pin them to
+  the pandas-UDF outputs on representative URL shapes.
+
+`canonicalize_frame` and `host_frame` combine the two in one scan: the
+UDF input is nulled for eligible rows, so only the ineligible rows cross
+into Python.
 """
 
 from __future__ import annotations
@@ -140,16 +145,10 @@ def make_urljoin_udf():
 
 
 # ---------------------------------------------------------------------------
-# Native (JVM/codegen) fast paths — used where the plan must stay inside
-# whole-stage codegen and the URL shape is controlled; pinned to the pandas
-# UDFs by tests/test_urls.py.
+# Native (JVM/codegen) fast paths, applied only to `native_canon_eligible`
+# rows; pinned to the pandas UDFs by tests/test_urls.py and
+# tests/test_native_canon.py.
 # ---------------------------------------------------------------------------
-
-def host_native(url_col):
-    """Host extraction as a native expression (no Python)."""
-    netloc = F.regexp_extract(url_col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)", 1)
-    return F.lower(F.regexp_replace(netloc, r":\d+$", ""))
-
 
 def host_frame(df, url_col: str = "url", out_col: str = "host"):
     """P2 as a hybrid single-scan projection: the exact host the link
@@ -162,9 +161,9 @@ def host_frame(df, url_col: str = "url", out_col: str = "host"):
     Exists so the engine can compute ``host`` AFTER the link-dedup and
     seen-anti-join exchanges instead of carrying ~18B/row of host
     strings through them (host is a pure function of the URL; A/B
-    script in commit ec1bc1b, scripts/exp_host_late.py). The UDF input is nulled for eligible
-    rows (the `canonicalize_frame(single_scan=True)` pattern) so Python
-    sees mostly nulls."""
+    script in commit ec1bc1b, scripts/exp_host_late.py). The UDF input
+    is nulled for eligible rows (the `canonicalize_frame` pattern) so
+    Python sees mostly nulls."""
     eligible = native_canon_eligible(F.col(url_col))
     netloc = F.regexp_extract(
         F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1
@@ -182,8 +181,7 @@ def native_canon_eligible(url_col):
     either empty or strictly ``k=v(&k=v)*`` over urlencode-safe chars
     (anything else gets re-encoded by ``urlencode`` and must take the
     exact Python path)."""
-    # one anchored regex pass (the operator runs this once per branch of
-    # the fast/slow union — keep it a single scan of the string):
+    # one anchored regex pass (keep it a single scan of the string):
     # scheme :// authority+path (printable ASCII minus %+;[]\?#)
     # [? query of strict k=v pairs] [# printable-clean fragment]
     cls = r"[\x21-\x7E&&[^%+;\[\]\\?#]]"
@@ -258,42 +256,26 @@ def canonicalize_frame(
     url_col: str,
     out_col: str = "canon_url",
     sort_query: bool = True,
-    single_scan: bool = False,
+    single_scan: bool = True,
 ):
     """Hybrid P1: JVM-native fast path for eligible rows, exact pandas-UDF
     fallback for the rest. Equality is preserved because the native
     expression is byte-identical on exactly the rows it is applied to.
 
-    Two physical strategies, same result:
-
-    * union (default): filter+union — eligible rows NEVER cross Arrow.
-      Scans the input twice, so it wants a materialized input (parquet
-      snapshot / cache). Measured at 16M rows × 16 cores: 10.8 s vs
-      16.4 s single-scan — the all-rows Arrow crossing costs more than
-      the second scan of a materialized input.
-    * ``single_scan=True``: one pass; the UDF input is nulled for
-      eligible rows (``when(~eligible, url)``) so Python sees mostly
-      nulls, and a ``when`` projection picks the native result. For
-      COMPUTED lineage (the engine's explode→filter link batch) where a
-      second scan would re-execute the upstream plan.
+    One pass over ``df``: the UDF input is nulled for eligible rows
+    (``when(~eligible, url)``) so Python sees mostly nulls, and a
+    ``when`` projection picks the native result. ``single_scan`` must be
+    True (False raises); it stays for callers that pass it.
     """
+    if not single_scan:
+        raise ValueError("canonicalize_frame: single_scan=False is not supported")
     eligible = native_canon_eligible(F.col(url_col))
-    if single_scan:
-        slow_out = make_canon_udf(sort_query)(
-            F.when(~eligible, F.col(url_col))
-        )
-        return df.withColumn(
-            out_col,
-            F.when(eligible, canonicalize_native(F.col(url_col), sort_query))
-            .otherwise(slow_out),
-        )
-    fast = df.filter(eligible).withColumn(
-        out_col, canonicalize_native(F.col(url_col), sort_query)
+    slow_out = make_canon_udf(sort_query)(F.when(~eligible, F.col(url_col)))
+    return df.withColumn(
+        out_col,
+        F.when(eligible, canonicalize_native(F.col(url_col), sort_query))
+        .otherwise(slow_out),
     )
-    slow = df.filter(~eligible).withColumn(
-        out_col, make_canon_udf(sort_query)(F.col(url_col))
-    )
-    return fast.unionByName(slow)
 
 
 def skip_extension_predicate(path_col, extensions=None):

@@ -12,24 +12,19 @@ while the anti-join stays the source of truth.
 
 D2 (in-batch): the reference's O(n) pending-queue scan
 (crawler.py:144-146) — first raw variant of a canonical URL wins, where
-"first" is the deterministic (parent_seq, link_pos) order.
+"first" is the deterministic (parent_seq, link_pos) order. One physical
+shape: the map-side-combining min-struct aggregate.
+
+Both are shaped for the engine's link-to-frontier step
+(``engine.links_to_frontier``): the dedup keeps its ``(xxhash64(keys),
+keys…)`` grouping as ``_kh`` and the anti-join joins on the same
+composite, so no exchange sits between them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def with_key_hash(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Prepend ``_kh = xxhash64(key_cols…)`` with recorded provenance
-    (column metadata naming the key columns) — the form
-    ``anti_join_seen(hash_key=True)`` trusts for exchange reuse. Callers
-    pre-partitioning a seen table on ``(_kh, keys…)`` must use this
-    (a bare ``xxhash64(...).alias("_kh")`` now gets recomputed)."""
-    kh = F.xxhash64(*[F.col(k) for k in key_cols]).alias(
-        "_kh", metadata={"kh_keys": list(key_cols)})
-    return df.select(kh, *[c for c in df.columns if c != "_kh"])
 
 
 def first_occurrence(
@@ -37,7 +32,6 @@ def first_occurrence(
     key_cols: list[str],
     order_cols: list[str],
     keep_hash: bool = False,
-    strategy: str = "agg",
 ) -> DataFrame:
     """D2: keep the first row per key in deterministic order.
 
@@ -54,10 +48,9 @@ def first_occurrence(
     Physical note: a struct-with-strings min buffer forces SortAggregate
     (both sides of the exchange sort by key). A measured alternative —
     hash-agg ``min(order)`` + left-semi join for unique order keys — ran
-    3× SLOWER end-to-end: Catalyst pushes the semi-join through the
-    canonicalizer's fast/slow union, re-executing canonicalization per
-    branch and planning SMJ sorts anyway. The map-side-combining
-    SortAggregate is the right shape.
+    3× SLOWER end-to-end: Catalyst pushed the semi-join below the
+    canonicalizer, re-executing canonicalization, and planned SMJ sorts
+    anyway. The map-side-combining SortAggregate is the right shape.
 
     Sort-prefix note: canonical URLs share a long common prefix
     ("https://…"), so Tungsten's 8-byte sort prefix never discriminates
@@ -73,44 +66,13 @@ def first_occurrence(
     downstream ``anti_join_seen(..., hash_key=True)`` joining on the same
     composite reuses the partitioning — no extra exchange between dedup
     and the seen anti-join.
-
-    ``strategy`` picks the physical shape by the batch's dup profile:
-
-    * ``"agg"`` (default) — the map-side-combining min(struct) aggregate
-      above. Right for DUP-HEAVY batches (in-crawl link expansions, where
-      hot pages are linked from everywhere): partial aggregation collapses
-      duplicates before the exchange.
-    * ``"window"`` — ``row_number() over (partition by (hash, keys…)
-      order by order_cols, payload…)`` + ``filter rn=1``. Right for
-      UNIQUE-HEAVY batches (seed frontiers, post-dedup rounds): with few
-      dups the partial aggregate collapses nothing, so the agg pays TWO
-      full sorts (map-side partial + final) for nothing; the window pays
-      ONE post-shuffle sort. Identical result — ties on ``order_cols``
-      still break by the remaining columns because they extend the sort
-      key, and the output partitioning is the same ``(_kh, keys…)``
-      composite, so the anti-join exchange-reuse holds for both.
     """
-    if strategy not in ("agg", "window"):
-        raise ValueError(
-            f"first_occurrence: unknown strategy {strategy!r} "
-            "(expected 'agg' or 'window')"
-        )
     payload = [c for c in df.columns if c not in key_cols]
-    # record the hash's provenance as column metadata (see with_key_hash)
-    # so a downstream anti_join_seen(hash_key=True) can verify _kh was
-    # computed over the SAME key columns before reusing it (ADVICE r02)
+    # record the hash's provenance as column metadata so a downstream
+    # anti_join_seen(hash_key=True) can verify _kh was computed over the
+    # SAME key columns before reusing it (ADVICE r02)
     kh = F.xxhash64(*[F.col(k) for k in key_cols]).alias(
         "_kh", metadata={"kh_keys": list(key_cols)})
-    if strategy == "window":
-        rest = [c for c in payload if c not in order_cols]
-        w = Window.partitionBy("_kh", *key_cols).orderBy(*order_cols, *rest)
-        head = ["_kh", *key_cols] if keep_hash else list(key_cols)
-        return (
-            df.select(kh, "*")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*head, *payload)
-        )
     m = df.groupBy(kh, *[F.col(k) for k in key_cols]).agg(
         F.min(
             F.struct(
@@ -404,8 +366,10 @@ def anti_join_seen(
     """D1: rows of ``batch`` whose key is NOT in ``seen`` (exact).
 
     With a fitted :class:`ShardedBloomFilter`, definitely-new rows bypass
-    the shuffle; the exact anti-join runs only on the maybe-seen
-    remainder and the result is their union (no false drops possible).
+    the join; the exact anti-join runs only on the maybe-seen remainder
+    and the result is their union (no false drops possible). The engine
+    fits the filter on the same ``large_seen_threshold`` test that sets
+    ``shuffle_hash``, so the prefilter always meets a hash-built seen side.
 
     ``shuffle_hash=True`` hints the seen side into a shuffled-hash build:
     once both sides outgrow the planner's local-map threshold it falls to
@@ -440,42 +404,19 @@ def anti_join_seen(
             batch = batch.drop("_kh")
         if "_kh" not in batch.columns:
             batch = batch.select(kh, "*")
-        # a seen table that already carries _kh (e.g. persisted
-        # pre-partitioned on (_kh, keys…)) joins without a new exchange;
-        # otherwise compute the same pure-function hash on the fly
-        if "_kh" in seen.columns and _kh_provenance_ok(seen):
-            seen_keys = seen.select("_kh", *key_cols)
-        else:
-            seen_keys = seen_keys.select(kh, *key_cols)
+        seen_keys = seen_keys.select(kh, *key_cols)
         join_cols = ["_kh", *key_cols]
     if shuffle_hash:
         seen_keys = seen_keys.hint("shuffle_hash")
     if bloom is not None and bloom.fitted:
+        # split FIRST so definitely-new rows never meet the seen side:
+        # only the maybe-seen remainder pays the exact anti-join (and,
+        # when the seen side is hash-built, the exchange feeding it)
         probed = bloom.annotate(batch, bloom_key)
-        if shuffle_hash:
-            # shuffled regime (seen too big to broadcast): split FIRST so
-            # definitely-new rows never enter the exchange — the whole
-            # point of the prefilter at 10^10 seen keys is that only the
-            # maybe-seen remainder shuffles to meet its seen partition
-            definitely_new = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-            maybe = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-            survived = maybe.join(seen_keys, join_cols, "left_anti")
-            out = definitely_new.unionByName(survived)
-        else:
-            # broadcast regime: the batch does not shuffle either way, so
-            # the union split only duplicates the probe subtree into two
-            # branches (Spark re-executes shared lineage per branch).
-            # One pass instead: LeftAnti with ``_maybe_seen`` as a
-            # RESIDUAL condition — a definitely-new row can never satisfy
-            # the condition, so it survives the anti-join untouched;
-            # maybe-seen rows pay the exact key check. Same rows out,
-            # one scan, one join, no union.
-            s = seen_keys.alias("_ajs_seen")
-            cond = F.col("_maybe_seen")
-            for k in join_cols:
-                cond = cond & (probed[k] == F.col(f"_ajs_seen.{k}"))
-            out = (probed.join(s, cond, "left_anti")
-                   .drop("_maybe_seen"))
+        definitely_new = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
+        maybe = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
+        survived = maybe.join(seen_keys, join_cols, "left_anti")
+        out = definitely_new.unionByName(survived)
     else:
         out = batch.join(seen_keys, join_cols, "left_anti")
     return out.drop("_kh") if hash_key else out

@@ -167,12 +167,14 @@ SQL_F1 = """
 # measure corpus synthesis, not the dedup operator.
 #
 # Residual bench-ratio note (r04 VERDICT item 3): with fit() amortized,
-# double hashing, the single-pass residual anti-join, and the dense
-# per-shard array probe, the bloom entry's remaining gap vs the plain
-# anti-join at sf0.1 is FIXED per-invocation cost (plan build + one
-# extra broadcast barrier on a ~0.15 s job). Steady-state plans measure
-# ratio 0.99 at 150k rows, 1.19 at 1.5M, 1.25 at 6M (BENCH/NOTES_r05.md
-# "d1_bloom_sharded vs d1_seen_antijoin") — and at sf0.1's 50k-row seen
+# double hashing and the dense per-shard array probe, the bloom entry's
+# remaining gap vs the plain anti-join at sf0.1 is FIXED per-invocation
+# cost (plan build + one extra broadcast barrier on a ~0.15 s job).
+# Steady-state plans measured ratio 0.99 at 150k rows, 1.19 at 1.5M,
+# 1.25 at 6M (BENCH/NOTES_r05.md "d1_bloom_sharded vs d1_seen_antijoin",
+# taken while a single-pass residual anti-join still served the
+# unhinted seen side; anti_join_seen now always splits the batch on the
+# bloom bit) — and at sf0.1's 50k-row seen
 # set the engine's shipped policy would take the plain broadcast
 # anti-join anyway; the sharded bloom engages past large_seen_threshold, where
 # its point is shrinking the seen-side SHUFFLE.
@@ -251,16 +253,6 @@ def q_d1_bloom_sharded(spark, sf_dir):
 def q_d2_first_occurrence(spark, sf_dir):
     ev = load(spark, sf_dir, "events").withColumn("k", F.col("user_id") % 500)
     return first_occurrence(ev, ["k"], ["ts", "event_id"]).select("k", "event_id")
-
-
-def q_d2_first_occurrence_window(spark, sf_dir):
-    """Same D2 semantics through the window physical strategy (one
-    post-shuffle sort — the unique-heavy-batch shape; operators/dedup.py
-    docstring). Identical oracle: the strategies must be row-identical."""
-    ev = load(spark, sf_dir, "events").withColumn("k", F.col("user_id") % 500)
-    return first_occurrence(
-        ev, ["k"], ["ts", "event_id"], strategy="window"
-    ).select("k", "event_id")
 
 
 SQL_D2 = """
@@ -960,14 +952,11 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "d2_first_occurrence": q_d2_first_occurrence,
     # NOTE: the registry is capped at 50 keys — the driver's correctness
     # harness records at most 50 rows (r02 registered 51, recorded 50,
-    # silently dropping the last key), so result-identical physical
-    # variants ROTATE through the spare slot for an oracle row across
-    # rounds (r03 VERDICT item 7): r03 ran d2_first_occurrence_window
-    # (green r02+r03; strategies stay pinned row-identical by
-    # tests/test_dedup_strategies.py), r04 hands that slot to the salted
-    # rank so all three RL1 entries have oracle rows over r01–r04
-    # (salted stays pinned by tests/test_politeness_rank.py::
-    # test_salted_rank_equals_plain_window regardless).
+    # silently dropping the last key). The spare slot once rotated
+    # between result-identical physical variants (r03 VERDICT item 7);
+    # since r04 it holds the salted rank, so all three RL1 entries have
+    # oracle rows (salted also stays pinned by
+    # tests/test_politeness_rank.py::test_salted_rank_equals_plain_window).
     "rl1_budget_rank": q_rl1_budget_rank,
     "rl1_budget_rank_salted": q_rl1_budget_rank_salted,
     "rl1_budget_rank_presalted": q_rl1_budget_rank_presalted,

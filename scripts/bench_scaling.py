@@ -76,7 +76,8 @@ def wait_for_quiet(max_load: float, timeout_s: int = 900) -> float:
 
 def read_cpu_stat() -> tuple[int, int]:
     """(steal_jiffies, total_jiffies) from /proc/stat."""
-    parts = open("/proc/stat").readline().split()
+    with open("/proc/stat") as f:
+        parts = f.readline().split()
     vals = [int(x) for x in parts[1:]]
     steal = vals[7] if len(vals) > 7 else 0
     return steal, sum(vals)
@@ -233,7 +234,8 @@ def run_once(job: str, cpus: int, n_urls: int,
 def load_history() -> list[dict]:
     path = os.path.join(REPO, "BENCH", "history.json")
     if os.path.exists(path):
-        hist = json.loads(open(path).read())
+        with open(path) as f:
+            hist = json.load(f)
         for r in hist:          # records predate the job field → schedule
             r.setdefault("job", "schedule")
         return hist
@@ -246,7 +248,7 @@ def save_history(history: list[dict]) -> None:
         json.dump(history, f, indent=1)
 
 
-WORKLOAD_REV = 9     # bump when the measured work graph changes (r3:
+WORKLOAD_REV = 10    # bump when the measured work graph changes (r3:
                      # window-strategy frontier dedup; r4: bucket-sorted
                      # snapshot + presalted rank, pre-join-aligned fetch
                      # join, level-independent input partitioning; r5:
@@ -259,10 +261,13 @@ WORKLOAD_REV = 9     # bump when the measured work graph changes (r3:
                      # measured slower in the assembled pipeline; r8:
                      # host stays late, counts back to the bucketed
                      # scan; r9: warmup now exercises the measured
-                     # host-stage branch (ADVICE r04 fix, bench.py
-                     # resolve_host_stage from the MEASURED n) — pre-fix
-                     # runs carried late-branch first-use setup inside
-                     # the timed region, so their sec is not comparable)
+                     # host-stage branch (ADVICE r04 fix) — pre-fix runs
+                     # carried late-branch first-use setup inside the
+                     # timed region, so their sec is not comparable;
+                     # r10: the jobs run the engine's own pipeline,
+                     # engine.links_to_frontier — aggregate dedup, no
+                     # host-stage switch, the engine's bucket count and
+                     # salt width)
                      # — stats pool only same-rev runs; cross-rev
                      # medians would mix different engines/timed regions
 PROBE_SLACK = 1.15   # keep runs within 15% of the fastest observed host speed
@@ -468,12 +473,12 @@ while 32 threads on this box contend for shared JVM/kernel structures
 and round snapshots live on tmpfs — the single virtual disk is not a
 resource a real cluster shares, and executors bring their own storage.
 
-The **round job** — one full engine round: hybrid canonicalization
-(JVM-native fast path + exact pandas-UDF fallback) → first-occurrence
-dedup (window strategy: one post-shuffle sort, the right physical shape
-for a unique-heavy input frontier; the engine's link-expansion dedup
-keeps the map-side combining aggregate where duplicates exist to
-collapse) → exact anti-join vs the URL-seen set → **bucket-sorted round
+The **round job** — one full engine round: the engine's link-to-frontier
+step (`engine.links_to_frontier`: single-scan hybrid canonicalization,
+JVM-native fast path + exact pandas-UDF fallback → map-side-combining
+first-occurrence dedup → exact anti-join vs the URL-seen set,
+bloom-prefiltered past `large_seen_threshold` → dense discovery_seq →
+post-dedup host) → **bucket-sorted round
 snapshot** (repartition on (host, seq-salt) feeding a bucketBy+sortBy
 write, one file per bucket — the rank's exchange+sort moved into
 write-side work that scales) → presalted politeness rank (zero payload
@@ -503,17 +508,19 @@ history.json). With the box verified idle, the engine's stages measure:
 |---|---|---|---|---|
 | Arrow mapInPandas extraction (X1–X8), 1M pages | 27,909 pages/s | 92,574 pages/s | 3.32× | **0.83** |
 | canon→dedup→anti-join core, 32M URLs, agg dedup | 111.6 s | 46.0 s | 2.43× | 0.61 |
-| canon→dedup→anti-join core, 32M URLs, window dedup (shipped) | 116.6 s | 34.4 s | 3.39× | **0.85** |
+| canon→dedup→anti-join core, 32M URLs, window dedup (rev 3–9) | 116.6 s | 34.4 s | 3.39× | **0.85** |
 | core→bucket-sorted snapshot (round job p1), 6M URLs, warm | 26.4 s | 8.0 s | 3.32× | **0.83** |
 
 Five physical-shape decisions moved the end-to-end jobs from
 eff ≈0.5–0.6 (round 1) upward, each measured with in-JVM alternating
 A/Bs (host drift cancels pair-wise):
 
-1. **Window-strategy dedup** for the unique-heavy frontier: the agg's
-   map-side sort collapses nothing there and burns a second full pass
-   whose cost grows with concurrency — trades ~4% at 4 cores for 25%
-   at 16 (A/B script in commit 19c7ad8, scripts/exp_dedup_strategy.py).
+1. **Window-strategy dedup** (rev 3–9) for the unique-heavy frontier:
+   the agg's map-side sort collapses nothing there and burns a second
+   full pass whose cost grows with concurrency — trades ~4% at 4 cores
+   for 25% at 16 (A/B script in commit 19c7ad8,
+   scripts/exp_dedup_strategy.py). Rev 10 runs the engine's aggregate
+   dedup instead: the engine's link batches carry duplicates.
 2. **Bucket-sorted round snapshot + presalted rank**: the adaptive
    rank over a flat snapshot measured FLAT across cores (9.6 s at c4 →
    9.2 s at c16 on 5.3M rows — driver stats collect, exchange and sort
@@ -536,9 +543,9 @@ A/Bs (host drift cancels pair-wise):
    (A/B script in commit ec1bc1b, scripts/exp_host_late.py), confirmed
    by the 2×2 matrix (commit 2ee2c90, scripts/exp_sched_matrix.py): it
    pays most exactly where shuffle bandwidth is the contended resource.
-   The engine's crawl loop ships the same shape (engine.py drops
-   host+path before the expansion dedup and recomputes via the hybrid
-   `host_frame`).
+   The engine ships the same shape (engine.py drops host+path before
+   the expansion dedup and `links_to_frontier` recomputes host via the
+   hybrid `host_frame`); since rev 10 the bench runs that function.
 5. **A documented negative** (rev 8): serving the rank's bucket counts
    from a plain column-pruned re-read of the snapshot (instead of the
    one-task-per-bucket bucketed scan) looked attractive from event-log

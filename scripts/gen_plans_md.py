@@ -67,9 +67,9 @@ def main() -> None:
     aj = anti_join_seen(batch, seen, ["canon_url"])
     add(
         "D1 URL-seen anti-join",
-        "Exact `LeftAnti` join — the dedup source of truth. The bloom "
-        "prefilter (operators/dedup.py) splits off definitely-new rows "
-        "before this join at engine level.",
+        "Exact `LeftAnti` join — the dedup source of truth, and the "
+        "engine's plan while the seen set is below "
+        "`large_seen_threshold` (see the bloom-prefiltered shape below).",
         aj,
     )
 
@@ -80,10 +80,11 @@ def main() -> None:
     fo = first_occurrence(ev, ["k"], ["ts", "event_id"])
     add(
         "D2 first-occurrence dedup (min-struct aggregate)",
-        f"Hash aggregation with a map-side partial (`partial_min`) BEFORE "
-        f"the exchange — duplicates collapse pre-shuffle, unlike a window "
-        f"rank which would shuffle every row. Shuffle exchanges: "
-        f"{count_exchanges(fo)}.",
+        f"The only D2 plan: a `SortAggregate` (a struct-with-strings min "
+        f"buffer forces the sort-based aggregate) with a map-side partial "
+        f"(`partial_min`) BEFORE the exchange — duplicates collapse "
+        f"pre-shuffle, unlike a window rank which would shuffle every "
+        f"row. Shuffle exchanges: {count_exchanges(fo)}.",
         fo,
     )
 
@@ -169,6 +170,18 @@ def main() -> None:
         "(`ReusedExchange`), so the filter broadcasts once regardless "
         "of num_hashes.",
         sb_big.annotate(batch, "canon_url"),
+    )
+
+    add(
+        "D1 bloom-prefiltered anti-join (engine path past large_seen_threshold)",
+        "The engine fits the bloom on the same `large_seen_threshold` test "
+        "that hash-builds the seen side, so this is the one prefiltered "
+        "shape: the probed batch splits on `_maybe_seen`, definitely-new "
+        "rows skip the join, and only the maybe-seen remainder meets the "
+        "`shuffle_hash`-hinted seen side before the `Union`.",
+        anti_join_seen(batch, seen, ["canon_url"], bloom=sb,
+                       shuffle_hash=True),
+        mode="simple",
     )
 
     # 6. broadcast policy join (J2)

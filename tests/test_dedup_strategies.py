@@ -1,9 +1,8 @@
-"""first_occurrence strategy parity + anti_join_seen hash-key parity.
+"""first_occurrence's hash column + anti_join_seen hash-key parity.
 
-The window strategy exists for unique-heavy batches (one post-shuffle
-sort instead of the agg's two); it must be row-identical to the agg on
-every dup profile, including order-col ties (broken by the remaining
-payload columns in both shapes).
+``keep_hash=True`` leaves the ``(xxhash64(keys), keys…)`` grouping hash
+as ``_kh``; ``anti_join_seen(hash_key=True)`` joining on that composite
+must drop exactly the rows a plain key anti-join drops.
 """
 
 import pytest
@@ -14,15 +13,13 @@ from crawler_service_spark.operators.dedup import anti_join_seen, first_occurren
 
 @pytest.fixture(scope="module")
 def dup_heavy(spark):
-    # 3 raw variants per canonical key, plus exact-tie rows on the order
-    # cols that only differ in payload (tie must break identically)
+    # 6 rows per canonical key
     df = spark.range(3000).select(
         F.concat(F.lit("https://h"), (F.col("id") % 100).cast("string"),
                  F.lit(".example.com/p/"), (F.col("id") % 500).cast("string"))
         .alias("canon_url"),
         (F.col("id") % 7).alias("depth"),
         F.col("id").alias("discovery_seq"),
-        (F.col("id") % 3).alias("order_key"),
         F.concat(F.lit("payload-"), F.col("id").cast("string")).alias("extra"),
     )
     return df.persist()
@@ -33,27 +30,13 @@ def _sorted_rows(df):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def test_window_matches_agg(spark, dup_heavy):
-    a = first_occurrence(dup_heavy, ["canon_url"], ["order_key"], strategy="agg")
-    w = first_occurrence(dup_heavy, ["canon_url"], ["order_key"], strategy="window")
-    assert sorted(a.columns) == sorted(w.columns)
-    assert _sorted_rows(a) == _sorted_rows(w.select(a.columns))
-
-
-def test_window_matches_agg_unique_order(spark, dup_heavy):
-    a = first_occurrence(dup_heavy, ["canon_url"], ["discovery_seq"], strategy="agg")
-    w = first_occurrence(dup_heavy, ["canon_url"], ["discovery_seq"], strategy="window")
-    assert _sorted_rows(a) == _sorted_rows(w.select(a.columns))
-
-
 def test_keep_hash_column(spark, dup_heavy):
-    for strategy in ("agg", "window"):
-        out = first_occurrence(dup_heavy, ["canon_url"], ["discovery_seq"],
-                               keep_hash=True, strategy=strategy)
-        assert out.columns[0] == "_kh"
-        got = out.filter(
-            F.col("_kh") != F.xxhash64("canon_url")).count()
-        assert got == 0, strategy
+    out = first_occurrence(dup_heavy, ["canon_url"], ["discovery_seq"],
+                           keep_hash=True)
+    assert out.columns[0] == "_kh"
+    got = out.filter(
+        F.col("_kh") != F.xxhash64("canon_url")).count()
+    assert got == 0
 
 
 def test_anti_join_hash_key_parity(spark, dup_heavy):
@@ -63,11 +46,9 @@ def test_anti_join_hash_key_parity(spark, dup_heavy):
         "xxhash64(canon_url) AS _kh", "canon_url").persist()
     base = first_occurrence(dup_heavy, ["canon_url"], ["discovery_seq"])
     expected = _sorted_rows(base.join(seen_plain, "canon_url", "left_anti"))
-    for strategy in ("agg", "window"):
-        d = first_occurrence(dup_heavy, ["canon_url"], ["discovery_seq"],
-                             keep_hash=True, strategy=strategy)
-        for seen in (seen_plain, seen_kh):
-            out = anti_join_seen(d, seen, ["canon_url"], hash_key=True)
-            assert "_kh" not in out.columns
-            assert _sorted_rows(out.select(base.columns)) == expected, (
-                strategy, seen.columns)
+    d = first_occurrence(dup_heavy, ["canon_url"], ["discovery_seq"],
+                         keep_hash=True)
+    for seen in (seen_plain, seen_kh):
+        out = anti_join_seen(d, seen, ["canon_url"], hash_key=True)
+        assert "_kh" not in out.columns
+        assert _sorted_rows(out.select(base.columns)) == expected, seen.columns

@@ -3,12 +3,13 @@
 skew-resistant host rank vs the single-window reference."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from crawler_service_spark.functions.urls import (
     canonicalize_frame,
     canonicalize_url,
-    host_native,
+    host_frame,
     host_of,
     native_canon_eligible,
 )
@@ -63,17 +64,14 @@ def test_native_matches_python_without_sort(spark):
     rows = canonicalize_frame(df, "url", "canon_url", sort_query=False).collect()
     for r in rows:
         assert r["canon_url"] == canonicalize_url(r["url"], sort_query=False)
+    with pytest.raises(ValueError, match="single_scan"):
+        canonicalize_frame(df, "url", single_scan=False)
 
 
-def test_host_native_matches_python(spark):
+def test_host_frame_matches_python(spark):
     df = spark.createDataFrame(pd.DataFrame({"url": DIRTY_URLS}))
-    rows = df.select(
-        "url", host_native(F.col("url")).alias("h"),
-        native_canon_eligible(F.col("url")).alias("eligible"),
-    ).collect()
-    for r in rows:
-        if r["eligible"]:
-            assert r["h"] == host_of(r["url"]), r["url"]
+    for r in host_frame(df, "url", "h").collect():
+        assert r["h"] == host_of(r["url"]), r["url"]
 
 
 def test_filter_internal_matches_oracle_predicate(spark):
