@@ -32,7 +32,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
-from crawler_service_spark.engine import CrawlEngine, links_to_frontier, seen_key
+from crawler_service_spark.engine import (
+    CrawlEngine,
+    links_to_frontier,
+    round_config,
+    seen_key,
+)
 from crawler_service_spark.functions.urls import canonicalize_frame
 from crawler_service_spark.operators.dedup import ShardedBloomFilter
 from crawler_service_spark.operators.extract import extract_pages
@@ -42,7 +47,9 @@ from crawler_service_spark.sources.storage import SnapshotStore
 # shuffle partitions are sized to the DATA (fixed across parallelism
 # levels), not to the core count: the scaling comparison must run the
 # identical work graph at both levels, differing only in how many tasks
-# execute concurrently
+# execute concurrently. The frontier jobs' rounds take this as their
+# cap; at the scaling campaign's sizes (6M+ links) round_partitions
+# returns the cap at every level
 SHUFFLE_PARTS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
 LINKS_PER_PARENT = 16
 
@@ -278,8 +285,13 @@ def frontier_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
     half of a crawl round. The inputs are persisted and the bloom, if
     the seen set is big enough for one, is fitted before the timed
     region; memory persist stands in for the cluster's distributed
-    storage (BENCH/BASELINE.md documents this proxy choice)."""
-    cfg = CrawlConfig(shuffle_partitions=SHUFFLE_PARTS)
+    storage (BENCH/BASELINE.md documents this proxy choice).
+
+    The snapshot, the content store and the fetch join are sized as an
+    engine round is, by ``round_config`` over the ``n``-link batch
+    (capped at ``SHUFFLE_PARTS``); the warm-up uses the same sizes."""
+    cfg = round_config(CrawlConfig(shuffle_partitions=SHUFFLE_PARTS), n,
+                       spark.sparkContext.defaultParallelism)
     store = SnapshotStore(f"{SNAP_DIR}/frontier_job")
 
     def mk_content(links: DataFrame) -> DataFrame:

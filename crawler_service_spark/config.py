@@ -76,8 +76,13 @@ class CrawlConfig:
     sort_query_params: bool = True        # canonicalization query-param sort
     respect_robots: bool = True           # robots disallow-prefix filter
 
-    # engine/scale knobs (no semantic effect; partitioning only)
-    seq_buckets: int = 64                 # two-level dense-seq bucket count
+    # engine/scale knobs (no semantic effect; partitioning only).
+    # shuffle_partitions is the per-round CAP: each round sizes its
+    # partition count (fetch join, extraction, snapshot files, frontier
+    # buckets) from its frontier row count with engine.round_partitions,
+    # at least the core count and at most this; seq_buckets (the
+    # two-level dense-seq bucket count) is scaled by the same factor
+    seq_buckets: int = 64
     shuffle_partitions: int = 32
     bloom_num_bits: int = 1 << 20         # seen-filter prefilter bitmap size
     bloom_num_hashes: int = 3

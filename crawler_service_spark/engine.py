@@ -31,7 +31,7 @@ round instead of a rewrite of the world.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,7 +41,6 @@ from crawler_service_spark.functions.classify import resolve_fetch_outcome
 from crawler_service_spark.functions.urls import (
     canonicalize_frame,
     host_frame,
-    make_canon_udf,
     url_parts_udf,
 )
 from crawler_service_spark.operators.dedup import (
@@ -62,6 +61,37 @@ from crawler_service_spark.sources.storage import SnapshotStore
 FRONTIER_COLS = [
     "task_id", "seed_netloc", "url", "canon_url", "host", "depth", "discovery_seq",
 ]
+
+# rows per task before a round widens past the core count. At small
+# sizes a round's cost is per task and per file (scheduling, one parquet
+# file per partition per snapshot), not per row: on a 4-core VM a
+# perfbench crawl_wide round (hundreds of pages) ran about a third
+# faster at one task per core than at 32 tasks, and a 200k-link
+# `bench.py --job round` was no faster at 13 tasks (16k rows each) than
+# at 4. The 32-64 partition caps are reached only at the multi-million-
+# row sizes where they were measured (scripts/bench_scaling.py: 6M-32M
+# rows at 64 partitions).
+ROWS_PER_TASK = 1 << 16
+
+
+def round_partitions(n_rows: int, cores: int, cap: int) -> int:
+    """Partition count for a round over ``n_rows`` rows: one task per
+    ``ROWS_PER_TASK`` rows, never fewer tasks than ``cores`` (extraction
+    cost is per row; a narrower stage idles cores) and never more than
+    ``cap``."""
+    return min(cap, max(cores, -(-n_rows // ROWS_PER_TASK)))
+
+
+def round_config(cfg: CrawlConfig, n_rows: int, cores: int) -> CrawlConfig:
+    """``cfg`` with ``shuffle_partitions`` sized by ``round_partitions``
+    and ``seq_buckets`` scaled by the same factor. Exact: dense ranks do
+    not depend on the bucket count, and each frontier snapshot records
+    the bucket count it was written with (``_bucket_spec.json``)."""
+    parts = round_partitions(n_rows, cores, cfg.shuffle_partitions)
+    return replace(
+        cfg, shuffle_partitions=parts,
+        seq_buckets=max(1, cfg.seq_buckets * parts // cfg.shuffle_partitions),
+    )
 
 
 def seen_key():
@@ -174,19 +204,16 @@ class CrawlEngine:
         self.storage = SnapshotStore(checkpoint_dir)
         self.use_bloom = use_bloom
         self.max_rounds = max_rounds
-        self.canon = make_canon_udf(cfg.sort_query_params)
-        # content store projected to fetch-join shape, keyed by canon URL
-        # and pre-partitioned on the join key: every round's fetch join
-        # then shuffles only the (small) admitted batch, never the
-        # html-bearing store rows (measured 3× on the fetch join; the
-        # cluster analog is a bucketed store table)
+        # content store projected to fetch-join shape, keyed by canon
+        # URL; each round hash-partitions it on the join key with the
+        # round's partition count (see the fetch join)
         self.store = store.select(
             F.col("doc_id").alias("canon_url"),
             "status_code",
             "fail_times",
             "response_time_ms",
             "html",
-        ).repartition(cfg.shuffle_partitions, "canon_url")
+        )
 
     # ------------------------------------------------------------------ util
     def _read_seen(self, rounds: list[int]) -> DataFrame | None:
@@ -196,12 +223,21 @@ class CrawlEngine:
         return self.spark.read.parquet(*paths)
 
     # -------------------------------------------------------------- frontier
-    def _initial_frontier(self, seeds: DataFrame) -> DataFrame:
+    def _round_config(self, n_rows: int) -> CrawlConfig:
+        return round_config(
+            self.cfg, n_rows, self.spark.sparkContext.defaultParallelism)
+
+    def _initial_frontier(
+        self, seeds: DataFrame,
+    ) -> tuple[DataFrame, CrawlConfig]:
+        """The seed frontier, and the config sized by the seed count
+        that it is numbered and written with."""
         n_seeds = seeds.count()
+        cfg = self._round_config(n_seeds)
         f = (
             canonicalize_frame(
                 seeds.withColumn("_parts", url_parts_udf(F.col("url"))),
-                "url", "canon_url", self.cfg.sort_query_params,
+                "url", "canon_url", cfg.sort_query_params,
                 single_scan=True,  # upstream UDF lineage must run once
             )
             .select(
@@ -215,9 +251,9 @@ class CrawlEngine:
             )
         )
         f = assign_dense_seq(
-            f, "seed_seq", "seed_seq", n_seeds, self.cfg.seq_buckets
+            f, "seed_seq", "seed_seq", n_seeds, cfg.seq_buckets
         ).drop("seed_seq")
-        return f.select(FRONTIER_COLS)
+        return f.select(FRONTIER_COLS), cfg
 
     # ------------------------------------------------------ frontier layout
     # Frontier snapshots are bucket-sorted on (host, _salt): the rank's
@@ -228,14 +264,18 @@ class CrawlEngine:
     # the rank sort-free even when deferral mixes depths per host.
     _FRONTIER_SORT = ["host", "depth", "_salt", "discovery_seq"]
 
-    def _write_frontier(self, df: DataFrame, rnd: int) -> None:
+    def _write_frontier(self, df: DataFrame, rnd: int,
+                        cfg: CrawlConfig) -> None:
+        """Bucket count: ``cfg.shuffle_partitions`` of the round that
+        writes the snapshot (recorded in its ``_bucket_spec.json``)."""
         self.storage.write_table_bucketed(
-            presalt(df, self.cfg.frontier_salt_width), "frontier", rnd,
-            self.cfg.shuffle_partitions, ["host", "_salt"],
+            presalt(df, cfg.frontier_salt_width), "frontier", rnd,
+            cfg.shuffle_partitions, ["host", "_salt"],
             self._FRONTIER_SORT,
         )
 
     def _read_frontier(self, rnd: int) -> DataFrame:
+        # the snapshot's _bucket_spec.json overrides the count passed here
         return self.storage.read_table_bucketed(
             self.spark, "frontier", rnd,
             self.cfg.shuffle_partitions, ["host", "_salt"],
@@ -284,7 +324,8 @@ class CrawlEngine:
             self.storage.reset()
             rnd = 0
             seen_rounds = []
-            self._write_frontier(self._initial_frontier(seeds), 0)
+            seed_frontier, seed_cfg = self._initial_frontier(seeds)
+            self._write_frontier(seed_frontier, 0, seed_cfg)
             frontier = self._read_frontier(0)
 
         deferral = cfg.budget_rounds is not None
@@ -361,6 +402,10 @@ class CrawlEngine:
             seq_base = max(int(agg["mx"]) + 1, prev_base)
             seq_min = int(agg["mn"])
             depth_of_round = rnd  # == frontier depth in non-deferral mode
+            # this round's partitioning, sized from its frontier: the
+            # fetch join and extraction stage (so the pages files), the
+            # dense-seq buckets and the next frontier's buckets
+            rcfg = self._round_config(n_frontier)
 
             # each round consumes budget_rounds politeness windows per
             # (full) host in deferral mode; in non-deferral mode a round
@@ -382,28 +427,32 @@ class CrawlEngine:
                 round_epoch=epoch,
                 budget_rounds=cfg.budget_rounds,
                 priority_col="depth",
-                shuffle_partitions=cfg.shuffle_partitions,
+                shuffle_partitions=rcfg.shuffle_partitions,
                 # over a bucket-sorted frontier snapshot the rank plans
                 # with no payload exchange/sort/driver barrier
                 rank_strategy="presalted",
             )
             admitted = admitted.drop("_salt")
 
-            # pre-align the (html-free) admitted side with the store's
-            # hash partitioning: the join output inherits
-            # `shuffle_partitions` uniform hash partitions (canon_url
-            # hashes uniformly) and the Arrow extraction fuses into the
-            # join stage — a post-join repartition would push every
-            # html-bearing row through a second full exchange (measured
-            # 9-13% of the fetch+extract phase; A/B script in commit
-            # 39ef1e8, scripts/exp_fetch_join.py).
-            # The explicit partition count also pins the stage against AQE
+            # both join sides are hash-partitioned on canon_url with the
+            # round's partition count (one count on both sides, so the
+            # join adds no exchange): the join output inherits that many
+            # uniform partitions (canon_url hashes uniformly) and the
+            # Arrow extraction fuses into the join stage — a post-join
+            # repartition would push every html-bearing row through a
+            # second full exchange (measured 9-13% of the fetch+extract
+            # phase; A/B script in commit 39ef1e8,
+            # scripts/exp_fetch_join.py). The store side is re-shuffled
+            # every round (the cluster analog is a bucketed store table).
+            # The explicit count also pins the stage against AQE
             # byte-based coalescing: extraction cost is per ROW (Python
             # parse per page) — byte-coalescing once shrank this stage to
-            # ~5 tasks and capped the whole round at ~5 cores.
-            fetched = admitted.repartition(
-                cfg.shuffle_partitions, F.col("canon_url")
-            ).join(self.store, "canon_url", "left")
+            # ~5 tasks and capped the whole round at ~5 cores — and
+            # round_partitions never sizes it below the core count.
+            parts = rcfg.shuffle_partitions
+            fetched = admitted.repartition(parts, F.col("canon_url")).join(
+                self.store.repartition(parts, F.col("canon_url")),
+                "canon_url", "left")
             fetched = resolve_fetch_outcome(fetched, cfg)
             pages = extract_pages(fetched, cfg).withColumn("round", F.lit(rnd))
             pages = pages.drop("html", "status_code", "fail_times")
@@ -490,7 +539,7 @@ class CrawlEngine:
                 # (A/B script in commit ec1bc1b, scripts/exp_host_late.py)
                 cand = cand.drop("host", "path")
                 frontier_parts.append(links_to_frontier(
-                    cand, seen, cfg, bloom=bloom, seen_total=seen_total,
+                    cand, seen, rcfg, bloom=bloom, seen_total=seen_total,
                     seq_base=seq_base, seq_min=seq_min,
                 ))
             if deferral:
@@ -499,12 +548,15 @@ class CrawlEngine:
                 next_frontier = frontier_parts[0]
                 for part in frontier_parts[1:]:
                     next_frontier = next_frontier.unionByName(part)
-                self._write_frontier(next_frontier, rnd + 1)
+                self._write_frontier(next_frontier, rnd + 1, rcfg)
                 wrote_frontier = True
 
             round_counters = {
                 "frontier": n_frontier,
                 "depth": depth_of_round,
+                # the round's derived partition count (informational:
+                # resume reads bucket counts from the snapshots' specs)
+                "parts": parts,
                 # persisted for exact resume: the seq high-water mark
                 # and the virtual clock cannot be re-derived from the
                 # frontier alone in every shape (see seq_base above)

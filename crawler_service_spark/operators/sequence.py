@@ -13,15 +13,25 @@ round's occupied range ``[base, n_parents)``,
 ``bucket = (parent_seq - base) // ceil((n_parents - base)/buckets)``
 is an order-preserving partitioner computed from the data itself (no
 sampling, no spark_partition_id — both would break run-to-run
-determinism). Rank within bucket via a window, then add per-bucket offsets
-(a tiny collect of ≤ `buckets` rows). This is the two-level scheme from
-SURVEY §7.5; it scales to 10^10-row rounds since no executor ever sees
-more than one bucket's rows in a single window.
+determinism). Rank within bucket via a window, then add per-bucket offsets.
+This is the two-level scheme from SURVEY §7.5; it scales to 10^10-row
+rounds since no executor ever sees more than one bucket's rows in a
+single window. The ranks do not depend on the bucket count, so callers
+may size it to the data.
+
+The input is evaluated exactly once: one action materializes the
+bucketed rows (``localCheckpoint``) and an ``Observation`` riding that
+same action counts each bucket's rows, so the per-bucket offsets cost no
+second pass over the upstream lineage (canonicalizer UDF, dedup
+aggregate, seen anti-join) — the rank and the caller's write read the
+materialized rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import uuid
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -36,37 +46,52 @@ def assign_dense_seq(
 ) -> DataFrame:
     """Dense 0-based rank of rows ordered by (parent_seq, pos).
 
-    ``[base, n_parents)`` must cover the ``parent_seq`` values — the
-    engine passes the round frontier's (min, max+1). Bucketing over the
-    OCCUPIED range matters: ``parent_seq`` is cumulative across rounds,
-    so bucketing over ``[0, n_parents)`` would land every late round's
-    parents (spanning only the top slice of that range) in 1-2 buckets
-    and serialize the rank window on one executor.
+    ``[base, n_parents)`` should cover the ``parent_seq`` values — the
+    engine passes the round frontier's (min, max+1); values outside it
+    are clamped into the first/last bucket, which keeps the ranks exact.
+    Bucketing over the OCCUPIED range matters: ``parent_seq`` is
+    cumulative across rounds, so bucketing over ``[0, n_parents)`` would
+    land every late round's parents (spanning only the top slice of that
+    range) in 1-2 buckets and serialize the rank window on one executor.
+
+    Runs one action: the bucketed input is materialized with
+    ``localCheckpoint(eager=True)`` and the returned frame reads it. Not
+    ``persist()``: the returned frame is lazy, so nothing could
+    unpersist it, and a leaked cache entry would be matched by plan on a
+    later identical query. A local checkpoint lives in executor storage
+    and cannot be recomputed: losing an executor before the caller's
+    action fails that action (the crawl round), and round-level resume
+    covers it.
     """
     span = n_parents - base
     if span <= 0:
         return df.withColumn(out_col, F.lit(0).cast("long"))
     bucket_width = max(1, -(-span // n_buckets))  # ceil
+    n_occupied = -(-span // bucket_width)
+    bucket = F.floor((F.col(parent_seq_col) - F.lit(base)) / bucket_width)
     bucketed = df.withColumn(
         "_seq_bucket",
-        ((F.col(parent_seq_col) - F.lit(base)) / bucket_width).cast("long"),
+        F.least(F.greatest(bucket, F.lit(0)), F.lit(n_occupied - 1))
+        .cast("long"),
     )
-    # per-bucket sizes -> exclusive prefix-sum offsets (driver-side; <= n_buckets rows)
-    sizes = {
-        r["_seq_bucket"]: r["cnt"]
-        for r in bucketed.groupBy("_seq_bucket").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
+    # per-bucket sizes ride the materializing action
+    obs = Observation(f"dense_seq_{uuid.uuid4().hex}")
+    bucketed = bucketed.observe(
+        obs,
+        *[F.count_if(F.col("_seq_bucket") == b).alias(str(b))
+          for b in range(n_occupied)],
+    ).localCheckpoint(eager=True)
+    sizes = obs.get
+    # exclusive prefix sums -> per-bucket offsets
+    offsets = []
     running = 0
-    for b in sorted(sizes):
-        offsets[b] = running
-        running += sizes[b]
+    for b in range(n_occupied):
+        offsets += [F.lit(b), F.lit(running)]
+        running += int(sizes[str(b)])
     offset_expr = F.element_at(
-        F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]
-        ).cast("map<bigint,bigint>"),
+        F.create_map(*offsets).cast("map<bigint,bigint>"),
         F.col("_seq_bucket"),
-    ) if offsets else F.lit(0).cast("long")
+    )
 
     w = Window.partitionBy("_seq_bucket").orderBy(parent_seq_col, pos_col)
     return (

@@ -248,7 +248,7 @@ def save_history(history: list[dict]) -> None:
         json.dump(history, f, indent=1)
 
 
-WORKLOAD_REV = 10    # bump when the measured work graph changes (r3:
+WORKLOAD_REV = 11    # bump when the measured work graph changes (r3:
                      # window-strategy frontier dedup; r4: bucket-sorted
                      # snapshot + presalted rank, pre-join-aligned fetch
                      # join, level-independent input partitioning; r5:
@@ -267,7 +267,9 @@ WORKLOAD_REV = 10    # bump when the measured work graph changes (r3:
                      # r10: the jobs run the engine's own pipeline,
                      # engine.links_to_frontier — aggregate dedup, no
                      # host-stage switch, the engine's bucket count and
-                     # salt width)
+                     # salt width; r11: assign_dense_seq runs its input
+                     # once, and the jobs size partitions per round with
+                     # round_partitions)
                      # — stats pool only same-rev runs; cross-rev
                      # medians would mix different engines/timed regions
 PROBE_SLACK = 1.15   # keep runs within 15% of the fastest observed host speed

@@ -81,6 +81,8 @@ def main() -> None:
         "pages": ordered.count(),
         "seen": tables.seen.count(),
         "rounds": len(tables.round_counters),
+        # each round's derived partition count
+        "round_parts": [c["parts"] for c in tables.round_counters],
         "retry_stats": retry_stats(tables.pages),
         "out": args.out,
     }

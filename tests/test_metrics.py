@@ -6,7 +6,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
-from crawler_service_spark.engine import CrawlEngine
+from crawler_service_spark.engine import CrawlEngine, round_partitions
 from crawler_service_spark.metrics import adaptive_concurrency_log, crawl_summary, report
 from crawler_service_spark.sources.corpus import (
     build_policy_df,
@@ -29,6 +29,13 @@ def test_report_shape(spark):
     assert 0.0 <= s["success_rate"] <= 1.0
     assert r["seen_size"] == s["total_pages"]  # every fetched page was marked seen
     assert r["rounds"] and r["rounds"][0]["frontier"] >= 2
+    # each round's derived partition count, also in the manifest
+    cores = spark.sparkContext.defaultParallelism
+    for rc in r["rounds"]:
+        assert rc["parts"] == round_partitions(
+            rc["frontier"], cores, cfg.shuffle_partitions)
+        assert eng.storage.round_meta(rc["round"])["counters"]["parts"] \
+            == rc["parts"]
     # observed metrics (Observation API) ride the snapshot write
     assert r["rounds"][0]["n_pages"] >= 2
     assert sum(rc["n_pages"] for rc in r["rounds"]) == s["total_pages"]
