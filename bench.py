@@ -36,10 +36,8 @@ from crawler_service_spark.engine import (
     CrawlEngine,
     links_to_frontier,
     round_config,
-    seen_key,
 )
 from crawler_service_spark.functions.urls import canonicalize_frame
-from crawler_service_spark.operators.dedup import ShardedBloomFilter
 from crawler_service_spark.operators.extract import extract_pages
 from crawler_service_spark.operators.politeness import presalt, schedule_round
 from crawler_service_spark.sources.storage import SnapshotStore
@@ -216,28 +214,16 @@ def synth_seen(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
     return canonicalize_frame(links, "url").select("task_id", "canon_url")
 
 
-def fit_bloom(spark: SparkSession, cfg: CrawlConfig, seen: DataFrame,
-              n_seen: int) -> ShardedBloomFilter | None:
-    """The engine's prefilter policy: a bloom over the seen keys only
-    once the seen set is past ``large_seen_threshold``."""
-    if n_seen <= cfg.large_seen_threshold:
-        return None
-    bloom = ShardedBloomFilter(spark, cfg.bloom_num_bits, cfg.bloom_num_hashes,
-                               n_shards=cfg.bloom_shards)
-    return bloom.fit(seen.select(seen_key().alias("k")), "k")
-
-
 def schedule_links(spark: SparkSession, cfg: CrawlConfig, store: SnapshotStore,
                    links: DataFrame, n_links: int, seen: DataFrame,
-                   bloom: ShardedBloomFilter | None, n_seen: int) -> DataFrame:
+                   n_seen: int) -> DataFrame:
     """The engine's link-to-frontier step over ``links`` (the output of
     ``synth_frontier(n_links)``), then its bucket-sorted frontier
     snapshot in ``store`` and the presalted politeness rank over the
     read-back scan (``CrawlEngine.crawl``). Returns the admitted rows."""
     n_parents = -(-n_links // LINKS_PER_PARENT)
-    frontier = links_to_frontier(links, seen, cfg, bloom=bloom,
-                                 seen_total=n_seen, seq_base=n_parents,
-                                 seq_min=0)
+    frontier = links_to_frontier(links, seen, cfg, seen_total=n_seen,
+                                 seq_base=n_parents, seq_min=0)
     layout = (cfg.shuffle_partitions, ["host", "_salt"],
               CrawlEngine._FRONTIER_SORT)
     store.write_table_bucketed(presalt(frontier, cfg.frontier_salt_width),
@@ -282,8 +268,7 @@ def frontier_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
     against a seen set of a third of it. With ``fetch`` (the round job)
     the admitted rows also go through the fetch join against a content
     store and the mapInPandas extraction (X1–X8) — the compute-dense
-    half of a crawl round. The inputs are persisted and the bloom, if
-    the seen set is big enough for one, is fitted before the timed
+    half of a crawl round. The inputs are persisted before the timed
     region; memory persist stands in for the cluster's distributed
     storage (BENCH/BASELINE.md documents this proxy choice).
 
@@ -314,7 +299,6 @@ def frontier_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
 
     seen = synth_seen(spark, n, n_hosts).persist()
     n_seen = seen.count()
-    bloom = fit_bloom(spark, cfg, seen, n_seen)
     content = None
     if fetch:
         content = mk_content(synth_frontier(spark, n, n_hosts)).persist()
@@ -322,7 +306,7 @@ def frontier_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
 
     def run_pipeline(links: DataFrame, n_links: int) -> None:
         admitted = schedule_links(spark, cfg, store, links, n_links, seen,
-                                  bloom, n_seen)
+                                  n_seen)
         if not fetch:
             force(admitted)
             return
@@ -392,10 +376,8 @@ def main() -> None:
     # steady-state warmup for the bloom entry: one untimed end-to-end run
     # fits + memoizes the sharded bloom (queries._session_cache) and pays
     # the one-shot codegen/broadcast setup, so the timed run below
-    # measures the per-round PROBE — the engine fits once past
-    # large_seen_threshold and probes every round thereafter, so timing
-    # a refit-plus-first-probe per query misrepresented the shipped
-    # policy (r03 VERDICT item 3)
+    # measures the probe, not a refit-plus-first-probe per query
+    # (r03 VERDICT item 3)
     force(SPARK_QUERIES["d1_bloom_sharded"](spark, sf_dir))
 
     # Every suite entry is the FASTEST of 2 back-to-back same-JVM runs

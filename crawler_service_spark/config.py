@@ -84,16 +84,18 @@ class CrawlConfig:
     # two-level dense-seq bucket count) is scaled by the same factor
     seq_buckets: int = 64
     shuffle_partitions: int = 32
-    bloom_num_bits: int = 1 << 20         # seen-filter prefilter bitmap size
+    # sizing of a ShardedBloomFilter over the seen keys, for callers
+    # that build one (operators/dedup.py); the engine builds none
+    bloom_num_bits: int = 1 << 20         # bitmap size
     bloom_num_hashes: int = 3
     bloom_shards: int = 16                # shard count of the DataFrame-
                                           # resident filter (≥ 1)
-    # cumulative-seen row count past which (a) the seen anti-join flips
-    # to a shuffled-hash build and (b) the bloom prefilter engages —
-    # below it the planner's broadcast-anti plan is already free and the
-    # prefilter would cost more than the join it saves (r02 VERDICT
-    # item 3: small crawls paid 3.6× for nothing). Set 0 to force the
-    # prefilter on from round 0 (tests / A-Bs).
+    # cumulative-seen row count past which the seen anti-join stops
+    # letting the planner broadcast the seen set: the round's deduped
+    # batch is materialized once and its keys probe the seen scan
+    # map-side (a batch too large to broadcast hash-builds the seen side
+    # instead). Below it the broadcast-anti plan is already free. Set 0
+    # to force the probe on from round 0 (tests / A-Bs).
     large_seen_threshold: int = 2_000_000
 
     # frontier snapshots are written hash-clustered on (host, _salt =

@@ -8,7 +8,8 @@ Each reference BFS depth level (/root/reference/app/services/crawler.py:
       --(X1-X8 mapInPandas extraction)--> pages_r  [snapshot]
     pages_r --(J1 posexplode links)--(F1 internal filter)--(robots)-->
       --(P1 canonicalize, pandas UDF)--(D2 first-occurrence)-->
-      --(D1 bloom-prefiltered anti-join vs url_seen)-->
+      --(D1 exact anti-join vs url_seen; past the large-seen line the
+         batch keys probe the seen scan map-side)-->
       --(O1 dense discovery_seq)--> frontier_{r+1}  [snapshot]
 
 Level-synchronized BFS is order-equivalent to the reference's serial FIFO
@@ -44,7 +45,6 @@ from crawler_service_spark.functions.urls import (
     url_parts_udf,
 )
 from crawler_service_spark.operators.dedup import (
-    ShardedBloomFilter,
     anti_join_seen,
     first_occurrence,
 )
@@ -94,17 +94,11 @@ def round_config(cfg: CrawlConfig, n_rows: int, cores: int) -> CrawlConfig:
     )
 
 
-def seen_key():
-    """The URL-seen key as one string column: the bloom filter's key."""
-    return F.concat_ws("\x01", F.col("task_id"), F.col("canon_url"))
-
-
 def links_to_frontier(
     cand: DataFrame,
     seen: DataFrame,
     cfg: CrawlConfig,
     *,
-    bloom: ShardedBloomFilter | None,
     seen_total: int,
     seq_base: int,
     seq_min: int,
@@ -115,8 +109,8 @@ def links_to_frontier(
 
     ``cand`` carries ``task_id``, ``seed_netloc``, ``url``, ``depth``,
     ``parent_seq`` and ``link_pos``; ``seen`` carries ``(task_id,
-    canon_url)``. ``seen_total`` (an upper bound on the seen rows) picks
-    the anti-join's physical plan; the parents' sequence numbers span
+    canon_url)``. ``seen_total`` (the seen row count) picks the
+    anti-join's physical plan; the parents' sequence numbers span
     ``[seq_min, seq_base)`` and new rows are numbered from ``seq_base``.
     """
     # cand is computed lineage (explode→filter): one scan of it
@@ -134,17 +128,15 @@ def links_to_frontier(
         keep_hash=True,
     )
     cand = anti_join_seen(
-        cand.withColumn("_bloom_key", seen_key()),
+        cand,
         seen,
         ["task_id", "canon_url"],
-        bloom=bloom,
-        bloom_key="_bloom_key",
-        # hash-build the seen side once it is too big to broadcast
-        # anyway (count known from round counters — no extra job);
-        # below that, leave the planner its broadcast-anti plan
+        # past the large-seen line the batch keys probe the seen scan
+        # (count known from round counters — no extra job); below it,
+        # leave the planner its broadcast-anti plan
         shuffle_hash=seen_total > cfg.large_seen_threshold,
         hash_key=True,
-    ).drop("_bloom_key")
+    )
     # discovery_seq is GLOBAL: per-round dense rank over (parent_seq,
     # link_pos) shifted by seq_base, so ordering and first-occurrence
     # stay well-defined when deferred rows from earlier rounds share
@@ -181,7 +173,6 @@ class CrawlEngine:
         store: DataFrame,
         checkpoint_dir: str,
         policy: DataFrame | None = None,
-        use_bloom: bool = True,
         max_rounds: int = 200,
     ):
         self.spark = spark
@@ -202,7 +193,6 @@ class CrawlEngine:
         spark.conf.set(
             "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         self.storage = SnapshotStore(checkpoint_dir)
-        self.use_bloom = use_bloom
         self.max_rounds = max_rounds
         # content store projected to fetch-join shape, keyed by canon
         # URL; each round hash-partitions it on the join key with the
@@ -286,10 +276,6 @@ class CrawlEngine:
     def crawl(self, seeds: DataFrame | None = None, resume: bool = False) -> CrawlTables:
         cfg = self.cfg
         counters: list[dict] = []
-        bloom = ShardedBloomFilter(
-            self.spark, cfg.bloom_num_bits, cfg.bloom_num_hashes,
-            n_shards=cfg.bloom_shards,
-        ) if self.use_bloom else None
 
         if resume:
             latest = self.storage.latest_round()
@@ -311,8 +297,6 @@ class CrawlEngine:
                 )
             rnd = latest + 1
             frontier = self._read_frontier(rnd)
-            # bloom catch-up on resume happens lazily below, once
-            # seen_total is known (same gating as the in-loop path)
         else:
             if seeds is None:
                 raise ValueError("seeds required when not resuming")
@@ -356,12 +340,6 @@ class CrawlEngine:
                 F.max("crawl_delay_s").alias("d"),
             ).collect()[0]
             vgap = max(vgap, float(row["w"] or 0), float(row["d"] or 0))
-        # running count of the seen union, used only to pick the seen
-        # anti-join's physical strategy (broadcast vs hash-build). On
-        # resume a parquet count is footer-metadata only — no scan.
-        seen_total = (
-            self._read_seen(seen_rounds).count() if seen_rounds else 0
-        )
         # total discovery_seq values handed out before the PREVIOUS round's
         # expansion — frontier rows with seq >= prev_base are this round's
         # new arrivals (the whole frontier in non-deferral mode)
@@ -379,9 +357,16 @@ class CrawlEngine:
                     prev.agg(F.max("discovery_seq")).collect()[0][0]) + 1
             vclock = float(prev_counters.get("vclock_next",
                                              cfg.round_epoch))
+            # running row count of the seen union; it picks the seen
+            # anti-join's physical plan. Checkpoints written before the
+            # counter existed count the union's parquet footers (no scan)
+            seen_total = prev_counters.get("seen_total")
+            if seen_total is None:
+                seen_total = self._read_seen(seen_rounds).count()
         else:
             prev_base = 0
             vclock = float(cfg.round_epoch)
+            seen_total = 0
 
         while rnd < self.max_rounds:
             agg = frontier.agg(
@@ -485,29 +470,14 @@ class CrawlEngine:
             new_seen = frontier.filter(
                 F.col("discovery_seq") >= prev_base
             ).select("task_id", "canon_url")
-            self.storage.write_table(new_seen, "seen", rnd)
+            # the appended row count rides the write (no extra scan)
+            seen_obs = Observation(f"seen_{rnd}")
+            self.storage.write_table(
+                new_seen.observe(seen_obs, F.count(F.lit(1)).alias("n")),
+                "seen", rnd)
             seen_rounds.append(rnd)
-            # n_frontier bounds the new-seen rows this round (equality in
-            # non-deferral mode; a harmless overcount under deferral)
-            seen_total += n_frontier
-            # the prefilter engages only once the seen set is too big for
-            # a free broadcast-anti plan (below that it costs more than
-            # the join it saves — r02 VERDICT item 3). First crossing
-            # catches up over the full seen union; later rounds fold in
-            # only the round delta.
-            if bloom is not None and seen_total > cfg.large_seen_threshold:
-                if not bloom.fitted:
-                    bloom.fit(
-                        self._read_seen(seen_rounds)
-                        .select(seen_key().alias("k")),
-                        "k",
-                    )
-                else:
-                    bloom.update(
-                        self.storage.read_table(self.spark, "seen", rnd)
-                        .select(seen_key().alias("k")),
-                        "k",
-                    )
+            seen_new = int(seen_obs.get["n"])
+            seen_total += seen_new
             seen = self._read_seen(seen_rounds)
 
             if deferral:
@@ -539,7 +509,7 @@ class CrawlEngine:
                 # (A/B script in commit ec1bc1b, scripts/exp_host_late.py)
                 cand = cand.drop("host", "path")
                 frontier_parts.append(links_to_frontier(
-                    cand, seen, rcfg, bloom=bloom, seen_total=seen_total,
+                    cand, seen, rcfg, seen_total=seen_total,
                     seq_base=seq_base, seq_min=seq_min,
                 ))
             if deferral:
@@ -562,6 +532,10 @@ class CrawlEngine:
                 # frontier alone in every shape (see seq_base above)
                 "seq_base": seq_base,
                 "vclock_next": vclock,
+                # rows this round appended to the seen union, and the
+                # union's running size (resume picks up the latter)
+                "seen_new": seen_new,
+                "seen_total": seen_total,
                 **observed,
             }
             self.storage.commit_round(

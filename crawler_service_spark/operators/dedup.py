@@ -3,12 +3,15 @@
 D1 (cross-round): the reference's ``normalized in self.visited_urls``
 (/root/reference/app/services/crawler.py:110-118) becomes a ``left_anti``
 join against the cumulative ``url_seen`` table. Exactness is mandatory
-(the URL-seen equality contract forbids probabilistic drops), so the
-bloom bitmap is strictly a *prefilter*: rows whose bits are not all set
-are **definitely new** and skip the shuffle entirely; only "maybe seen"
-rows pay the exact anti-join. On a web-scale frontier most candidate
-links are duplicates of hot pages, so the bitmap absorbs the common case
-while the anti-join stays the source of truth.
+(the URL-seen equality contract forbids probabilistic drops). While the
+seen set is small the planner broadcasts it into the anti-join. Past the
+engine's large-seen line the membership test is built over the *batch*
+instead: the batch's keys are broadcast into a map-side semi-join over
+the seen scan, and the batch is anti-joined against the few hits, so the
+large seen side is never shuffled or hash-built (the large-join-state
+argument of *Triton Join*, SIGMOD 2022). ``ShardedBloomFilter`` is a
+seen-side prefilter kept for callers below that line (the registry's
+``d1_bloom_sharded`` entry); the engine does not build one.
 
 D2 (in-batch): the reference's O(n) pending-queue scan
 (crawler.py:144-146) — first raw variant of a canonical URL wins, where
@@ -18,13 +21,16 @@ shape: the map-side-combining min-struct aggregate.
 Both are shaped for the engine's link-to-frontier step
 (``engine.links_to_frontier``): the dedup keeps its ``(xxhash64(keys),
 keys…)`` grouping as ``_kh`` and the anti-join joins on the same
-composite, so no exchange sits between them.
+composite, so below the large-seen line no exchange sits between them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import uuid
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType
 
 
 def first_occurrence(
@@ -86,8 +92,10 @@ def first_occurrence(
 
 
 class ShardedBloomFilter:
-    """Partitioned bloom prefilter — the 10^10-scale D1 path (SURVEY
-    §7.5's sharded design; no filter bytes ever sit on the driver).
+    """Partitioned bloom prefilter over the seen keys (SURVEY §7.5's
+    sharded design; no filter bytes ever sit on the driver).
+    ``anti_join_seen`` consults it only below the large-seen line; the
+    engine builds none (past the line the batch probes the seen scan).
 
     The filter lives as a DataFrame of ``(shard, widx, word: long)``
     rows — the NON-ZERO 64-bit words of a bitmap partitioned into
@@ -354,6 +362,60 @@ class ShardedBloomFilter:
         return probed.select(*keep, maybe.alias("_maybe_seen"))
 
 
+
+
+def _key_row_bytes(df: DataFrame, key_cols: list[str]):
+    """Bytes one row of ``df.select(key_cols)`` takes in Spark's
+    ``UnsafeRow`` format, which a broadcast relation stores: the null
+    bitset words, one 8-byte slot per column, and each string or binary
+    value padded to whole words."""
+    n = len(key_cols)
+    size = F.lit(8 * ((n + 63) // 64 + n)).cast("long")
+    for c in key_cols:
+        if isinstance(df.schema[c].dataType, (StringType, BinaryType)):
+            size = size + F.coalesce(
+                F.expr(f"((octet_length(`{c}`) + 7) DIV 8) * 8"), F.lit(0))
+    return size
+
+
+def _broadcast_threshold(spark) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
+    (negative when broadcasting is disabled), parsed by Spark itself."""
+    return int(spark._jsparkSession.sessionState().conf()
+               .autoBroadcastJoinThreshold())
+
+
+def _probe_seen(batch: DataFrame, seen_keys: DataFrame, key_cols: list[str],
+                join_cols: list[str]) -> DataFrame:
+    """The large-seen anti-join: materialize the batch once, then build
+    the membership test over the batch's keys, not over the seen set.
+
+    An ``Observation`` on the checkpointing action measures the batch
+    keys' broadcast footprint, the most the broadcast of hits below can
+    hold. If it fits the session's broadcast threshold, the keys' 64-bit
+    hashes are broadcast into a ``left_semi`` join over the seen scan
+    (map-side: the seen rows are never shuffled, and each probes a
+    long-keyed hash table), and the batch is anti-joined on the exact
+    keys against that small set of hits with a second broadcast; a hash
+    collision only adds a hit the exact join then ignores. A batch too
+    large to broadcast falls back to hash-building the seen side on
+    ``join_cols``. Both are exact: a batch row survives iff no seen row
+    equals it on every key (NULL keys never match).
+    """
+    obs = Observation(f"seen_probe_{uuid.uuid4().hex}")
+    batch = batch.observe(
+        obs, F.sum(_key_row_bytes(batch, key_cols)).alias("key_bytes"),
+    ).localCheckpoint(eager=True)
+    key_bytes = int(obs.get["key_bytes"] or 0)
+    if 0 <= key_bytes <= _broadcast_threshold(batch.sparkSession):
+        kh = F.xxhash64(*[F.col(k) for k in key_cols]).alias("_probe_kh")
+        hits = seen_keys.select(kh, *key_cols).join(
+            F.broadcast(batch.select(kh)), "_probe_kh", "left_semi")
+        return batch.join(F.broadcast(hits.drop("_probe_kh")), key_cols,
+                          "left_anti")
+    return batch.join(seen_keys.hint("shuffle_hash"), join_cols, "left_anti")
+
+
 def anti_join_seen(
     batch: DataFrame,
     seen: DataFrame,
@@ -365,21 +427,23 @@ def anti_join_seen(
 ) -> DataFrame:
     """D1: rows of ``batch`` whose key is NOT in ``seen`` (exact).
 
-    With a fitted :class:`ShardedBloomFilter`, definitely-new rows bypass
-    the join; the exact anti-join runs only on the maybe-seen remainder
-    and the result is their union (no false drops possible). The engine
-    fits the filter on the same ``large_seen_threshold`` test that sets
-    ``shuffle_hash``, so the prefilter always meets a hash-built seen side.
+    ``shuffle_hash=True`` marks a seen set past the large-seen line (the
+    engine sets it once the cumulative seen count clears
+    ``large_seen_threshold``; the count comes from the round counters, no
+    extra job). The batch is then materialized once
+    (``localCheckpoint``) and probes the seen scan with its own keys
+    (see ``_probe_seen``): no exchange sits above the seen scan, so the
+    seen side costs one map-side scan per round however large it grows.
+    Only a batch too large to broadcast falls back to a shuffled-hash
+    build of the seen side (sort-merge would sort both relations). The
+    bloom filter is not consulted on this path: there is no seen-side
+    shuffle left for it to shrink, and the probe is already exact.
 
-    ``shuffle_hash=True`` hints the seen side into a shuffled-hash build:
-    once both sides outgrow the planner's local-map threshold it falls to
-    sort-merge, sorting BOTH relations — hashing the seen partition is
-    strictly cheaper (measured 2.2-2.9× on the join at 4 and 16 cores)
-    and spills gracefully. Leave False for small seen sets: the hint
-    overrides the free broadcast-anti plan. The engine flips it once the
-    cumulative seen count clears a threshold (known from round counters —
-    no extra job); the cluster analog at 10^10 seen keys is a bucketed
-    seen table, which keeps the same hash-build shape shuffle-free.
+    Below the line the planner's broadcast-anti plan is free. There, a
+    fitted :class:`ShardedBloomFilter` splits the batch: definitely-new
+    rows bypass the join, the exact anti-join runs only on the
+    maybe-seen remainder, and the result is their union (no false drops
+    possible). The engine builds no filter.
 
     ``hash_key=True`` joins on ``(xxhash64(keys), keys…)`` instead of the
     raw keys — the same equivalence classes (the hash is a pure function
@@ -407,11 +471,10 @@ def anti_join_seen(
         seen_keys = seen_keys.select(kh, *key_cols)
         join_cols = ["_kh", *key_cols]
     if shuffle_hash:
-        seen_keys = seen_keys.hint("shuffle_hash")
-    if bloom is not None and bloom.fitted:
+        out = _probe_seen(batch, seen_keys, key_cols, join_cols)
+    elif bloom is not None and bloom.fitted:
         # split FIRST so definitely-new rows never meet the seen side:
-        # only the maybe-seen remainder pays the exact anti-join (and,
-        # when the seen side is hash-built, the exchange feeding it)
+        # only the maybe-seen remainder pays the exact anti-join
         probed = bloom.annotate(batch, bloom_key)
         definitely_new = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
         maybe = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")

@@ -174,10 +174,11 @@ SQL_F1 = """
 # 1.25 at 6M (BENCH/NOTES_r05.md "d1_bloom_sharded vs d1_seen_antijoin",
 # taken while a single-pass residual anti-join still served the
 # unhinted seen side; anti_join_seen now always splits the batch on the
-# bloom bit) — and at sf0.1's 50k-row seen
-# set the engine's shipped policy would take the plain broadcast
-# anti-join anyway; the sharded bloom engages past large_seen_threshold, where
-# its point is shrinking the seen-side SHUFFLE.
+# bloom bit below the large-seen line). The engine builds no bloom: at
+# sf0.1's 50k-row seen set it takes the plain broadcast anti-join, and
+# past large_seen_threshold the batch keys probe the seen scan instead
+# (anti_join_seen). This entry keeps the seen-side prefilter exact and
+# oracle-checked for callers that fit one.
 def _session_cache(spark, attr: str) -> dict:
     """Per-session memo dict stored ON the session object: its lifetime
     is exactly the session's. A module-global WeakKeyDictionary cannot
@@ -222,12 +223,11 @@ SQL_D1 = f"""
 """
 
 
-# fitted blooms memoized per (session, sf_dir): the engine fits the
-# sharded bloom ONCE when the seen set clears large_seen_threshold and
-# probes it every round thereafter (engine.py) — re-fitting per query
-# benched a build the shipped policy amortizes over the crawl
-# (r03 VERDICT item 3). bench.py calls the query once untimed to warm
-# this cache, so the timed region measures the steady-state probe.
+# fitted blooms memoized per (session, sf_dir): a filter is fitted once
+# and probed many times, so re-fitting per query benched a build that a
+# caller amortizes (r03 VERDICT item 3). bench.py calls the query once
+# untimed to warm this cache, so the timed region measures the
+# steady-state probe.
 # Stored on the session (see _session_cache) so a dropped session's
 # fitted bloom and persisted frames die with it (ADVICE r04).
 

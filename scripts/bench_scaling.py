@@ -248,7 +248,7 @@ def save_history(history: list[dict]) -> None:
         json.dump(history, f, indent=1)
 
 
-WORKLOAD_REV = 11    # bump when the measured work graph changes (r3:
+WORKLOAD_REV = 12    # bump when the measured work graph changes (r3:
                      # window-strategy frontier dedup; r4: bucket-sorted
                      # snapshot + presalted rank, pre-join-aligned fetch
                      # join, level-independent input partitioning; r5:
@@ -269,7 +269,8 @@ WORKLOAD_REV = 11    # bump when the measured work graph changes (r3:
                      # host-stage switch, the engine's bucket count and
                      # salt width; r11: assign_dense_seq runs its input
                      # once, and the jobs size partitions per round with
-                     # round_partitions)
+                     # round_partitions; r12: past large_seen_threshold
+                     # the batch keys probe the seen scan, no bloom)
                      # — stats pool only same-rev runs; cross-rev
                      # medians would mix different engines/timed regions
 PROBE_SLACK = 1.15   # keep runs within 15% of the fastest observed host speed
@@ -478,8 +479,9 @@ resource a real cluster shares, and executors bring their own storage.
 The **round job** — one full engine round: the engine's link-to-frontier
 step (`engine.links_to_frontier`: single-scan hybrid canonicalization,
 JVM-native fast path + exact pandas-UDF fallback → map-side-combining
-first-occurrence dedup → exact anti-join vs the URL-seen set,
-bloom-prefiltered past `large_seen_threshold` → dense discovery_seq →
+first-occurrence dedup → exact anti-join vs the URL-seen set (past
+`large_seen_threshold` the batch keys probe the seen scan map-side) →
+dense discovery_seq →
 post-dedup host) → **bucket-sorted round
 snapshot** (repartition on (host, seq-salt) feeding a bucketBy+sortBy
 write, one file per bucket — the rank's exchange+sort moved into

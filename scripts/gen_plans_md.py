@@ -69,7 +69,7 @@ def main() -> None:
         "D1 URL-seen anti-join",
         "Exact `LeftAnti` join — the dedup source of truth, and the "
         "engine's plan while the seen set is below "
-        "`large_seen_threshold` (see the bloom-prefiltered shape below).",
+        "`large_seen_threshold` (see the seen-scan probe shape below).",
         aj,
     )
 
@@ -136,7 +136,7 @@ def main() -> None:
     )
     spark.sql("DROP TABLE IF EXISTS plans_bucket_snap")
 
-    # 5. sharded bloom probe — the 10^10-scale D1 prefilter
+    # 5. sharded bloom probe — the seen-side D1 prefilter
     from crawler_service_spark.operators.dedup import ShardedBloomFilter
 
     sb = ShardedBloomFilter(spark, num_bits=1 << 14, n_shards=4).fit(
@@ -172,16 +172,23 @@ def main() -> None:
         sb_big.annotate(batch, "canon_url"),
     )
 
+    seen_dir = tempfile.mkdtemp(prefix="plans_seen_")
+    seen.write.mode("overwrite").parquet(seen_dir)
     add(
-        "D1 bloom-prefiltered anti-join (engine path past large_seen_threshold)",
-        "The engine fits the bloom on the same `large_seen_threshold` test "
-        "that hash-builds the seen side, so this is the one prefiltered "
-        "shape: the probed batch splits on `_maybe_seen`, definitely-new "
-        "rows skip the join, and only the maybe-seen remainder meets the "
-        "`shuffle_hash`-hinted seen side before the `Union`.",
-        anti_join_seen(batch, seen, ["canon_url"], bloom=sb,
-                       shuffle_hash=True),
-        mode="simple",
+        "D1 seen-scan probe (engine path past large_seen_threshold)",
+        "Past the large-seen line the deduped batch is materialized once "
+        "(`localCheckpoint`, the `Scan ExistingRDD` nodes) and an "
+        "`Observation` on that action measures its keys. A batch whose "
+        "keys fit `spark.sql.autoBroadcastJoinThreshold` is broadcast "
+        "as the build side of a `LeftSemi` `BroadcastHashJoin` over the "
+        "seen scan: the seen rows are probed map-side, with no "
+        "`Exchange` above the scan. The few hits are broadcast into the "
+        "`LeftAnti` join against the batch. A fitted bloom (passed "
+        "here) is not consulted. A batch too large to broadcast "
+        "hash-builds the seen side instead (`ShuffledHashJoin "
+        "LeftAnti`).",
+        anti_join_seen(batch, spark.read.parquet(seen_dir), ["canon_url"],
+                       bloom=sb, shuffle_hash=True),
     )
 
     # 6. broadcast policy join (J2)

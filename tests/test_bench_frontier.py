@@ -1,7 +1,8 @@
 """bench.py's frontier job runs the engine's link-to-frontier step, its
 bucket-sorted frontier snapshot and the presalted rank. Its admitted
-schedule must equal the plain path: the same operators with no bloom,
-no snapshot layout and the unsalted rank (``skew_safe=False``)."""
+schedule must equal the plain path: the same operators with the plain
+anti-join, no snapshot layout and the unsalted rank
+(``skew_safe=False``)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -41,21 +42,20 @@ def _reference_digest(cfg, links, seen, n_parents):
     return schedule_digest(admitted)
 
 
-@pytest.mark.parametrize("use_bloom", [False, True])
-def test_frontier_job_matches_plain_path(spark, tmp_path, use_bloom):
-    # a zero threshold makes the job fit the bloom and hash-build the
-    # seen side, as the engine does past large_seen_threshold
+@pytest.mark.parametrize("past_line", [False, True])
+def test_frontier_job_matches_plain_path(spark, tmp_path, past_line):
+    # a zero threshold puts the seen set past the large-seen line: the
+    # batch keys probe the seen scan, as the engine does past
+    # large_seen_threshold
     cfg = CrawlConfig(shuffle_partitions=8,
-                      **({"large_seen_threshold": 0} if use_bloom else {}))
+                      **({"large_seen_threshold": 0} if past_line else {}))
     links = bench.synth_frontier(spark, N_LINKS, N_HOSTS).persist()
     seen = bench.synth_seen(spark, N_LINKS, N_HOSTS).persist()
     n_seen = seen.count()
-    bloom = bench.fit_bloom(spark, cfg, seen, n_seen)
-    assert (bloom is not None) == use_bloom
 
     admitted = bench.schedule_links(
         spark, cfg, SnapshotStore(str(tmp_path)), links, N_LINKS, seen,
-        bloom, n_seen)
+        n_seen)
     got = schedule_digest(admitted)
     # every URL is distinct and the seen set holds a third of them;
     # with no deferral every other link is admitted

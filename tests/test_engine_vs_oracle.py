@@ -39,12 +39,10 @@ def _policy_dict(policy_df):
     }
 
 
-def _run_engine(spark, cfg, tmp, use_bloom=True, policy=None):
+def _run_engine(spark, cfg, tmp, policy=None):
     store = build_store_df(spark, N_DOCS, N_HOSTS)
     seeds = build_seeds_df(spark, N_DOCS, N_HOSTS, N_SEEDS)
-    engine = CrawlEngine(
-        spark, cfg, store, checkpoint_dir=tmp, policy=policy, use_bloom=use_bloom
-    )
+    engine = CrawlEngine(spark, cfg, store, checkpoint_dir=tmp, policy=policy)
     return engine.crawl(seeds)
 
 
@@ -132,22 +130,14 @@ def test_engine_matches_oracle_with_robots(spark):
         _compare_seen(tables, oracle)
 
 
-def test_engine_no_bloom_same_result(spark):
-    cfg = CrawlConfig(max_depth=2, follow_links=True, respect_robots=False)
-    with tempfile.TemporaryDirectory() as tmp:
-        tables = _run_engine(spark, cfg, tmp, use_bloom=False)
-        oracle = _run_oracle(spark, cfg)
-        _compare(tables, oracle)
-
-
-def test_engine_bloom_engaged_same_result(spark):
-    """The prefilter is gated on large_seen_threshold (dormant on small
-    crawls); force it on from round 0 and assert the bloom-engaged path
-    is oracle-equal too (exactness: prefilter can't drop rows)."""
+def test_engine_seen_probe_same_result(spark):
+    """The seen-scan probe is gated on large_seen_threshold (dormant on
+    small crawls); force it on from round 0 and assert the probe path
+    is oracle-equal too."""
     cfg = CrawlConfig(max_depth=2, follow_links=True, respect_robots=False,
                       large_seen_threshold=0)
     with tempfile.TemporaryDirectory() as tmp:
-        tables = _run_engine(spark, cfg, tmp, use_bloom=True)
+        tables = _run_engine(spark, cfg, tmp)
         oracle = _run_oracle(spark, cfg)
         _compare(tables, oracle)
         _compare_seen(tables, oracle)

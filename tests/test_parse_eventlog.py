@@ -42,3 +42,65 @@ def test_rolling_log_directory(tmp_path):
     single = tmp_path / app
     single.write_text(_stage(7, 2000) + "\n")
     assert [s["id"] for s in parse_eventlog.stage_summary(str(single))] == [7]
+
+
+def _ev(kind, **fields):
+    return json.dumps({"Event": kind, **fields})
+
+
+def test_job_timeline(tmp_path, capsys):
+    """Jobs in submission order with their start offset, the driver gap
+    since the previous job ended, duration, tasks and call site. A job
+    with no ``callSite.short`` shows its root SQL execution's action, or
+    else its last stage's name. A stage a later job lists but skips runs
+    its tasks in the first job."""
+    lines = [
+        _ev("SparkListenerJobStart", **{
+            "Job ID": 0, "Submission Time": 10_000, "Stage IDs": [0, 1],
+            "Properties": {"callSite.short": "count at a.py:1"}}),
+        _ev("SparkListenerTaskEnd", **{"Stage ID": 0}),
+        _ev("SparkListenerTaskEnd", **{"Stage ID": 0}),
+        _ev("SparkListenerTaskEnd", **{"Stage ID": 1}),
+        _ev("SparkListenerJobEnd", **{"Job ID": 0, "Completion Time": 12_500}),
+        # 1.5 s of driver time with no job running
+        _ev("SparkListenerJobStart", **{
+            "Job ID": 1, "Submission Time": 14_000, "Stage IDs": [2, 3],
+            "Properties": {"callSite.short": "parquet at b.py:2"}}),
+        _ev("SparkListenerTaskEnd", **{"Stage ID": 3}),
+        _ev("org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart",
+            executionId=7, description="localCheckpoint at x.java:0"),
+        # a job submitted while job 1 runs has no gap before it
+        _ev("SparkListenerJobStart", **{
+            "Job ID": 2, "Submission Time": 14_500, "Stage IDs": [4],
+            "Stage Infos": [{"Stage ID": 4, "Stage Name": "run at F.java:9"}],
+            "Properties": {"spark.sql.execution.root.id": "7"}}),
+        _ev("SparkListenerTaskEnd", **{"Stage ID": 4}),
+        _ev("SparkListenerJobEnd", **{"Job ID": 2, "Completion Time": 15_000}),
+        _ev("SparkListenerJobEnd", **{"Job ID": 1, "Completion Time": 16_000}),
+        _ev("SparkListenerJobStart", **{
+            "Job ID": 4, "Submission Time": 16_250, "Stage IDs": [6, 7],
+            "Stage Infos": [
+                {"Stage ID": 7, "Stage Name": "run at F.java:9\nat G"},
+                {"Stage ID": 6, "Stage Name": "map at F.java:3"}]}),
+        _ev("SparkListenerJobEnd", **{"Job ID": 4, "Completion Time": 16_500}),
+        # never finished: not in the timeline
+        _ev("SparkListenerJobStart", **{
+            "Job ID": 3, "Submission Time": 17_000, "Stage IDs": [5]}),
+    ]
+    log = tmp_path / "app"
+    log.write_text("\n".join(lines) + "\n")
+
+    jobs = parse_eventlog.job_timeline(str(log))
+    assert [(j["id"], j["start_s"], j["gap_s"], j["dur_s"], j["tasks"],
+             j["call_site"]) for j in jobs] == [
+        (0, 0.0, 0.0, 2.5, 3, "count at a.py:1"),
+        (1, 4.0, 1.5, 2.0, 1, "parquet at b.py:2"),
+        (2, 4.5, 0.0, 0.5, 1, "localCheckpoint at x.java:0 [sql 7]"),
+        (4, 6.25, 0.25, 0.25, 0, "run at F.java:9"),
+    ]
+
+    parse_eventlog.print_jobs(str(log))
+    out = capsys.readouterr().out.splitlines()
+    assert out[0] == "4 jobs, sum-of-job-wall 5.25s, driver gaps 1.75s"
+    assert out[3].split() == ["1", "4.00", "1.50", "2.00", "1", "parquet",
+                              "at", "b.py:2"]

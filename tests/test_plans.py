@@ -83,6 +83,172 @@ def test_anti_join_seen_is_exact_anti(spark):
     assert out.count() == 500
 
 
+@pytest.fixture
+def broadcast_threshold(spark):
+    """Sets the session's broadcast threshold for one test, then restores it."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    yield lambda v: spark.conf.set(key, v)
+    spark.conf.set(key, old)
+
+
+def _probe_inputs(spark, tmp_path):
+    """A deduped engine-shaped batch (with ``_kh``) and a parquet seen
+    scan holding every other batch key plus keys the batch lacks."""
+    from crawler_service_spark.operators.dedup import first_occurrence
+
+    batch = spark.range(2000).select(
+        F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).alias("task_id"),
+        F.concat(F.lit("https://h.example.com/p/"),
+                 (F.col("id") % 1500).cast("string")).alias("canon_url"),
+        F.col("id").alias("parent_seq"),
+        F.lit(0).alias("link_pos"),
+    )
+    batch = first_occurrence(batch, ["task_id", "canon_url"],
+                             ["parent_seq", "link_pos"], keep_hash=True)
+    path = str(tmp_path / "seen")
+    spark.range(0, 4000, 2).select(
+        F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).alias("task_id"),
+        F.concat(F.lit("https://h.example.com/p/"),
+                 F.col("id").cast("string")).alias("canon_url"),
+    ).write.parquet(path)
+    return batch, spark.read.parquet(path)
+
+
+def _plan_nodes(df):
+    """``(node, ancestors)`` for every node of the pre-execution
+    physical plan (the adaptive plan's input plan)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    out = []
+
+    def walk(node, ancestors):
+        out.append((node, ancestors))
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), ancestors + [node])
+
+    walk(plan, [])
+    return out
+
+
+def _subtree_names(node):
+    names = [node.nodeName()]
+    kids = node.children()
+    for i in range(kids.size()):
+        names += _subtree_names(kids.apply(i))
+    return names
+
+
+def _is_join(node, kind, join_type):
+    return node.nodeName() == kind and node.joinType().toString() == join_type
+
+
+def _fitted_bloom(spark, seen):
+    from crawler_service_spark.operators.dedup import ShardedBloomFilter
+
+    key = F.concat_ws("\x01", "task_id", "canon_url").alias("k")
+    return ShardedBloomFilter(spark, num_bits=1 << 12, n_shards=4).fit(
+        seen.select(key), "k")
+
+
+def test_large_seen_probe_plan_shape(spark, tmp_path, broadcast_threshold):
+    """Past the large-seen line with a batch that fits a broadcast: the
+    seen scan feeds a map-side LeftSemi join whose build side is the
+    materialized batch's keys, no shuffle sits above the seen scan, and
+    the batch is anti-joined against the hits with a broadcast join. A
+    fitted bloom is not consulted."""
+    from crawler_service_spark.operators.dedup import anti_join_seen
+
+    broadcast_threshold("10MB")
+    batch, seen = _probe_inputs(spark, tmp_path)
+    out = anti_join_seen(batch, seen, ["task_id", "canon_url"],
+                         bloom=_fitted_bloom(spark, seen),
+                         shuffle_hash=True, hash_key=True)
+    nodes = _plan_nodes(out)
+    scans = [(n, up) for n, up in nodes
+             if n.nodeName().startswith("Scan parquet")]
+    assert len(scans) == 1, explain_str(out)
+    scan, above = scans[0]
+    assert not any(a.nodeName() == "Exchange" for a in above), explain_str(out)
+    semi = [a for a in above if _is_join(a, "BroadcastHashJoin", "LeftSemi")]
+    assert len(semi) == 1, explain_str(out)
+    semi = semi[0]
+    assert semi.buildSide().toString() == "BuildRight"
+    # the build side is the checkpointed batch (its keys), not the seen scan
+    build = _subtree_names(semi.right())
+    assert "Scan ExistingRDD" in build and not any(
+        n.startswith("Scan parquet") for n in build), build
+    anti = [n for n, _ in nodes
+            if _is_join(n, "BroadcastHashJoin", "LeftAnti")]
+    assert len(anti) == 1, explain_str(out)
+    assert "BroadcastHashJoin" in _subtree_names(anti[0].right())
+    assert count_exchanges(out) == 0, explain_str(out)
+    assert "_maybe_seen" not in explain_str(out)
+
+
+def test_large_seen_fallback_is_hash_built(spark, tmp_path,
+                                           broadcast_threshold):
+    """A batch over the broadcast threshold falls back to hash-building
+    the seen side, with no bloom probe even when a filter is passed."""
+    from crawler_service_spark.operators.dedup import anti_join_seen
+
+    broadcast_threshold("1024")
+    batch, seen = _probe_inputs(spark, tmp_path)
+    out = anti_join_seen(batch, seen, ["task_id", "canon_url"],
+                         bloom=_fitted_bloom(spark, seen),
+                         shuffle_hash=True, hash_key=True)
+    plan = explain_str(out)
+    assert "ShuffledHashJoin LeftAnti" in plan, plan
+    assert "BroadcastHashJoin" not in plan and "LeftSemi" not in plan, plan
+    assert "_maybe_seen" not in plan and "_sb_shard" not in plan, plan
+
+
+def _rows(df):
+    cols = sorted(df.columns)
+    return sorted((tuple(r[c] for c in cols) for r in df.collect()),
+                  key=repr)
+
+
+@pytest.mark.parametrize("threshold,shape", [
+    ("10MB", "BroadcastHashJoin LeftSemi"),
+    ("100", "ShuffledHashJoin LeftAnti"),
+], ids=["probe", "fallback"])
+@pytest.mark.parametrize("hash_key", [False, True])
+def test_large_seen_anti_join_is_exact(spark, broadcast_threshold,
+                                       threshold, shape, hash_key):
+    """Both large-seen plans equal a plain ``left_anti``: NULL keys on
+    either side never match, duplicate seen rows drop a batch row once,
+    payload columns survive, and a batch carrying its own ``_kh`` (with
+    no provenance) and ``word`` columns is handled."""
+    from crawler_service_spark.operators.dedup import anti_join_seen
+
+    broadcast_threshold(threshold)
+    keys = ["task_id", "canon_url"]
+    batch = spark.createDataFrame(
+        [("t1", "u1", 1, "a", 10), ("t1", "u2", 2, "b", 11),
+         ("t2", "u1", 3, "c", 12), (None, "u3", 4, "d", 13),
+         ("t1", None, 5, "e", 14), ("t2", "u4", 6, None, 15),
+         ("t3", "u5", 7, "f", 16)],
+        "task_id string, canon_url string, parent_seq long, word string, "
+        "_kh long")
+    seen = spark.createDataFrame(
+        [("t1", "u1"), ("t1", "u1"), ("t1", "u1"), ("t2", "u4"),
+         (None, "u3"), ("t1", None), (None, None), ("t9", "u9")],
+        "task_id string, canon_url string")
+    want = batch.join(seen, keys, "left_anti")
+    out = anti_join_seen(batch, seen, keys, shuffle_hash=True,
+                         hash_key=hash_key)
+    assert shape in explain_str(out)
+    if hash_key:
+        want = want.drop("_kh")
+    assert sorted(out.columns) == sorted(want.columns)
+    assert _rows(out) == _rows(want)
+    # the rows that survive: the null-keyed ones, and the keys never seen
+    assert sorted(r["parent_seq"] for r in out.collect()) == [2, 3, 4, 5, 7]
+
+
 def test_minhash_signature_hashes_each_shingle_once(spark):
     """T2 MinHash: one md5 per shingle, digest sliced into lanes — the
     optimized plan must carry exactly ONE md5 node (CollapseProject must
