@@ -218,10 +218,14 @@ def schedule_links(spark: SparkSession, cfg: CrawlConfig, store: SnapshotStore,
                    links: DataFrame, n_links: int, seen: DataFrame,
                    n_seen: int) -> DataFrame:
     """The engine's link-to-frontier step over ``links`` (the output of
-    ``synth_frontier(n_links)``), then its bucket-sorted frontier
-    snapshot in ``store`` and the presalted politeness rank over the
-    read-back scan (``CrawlEngine.crawl``). Returns the admitted rows."""
+    ``synth_frontier(n_links)``, canonicalized here: the engine's links
+    arrive canonical from ``filter_internal``), then its bucket-sorted
+    frontier snapshot in ``store`` and the presalted politeness rank
+    over the read-back scan (``CrawlEngine.crawl``). Returns the
+    admitted rows."""
     n_parents = -(-n_links // LINKS_PER_PARENT)
+    links = canonicalize_frame(links, "url", "canon_url",
+                               cfg.sort_query_params)
     frontier = links_to_frontier(links, seen, cfg, seen_total=n_seen,
                                  seq_base=n_parents, seq_min=0)
     layout = (cfg.shuffle_partitions, ["host", "_salt"],

@@ -6,8 +6,8 @@ Each reference BFS depth level (/root/reference/app/services/crawler.py:
     frontier_r --(RL1 politeness rank: virtual fetch times)-->
       --(S1 fetch join vs content store)--> --(R1/R2 outcome columns)-->
       --(X1-X8 mapInPandas extraction)--> pages_r  [snapshot]
-    pages_r --(J1 posexplode links)--(F1 internal filter)--(robots)-->
-      --(P1 canonicalize, pandas UDF)--(D2 first-occurrence)-->
+    pages_r --(J1 posexplode links)--(F1 internal filter + P1
+      canonicalize: one URL pass)--(robots)--(D2 first-occurrence)-->
       --(D1 exact anti-join vs url_seen; past the large-seen line the
          batch keys probe the seen scan map-side)-->
       --(O1 dense discovery_seq)--> frontier_{r+1}  [snapshot]
@@ -39,11 +39,7 @@ from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
 from crawler_service_spark.functions.classify import resolve_fetch_outcome
-from crawler_service_spark.functions.urls import (
-    canonicalize_frame,
-    host_frame,
-    url_parts_udf,
-)
+from crawler_service_spark.functions.urls import host_frame, url_pass
 from crawler_service_spark.operators.dedup import (
     anti_join_seen,
     first_occurrence,
@@ -103,21 +99,17 @@ def links_to_frontier(
     seq_base: int,
     seq_min: int,
 ) -> DataFrame:
-    """One round's link batch to next-round frontier rows: P1
-    canonicalize, D2 first occurrence, D1 seen anti-join, O1 dense
-    ``discovery_seq`` and P2 host, projected to ``FRONTIER_COLS``.
+    """One round's canonical link batch to next-round frontier rows: D2
+    first occurrence, D1 seen anti-join, O1 dense ``discovery_seq`` and
+    P2 host, projected to ``FRONTIER_COLS``.
 
-    ``cand`` carries ``task_id``, ``seed_netloc``, ``url``, ``depth``,
-    ``parent_seq`` and ``link_pos``; ``seen`` carries ``(task_id,
-    canon_url)``. ``seen_total`` (the seen row count) picks the
+    ``cand`` carries ``task_id``, ``seed_netloc``, ``url``,
+    ``canon_url`` (`filter_internal` emits it), ``depth``, ``parent_seq``
+    and ``link_pos``; ``seen`` carries ``(task_id, canon_url)``.
+    ``seen_total`` (the seen row count) picks the
     anti-join's physical plan; the parents' sequence numbers span
     ``[seq_min, seq_base)`` and new rows are numbered from ``seq_base``.
     """
-    # cand is computed lineage (explode→filter): one scan of it
-    cand = canonicalize_frame(
-        cand, "url", "canon_url", cfg.sort_query_params,
-        single_scan=True,
-    )
     # keep_hash/hash_key: dedup groups and the anti-join join on
     # (xxhash64(key), key…) — the random-long sort prefix resolves
     # SortAggregate comparisons that full-compare on the shared
@@ -224,21 +216,9 @@ class CrawlEngine:
         that it is numbered and written with."""
         n_seeds = seeds.count()
         cfg = self._round_config(n_seeds)
-        f = (
-            canonicalize_frame(
-                seeds.withColumn("_parts", url_parts_udf(F.col("url"))),
-                "url", "canon_url", cfg.sort_query_params,
-                single_scan=True,  # upstream UDF lineage must run once
-            )
-            .select(
-                "task_id",
-                F.col("_parts.netloc").alias("seed_netloc"),
-                "url",
-                "canon_url",
-                F.col("_parts.host").alias("host"),
-                F.lit(0).alias("depth"),
-                "seed_seq",
-            )
+        f = url_pass(seeds, "url", cfg.sort_query_params).select(
+            "task_id", F.col("netloc").alias("seed_netloc"), "url",
+            "canon_url", "host", F.lit(0).alias("depth"), "seed_seq",
         )
         f = assign_dense_seq(
             f, "seed_seq", "seed_seq", n_seeds, cfg.seq_buckets

@@ -7,18 +7,26 @@ not a code copy — and lifts them into vectorized pandas/Arrow UDFs
 (`input_hint`: no per-row Python UDFs; Arrow batches keep the JVM↔Python
 crossing amortized over thousands of rows).
 
-Two tiers:
+Two tiers: **pandas UDFs** (`make_canon_udf`, `url_parts_udf`,
+`host_udf`) give exact `urllib.parse` parity, the source of truth;
+**native column expressions** (`canonicalize_native` and the native
+branches below) run JVM-side, only on rows `native_canon_eligible`
+proves byte-identical (tests pin them to the UDFs).
 
-* **pandas UDFs** (`make_canon_udf`, `url_parts_udf`, `host_udf`) — exact
-  `urllib.parse` parity, the engine's source of truth.
-* **native column expressions** (`canonicalize_native`, `host_frame`'s
-  fast path) — JVM-side/codegen, applied only to rows
-  `native_canon_eligible` proves byte-identical; unit tests pin them to
-  the pandas-UDF outputs on representative URL shapes.
+Two dispatches between them:
 
-`canonicalize_frame` and `host_frame` combine the two in one scan: the
-UDF input is nulled for eligible rows, so only the ineligible rows cross
-into Python.
+* **split** (`url_pass`): eligible rows take the native branch, the rest
+  one UDF, and the branches are unioned, so only ineligible rows cross
+  into Python; each branch scans the input. Used where that scan is
+  cheap: the link explode over the pages snapshot (`filter_internal`)
+  and the seed list. Over 60k all-eligible links exploded from a
+  parquet pages snapshot on a 4-core VM (local[4]), `filter_internal`
+  took 0.80 s split and 1.01 s as a nulled single scan of the same
+  UDF (median of 6; an earlier prototype measured 0.87 vs 1.99 s).
+* **nulled** (`canonicalize_frame`, `host_frame`): one scan; the UDF
+  input is nulled for eligible rows, so every row crosses into Python
+  (as a null) but the input runs once. The engine's `host_frame` runs
+  after the dense sequence, where a split would run the rank twice.
 """
 
 from __future__ import annotations
@@ -78,6 +86,12 @@ def host_of(url: str) -> str:
     except (ValueError, AttributeError, TypeError):
         return "unknown"
 
+
+# scheme, authority and path of a URL with a scheme: the one set of
+# regexes the native expressions share
+_SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
+_NETLOC_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)"
+_PATH_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)"
 
 URL_PARTS_SCHEMA = StructType(
     [
@@ -151,23 +165,18 @@ def make_urljoin_udf():
 # ---------------------------------------------------------------------------
 
 def host_frame(df, url_col: str = "url", out_col: str = "host"):
-    """P2 as a hybrid single-scan projection: the exact host the link
-    filter computes (`operators/links.py` fast path
-    ``lower(substring_index(netloc, ':', 1))``; slow path
-    ``url_parts_udf(...).host`` — `_parts_row` lowercases the netloc and
-    takes the text before the first ':', so the two branches agree and
-    the dispatch on `native_canon_eligible` preserves byte equality).
+    """P2 as a hybrid single-scan projection: the exact host `url_pass`
+    computes (fast path ``lower(substring_index(netloc, ':', 1))``; slow
+    path ``url_parts_udf(...).host`` — `_parts_row` lowercases the netloc
+    and takes the text before the first ':', so the two branches agree
+    and the dispatch on `native_canon_eligible` preserves byte equality).
 
     Exists so the engine can compute ``host`` AFTER the link-dedup and
     seen-anti-join exchanges instead of carrying ~18B/row of host
     strings through them (host is a pure function of the URL; A/B
-    script in commit ec1bc1b, scripts/exp_host_late.py). The UDF input
-    is nulled for eligible rows (the `canonicalize_frame` pattern) so
-    Python sees mostly nulls."""
+    script in commit ec1bc1b, scripts/exp_host_late.py)."""
     eligible = native_canon_eligible(F.col(url_col))
-    netloc = F.regexp_extract(
-        F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1
-    )
+    netloc = F.regexp_extract(F.col(url_col), _NETLOC_RE, 1)
     fast = F.lower(F.substring_index(netloc, ":", 1))
     slow = url_parts_udf(F.when(~eligible, F.col(url_col)))["host"]
     return df.withColumn(out_col, F.when(eligible, fast).otherwise(slow))
@@ -203,10 +212,8 @@ def canonicalize_native(url_col, sort_query: bool = True):
     compares against key characters); sorting an array of
     ``struct<k,v>`` reproduces tuple ordering exactly.
     """
-    scheme = F.lower(F.regexp_extract(url_col, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    netloc = F.lower(
-        F.regexp_extract(url_col, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)
-    )
+    scheme = F.lower(F.regexp_extract(url_col, _SCHEME_RE, 1))
+    netloc = F.lower(F.regexp_extract(url_col, _NETLOC_RE, 1))
     netloc = (
         F.when(
             (scheme == "http") & netloc.endswith(":80"),
@@ -218,10 +225,7 @@ def canonicalize_native(url_col, sort_query: bool = True):
         )
         .otherwise(netloc)
     )
-    path = F.regexp_extract(
-        url_col, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)", 1
-    )
-    path = F.regexp_replace(path, r"/+$", "")
+    path = F.regexp_replace(F.regexp_extract(url_col, _PATH_RE, 1), r"/+$", "")
     # anchored from the scheme so a '?' INSIDE the fragment (fragments may
     # contain '?': https://h/p#a?b) can never be mistaken for the query
     # start — the unanchored r"\?([^#]*)" bug broke byte-parity with
@@ -262,10 +266,8 @@ def canonicalize_frame(
     fallback for the rest. Equality is preserved because the native
     expression is byte-identical on exactly the rows it is applied to.
 
-    One pass over ``df``: the UDF input is nulled for eligible rows
-    (``when(~eligible, url)``) so Python sees mostly nulls, and a
-    ``when`` projection picks the native result. ``single_scan`` must be
-    True (False raises); it stays for callers that pass it.
+    The nulled dispatch (module docstring). ``single_scan`` must be True
+    (False raises); it stays for callers that pass it.
     """
     if not single_scan:
         raise ValueError("canonicalize_frame: single_scan=False is not supported")
@@ -276,6 +278,47 @@ def canonicalize_frame(
         F.when(eligible, canonicalize_native(F.col(url_col), sort_query))
         .otherwise(slow_out),
     )
+
+
+URL_PASS_COLS = ["scheme", "netloc", "host", "path", "fragment", "canon_url"]
+
+
+def _url_pass_udf(sort_query: bool):
+    @F.pandas_udf(StructType([StructField(c, StringType()) for c in URL_PASS_COLS]))
+    def parts(urls: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            [{**_parts_row(u), "canon_url": canonicalize_url(u, sort_query)}
+             for u in urls],
+            columns=URL_PASS_COLS,
+        )
+
+    # nondeterministic, so the optimizer cannot copy the call into each
+    # consumer of its fields (a filter and a projection would otherwise
+    # plan one ArrowEvalPython each)
+    return parts.asNondeterministic()
+
+
+def url_pass(df, url_col: str = "url", sort_query: bool = True):
+    """P1, P2 and F1's URL parts in one split pass (module docstring;
+    null URLs take the UDF): adds `URL_PASS_COLS` — lowercased scheme,
+    raw netloc, `host_of` host, raw path and fragment as `urlparse`
+    splits them, and ``canonicalize_url``'s canon_url. A filter on the
+    result over the parts reaches below the native canonicalization and
+    above the UDF."""
+    url = F.col(url_col)
+    eligible = F.coalesce(native_canon_eligible(url), F.lit(False))
+    netloc = F.regexp_extract(url, _NETLOC_RE, 1)
+    fast = df.filter(eligible).withColumns({
+        "scheme": F.lower(F.regexp_extract(url, _SCHEME_RE, 1)),
+        "netloc": netloc,
+        "host": F.lower(F.substring_index(netloc, ":", 1)),
+        "path": F.regexp_extract(url, _PATH_RE, 1),
+        "fragment": F.regexp_extract(url, r"#(.*)$", 1),
+        "canon_url": canonicalize_native(url, sort_query),
+    })
+    slow = df.filter(~eligible).withColumn("_u", _url_pass_udf(sort_query)(url))
+    slow = slow.withColumns({c: F.col("_u")[c] for c in URL_PASS_COLS}).drop("_u")
+    return fast.unionByName(slow)
 
 
 def skip_extension_predicate(path_col, extensions=None):

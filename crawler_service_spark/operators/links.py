@@ -6,9 +6,9 @@ J1: a fetched page's ``links`` array explodes into candidate frontier rows
 
 F1 (`_is_internal_link`, crawler.py:476-509): scheme ∈ {http,https} ∧
 same netloc as the *seed* ∧ path suffix not in the 23-extension skip list
-∧ no fragment. The netloc/path/fragment come from one Arrow round trip
-(`url_parts_udf`); everything else is a native predicate chain Catalyst
-can reorder and push down.
+∧ no fragment. The scheme/netloc/path/fragment and the canonical URL come
+from one URL pass (`functions.urls.url_pass`): native expressions for
+eligible URLs, one pandas UDF for the rest.
 
 Robots disallow-prefix filtering is the north-rule addition (the reference
 has none — SURVEY §7.4); applied identically in the oracle.
@@ -20,10 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
-from crawler_service_spark.functions.urls import (
-    native_canon_eligible,
-    url_parts_udf,
-)
+from crawler_service_spark.functions.urls import url_pass
 
 
 def expand_links(pages: DataFrame) -> DataFrame:
@@ -42,14 +39,12 @@ def expand_links(pages: DataFrame) -> DataFrame:
 
 
 def filter_internal(candidates: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """F1 + F3: keep same-seed-netloc, non-skip, fragment-free http(s)
-    links.
+    """F1 + F3 + P1: keep same-seed-netloc, non-skip, fragment-free
+    http(s) links, with their ``canon_url``, ``host`` and ``path``.
 
-    Hybrid like P1 (`canonicalize_frame`): links are the highest-volume
-    rows of a round (fan-out ≫ pages), so eligible URLs take a pure
-    regex/codegen path — scheme/netloc/path/fragment extraction is
-    byte-identical to `urlparse` on `native_canon_eligible` rows — and
-    only the weird remainder pays the Arrow UDF crossing.
+    Links are the highest-volume rows of a round (fan-out ≫ pages), so
+    this is `url_pass`'s split: eligible URLs take native expressions and
+    only the weird remainder crosses into Python.
 
     NB: the reference compares raw netloc (case-sensitive,
     crawler.py:487); corpus URLs keep hosts lowercase so engine and
@@ -57,41 +52,17 @@ def filter_internal(candidates: DataFrame, cfg: CrawlConfig) -> DataFrame:
     lowercased, port-stripped host.
     """
     alternation = "|".join(e.lstrip(".") for e in cfg.skip_extensions)
-    eligible = native_canon_eligible(F.col("url"))
-
-    scheme = F.lower(F.regexp_extract("url", r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    netloc = F.regexp_extract("url", r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)
-    path = F.regexp_extract("url", r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)", 1)
-    frag = F.regexp_extract("url", r"#(.*)$", 1)
-    keep_native = (
-        scheme.isin("http", "https")
-        & (netloc == F.col("seed_netloc"))
-        & ~F.lower(path).rlike(r"\.(" + alternation + r")$")
-        & (frag == "")
+    # an empty list skips nothing (r"\.()$" would skip paths ending in '.')
+    skip = (F.lower(F.col("path")).rlike(r"\.(" + alternation + r")$")
+            if cfg.skip_extensions else F.lit(False))
+    keep = (
+        F.col("scheme").isin("http", "https")
+        & (F.col("netloc") == F.col("seed_netloc"))
+        & ~skip
+        & (F.col("fragment") == "")
     )
-    fast = (
-        candidates.filter(eligible)
-        .filter(keep_native)
-        # host_of semantics: lowercase netloc, text before the first ':'
-        .withColumn("host", F.lower(F.substring_index(netloc, ":", 1)))
-        .withColumn("path", path)
-    )
-
-    keep_udf = (
-        F.col("_parts.scheme").isin("http", "https")
-        & (F.col("_parts.netloc") == F.col("seed_netloc"))
-        & ~F.lower(F.col("_parts.path")).rlike(r"\.(" + alternation + r")$")
-        & (F.col("_parts.fragment") == "")
-    )
-    slow = (
-        candidates.filter(~eligible)
-        .withColumn("_parts", url_parts_udf(F.col("url")))
-        .filter(keep_udf)
-        .withColumn("host", F.col("_parts.host"))
-        .withColumn("path", F.col("_parts.path"))
-        .drop("_parts")
-    )
-    return fast.unionByName(slow)
+    return url_pass(candidates, "url", cfg.sort_query_params).filter(
+        keep).drop("scheme", "netloc", "fragment")
 
 
 def filter_robots(candidates: DataFrame, policy: DataFrame | None) -> DataFrame:

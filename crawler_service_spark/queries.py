@@ -92,9 +92,10 @@ def q_p1_canonicalize(spark, sf_dir):
 
 
 def q_p1_canonicalize_hybrid(spark, sf_dir):
-    """P1 through the production hybrid (canonicalize_frame): JVM-native
+    """P1 through the nulled hybrid (canonicalize_frame): JVM-native
     fast path + pandas-UDF fallback — same oracle as the pure-UDF P1,
-    proving byte parity of the hybrid the engine actually runs."""
+    proving byte parity of the native canonicalizer the engine's URL
+    pass shares."""
     from crawler_service_spark.functions.urls import canonicalize_frame
 
     urls = _synth_urls(load(spark, sf_dir, "orders"))

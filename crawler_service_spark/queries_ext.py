@@ -581,9 +581,11 @@ def _sql_lsh_pairs() -> str:
 # ---------------------------------------------------------------------------
 
 def q_j1_link_pipeline(spark, sf_dir):
-    """J1 posexplode → F1 internal filter → P1 canonicalize, end to end
-    over synthetic link arrays (the per-round link-expansion pipeline)."""
-    from crawler_service_spark.functions.urls import canonicalize_frame
+    """J1 posexplode → F1 internal filter + P1 canonicalize (the engine's
+    `filter_internal` URL pass), end to end over synthetic link arrays
+    (the per-round link-expansion pipeline)."""
+    from crawler_service_spark.config import CrawlConfig
+    from crawler_service_spark.operators.links import filter_internal
 
     orders = load(spark, sf_dir, "orders")
     k = (F.col("o_orderkey") % 50).cast("string")
@@ -603,15 +605,9 @@ def q_j1_link_pipeline(spark, sf_dir):
         "parent_seq", "seed_netloc",
         F.posexplode("links").alias("link_pos", "url"),
     )
-    netloc = F.regexp_extract("url", r"^https?://([^/?#]*)", 1)
-    path = F.regexp_extract("url", r"^https?://[^/?#]*([^?#]*)", 1)
-    frag = F.regexp_extract("url", r"#(.*)$", 1)
-    kept = cand.filter(
-        (netloc == F.col("seed_netloc"))
-        & ~F.lower(path).rlike(r"\.(css|js|pdf|jpg|png|zip)$")
-        & (frag == "")
-    )
-    return canonicalize_frame(kept, "url").select(
+    cfg = CrawlConfig(
+        skip_extensions=(".css", ".js", ".pdf", ".jpg", ".png", ".zip"))
+    return filter_internal(cand, cfg).select(
         "parent_seq",
         F.col("link_pos").cast("long").alias("link_pos"),
         "canon_url",

@@ -88,6 +88,32 @@ def main() -> None:
         fo,
     )
 
+    # 3b. the link URL pass (F1 + P1) — split dispatch
+    from crawler_service_spark.config import CrawlConfig
+    from crawler_service_spark.operators.links import filter_internal
+
+    links = spark.range(10_000).select(
+        F.lit("t").alias("task_id"),
+        F.lit("h.example.com").alias("seed_netloc"),
+        F.col("id").alias("parent_seq"),
+        F.concat(F.lit("https://h.example.com/p/"),
+                 F.col("id").cast("string")).alias("url"),
+    )
+    add(
+        "F1 + P1 link URL pass (split: Python for ineligible links only)",
+        "`filter_internal` runs `url_pass`: the `native_canon_eligible` "
+        "branch computes scheme, netloc, host, path, fragment and "
+        "`canon_url` with native expressions (keep predicate first, so "
+        "only kept links are canonicalized); the other branch filters "
+        "on NOT eligible and makes ONE `ArrowEvalPython` call whose "
+        "struct feeds both the keep filter and the projection (the UDF "
+        "is nondeterministic, so the optimizer does not copy it into "
+        "each consumer). The two branches meet in a `Union`; the "
+        "engine's link path has no other Python stage before the "
+        "dense-sequence checkpoint.",
+        filter_internal(links, CrawlConfig()),
+    )
+
     # 4. politeness schedule — skew-safe salted rank
     frontier = spark.range(20_000).select(
         F.concat(F.lit("h"), (F.col("id") % 7).cast("string")).alias("host"),

@@ -224,3 +224,66 @@ def test_politeness_invariant(spark):
         )
         bad = per_window.filter(F.col("n") > F.col("lim")).count()
         assert bad == 0
+
+
+# a hand-built store whose pages link to dirty variants of stored
+# canonical URLs: percent-encoding, '+' and ';' (native-ineligible),
+# uppercase schemes, unsorted queries, trailing slashes and default ports
+D = "https://d.example.com"
+DIRTY_STORE = {
+    D: [f"{D}/a%20b/", f"{D}/s?q=x+y&b=1", "HTTPS://d.example.com/Up/",
+        f"{D}/p;v=1", f"{D}/q?z=2&a=1", f"{D}/a%20b", f"{D}/x.css",
+        f"{D}/f#frag"],
+    f"{D}/a%20b": [f"{D}/s?q=x+y&b=1", f"{D}/deep%7E1/",
+                   "https://d.example.com:443/Up"],
+    f"{D}/s?b=1&q=x+y": [f"{D}/", f"{D}/a%20b/", f"{D}/p;v=1/"],
+    f"{D}/Up": [f"{D}/p;v=1#x", f"{D}/p;v=1/", f"{D}/start"],
+    f"{D}/p;v=1": [f"{D}/q?a=1&z=2", f"{D}/q?z=2&a=1"],
+    f"{D}/q?a=1&z=2": [f"{D}/start/"],
+    f"{D}/start": ["https://d.example.com:443/a%20b",
+                   "https://d.example.com:443/s?q=x+y&b=1",
+                   "HTTPS://D.EXAMPLE.COM:443/Up", f"{D}/p%3Bv=1"],
+}
+# (task, seed): a clean seed, a default-port seed whose netloc keeps
+# ':443' links internal, and an ineligible seed
+DIRTY_SEEDS = [("ta", f"{D}/"), ("tb", "https://d.example.com:443/start/"),
+               ("tc", f"{D}/a%20b/")]
+
+
+def test_engine_matches_oracle_on_dirty_links(spark):
+    """Links that only the Python branch of the URL pass can
+    canonicalize reach the frontier, the seen set and the fetch join
+    exactly as in the serial oracle."""
+    import pandas as pd
+
+    from crawler_service_spark.functions.html import render_html
+    from crawler_service_spark.sources.corpus import SEED_SCHEMA
+
+    def doc(i, canon, links):
+        spans = [{"kind": "title", "text": f"doc {i}", "media_ref": None},
+                 {"kind": "text", "text": f"body {i}", "media_ref": None}]
+        spans += [{"kind": "link", "text": h, "media_ref": None}
+                  for h in links]
+        for k, s in enumerate(spans):
+            s["offset"] = k
+        return {"doc_id": canon, "status_code": 200, "fail_times": i % 2,
+                "response_time_ms": 20, "html": render_html(spans)}
+
+    store_pdf = pd.DataFrame(
+        [doc(i, c, ls) for i, (c, ls) in enumerate(DIRTY_STORE.items())])
+    store = spark.createDataFrame(
+        store_pdf, "doc_id string, status_code int, fail_times int, "
+        "response_time_ms int, html string")
+    seeds = spark.createDataFrame(pd.DataFrame(
+        [{"task_id": t, "url": u, "seed_seq": i}
+         for i, (t, u) in enumerate(DIRTY_SEEDS)]), schema=SEED_SCHEMA)
+    cfg = CrawlConfig(max_depth=3, follow_links=True, respect_robots=False)
+    with tempfile.TemporaryDirectory() as tmp:
+        tables = CrawlEngine(spark, cfg, store, checkpoint_dir=tmp).crawl(seeds)
+        oracle = simulate_many(_store_dict(store_pdf), DIRTY_SEEDS, cfg)
+        _compare(tables, oracle)
+        _compare_seen(tables, oracle)
+    # links of every dirty shape were followed, not only seeds
+    followed = {p.url for r in oracle for p in r.order if p.depth > 0}
+    for shape in ("%20", "+", ";", ":443/", "?z=2&a=1"):
+        assert any(shape in u for u in followed), shape

@@ -74,18 +74,35 @@ def test_host_frame_matches_python(spark):
         assert r["h"] == host_of(r["url"]), r["url"]
 
 
+# ineligible and dirty shapes beyond DIRTY_URLS: percent-encoding, '+',
+# ';' params, uppercase scheme and netloc, default ports
+PASS_SHAPES = [
+    "https://host.example.com/a%20b/c/",
+    "https://host.example.com/p?q=a%2Fb&a=1",
+    "https://host.example.com/s?q=x+y&b=1",
+    "https://host.example.com/p;v=1",
+    "https://host.example.com/p;v=1/q/",
+    "HTTPS://HOST.EXAMPLE.COM/Up/Per/",
+    "HTTP://host.example.com/Up?b=2&a=1",
+    "http://host.example.com:80/d/",
+    "https://host.example.com:443/e?b=2&a=1",
+]
+
+
 def test_filter_internal_matches_oracle_predicate(spark):
     """Hybrid F1 filter ≡ the oracle's urlparse-based predicate on both
-    eligible and ineligible URLs."""
-    import pandas as pd
+    eligible and ineligible URLs, and each kept link's canon_url, host
+    and path equal `canonicalize_url` and `_parts_row`, with and without
+    query sorting."""
+    from urllib.parse import urlparse
 
     from crawler_service_spark.config import CrawlConfig
+    from crawler_service_spark.functions.urls import _parts_row
     from crawler_service_spark.operators.links import filter_internal
     from crawler_service_spark.oracle import _is_internal_link
 
-    cfg = CrawlConfig()
     seed = "https://host.example.com/page/0"
-    urls = DIRTY_URLS + [
+    urls = DIRTY_URLS + PASS_SHAPES + [
         "https://host.example.com/ok/page",
         "https://host.example.com/doc.PDF",
         "http://host.example.com/other",        # http scheme, same netloc
@@ -94,20 +111,73 @@ def test_filter_internal_matches_oracle_predicate(spark):
         "https://host.example.com/x#f",         # fragment → drop
         "mailto:someone@example.com",
         "https://host.example.com/style.css",
+        "https://host.example.com/dot.",        # kept by an empty skip list
     ]
-    df = spark.createDataFrame(
-        pd.DataFrame({
-            "url": urls,
-            "seed_netloc": ["host.example.com"] * len(urls),
-            "parent_seq": range(len(urls)),
-            "depth": [1] * len(urls),
-            "link_pos": range(len(urls)),
-            "task_id": ["t"] * len(urls),
-        })
-    )
-    kept = {r["url"] for r in filter_internal(df, cfg).collect()}
-    expected = {u for u in urls if _is_internal_link(seed, u, cfg)}
-    assert kept == expected
+
+    def links(seed_netlocs):
+        return spark.createDataFrame(
+            pd.DataFrame({
+                "url": urls,
+                "seed_netloc": seed_netlocs,
+                "parent_seq": range(len(urls)),
+                "depth": [1] * len(urls),
+                "link_pos": range(len(urls)),
+                "task_id": ["t"] * len(urls),
+            })
+        )
+
+    df = links(["host.example.com"] * len(urls))
+    for cfg in (CrawlConfig(), CrawlConfig(skip_extensions=())):
+        kept = {r["url"] for r in filter_internal(df, cfg).collect()}
+        expected = {u for u in urls if _is_internal_link(seed, u, cfg)}
+        assert kept == expected
+
+    # each link seeded from its own netloc, so the netloc test passes and
+    # every http(s), non-skip, fragment-free shape is kept
+    netlocs = [urlparse(u).netloc for u in urls]
+    df = links(netlocs)
+    for sort in (False, True):
+        cfg = CrawlConfig(sort_query_params=sort)
+        rows = filter_internal(df, cfg).collect()
+        expected = {u for u, n in zip(urls, netlocs)
+                    if _is_internal_link(f"https://{n}/", u, cfg)}
+        assert {r["url"] for r in rows} == expected
+        assert len(expected) >= 25
+        for r in rows:
+            parts = _parts_row(r["url"])
+            assert r["canon_url"] == canonicalize_url(r["url"], sort), r["url"]
+            assert r["host"] == parts["host"], r["url"]
+            assert r["path"] == parts["path"], r["url"]
+
+
+def test_seed_frontier_matches_python(spark, tmp_path):
+    """The seed frontier's seed_netloc, host and canon_url equal the
+    Python functions on eligible and ineligible seeds alike."""
+    from urllib.parse import urlparse
+
+    from crawler_service_spark.config import CrawlConfig
+    from crawler_service_spark.engine import CrawlEngine
+    from crawler_service_spark.sources.corpus import SEED_SCHEMA, build_store_df
+
+    urls = DIRTY_URLS + PASS_SHAPES
+    seeds = spark.createDataFrame(pd.DataFrame({
+        "task_id": [f"t{i}" for i in range(len(urls))],
+        "url": urls,
+        "seed_seq": range(len(urls)),
+    }), schema=SEED_SCHEMA)
+    engine = CrawlEngine(spark, CrawlConfig(), build_store_df(spark, 10, 1),
+                         checkpoint_dir=str(tmp_path))
+    frontier, _ = engine._initial_frontier(seeds)
+    rows = frontier.orderBy("discovery_seq").collect()
+    assert [r["url"] for r in rows] == urls
+    for r in rows:
+        u = r["url"]
+        assert r["seed_netloc"] == urlparse(u).netloc, u
+        assert r["host"] == host_of(u), u
+        assert r["canon_url"] == canonicalize_url(u, True), u
+    eligible = [r[0] for r in seeds.select(
+        native_canon_eligible(F.col("url"))).collect()]
+    assert any(eligible) and not all(eligible)
 
 
 def test_skew_rank_matches_window_rank(spark):

@@ -260,3 +260,129 @@ def test_minhash_signature_hashes_each_shingle_once(spark):
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("md5") == 1, optimized
     assert count_exchanges(df) == 0, explain_str(df)
+
+
+# ---------------------------------------------------------------- URL pass
+def _python_stages(df):
+    """The ``ArrowEvalPython`` nodes of ``df``'s pre-execution plan."""
+    return [n for n, _ in _plan_nodes(df) if n.nodeName() == "ArrowEvalPython"]
+
+
+def _over_ineligible_only(stage):
+    """True when a filter on NOT `native_canon_eligible` sits below the
+    Python stage, so only ineligible rows reach it."""
+    def filters(node):
+        out = [node] if node.nodeName() == "Filter" else []
+        kids = node.children()
+        for i in range(kids.size()):
+            out += filters(kids.apply(i))
+        return out
+
+    negated = re.compile(r"NOT (coalesce\()?RLIKE\(.*\[\\x21-\\x7E&&")
+    return any(negated.search(f.condition().toString())
+               for f in filters(stage))
+
+
+def _clean_links(spark, n=200):
+    """Engine-shaped link candidates whose URLs are all native-eligible."""
+    return spark.range(n).select(
+        F.concat(F.lit("t"), (F.col("id") % 2).cast("string")).alias("task_id"),
+        F.lit("h.example.com").alias("seed_netloc"),
+        F.expr("id DIV 8").alias("parent_seq"),
+        F.lit(1).alias("depth"),
+        (F.col("id") % 8).cast("int").alias("link_pos"),
+        F.concat(F.lit("https://h.example.com/p/"),
+                 (F.col("id") % 150).cast("string")).alias("url"),
+    )
+
+
+def test_filter_internal_plans_one_python_stage(spark):
+    """On an all-eligible batch the link filter plans one Python stage,
+    in its ineligible branch (the UDF's fields feed both the keep filter
+    and the projection without a second call)."""
+    from crawler_service_spark.config import CrawlConfig
+    from crawler_service_spark.operators.links import filter_internal
+
+    out = filter_internal(_clean_links(spark), CrawlConfig())
+    stages = _python_stages(out)
+    assert len(stages) == 1, explain_str(out)
+    assert _over_ineligible_only(stages[0]), explain_str(out)
+    assert {"canon_url", "host", "path"} <= set(out.columns)
+
+
+def _spy_dense_seq(monkeypatch):
+    """Records each frame the engine hands to `assign_dense_seq` (the
+    frame its checkpoint materializes)."""
+    import crawler_service_spark.engine as engine
+
+    seen, real = [], engine.assign_dense_seq
+
+    def spy(df, *args, **kwargs):
+        seen.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(engine, "assign_dense_seq", spy)
+    return seen
+
+
+def test_engine_link_path_plans_two_python_stages(spark, tmp_path,
+                                                  monkeypatch):
+    """expand_links → filter_internal → filter_robots → links_to_frontier
+    plans one Python stage before the dense-sequence checkpoint (the
+    filter's ineligible branch) and one after it (`host_frame`)."""
+    import crawler_service_spark.engine as engine
+    from crawler_service_spark.config import CrawlConfig
+    from crawler_service_spark.operators.links import (
+        expand_links,
+        filter_internal,
+        filter_robots,
+    )
+
+    cfg = CrawlConfig(shuffle_partitions=4, seq_buckets=4)
+    pages = _clean_links(spark, 64).groupBy("task_id", "seed_netloc").agg(
+        F.min("parent_seq").alias("discovery_seq"),
+        F.lit(0).alias("depth"),
+        F.collect_list("url").alias("links"),
+    )
+    policy = spark.createDataFrame(
+        [("h.example.com", ["/p/1"])], "host string, disallow_prefixes array<string>")
+    path = str(tmp_path / "seen")
+    spark.createDataFrame([("t0", "https://h.example.com/p/2")],
+                          "task_id string, canon_url string").write.parquet(path)
+    checkpointed = _spy_dense_seq(monkeypatch)
+
+    cand = filter_robots(filter_internal(expand_links(pages), cfg), policy)
+    out = engine.links_to_frontier(
+        cand.drop("host", "path"), spark.read.parquet(path), cfg,
+        seen_total=1, seq_base=100, seq_min=0)
+    (pre,) = checkpointed
+    stages = _python_stages(pre)
+    assert len(stages) == 1, explain_str(pre)
+    assert _over_ineligible_only(stages[0]), explain_str(pre)
+    assert len(_python_stages(out)) == 1, explain_str(out)
+    assert out.count() > 0
+
+
+def test_seed_frontier_plans_one_python_stage(spark, tmp_path, monkeypatch):
+    """The seed frontier plans one Python stage, over ineligible seeds
+    only. (The seeds are a computed frame: over a local one the optimizer
+    folds the native branch into the scan and drops an empty Python
+    branch altogether.)"""
+    from crawler_service_spark.config import CrawlConfig
+    from crawler_service_spark.engine import CrawlEngine
+    from crawler_service_spark.sources.corpus import build_store_df
+
+    engine = CrawlEngine(spark, CrawlConfig(), build_store_df(spark, 20, 2),
+                         checkpoint_dir=str(tmp_path))
+    seeds = spark.range(4).select(
+        F.concat(F.lit("task"), F.col("id").cast("string")).alias("task_id"),
+        F.concat(F.lit("https://h"), F.col("id").cast("string"),
+                 F.lit(".example.com/page/0")).alias("url"),
+        F.col("id").alias("seed_seq"),
+    )
+    checkpointed = _spy_dense_seq(monkeypatch)
+    engine._initial_frontier(seeds)
+    (pre,) = checkpointed
+    stages = _python_stages(pre)
+    assert len(stages) == 1, explain_str(pre)
+    assert _over_ineligible_only(stages[0]), explain_str(pre)
