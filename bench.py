@@ -16,6 +16,12 @@ in clean subprocesses and writes the scaling-efficiency report to
 Every query is forced end-to-end with a noop sink
 (``df.write.format("noop")``) so Catalyst cannot prune work the way a
 bare ``count()`` would (it would drop column projections entirely).
+
+Environment (sizes and paths only; every Spark setting is fixed in
+``build_spark``): ``SPARK_GRAFT_SF_DIR``, ``SPARK_GRAFT_CPUS``,
+``SPARK_GRAFT_BENCH_URLS`` (default ``--n-urls``),
+``SPARK_GRAFT_SHUFFLE_PARTS``, ``SPARK_GRAFT_DRIVER_MEM``,
+``SPARK_GRAFT_LOCAL_DIR`` and ``SPARK_GRAFT_SNAP_DIR``.
 """
 
 from __future__ import annotations
@@ -41,6 +47,7 @@ from crawler_service_spark.functions.urls import canonicalize_frame
 from crawler_service_spark.operators.extract import extract_pages
 from crawler_service_spark.operators.politeness import presalt, schedule_round
 from crawler_service_spark.sources.storage import SnapshotStore
+from scripts.bench_scaling import cpu_probe
 
 # shuffle partitions are sized to the DATA (fixed across parallelism
 # levels), not to the core count: the scaling comparison must run the
@@ -76,7 +83,7 @@ HEADLINE = [
 
 
 def build_spark(cpus: int, app: str) -> SparkSession:
-    b = (
+    return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTS))
@@ -102,44 +109,19 @@ def build_spark(cpus: int, app: str) -> SparkSession:
         # BOTH parallelism levels and near-best size; uncompressed writes
         # scale at 0.30 (tmpfs page traffic), compression is a scaling
         # feature here, not just a size one
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "lz4"))
+        .config("spark.sql.parquet.compression.codec", "lz4")
         # bucket-sorted snapshots are written with exactly one file per
         # bucket (pre-repartitioned on the bucket key), so the scan can
         # expose the per-bucket sort order and the politeness rank's
         # window runs sort-free (SnapshotStore.write_table_bucketed)
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
     )
-    # GC experiments: the same total GC work runs inside a 4x shorter
-    # wall at the high level, so collector choice moves the scaling
-    # RATIO, not just the absolute times. Must be set before the JVM
-    # launches (getOrCreate), hence a builder conf, and only when asked
-    # for — an empty --conf value would trip spark-submit.
-    jopts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
-    if jopts:
-        b = b.config("spark.driver.extraJavaOptions", jopts)
-    # ad-hoc conf overrides for A/B experiments (event logs, AQE on/off,
-    # codegen...): "k=v;k2=v2" — experiments only, never load-bearing
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for kv in filter(None, extra.split(";")):
-        k, _, v = kv.partition("=")
-        b = b.config(k.strip(), v.strip())
-    return b.getOrCreate()
 
 
 def force(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def cpu_probe() -> float:
-    """Single-thread spin seconds — the host's current effective CPU
-    speed (see scripts/bench_scaling.py for the full methodology)."""
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(10_000_000):
-        x += i
-    return round(time.perf_counter() - t0, 4)
 
 
 SNAP_DIR = os.environ.get("SPARK_GRAFT_SNAP_DIR", "/dev/shm/spark_graft_bench")
@@ -240,7 +222,6 @@ def schedule_links(spark: SparkSession, cfg: CrawlConfig, store: SnapshotStore,
         round_epoch=cfg.round_epoch,
         budget_rounds=cfg.budget_rounds,
         priority_col="depth",
-        shuffle_partitions=cfg.shuffle_partitions,
         rank_strategy="presalted",
     )
     return admitted.drop("_salt")

@@ -63,13 +63,14 @@ class CrawlConfig:
     budget_rounds: int | None = None
 
     # retry policy (config.py:49-54, crawler.py:554-569; jitter dropped —
-    # nondeterministic and excluded from every output contract)
+    # nondeterministic and excluded from every output contract). The
+    # reference's retry_on_timeout / retry_on_connection_error flags
+    # have no counterpart: the synthetic fetch raises neither error, so
+    # its only transient failure is the store's TRANSIENT_FAIL_STATUS
     max_retries: int = 3
     retry_delay_base: float = 1.0
     retry_delay_max: float = 10.0
     retry_backoff_multiplier: float = 2.0
-    retry_on_timeout: bool = True
-    retry_on_connection_error: bool = True
 
     # north-rule additions (superset of the reference, applied identically
     # in engine and oracle so equality contracts still hold)

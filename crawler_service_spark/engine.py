@@ -275,6 +275,16 @@ class CrawlEngine:
                     seen=self._read_seen(seen_rounds),
                     round_counters=[],
                 )
+            # resume reads back the exact values the last committed round
+            # persisted (round_counters below); none is re-derived
+            last = meta["counters"]
+            missing = {"seq_base", "vclock_next", "seen_total"} - set(last)
+            if missing:
+                raise ValueError(
+                    f"round {latest} lacks the counters {sorted(missing)}: "
+                    f"cannot resume exactly")
+            prev_base, seen_total = last["seq_base"], last["seen_total"]
+            vclock = float(last["vclock_next"])
             rnd = latest + 1
             frontier = self._read_frontier(rnd)
         else:
@@ -288,6 +298,12 @@ class CrawlEngine:
             self.storage.reset()
             rnd = 0
             seen_rounds = []
+            # prev_base: discovery_seq values handed out before the
+            # previous round's expansion — frontier rows with seq >=
+            # prev_base are new arrivals (the whole frontier in
+            # non-deferral mode)
+            prev_base, seen_total = 0, 0
+            vclock = float(cfg.round_epoch)
             seed_frontier, seed_cfg = self._initial_frontier(seeds)
             self._write_frontier(seed_frontier, 0, seed_cfg)
             frontier = self._read_frontier(0)
@@ -320,34 +336,6 @@ class CrawlEngine:
                 F.max("crawl_delay_s").alias("d"),
             ).collect()[0]
             vgap = max(vgap, float(row["w"] or 0), float(row["d"] or 0))
-        # total discovery_seq values handed out before the PREVIOUS round's
-        # expansion — frontier rows with seq >= prev_base are this round's
-        # new arrivals (the whole frontier in non-deferral mode)
-        if resume and rnd > 0:
-            # exact values persisted in the last committed round's
-            # counters; the frontier-max fallback (pre-persistence
-            # checkpoints) under-reconstructs when a round's expansion
-            # produced no survivors while a deferred backlog remained
-            prev_counters = (self.storage.round_meta(rnd - 1) or {}).get(
-                "counters", {})
-            prev_base = prev_counters.get("seq_base")
-            if prev_base is None:
-                prev = self.storage.read_table(self.spark, "frontier", rnd - 1)
-                prev_base = int(
-                    prev.agg(F.max("discovery_seq")).collect()[0][0]) + 1
-            vclock = float(prev_counters.get("vclock_next",
-                                             cfg.round_epoch))
-            # running row count of the seen union; it picks the seen
-            # anti-join's physical plan. Checkpoints written before the
-            # counter existed count the union's parquet footers (no scan)
-            seen_total = prev_counters.get("seen_total")
-            if seen_total is None:
-                seen_total = self._read_seen(seen_rounds).count()
-        else:
-            prev_base = 0
-            vclock = float(cfg.round_epoch)
-            seen_total = 0
-
         while rnd < self.max_rounds:
             agg = frontier.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -392,7 +380,6 @@ class CrawlEngine:
                 round_epoch=epoch,
                 budget_rounds=cfg.budget_rounds,
                 priority_col="depth",
-                shuffle_partitions=rcfg.shuffle_partitions,
                 # over a bucket-sorted frontier snapshot the rank plans
                 # with no payload exchange/sort/driver barrier
                 rank_strategy="presalted",
@@ -507,13 +494,14 @@ class CrawlEngine:
                 # the round's derived partition count (informational:
                 # resume reads bucket counts from the snapshots' specs)
                 "parts": parts,
-                # persisted for exact resume: the seq high-water mark
-                # and the virtual clock cannot be re-derived from the
-                # frontier alone in every shape (see seq_base above)
+                # resume reads seq_base, vclock_next and seen_total
+                # back: the seq high-water mark and the virtual clock
+                # cannot be re-derived from the frontier alone in every
+                # shape (see seq_base above)
                 "seq_base": seq_base,
                 "vclock_next": vclock,
                 # rows this round appended to the seen union, and the
-                # union's running size (resume picks up the latter)
+                # union's running size
                 "seen_new": seen_new,
                 "seen_total": seen_total,
                 **observed,

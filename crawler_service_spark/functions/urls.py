@@ -31,7 +31,7 @@ Two dispatches between them:
 
 from __future__ import annotations
 
-from urllib.parse import parse_qsl, urlencode, urljoin, urlparse, urlunparse
+from urllib.parse import parse_qsl, urlencode, urlparse, urlunparse
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -145,17 +145,6 @@ def host_udf(urls: pd.Series) -> pd.Series:
 def url_parts_udf(urls: pd.Series) -> pd.DataFrame:
     """One Arrow round-trip yielding all URL parts (feeds F1/F2/robots)."""
     return pd.DataFrame([_parts_row(u) for u in urls])
-
-
-def make_urljoin_udf():
-    """(base, href) → absolute URL, `urllib.parse.urljoin` parity
-    (used by X5/X6/X8 extraction, crawler.py:310,325,344)."""
-
-    @F.pandas_udf(StringType())
-    def join2(base: pd.Series, href: pd.Series) -> pd.Series:
-        return pd.Series([urljoin(b, h) for b, h in zip(base, href)])
-
-    return join2
 
 
 # ---------------------------------------------------------------------------
@@ -323,9 +312,13 @@ def url_pass(df, url_col: str = "url", sort_query: bool = True):
 
 def skip_extension_predicate(path_col, extensions=None):
     """F1 skip-list: lowercase path ends with a skip extension
-    (crawler.py:492-500)."""
+    (crawler.py:492-500); ``extensions=None`` means ``SKIP_EXTENSIONS``."""
     from crawler_service_spark.config import SKIP_EXTENSIONS
 
-    exts = extensions or SKIP_EXTENSIONS
+    exts = SKIP_EXTENSIONS if extensions is None else extensions
+    if not exts:
+        # an empty list skips nothing (r"\.()$" would skip paths ending
+        # in '.', which the reference keeps)
+        return F.lit(False)
     alternation = "|".join(e.lstrip(".") for e in exts)
     return F.lower(path_col).rlike(r"\.(" + alternation + r")$")

@@ -11,7 +11,8 @@ the seen scan, and the batch is anti-joined against the few hits, so the
 large seen side is never shuffled or hash-built (the large-join-state
 argument of *Triton Join*, SIGMOD 2022). ``ShardedBloomFilter`` is a
 seen-side prefilter kept for callers below that line (the registry's
-``d1_bloom_sharded`` entry); the engine does not build one.
+``d1_bloom_sharded`` entry); the engine does not build one. Its probe is
+one broadcast join of the filter's dense words, ``capacity × 8`` bytes.
 
 D2 (in-batch): the reference's O(n) pending-queue scan
 (crawler.py:144-146) — first raw variant of a canonical URL wins, where
@@ -108,28 +109,21 @@ class ShardedBloomFilter:
       — a hash aggregate with map-side partial combining, parallelism
       bounded by the data, not the shard count, zero Python.
     * merge (round update): union + the same ``bit_or`` aggregate.
-    * probe: broadcast lookups plus a native shift/AND bit test — no
-      shuffle of the candidate batch, no Python crossing, whole-stage
-      codegen throughout. A missing word means those 64 bits are all
-      zero ⇒ definitely new. Small filters (capacity ≤
-      ``map_probe_max_words`` words) ride ONE broadcast join of
-      per-shard DENSE ``array<long>`` rows with O(1) ``element_at``
-      indexing (a ``map<long,long>`` lookup is a LINEAR key scan per
-      probe — measured 2-3× slower at 4k words; a whole-bitmap plan
-      Literal avoids even the join but its per-execution cost grows
-      with the literal and the array join beat it at every size
-      tried). Larger/sparser filters pay one broadcast LEFT join per
-      hash on ``(shard, widx)`` against the sparse words table (the
-      shape that degrades into bucketed shuffled joins at 10^10 seen
-      keys).
+    * probe: ONE broadcast join of per-shard DENSE ``array<long>`` rows
+      with O(1) ``element_at`` indexing plus a native shift/AND bit
+      test — no shuffle of the candidate batch, no Python crossing,
+      whole-stage codegen throughout. A ``map<long,long>`` lookup is a
+      LINEAR key scan per probe (measured 2-3× slower at 4k words); a
+      whole-bitmap plan Literal avoids even the join but its
+      per-execution cost grows with the literal, and the array join
+      beat it at every size tried. Per-hash sparse-word joins measured
+      1.53 s against this probe's 0.82 s at 6M rows
+      (BENCH/NOTES_r05.md).
 
-    The driver never holds filter bytes; it holds a handle to a
-    DataFrame of at most ``num_bits/64`` rows. At 10^10 seen keys the
-    words table outgrows the broadcast threshold — there the probe joins
-    become shuffled joins against a words table bucketed on
-    ``(shard, widx)`` (the same Iceberg-bucketed layout as the seen
-    table itself), and ``n_shards`` (≥ cluster cores) is the partition
-    unit; the sandbox path exercises the broadcast shape.
+    The broadcast holds the filter's whole capacity: ``n_shards`` rows
+    of ``bits_per_shard / 64`` words, ``capacity × 8`` bytes (8 MiB at
+    ``num_bits = 2^26``). The driver never holds filter bytes; it holds
+    handles to DataFrames of at most ``num_bits/64`` words.
 
     Exactness contract unchanged: this is a PREFILTER. All-bits-set ⇒
     "maybe seen" ⇒ pay the exact anti-join; any-bit-clear ⇒ definitely
@@ -144,7 +138,6 @@ class ShardedBloomFilter:
         num_bits: int = 1 << 23,
         num_hashes: int = 3,
         n_shards: int = 64,
-        map_probe_max_words: int = 1 << 20,
     ):
         self.spark = spark
         self.n_shards = int(n_shards)
@@ -153,19 +146,6 @@ class ShardedBloomFilter:
         self.bits_per_shard = bps
         self.num_hashes = int(num_hashes)
         self.words: DataFrame | None = None  # (shard long, widx long, word long)
-        # small-filter probe strategy: while the filter CAPACITY
-        # (n_shards * words_per_shard, i.e. its dense size — ≤ 8 MiB at
-        # the default, Spark's own broadcast-threshold ballpark) fits
-        # this many 8-byte words, annotate() probes
-        # through ONE broadcast of per-shard dense array<long> rows
-        # (n_shards rows, O(1) element_at indexing) instead of
-        # num_hashes broadcast joins — one join node in the plan
-        # instead of three, the rest identical. Past the threshold the
-        # per-hash (shard, widx) joins take over: they broadcast only
-        # the sparse words that exist and, at 10^10-seen scale, degrade
-        # gracefully into shuffled joins against a bucketed words table
-        # (class docstring).
-        self.map_probe_max_words = int(map_probe_max_words)
         self._word_arrays: DataFrame | None = None
         self.fitted = False
 
@@ -225,11 +205,9 @@ class ShardedBloomFilter:
     def _shard_arrays(self) -> DataFrame:
         """(shard, warr: DENSE array<long> of the shard's whole bitmap)
         — n_shards rows, built once per fit/update and persisted; the
-        small-filter probe broadcasts it and indexes with O(1)
-        ``element_at``. A ``map<widx, word>`` was tried first and
-        reverted: map lookups are a linear key scan per probe, 2-3×
-        slower at 4k words. Dense arrays cost capacity (not sparse
-        size) bytes, which is why the regime gate is capacity-based."""
+        probe broadcasts it and indexes with O(1) ``element_at``. A
+        ``map<widx, word>`` was tried first and reverted: map lookups
+        are a linear key scan per probe, 2-3× slower at 4k words."""
         if self._word_arrays is None:
             wps = self.bits_per_shard // 64
             # one dense slot row per (shard, widx) capacity cell, sparse
@@ -275,14 +253,10 @@ class ShardedBloomFilter:
 
     # -- probe -------------------------------------------------------------
     def annotate(self, batch: DataFrame, key_col: str) -> DataFrame:
-        """Append ``_maybe_seen`` via broadcast word lookups: the
-        candidate batch never shuffles and never crosses into Python.
-        Small filters (capacity ≤ ``map_probe_max_words`` words) probe
-        through ONE broadcast join against per-shard dense
-        ``array<long>`` rows + O(1) ``element_at`` indexing; larger
-        filters probe per hash — each hash's (shard, widx) finds its
-        sparse word row (or NULL = all-zero word). Either way a
-        codegen'd shift/AND tests the bit."""
+        """Append ``_maybe_seen`` via ONE broadcast join against the
+        per-shard dense ``array<long>`` rows: the candidate batch never
+        shuffles and never crosses into Python; ``element_at`` fetches
+        each hash's word and a codegen'd shift/AND tests the bit."""
         if self.words is None:
             return batch.withColumn("_maybe_seen", F.lit(False))
         nh = self.num_hashes
@@ -300,51 +274,21 @@ class ShardedBloomFilter:
             *[F.shiftrightunsigned(f"_sb_p{i}", 6).alias(f"_sb_w{i}")
               for i in range(nh)],
         )
-        wps = self.bits_per_shard // 64
-        if self.n_shards * wps <= self.map_probe_max_words:
-            # one join instead of num_hashes: the whole filter rides a
-            # single n_shards-row broadcast of dense array<long> rows;
-            # element_at is O(1) indexing (1-based, always in range
-            # since w < wps, so ANSI cannot fail) and NULL only for
-            # rows whose shard has no words at all (left join put NULL
-            # in the array column) — NULL word = all-zero ⇒ bit clear
-            wm = self._shard_arrays().alias("_sb_wa")
-            probed = probed.join(
-                F.broadcast(wm),
-                probed["_sb_shard"] == wm["shard"], "left")
-            probed = probed.select(
-                "*",
-                *[F.element_at(
-                    F.col("_sb_wa.warr"),
-                    (F.col(f"_sb_w{i}") + F.lit(1)).cast("int")
-                  ).alias(f"_sb_word{i}") for i in range(nh)],
-            ).drop(F.col("_sb_wa.shard")).drop(F.col("_sb_wa.warr"))
-            return self._bit_test_select(probed, batch, nh)
-        for i in range(nh):
-            # every probe joins the SAME (shard, widx, word) projection —
-            # renaming per-join used to defeat exchange reuse and pay
-            # num_hashes broadcast builds; with an identical build side
-            # Catalyst plans one BroadcastExchange + (nh-1) ReusedExchange
-            wi = self.words.alias(f"_sb_words{i}")
-            # reference the build-side word via its dataframe alias (not a
-            # bare-name rename, which would also rename a probe-side
-            # column named "word" and corrupt the bit test — ADVICE r04)
-            probed = probed.join(
-                F.broadcast(wi),
-                (probed["_sb_shard"] == wi["shard"])
-                & (probed[f"_sb_w{i}"] == wi["widx"]),
-                "left",
-            ).withColumn(f"_sb_word{i}", F.col(f"_sb_words{i}.word")) \
-             .drop(F.col(f"_sb_words{i}.shard")) \
-             .drop(F.col(f"_sb_words{i}.widx")) \
-             .drop(F.col(f"_sb_words{i}.word"))
-        return self._bit_test_select(probed, batch, nh)
-
-    @staticmethod
-    def _bit_test_select(probed: DataFrame, batch: DataFrame, nh: int) -> DataFrame:
-        """AND of the per-hash bit tests over ``_sb_word{i}``/``_sb_p{i}``
-        (NULL word = all-zero ⇒ False), projected back to the batch's
-        own columns plus ``_maybe_seen``."""
+        # element_at is O(1) indexing (1-based, always in range since
+        # w < words per shard, so ANSI cannot fail) and NULL only for
+        # rows whose shard has no words at all (left join put NULL in
+        # the array column) — NULL word = all-zero ⇒ bit clear
+        wm = self._shard_arrays().alias("_sb_wa")
+        probed = probed.join(
+            F.broadcast(wm),
+            probed["_sb_shard"] == wm["shard"], "left")
+        probed = probed.select(
+            "*",
+            *[F.element_at(
+                F.col("_sb_wa.warr"),
+                (F.col(f"_sb_w{i}") + F.lit(1)).cast("int")
+              ).alias(f"_sb_word{i}") for i in range(nh)],
+        ).drop(F.col("_sb_wa.shard")).drop(F.col("_sb_wa.warr"))
         bit_tests = [
             F.coalesce(
                 F.expr(
@@ -358,8 +302,7 @@ class ShardedBloomFilter:
         maybe = bit_tests[0]
         for t in bit_tests[1:]:
             maybe = maybe & t
-        keep = [c for c in batch.columns]
-        return probed.select(*keep, maybe.alias("_maybe_seen"))
+        return probed.select(*batch.columns, maybe.alias("_maybe_seen"))
 
 
 

@@ -20,7 +20,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
-from crawler_service_spark.functions.urls import url_pass
+from crawler_service_spark.functions.urls import (
+    skip_extension_predicate,
+    url_pass,
+)
 
 
 def expand_links(pages: DataFrame) -> DataFrame:
@@ -51,14 +54,10 @@ def filter_internal(candidates: DataFrame, cfg: CrawlConfig) -> DataFrame:
     oracle agree — both branches expose raw netloc semantics plus the
     lowercased, port-stripped host.
     """
-    alternation = "|".join(e.lstrip(".") for e in cfg.skip_extensions)
-    # an empty list skips nothing (r"\.()$" would skip paths ending in '.')
-    skip = (F.lower(F.col("path")).rlike(r"\.(" + alternation + r")$")
-            if cfg.skip_extensions else F.lit(False))
     keep = (
         F.col("scheme").isin("http", "https")
         & (F.col("netloc") == F.col("seed_netloc"))
-        & ~skip
+        & ~skip_extension_predicate(F.col("path"), cfg.skip_extensions)
         & (F.col("fragment") == "")
     )
     return url_pass(candidates, "url", cfg.sort_query_params).filter(

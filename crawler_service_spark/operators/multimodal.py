@@ -96,17 +96,6 @@ def _decode_real(data: bytes, kind: str):
     raise NotImplementedError(f"no codec for kind={kind}")
 
 
-def _fake_features(data: bytes) -> tuple[float, float]:
-    """STUB decode: deterministic features of the raw bytes standing in
-    for pixel statistics (mean + empirical byte entropy)."""
-    arr = np.frombuffer(data, dtype=np.uint8)
-    if arr.size == 0:
-        return 0.0, 0.0
-    counts = np.bincount(arr, minlength=256).astype(np.float64)
-    p = counts[counts > 0] / arr.size
-    return float(arr.mean()), float(-(p * np.log2(p)).sum())
-
-
 def decode_features(df: DataFrame, allow_fake: bool = True) -> DataFrame:
     """mapInPandas decode/feature-extract over (media_id, kind,
     media_bytes). One Arrow crossing per batch; output is narrow (drops

@@ -2,11 +2,10 @@
 
 The reference's only sinks are JSON HTTP response envelopes
 (/root/reference/app/api/v1/crawl.py:56, 102-106 and the simplified
-8-field projection at crawl.py:136-154). The batch equivalents: JSON
-lines / parquet exports of the ordered pages table, and the one-row
-"simple" projection. Columnar parquet is the engine's native interchange
-format; JSON is the compatibility surface for consumers of the reference
-API shape.
+8-field projection at crawl.py:136-154). The batch equivalents: a JSON
+lines export of the ordered pages table, and the one-row "simple"
+projection. The engine's own snapshots are parquet; JSON is the
+compatibility surface for consumers of the reference API shape.
 """
 
 from __future__ import annotations
@@ -21,11 +20,6 @@ SIMPLE_FIELDS = [
 ]
 
 
-def pages_json_records(pages: DataFrame) -> DataFrame:
-    """One JSON string per page (the CrawledPage envelope shape)."""
-    return pages.select(F.to_json(F.struct(*pages.columns)).alias("json"))
-
-
 def write_pages_json(pages: DataFrame, path: str) -> None:
     """S2: JSON-lines export of the pages table (ordered consumers sort
     by the explicit keys — file order is never meaningful)."""
@@ -34,16 +28,6 @@ def write_pages_json(pages: DataFrame, path: str) -> None:
 
 def read_pages_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.json(path)
-
-
-def write_pages_parquet(pages: DataFrame, path: str,
-                        partition_by: list[str] | None = None) -> None:
-    """Columnar export; partition by e.g. ['depth'] or host-hash buckets
-    for pruned downstream scans."""
-    w = pages.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def simple_projection(pages_ordered: DataFrame) -> DataFrame:

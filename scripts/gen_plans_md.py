@@ -120,7 +120,7 @@ def main() -> None:
         F.lit(0).alias("depth"),
         F.col("id").alias("discovery_seq"),
     )
-    sched, _ = schedule_round(frontier, None, shuffle_partitions=8, salt_width=2000)
+    sched, _ = schedule_round(frontier, None, salt_width=2000)
     add(
         "RL1 politeness rank (salted on the fly)",
         "Every host is salted by contiguous discovery_seq ranges "
@@ -168,34 +168,18 @@ def main() -> None:
     sb = ShardedBloomFilter(spark, num_bits=1 << 14, n_shards=4).fit(
         seen, "canon_url")
     add(
-        "D1 sharded-bloom probe (small filter: one broadcast dense-array join)",
-        "Small filters (dense capacity n_shards*words_per_shard ≤ "
-        "map_probe_max_words) probe through a SINGLE "
-        "`BroadcastHashJoin` on `shard` against n_shards rows of DENSE "
-        "`array<long>`; the per-hash words are O(1) `element_at` "
-        "indexes (1-based, always in range) and the bit tests are "
-        "codegen'd shift/AND — one join node, no shuffle of the "
-        "candidate batch, no Python. (A `map<widx, word>` variant was "
-        "tried and reverted: Spark map lookup is a linear scan.) Bit "
-        "positions are two JVM-side xxhash64 evaluations "
-        "(Kirsch–Mitzenmacher). Past the threshold the probe switches "
-        "to one broadcast join per hash against the sparse "
-        "(shard, widx, word) table — the shape that becomes a bucketed "
-        "shuffled join at 10^10 seen keys. No bitmap on the driver, "
-        "none in any closure.",
+        "D1 sharded-bloom probe (one broadcast dense-array join)",
+        "The probe is a SINGLE `BroadcastHashJoin` on `shard` against "
+        "n_shards rows of DENSE `array<long>` — the filter's whole "
+        "capacity, capacity × 8 bytes; the per-hash words are O(1) "
+        "`element_at` indexes (1-based, always in range) and the bit "
+        "tests are codegen'd shift/AND — one join node, no shuffle of "
+        "the candidate batch, no Python. (A `map<widx, word>` variant "
+        "was tried and reverted: Spark map lookup is a linear scan.) "
+        "Bit positions are two JVM-side xxhash64 evaluations "
+        "(Kirsch–Mitzenmacher). No bitmap on the driver, none in any "
+        "closure.",
         sb.annotate(batch, "canon_url"),
-    )
-
-    sb_big = ShardedBloomFilter(spark, num_bits=1 << 14, n_shards=4,
-                                map_probe_max_words=0).fit(seen, "canon_url")
-    add(
-        "D1 sharded-bloom probe (large filter: per-hash sparse-words joins)",
-        "The same filter forced onto the large-filter path: one "
-        "broadcast LEFT join per hash on (shard, widx) — Catalyst plans "
-        "ONE `BroadcastExchange` and reuses it for the other hashes "
-        "(`ReusedExchange`), so the filter broadcasts once regardless "
-        "of num_hashes.",
-        sb_big.annotate(batch, "canon_url"),
     )
 
     seen_dir = tempfile.mkdtemp(prefix="plans_seen_")

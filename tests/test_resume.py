@@ -2,9 +2,14 @@
 after round k and resumed from the snapshot store must produce the
 byte-identical final ordering and URL-seen set."""
 
+import json
+import os
 import tempfile
+from dataclasses import replace
+from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
 from crawler_service_spark.engine import CrawlEngine, fetch_order
@@ -83,8 +88,8 @@ def _corpus(spark, deferral):
             build_seeds_df(spark, n_docs, n_hosts, n_seeds))
 
 
-def _oracle(spark, cfg, deferral):
-    n_docs, n_hosts, _, seeds = _corpus(spark, deferral)
+def _oracle_results(cfg, corpus, deferral):
+    n_docs, n_hosts, _, seeds = corpus
     store = {
         r["doc_id"]: {"status_code": int(r["status_code"]),
                       "fail_times": int(r["fail_times"]), "html": r["html"]}
@@ -93,10 +98,13 @@ def _oracle(spark, cfg, deferral):
     seed_rows = [(r["task_id"], r["url"])
                  for r in seeds.orderBy("seed_seq").collect()]
     if deferral:
-        results = [simulate_crawl_rounds(store, url, cfg, task_id=tid)
-                   for tid, url in seed_rows]
-    else:
-        results = simulate_many(store, seed_rows, cfg)
+        return [simulate_crawl_rounds(store, url, cfg, task_id=tid)
+                for tid, url in seed_rows]
+    return simulate_many(store, seed_rows, cfg)
+
+
+def _oracle(spark, cfg, deferral):
+    results = _oracle_results(cfg, _corpus(spark, deferral), deferral)
     order = sorted(
         (p.task_id, p.fetch_seq, p.depth, p.url, p.canon_url, p.status,
          p.retry_attempts)
@@ -166,3 +174,155 @@ def test_kill_after_seen_write_then_resume_on_probe_path(
         for r in fetch_order(resumed.pages).collect())
     assert got == sorted(_ordered(full)) == want_order
     assert _seen_set(resumed) == _seen_set(full) == want_seen
+
+
+@pytest.mark.parametrize("counter", ["seq_base", "vclock_next", "seen_total"])
+def test_resume_without_a_round_counter_fails(spark, tmp_path, counter):
+    """Resume reads the seq high-water mark, the virtual clock and the
+    seen count only from the last committed round; a manifest that
+    lacks one fails loudly instead of being reconstructed."""
+    store = build_store_df(spark, 150, 5)
+    seeds = build_seeds_df(spark, 150, 5, 2)
+    cfg = CrawlConfig(max_depth=1, follow_links=True)
+    ck = str(tmp_path)
+    CrawlEngine(spark, cfg, store, checkpoint_dir=ck,
+                max_rounds=1).crawl(seeds)
+    manifest = Path(ck) / "manifest.json"
+    meta = json.loads(manifest.read_text())
+    del meta["rounds"][-1]["counters"][counter]
+    manifest.write_text(json.dumps(meta))
+    with pytest.raises(ValueError, match=counter):
+        CrawlEngine(spark, cfg, store, checkpoint_dir=ck).crawl(resume=True)
+
+
+# one host and one fetch per round: rows defer from round 1 on, and the
+# crawl stays a few rounds long
+KILL_DEFERRAL_CFG = replace(DEFERRAL_CFG, default_rate_limit=1)
+
+
+def _kill_round_at(m, kill_rnd, point):
+    """Patch the snapshot store so round ``kill_rnd`` raises ``_Killed``
+    at ``point``: after one of its durable writes, or just before its
+    commit. The round writes the next round's frontier."""
+    next_frontier = os.path.join("frontier", f"round={kill_rnd + 1:06d}")
+    if point in ("pages", "seen"):
+        write_table = SnapshotStore.write_table
+
+        def kill(storage, df, table, rnd):
+            path = write_table(storage, df, table, rnd)
+            if (table, rnd) == (point, kill_rnd):
+                raise _Killed
+            return path
+        m.setattr(SnapshotStore, "write_table", kill)
+    elif point in ("before_bucketize", "after_bucketize"):
+        bucketize = SnapshotStore._bucketize_files
+
+        def kill(path, buckets):
+            hit = path.endswith(next_frontier)
+            if hit and point == "before_bucketize":
+                raise _Killed
+            bucketize(path, buckets)
+            if hit:
+                raise _Killed
+        m.setattr(SnapshotStore, "_bucketize_files", staticmethod(kill))
+    elif point == "after_create_table":
+        # the layout spec is the write that follows the CREATE TABLE
+        write_text = Path.write_text
+
+        def kill(path, *args, **kwargs):
+            if (path.name == "_bucket_spec.json"
+                    and str(path.parent).endswith(next_frontier)):
+                raise _Killed
+            return write_text(path, *args, **kwargs)
+        m.setattr(Path, "write_text", kill)
+    else:
+        assert point == "before_commit"
+        commit_round = SnapshotStore.commit_round
+
+        def kill(storage, rnd, tables, counters):
+            if rnd == kill_rnd:
+                raise _Killed
+            commit_round(storage, rnd, tables, counters)
+        m.setattr(SnapshotStore, "commit_round", kill)
+
+
+def _kill_case(spark, deferral):
+    if deferral:
+        return KILL_DEFERRAL_CFG, (8, 1, build_store_df(spark, 8, 1),
+                                   build_seeds_df(spark, 8, 1, 1))
+    return PLAIN_CFG, _corpus(spark, False)
+
+
+def _fetch_times(tables):
+    return sorted((r["task_id"], r["fetch_seq"], r["virtual_fetch_time"])
+                  for r in fetch_order(tables.pages).collect())
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_fetch_times(spark, tmp_path_factory):
+    """Virtual fetch times of each kill-test config's uninterrupted
+    crawl (the oracle has no clock): resume must restore the clock."""
+    times = {}
+    for deferral in (False, True):
+        cfg, (_, _, store, seeds) = _kill_case(spark, deferral)
+        ck = str(tmp_path_factory.mktemp("uninterrupted"))
+        times[deferral] = _fetch_times(
+            CrawlEngine(spark, cfg, store, checkpoint_dir=ck).crawl(seeds))
+    return times
+
+
+def _spans(spans):
+    return tuple((s["kind"], s["text"], s["media_ref"], s["offset"])
+                 for s in spans or [])
+
+
+@pytest.mark.parametrize("deferral", [False, True],
+                         ids=["plain", "budget_rounds"])
+@pytest.mark.parametrize("point", [
+    "pages", "seen", "before_bucketize", "after_bucketize",
+    "after_create_table", "before_commit",
+])
+def test_kill_anywhere_in_a_round_then_resume(
+        spark, tmp_path, monkeypatch, uninterrupted_fetch_times, point,
+        deferral):
+    """Killed at any durable write of a round (or just before its
+    commit), the crawl resumes from the previous round's committed
+    counters alone and equals the oracle: fetch order, spans and the
+    seen set, which holds each URL once. Virtual fetch times equal the
+    uninterrupted crawl's.
+
+    The plain crawl is killed in round 1. Under deferral no row defers
+    before round 1, so the crawl is killed in round 2, the first round
+    whose frontier carries a deferred row: only there does the resumed
+    seq high-water mark decide which frontier rows are new."""
+    cfg, corpus = _kill_case(spark, deferral)
+    kill_rnd = 2 if deferral else 1
+    _, _, store, seeds = corpus
+    ck = str(tmp_path)
+    with monkeypatch.context() as m:
+        _kill_round_at(m, kill_rnd, point)
+        with pytest.raises(_Killed):
+            CrawlEngine(spark, cfg, store, checkpoint_dir=ck).crawl(seeds)
+    eng = CrawlEngine(spark, cfg, store, checkpoint_dir=ck)
+    assert eng.storage.latest_round() == kill_rnd - 1
+    if deferral:  # the resumed round's frontier carries a deferred row
+        seq_base = eng.storage.round_meta(kill_rnd - 1)["counters"][
+            "seq_base"]
+        frontier = eng.storage.read_table(spark, "frontier", kill_rnd)
+        assert frontier.filter(F.col("discovery_seq") < seq_base).count()
+    resumed = eng.crawl(resume=True)
+    assert resumed.round_counters[0]["round"] == kill_rnd
+
+    results = _oracle_results(cfg, corpus, deferral)
+    want = sorted(
+        (p.task_id, p.fetch_seq, p.depth, p.url, p.canon_url, p.status,
+         p.retry_attempts, _spans(p.spans))
+        for res in results for p in res.order)
+    got = sorted(
+        (r["task_id"], r["fetch_seq"], r["depth"], r["url"], r["canon_url"],
+         r["effective_status"], r["retry_attempts"], _spans(r["spans"]))
+        for r in fetch_order(resumed.pages).collect())
+    assert got == want
+    assert _seen_set(resumed) == set().union(*(res.seen for res in results))
+    assert resumed.seen.count() == len(_seen_set(resumed))
+    assert _fetch_times(resumed) == uninterrupted_fetch_times[deferral]

@@ -72,11 +72,9 @@ def test_unfitted_and_missing_shards(spark):
 
 
 def test_driver_holds_no_bitmap(spark):
-    """The scale contract: past the tiny-dense regime driver state is
-    O(1) — a handle to a DataFrame of at most num_bits/64 sparse word
-    rows, no numpy bitmap, no bytes — even after probing (the dense
-    plan-literal snapshot is built ONLY when the filter capacity fits
-    array_probe_max_words)."""
+    """The scale contract: driver state is O(1) — handles to DataFrames
+    of at most num_bits/64 words, no numpy bitmap, no bytes — even
+    after probing."""
     sb = ShardedBloomFilter(spark, num_bits=1 << 20, n_shards=16).fit(
         keys(spark, 0, 50_000), "canon_url")
     sb.annotate(keys(spark, 0, 100), "canon_url").count()
@@ -86,65 +84,37 @@ def test_driver_holds_no_bitmap(spark):
 
 
 def test_probe_is_native(spark):
-    """r02 VERDICT item 3: in both probe regimes the plan must contain
-    NO Python/Arrow stage (no FlatMapCoGroupsInPandas / ArrowEvalPython)
-    and no shuffle of the candidate batch — one broadcast join of dense
-    per-shard arrays (small), or per-hash broadcast joins (large)."""
+    """r02 VERDICT item 3: the probe plan contains NO Python/Arrow stage
+    (no FlatMapCoGroupsInPandas / ArrowEvalPython), exactly one
+    broadcast join of dense per-shard arrays indexed with
+    ``element_at``, and no shuffle of the candidate batch."""
     batch = keys(spark, 0, 1000, extra_cols=True).repartition(5)
-    for regime, kw in (
-        ("array", {}),
-        ("join", {"map_probe_max_words": 0}),
-    ):
-        sb = ShardedBloomFilter(spark, num_bits=1 << 16, n_shards=8,
-                                **kw).fit(keys(spark, 0, 4000), "canon_url")
-        ann = sb.annotate(batch, "canon_url")
-        plan = ann._jdf.queryExecution().executedPlan().toString()
-        assert "InPandas" not in plan and "EvalPython" not in plan, plan
-        assert "BroadcastHashJoin" in plan, plan
-        if regime == "array":
-            assert "element_at" in plan, plan
-        # candidate side never shuffles for the probe: the batch's
-        # partitioning survives (any exchanges in the plan belong to
-        # the words-table build lineage / broadcast itself)
-        assert ann.rdd.getNumPartitions() == 5, regime
-
-
-def test_map_probe_matches_join_probe(spark):
-    """Both probe strategies (dense-array broadcast, per-hash join) are
-    the SAME filter — identical hash family, identical bits — so their
-    _maybe_seen columns must agree row-for-row; and the small plan must
-    carry exactly one broadcast join."""
-    seen = keys(spark, 0, 4000)
-    batch = keys(spark, 2000, 9000, extra_cols=True)
-    small = ShardedBloomFilter(spark, num_bits=1 << 16, n_shards=8).fit(
-        seen, "canon_url")
-    forced_join = ShardedBloomFilter(
-        spark, num_bits=1 << 16, n_shards=8, map_probe_max_words=0).fit(
-        seen, "canon_url")
-    a = small.annotate(batch, "canon_url")
-    b = forced_join.annotate(batch, "canon_url")
-    rows = lambda df: sorted((r["canon_url"], r["_maybe_seen"])
-                             for r in df.collect())
-    assert rows(a) == rows(b)
-    plan = a._jdf.queryExecution().executedPlan().toString()
+    sb = ShardedBloomFilter(spark, num_bits=1 << 16, n_shards=8).fit(
+        keys(spark, 0, 4000), "canon_url")
+    ann = sb.annotate(batch, "canon_url")
+    ann.collect()  # the final adaptive plan
+    plan = ann._jdf.queryExecution().executedPlan().toString()
+    assert "InPandas" not in plan and "EvalPython" not in plan, plan
     # exactly one broadcast join in the probe itself; the plan string
-    # also embeds the cached word-map BUILD lineage (below the
+    # also embeds the cached word-array BUILD lineage (below the
     # TableCacheQueryStage marker), which is not probe work
     probe_part = plan.split("TableCacheQueryStage")[0]
     assert probe_part.count("BroadcastHashJoin") == 1, plan
     assert "element_at" in probe_part, plan
-    assert "InPandas" not in plan and "EvalPython" not in plan, plan
+    # candidate side never shuffles for the probe: the batch's
+    # partitioning survives (any exchanges in the plan belong to the
+    # word-array build lineage / broadcast itself)
+    assert ann.rdd.getNumPartitions() == 5
 
 
 def test_probe_batch_with_word_column(spark):
     """ADVICE r04: a probed batch that itself carries a ``word`` column
-    must survive annotate unchanged — the build-side word is referenced
-    via its dataframe alias, never by a bare-name rename that would also
-    capture (and corrupt) a probe-side column of the same name."""
+    must survive annotate unchanged — build-side columns are referenced
+    via their dataframe alias, never by a bare-name rename that would
+    also capture (and corrupt) a probe-side column of the same name."""
     seen = keys(spark, 0, 4000)
-    # force the per-hash JOIN regime — the alias hazard lives there
-    sb = ShardedBloomFilter(spark, num_bits=1 << 16, n_shards=8,
-                            map_probe_max_words=0).fit(seen, "canon_url")
+    sb = ShardedBloomFilter(spark, num_bits=1 << 16, n_shards=8).fit(
+        seen, "canon_url")
     batch = keys(spark, 2000, 8000, extra_cols=True).withColumn(
         "word", (F.col("id") * 7).cast("long"))
     got = anti_join_seen(batch, seen, ["canon_url"], bloom=sb,

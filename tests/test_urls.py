@@ -12,6 +12,7 @@ from crawler_service_spark.functions.urls import (
     canonicalize_url,
     host_of,
     make_canon_udf,
+    skip_extension_predicate,
 )
 
 # (input, expected with sort_query=False)  — reference-exact semantics
@@ -122,3 +123,17 @@ def test_host_frame_matches_udf_host(spark):
     g = {r["url"]: r["host"] for r in got.collect()}
     w = {r["url"]: r["host"] for r in want.collect()}
     assert g == w
+
+
+def test_empty_skip_list_skips_nothing(spark):
+    """An explicit empty skip list keeps every path, including one that
+    ends in '.'; only ``None`` falls back to ``SKIP_EXTENSIONS``."""
+    df = spark.createDataFrame([("/a.pdf",), ("/a.",), ("/a",)], ["path"])
+
+    def skipped(extensions):
+        return {r["path"] for r in df.filter(skip_extension_predicate(
+            F.col("path"), extensions)).collect()}
+
+    assert skipped(()) == set()
+    assert skipped(None) == {"/a.pdf"}
+    assert skipped((".pdf",)) == {"/a.pdf"}
