@@ -8,8 +8,8 @@ Each reference BFS depth level (/root/reference/app/services/crawler.py:
       --(X1-X8 mapInPandas extraction)--> pages_r  [snapshot]
     pages_r --(J1 posexplode links)--(F1 internal filter + P1
       canonicalize: one URL pass)--(robots)--(D2 first-occurrence)-->
-      --(D1 exact anti-join vs url_seen; past the large-seen line the
-         batch keys probe the seen scan map-side)-->
+      --(D1 exact anti-join vs url_seen = visited ∪ pending; past the
+         large-seen line the batch keys probe the seen scan map-side)-->
       --(O1 dense discovery_seq)--> frontier_{r+1}  [snapshot]
 
 Level-synchronized BFS is order-equivalent to the reference's serial FIFO
@@ -22,17 +22,21 @@ collapses into the end-of-round url_seen anti-join. The politeness
 limiter never reorders (it only sleeps — rate_limiter.py:139-150), so it
 contributes virtual fetch *times*, not order.
 
-All state (frontier, url_seen, pages) lives in per-round parquet
-snapshots (sources/storage.py), giving checkpoint/resume with identical
-ordering and O(1) plans per round. url_seen is append-only: round k
-writes only the canon URLs first seen in round k; the full set is the
-union of snapshots — at 10^10 scale this is one immutable partition per
-round instead of a rewrite of the world.
+All state lives in two per-round parquet snapshots, pages and frontier
+(sources/storage.py), giving checkpoint/resume with identical ordering
+and O(1) plans per round. url_seen is not stored: as in the reference
+(visited_urls ∪ the pending deque), the seen set when round k runs is
+the pages of every committed round before k (visited) plus frontier k
+(pending). The two are disjoint — a URL enters a frontier once and is
+fetched at most once — so the union holds each URL once, and its size
+is the pages fetched before k plus frontier k's row count, both already
+measured.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -197,12 +201,27 @@ class CrawlEngine:
             "html",
         )
 
-    # ------------------------------------------------------------------ util
-    def _read_seen(self, rounds: list[int]) -> DataFrame | None:
-        if not rounds:
-            return None
-        paths = [self.storage.table_path("seen", r) for r in rounds]
-        return self.spark.read.parquet(*paths)
+    # ------------------------------------------------------------------ seen
+    @staticmethod
+    def _seen(visited: DataFrame | None,
+              pending: DataFrame | None) -> DataFrame:
+        """The URL-seen set ``(task_id, canon_url)``: the ``visited``
+        pages ∪ the ``pending`` frontier (either may be ``None``)."""
+        keys = ["task_id", "canon_url"]
+        return reduce(DataFrame.unionByName, [
+            df.select(keys) for df in (visited, pending) if df is not None])
+
+    def _tables(self, latest: int, counters: list[dict]) -> CrawlTables:
+        """The crawl as of committed round ``latest``. Its seen set
+        includes the committed next frontier, if any: URLs enqueued but
+        not fetched when ``max_rounds`` stopped the crawl."""
+        pending = (
+            self.storage.read_table(self.spark, "frontier", latest + 1)
+            if "frontier" in self.storage.round_meta(latest)["tables"]
+            else None)
+        pages = self.storage.pages_glob(self.spark, latest)
+        return CrawlTables(pages=pages, seen=self._seen(pages, pending),
+                           round_counters=counters)
 
     # -------------------------------------------------------------- frontier
     def _round_config(self, n_rows: int) -> CrawlConfig:
@@ -262,28 +281,23 @@ class CrawlEngine:
             if latest is None:
                 raise ValueError("nothing to resume from")
             meta = self.storage.round_meta(latest)
-            seen_rounds = [
-                e["round"]
-                for e in self.storage.committed_rounds()
-                if "seen" in e["tables"]
-            ]
             if "frontier" not in meta["tables"]:
                 # crawl already complete; just return assembled tables
-                all_pages = self.storage.pages_glob(self.spark, latest)
-                return CrawlTables(
-                    pages=all_pages,
-                    seen=self._read_seen(seen_rounds),
-                    round_counters=[],
-                )
+                return self._tables(latest, [])
             # resume reads back the exact values the last committed round
-            # persisted (round_counters below); none is re-derived
+            # persisted (round_counters below); none is reconstructed
+            # from the snapshots
             last = meta["counters"]
-            missing = {"seq_base", "vclock_next", "seen_total"} - set(last)
+            missing = {"seq_base", "vclock_next", "seen_total", "frontier",
+                       "n_pages"} - set(last)
             if missing:
                 raise ValueError(
                     f"round {latest} lacks the counters {sorted(missing)}: "
                     f"cannot resume exactly")
             prev_base, seen_total = last["seq_base"], last["seen_total"]
+            # pages fetched through round `latest`: its seen set less its
+            # frontier, plus its pages
+            visited = seen_total - last["frontier"] + last["n_pages"]
             vclock = float(last["vclock_next"])
             rnd = latest + 1
             frontier = self._read_frontier(rnd)
@@ -297,12 +311,10 @@ class CrawlEngine:
             # the two crawls' seen sets and pages
             self.storage.reset()
             rnd = 0
-            seen_rounds = []
             # prev_base: discovery_seq values handed out before the
-            # previous round's expansion — frontier rows with seq >=
-            # prev_base are new arrivals (the whole frontier in
-            # non-deferral mode)
-            prev_base, seen_total = 0, 0
+            # previous round's expansion (the seq high-water mark);
+            # visited: pages fetched before this round
+            prev_base, seen_total, visited = 0, 0, 0
             vclock = float(cfg.round_epoch)
             seed_frontier, seed_cfg = self._initial_frontier(seeds)
             self._write_frontier(seed_frontier, 0, seed_cfg)
@@ -359,6 +371,13 @@ class CrawlEngine:
             # fetch join and extraction stage (so the pages files), the
             # dense-seq buckets and the next frontier's buckets
             rcfg = self._round_config(n_frontier)
+            # enqueue-time seen semantics: visited ∪ pending. The rows
+            # this round adds are its frontier's new arrivals (deferred
+            # rows were counted in the round they arrived).
+            seen_new = visited + n_frontier - seen_total
+            seen_total += seen_new
+            seen = self._seen(
+                self.storage.pages_glob(self.spark, rnd - 1), frontier)
 
             # each round consumes budget_rounds politeness windows per
             # (full) host in deferral mode; in non-deferral mode a round
@@ -426,26 +445,8 @@ class CrawlEngine:
             obs_vals = dict(obs.get)
             vclock = float(obs_vals.pop("max_vft") or 0.0) + vgap
             observed = {k: int(v or 0) for k, v in obs_vals.items()}
+            visited += observed["n_pages"]
             pages = self.storage.read_table(self.spark, "pages", rnd)
-
-            # enqueue-time seen semantics (visited ∪ pending): every URL
-            # that ever ENTERS the frontier is seen. Under deferral the
-            # frontier carries rows already recorded in earlier rounds, so
-            # only new arrivals (seq >= prev_base) are appended — keeping
-            # the seen union duplicate-free. Non-deferral: the whole
-            # frontier is new arrivals and the filter passes everything.
-            new_seen = frontier.filter(
-                F.col("discovery_seq") >= prev_base
-            ).select("task_id", "canon_url")
-            # the appended row count rides the write (no extra scan)
-            seen_obs = Observation(f"seen_{rnd}")
-            self.storage.write_table(
-                new_seen.observe(seen_obs, F.count(F.lit(1)).alias("n")),
-                "seen", rnd)
-            seen_rounds.append(rnd)
-            seen_new = int(seen_obs.get["n"])
-            seen_total += seen_new
-            seen = self._read_seen(seen_rounds)
 
             if deferral:
                 # per-ROW depth gate: the frontier mixes depths once rows
@@ -456,7 +457,6 @@ class CrawlEngine:
                 expand = cfg.follow_links and (
                     cfg.max_depth == 0 or depth_of_round < cfg.max_depth
                 )
-            wrote_frontier = False
             frontier_parts = []
             if expand:
                 success = pages.filter(~F.col("is_error"))
@@ -481,12 +481,11 @@ class CrawlEngine:
                 ))
             if deferral:
                 frontier_parts.append(deferred.select(FRONTIER_COLS))
-            if frontier_parts:
-                next_frontier = frontier_parts[0]
-                for part in frontier_parts[1:]:
-                    next_frontier = next_frontier.unionByName(part)
-                self._write_frontier(next_frontier, rnd + 1, rcfg)
-                wrote_frontier = True
+            wrote_frontier = bool(frontier_parts)
+            if wrote_frontier:
+                self._write_frontier(
+                    reduce(DataFrame.unionByName, frontier_parts), rnd + 1,
+                    rcfg)
 
             round_counters = {
                 "frontier": n_frontier,
@@ -494,21 +493,21 @@ class CrawlEngine:
                 # the round's derived partition count (informational:
                 # resume reads bucket counts from the snapshots' specs)
                 "parts": parts,
-                # resume reads seq_base, vclock_next and seen_total
-                # back: the seq high-water mark and the virtual clock
-                # cannot be re-derived from the frontier alone in every
-                # shape (see seq_base above)
+                # resume reads seq_base, vclock_next, seen_total,
+                # frontier and n_pages back: the seq high-water mark and
+                # the virtual clock cannot be re-derived from the
+                # frontier alone in every shape (see seq_base above)
                 "seq_base": seq_base,
                 "vclock_next": vclock,
-                # rows this round appended to the seen union, and the
-                # union's running size
+                # rows this round added to the seen set (its frontier's
+                # new arrivals), and the set's size as the round ran
                 "seen_new": seen_new,
                 "seen_total": seen_total,
                 **observed,
             }
             self.storage.commit_round(
                 rnd,
-                ["pages", "seen"] + (["frontier"] if wrote_frontier else []),
+                ["pages"] + (["frontier"] if wrote_frontier else []),
                 round_counters,
             )
             counters.append({"round": rnd, **round_counters})
@@ -529,9 +528,7 @@ class CrawlEngine:
             # CrawlTables(pages=None, ...) that crashes every consumer
             raise ValueError(
                 "crawl fetched no pages: the seed frontier was empty")
-        all_pages = self.storage.pages_glob(self.spark, latest)
-        seen = self._read_seen(seen_rounds)
-        return CrawlTables(pages=all_pages, seen=seen, round_counters=counters)
+        return self._tables(latest, counters)
 
 
 def fetch_order(pages: DataFrame) -> DataFrame:

@@ -31,6 +31,7 @@ Two dispatches between them:
 
 from __future__ import annotations
 
+import re
 from urllib.parse import parse_qsl, urlencode, urlparse, urlunparse
 
 import pandas as pd
@@ -312,13 +313,14 @@ def url_pass(df, url_col: str = "url", sort_query: bool = True):
 
 def skip_extension_predicate(path_col, extensions=None):
     """F1 skip-list: lowercase path ends with a skip extension
-    (crawler.py:492-500); ``extensions=None`` means ``SKIP_EXTENSIONS``."""
+    (crawler.py:492-500), each entry matched literally as a suffix, dot
+    included (``path.endswith(ext)``); ``extensions=None`` means
+    ``SKIP_EXTENSIONS``."""
     from crawler_service_spark.config import SKIP_EXTENSIONS
 
     exts = SKIP_EXTENSIONS if extensions is None else extensions
     if not exts:
-        # an empty list skips nothing (r"\.()$" would skip paths ending
-        # in '.', which the reference keeps)
+        # an empty list skips nothing (r"()$" would skip every path)
         return F.lit(False)
-    alternation = "|".join(e.lstrip(".") for e in exts)
-    return F.lower(path_col).rlike(r"\.(" + alternation + r")$")
+    alternation = "|".join(re.escape(e) for e in exts)
+    return F.lower(path_col).rlike("(" + alternation + ")$")

@@ -162,8 +162,9 @@ SQL_F1 = """
 
 # The D1 entries probe a MATERIALIZED batch/seen pair, memoized per
 # (session, sf_dir) like the fitted bloom below: in the engine both
-# sides of the seen anti-join are round snapshots (the frontier batch)
-# and an accumulated seen table — never recomputed lineage — so timing
+# sides of the seen anti-join are round snapshots (the link batch
+# against the earlier pages and the current frontier) — never
+# recomputed lineage — so timing
 # the synthetic-URL string construction inside the D1 entries would
 # measure corpus synthesis, not the dedup operator.
 #

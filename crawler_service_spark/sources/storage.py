@@ -4,14 +4,15 @@ Iceberg semantics (snapshot per round; resume = read latest snapshot)
 implemented over parquet + a JSON manifest, behind one interface — the
 sandbox has no Iceberg runtime jar (SURVEY §7.7), and the contract only
 needs atomic "round committed" snapshots with a resumable latest pointer.
-Writing each round's frontier/seen to disk also truncates the BSP loop's
-lineage, which is what keeps round N's plan O(1) instead of O(N) —
-the batch analog of streaming state checkpointing.
+Writing each round's pages and frontier to disk also truncates the BSP
+loop's lineage, which is what keeps round N's plan O(1) instead of O(N)
+— the batch analog of streaming state checkpointing. The engine stores
+no URL-seen table: it derives that set from these two snapshots.
 
 Layout::
 
     <root>/manifest.json                 # {"rounds": [...], "latest": k}
-    <root>/<table>/round=<k>/*.parquet
+    <root>/<table>/round=<k>/*.parquet   # table: pages | frontier
 
 A round's manifest entry is written only after every table write for that
 round succeeds, so a killed job resumes from the last complete round with
@@ -46,18 +47,13 @@ class SnapshotStore:
     def latest_round(self) -> int | None:
         return self._read_manifest()["latest"]
 
-    def committed_rounds(self) -> list[dict]:
-        """Public view of the committed-round entries (round / tables /
-        counters) so callers never parse the manifest layout directly."""
-        return self._read_manifest()["rounds"]
-
     def reset(self) -> None:
         """Truncate the store for a FRESH crawl over a dir that may hold
         a prior crawl's state. commit_round only replaces same-round
         entries, so without this a fresh crawl that dies early would
         leave the old crawl's later rounds in the manifest — and a
-        subsequent resume would silently merge the two crawls' seen
-        sets and pages. This store's bucketed catalog entries go too
+        subsequent resume would silently merge the two crawls' pages
+        and frontiers. This store's bucketed catalog entries go too
         (external tables: dropping them never touches files)."""
         import shutil
 
@@ -91,7 +87,7 @@ class SnapshotStore:
         return str(self.root / table / f"round={rnd:06d}")
 
     def table_path(self, table: str, rnd: int) -> str:
-        """Public path accessor (multi-round parquet reads)."""
+        """Public path accessor (a snapshot's files on disk)."""
         return self._table_path(table, rnd)
 
     @staticmethod

@@ -62,13 +62,19 @@ def test_interrupt_after_first_round_then_resume(spark):
 
 
 def test_resume_of_complete_crawl_is_stable(spark):
+    """Resuming a finished crawl returns its fetch order and its seen
+    set, which equals the oracle's."""
     cfg = CrawlConfig(max_depth=1, follow_links=True)
-    store = build_store_df(spark, 150, 5)
-    seeds = build_seeds_df(spark, 150, 5, 2)
+    corpus = (150, 5, build_store_df(spark, 150, 5),
+              build_seeds_df(spark, 150, 5, 2))
+    _, _, store, seeds = corpus
     with tempfile.TemporaryDirectory() as ck:
         first = CrawlEngine(spark, cfg, store, checkpoint_dir=ck).crawl(seeds)
         again = CrawlEngine(spark, cfg, store, checkpoint_dir=ck).crawl(resume=True)
         assert _ordered(first) == _ordered(again)
+        want_seen = set().union(
+            *(res.seen for res in _oracle_results(cfg, corpus, False)))
+        assert _seen_set(again) == _seen_set(first) == want_seen
 
 
 # deferral: one host over its per-window budget every round, so rows
@@ -88,7 +94,7 @@ def _corpus(spark, deferral):
             build_seeds_df(spark, n_docs, n_hosts, n_seeds))
 
 
-def _oracle_results(cfg, corpus, deferral):
+def _oracle_results(cfg, corpus, deferral, max_rounds=200):
     n_docs, n_hosts, _, seeds = corpus
     store = {
         r["doc_id"]: {"status_code": int(r["status_code"]),
@@ -98,7 +104,8 @@ def _oracle_results(cfg, corpus, deferral):
     seed_rows = [(r["task_id"], r["url"])
                  for r in seeds.orderBy("seed_seq").collect()]
     if deferral:
-        return [simulate_crawl_rounds(store, url, cfg, task_id=tid)
+        return [simulate_crawl_rounds(store, url, cfg, task_id=tid,
+                                      max_rounds=max_rounds)
                 for tid, url in seed_rows]
     return simulate_many(store, seed_rows, cfg)
 
@@ -133,15 +140,38 @@ def test_seen_total_counts_the_seen_union_under_deferral(spark, tmp_path):
     assert last["seen_total"] == tables.seen.count()
 
 
+@pytest.mark.parametrize("max_rounds", [1, 2, 3])
+def test_capped_crawl_matches_the_capped_oracle(spark, tmp_path, max_rounds):
+    """A deferral crawl stopped by ``max_rounds`` equals the oracle
+    stopped after as many rounds: the same pages, and a seen set that
+    also holds the URLs the last round enqueued but did not fetch."""
+    corpus = _corpus(spark, deferral=True)
+    _, _, store, seeds = corpus
+    tables = CrawlEngine(spark, DEFERRAL_CFG, store,
+                         checkpoint_dir=str(tmp_path),
+                         max_rounds=max_rounds).crawl(seeds)
+    results = _oracle_results(DEFERRAL_CFG, corpus, True, max_rounds)
+    want_pages = sorted(
+        (p.task_id, p.fetch_seq, p.depth, p.url, p.canon_url, p.status,
+         p.retry_attempts)
+        for res in results for p in res.order)
+    want_seen = set().union(*(res.seen for res in results))
+    # the cap stopped the crawl with URLs still pending
+    assert len(want_seen) > len(want_pages)
+    assert sorted(_ordered(tables)) == want_pages
+    assert _seen_set(tables) == want_seen
+    assert tables.seen.count() == len(want_seen)
+
+
 class _Killed(Exception):
     pass
 
 
 @pytest.mark.parametrize("deferral", [False, True],
                          ids=["plain", "budget_rounds"])
-def test_kill_after_seen_write_then_resume_on_probe_path(
+def test_kill_after_pages_write_then_resume_on_probe_path(
         spark, tmp_path, monkeypatch, deferral):
-    """Killed after round 1's seen write, before its commit, on the
+    """Killed after round 1's pages write, before its commit, on the
     seen-scan probe path: the resumed crawl redoes round 1 and equals
     both the uninterrupted crawl and the oracle."""
     cfg = DEFERRAL_CFG if deferral else PLAIN_CFG
@@ -153,7 +183,7 @@ def test_kill_after_seen_write_then_resume_on_probe_path(
 
     def write_table(storage, df, table, rnd):
         path = inner(storage, df, table, rnd)
-        if table == "seen" and rnd == 1:
+        if table == "pages" and rnd == 1:
             raise _Killed
         return path
 
@@ -163,7 +193,7 @@ def test_kill_after_seen_write_then_resume_on_probe_path(
         with pytest.raises(_Killed):
             CrawlEngine(spark, cfg, store, checkpoint_dir=ck).crawl(seeds)
     eng = CrawlEngine(spark, cfg, store, checkpoint_dir=ck)
-    # round 1's seen files are on disk, but round 1 never committed
+    # round 1's pages files are on disk, but round 1 never committed
     assert eng.storage.latest_round() == 0
     resumed = eng.crawl(resume=True)
 
@@ -176,11 +206,13 @@ def test_kill_after_seen_write_then_resume_on_probe_path(
     assert _seen_set(resumed) == _seen_set(full) == want_seen
 
 
-@pytest.mark.parametrize("counter", ["seq_base", "vclock_next", "seen_total"])
+@pytest.mark.parametrize("counter", [
+    "seq_base", "vclock_next", "seen_total", "frontier", "n_pages"])
 def test_resume_without_a_round_counter_fails(spark, tmp_path, counter):
-    """Resume reads the seq high-water mark, the virtual clock and the
-    seen count only from the last committed round; a manifest that
-    lacks one fails loudly instead of being reconstructed."""
+    """Resume reads the seq high-water mark, the virtual clock, the
+    seen count, the frontier size and the page count only from the last
+    committed round; a manifest that lacks one fails loudly instead of
+    being reconstructed."""
     store = build_store_df(spark, 150, 5)
     seeds = build_seeds_df(spark, 150, 5, 2)
     cfg = CrawlConfig(max_depth=1, follow_links=True)
@@ -205,12 +237,12 @@ def _kill_round_at(m, kill_rnd, point):
     at ``point``: after one of its durable writes, or just before its
     commit. The round writes the next round's frontier."""
     next_frontier = os.path.join("frontier", f"round={kill_rnd + 1:06d}")
-    if point in ("pages", "seen"):
+    if point == "pages":
         write_table = SnapshotStore.write_table
 
         def kill(storage, df, table, rnd):
             path = write_table(storage, df, table, rnd)
-            if (table, rnd) == (point, kill_rnd):
+            if (table, rnd) == ("pages", kill_rnd):
                 raise _Killed
             return path
         m.setattr(SnapshotStore, "write_table", kill)
@@ -279,7 +311,7 @@ def _spans(spans):
 @pytest.mark.parametrize("deferral", [False, True],
                          ids=["plain", "budget_rounds"])
 @pytest.mark.parametrize("point", [
-    "pages", "seen", "before_bucketize", "after_bucketize",
+    "pages", "before_bucketize", "after_bucketize",
     "after_create_table", "before_commit",
 ])
 def test_kill_anywhere_in_a_round_then_resume(

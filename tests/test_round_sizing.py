@@ -80,13 +80,14 @@ def test_snapshots_sized_to_the_round(spark, tmp_path):
     # the seed frontier is sized by the seed count
     assert spec(0)["buckets"] == round_partitions(3, cores, 32) == min(32, cores)
     assert len(t.round_counters) == 2
+    assert sorted(os.listdir(tmp_path)) == [
+        "frontier", "manifest.json", "pages"]
     for c in t.round_counters:
         rnd = c["round"]
         parts = round_partitions(c["frontier"], cores, cfg.shuffle_partitions)
         assert len(_parquet_files(storage.table_path("pages", rnd))) <= parts
-        # the seen rows are a projection of the round's frontier scan
-        assert len(_parquet_files(storage.table_path("seen", rnd))) \
-            <= spec(rnd)["buckets"]
+        # the seen set is derived from pages and frontier, not stored
+        assert "seen" not in storage.round_meta(rnd)["tables"]
         if "frontier" in storage.round_meta(rnd)["tables"]:
             assert spec(rnd + 1)["buckets"] == parts
             assert len(_parquet_files(

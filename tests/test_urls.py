@@ -8,12 +8,14 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from crawler_service_spark.config import CrawlConfig
 from crawler_service_spark.functions.urls import (
     canonicalize_url,
     host_of,
     make_canon_udf,
     skip_extension_predicate,
 )
+from crawler_service_spark.oracle import _is_internal_link
 
 # (input, expected with sort_query=False)  — reference-exact semantics
 REFERENCE_CASES = [
@@ -137,3 +139,24 @@ def test_empty_skip_list_skips_nothing(spark):
     assert skipped(()) == set()
     assert skipped(None) == {"/a.pdf"}
     assert skipped((".pdf",)) == {"/a.pdf"}
+
+
+@pytest.mark.parametrize("extensions", [
+    None, (), (".tar.gz", "pdf", ".c++"),
+], ids=["default", "empty", "custom"])
+def test_skip_list_matches_the_oracle(spark, extensions):
+    """Each skip-list entry is a literal suffix of the lowercased path,
+    dot included: the predicate skips exactly the paths the oracle's
+    ``path.endswith(ext)`` rejects, also for entries that hold regex
+    metacharacters or lack a leading dot."""
+    paths = ["/a.tar.gz", "/a.tarxgz", "/a.gz", "/a.pdf", "/mypdf",
+             "/A.PDF", "/x.c++", "/x.cc", "/x.c", "/a.", "/a", "/a.js",
+             "/a.json"]
+    cfg = (CrawlConfig() if extensions is None
+           else CrawlConfig(skip_extensions=extensions))
+    df = spark.createDataFrame([(p,) for p in paths], ["path"])
+    got = {r["path"] for r in df.filter(skip_extension_predicate(
+        F.col("path"), extensions)).collect()}
+    want = {p for p in paths
+            if not _is_internal_link("http://h", "http://h" + p, cfg)}
+    assert got == want
