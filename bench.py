@@ -5,10 +5,12 @@ Default mode runs the headline query suite at ``$SPARK_GRAFT_SF_DIR``
 ONE JSON line ``{"metric", "value", "unit": "sec", "queries", "sf"}``.
 
 ``--job schedule`` runs only the north-rule job: a common-host-skewed
-synthetic link batch through the engine's link-to-frontier step
-(``engine.links_to_frontier``), its bucket-sorted frontier snapshot and
-the presalted politeness rank; it reports URLs scheduled/sec.
-``--job round`` adds the fetch join and the extraction stage.
+synthetic link batch through the engine's round functions
+(``engine.links_to_frontier``, ``write_frontier``/``read_frontier`` and
+``schedule_frontier``); it reports URLs scheduled/sec. ``--job round``
+adds ``engine.fetch_pages`` against a synthetic content store in the
+corpus store schema: the fetch join with its store-side exchange, the
+outcome columns and the extraction stage, all inside the timed region.
 ``scripts/bench_scaling.py`` runs these jobs at two parallelism levels
 in clean subprocesses and writes the scaling-efficiency report to
 ``BENCH/BASELINE.md``.
@@ -39,13 +41,14 @@ from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
 from crawler_service_spark.engine import (
-    CrawlEngine,
+    fetch_pages,
     links_to_frontier,
+    read_frontier,
     round_config,
+    schedule_frontier,
+    write_frontier,
 )
 from crawler_service_spark.functions.urls import canonicalize_frame
-from crawler_service_spark.operators.extract import extract_pages
-from crawler_service_spark.operators.politeness import presalt, schedule_round
 from crawler_service_spark.sources.storage import SnapshotStore
 from scripts.bench_scaling import cpu_probe
 
@@ -201,30 +204,18 @@ def schedule_links(spark: SparkSession, cfg: CrawlConfig, store: SnapshotStore,
                    n_seen: int) -> DataFrame:
     """The engine's link-to-frontier step over ``links`` (the output of
     ``synth_frontier(n_links)``, canonicalized here: the engine's links
-    arrive canonical from ``filter_internal``), then its bucket-sorted
-    frontier snapshot in ``store`` and the presalted politeness rank
-    over the read-back scan (``CrawlEngine.crawl``). Returns the
-    admitted rows."""
+    arrive canonical from ``filter_internal``), then its frontier
+    snapshot in ``store`` and the politeness rank over the read-back
+    scan, as a crawl round runs them. Returns the admitted rows."""
     n_parents = -(-n_links // LINKS_PER_PARENT)
     links = canonicalize_frame(links, "url", "canon_url",
                                cfg.sort_query_params)
     frontier = links_to_frontier(links, seen, cfg, seen_total=n_seen,
                                  seq_base=n_parents, seq_min=0)
-    layout = (cfg.shuffle_partitions, ["host", "_salt"],
-              CrawlEngine._FRONTIER_SORT)
-    store.write_table_bucketed(presalt(frontier, cfg.frontier_salt_width),
-                               "frontier", 0, *layout)
-    admitted, _ = schedule_round(
-        store.read_table_bucketed(spark, "frontier", 0, *layout),
-        None,
-        default_limit=cfg.default_rate_limit,
-        default_window_s=cfg.rate_limit_window_s,
-        round_epoch=cfg.round_epoch,
-        budget_rounds=cfg.budget_rounds,
-        priority_col="depth",
-        rank_strategy="presalted",
-    )
-    return admitted.drop("_salt")
+    write_frontier(store, frontier, 0, cfg)
+    admitted, _ = schedule_frontier(read_frontier(store, spark, 0, cfg),
+                                    None, cfg, cfg.round_epoch)
+    return admitted
 
 
 def timed_reps(spark, run, n: int, reps: int) -> dict:
@@ -247,65 +238,61 @@ def timed_reps(spark, run, n: int, reps: int) -> dict:
     return {"sec": best, "urls_per_sec": round(n / best, 1), "rep_runs": runs}
 
 
+def synth_store(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
+    """A content store holding every URL of ``synth_frontier(n)``, in the
+    corpus store schema the engine's fetch join reads (``doc_id``,
+    ``status_code``, ``fail_times``, ``response_time_ms``, ``html``).
+    Every fetch succeeds on the first try, and each page's title is
+    ``Doc <link id>``."""
+    nstr = _link_id().cast("string")
+    html = F.concat(
+        F.lit("<html><head><title>Doc "), nstr,
+        F.lit("</title><meta name=\"description\" content=\"synthetic page "), nstr,
+        F.lit("\"></head><body><h1>Heading "), nstr, F.lit("</h1><p>"),
+        F.repeat(F.concat(F.lit("token"), nstr, F.lit(" body text ")), 12),
+        F.lit("</p><img src=\"https://img.example.com/"), nstr,
+        F.lit(".png\" alt=\"pic\"><a href=\"https://h1.example.com/p/"), nstr,
+        F.lit("\">go</a><a href=\"https://h2.example.com/p/"), nstr,
+        F.lit("1\">go</a></body></html>"),
+    )
+    return canonicalize_frame(synth_frontier(spark, n, n_hosts), "url").select(
+        F.col("canon_url").alias("doc_id"),
+        F.lit(200).alias("status_code"),
+        F.lit(0).alias("fail_times"),
+        (F.lit(20) + _link_id() * 13 % 400).cast("int").alias("response_time_ms"),
+        html.alias("html"),
+    )
+
+
 def frontier_job(spark: SparkSession, n: int, n_hosts: int, cpus: int,
                  reps: int = 1, fetch: bool = False) -> dict:
     """The north-rule job: ``schedule_links`` over an ``n``-link batch
     against a seen set of a third of it. With ``fetch`` (the round job)
-    the admitted rows also go through the fetch join against a content
-    store and the mapInPandas extraction (X1–X8) — the compute-dense
-    half of a crawl round. The inputs are persisted before the timed
-    region; memory persist stands in for the cluster's distributed
-    storage (BENCH/BASELINE.md documents this proxy choice).
+    the admitted rows also go through ``engine.fetch_pages`` against
+    ``synth_store(n)``: the fetch join, store-side exchange included,
+    the outcome columns and the mapInPandas extraction (X1–X8) — the
+    compute-dense half of a crawl round. The inputs are persisted before
+    the timed region; memory persist stands in for the cluster's
+    distributed storage (BENCH/BASELINE.md documents this proxy choice).
 
-    The snapshot, the content store and the fetch join are sized as an
-    engine round is, by ``round_config`` over the ``n``-link batch
-    (capped at ``SHUFFLE_PARTS``); the warm-up uses the same sizes."""
+    The snapshot and the fetch join are sized as an engine round is, by
+    ``round_config`` over the ``n``-link batch (capped at
+    ``SHUFFLE_PARTS``); the warm-up uses the same sizes."""
     cfg = round_config(CrawlConfig(shuffle_partitions=SHUFFLE_PARTS), n,
                        spark.sparkContext.defaultParallelism)
     store = SnapshotStore(f"{SNAP_DIR}/frontier_job")
-
-    def mk_content(links: DataFrame) -> DataFrame:
-        nstr = _link_id().cast("string")
-        html = F.concat(
-            F.lit("<html><head><title>Doc "), nstr,
-            F.lit("</title><meta name=\"description\" content=\"synthetic page "), nstr,
-            F.lit("\"></head><body><h1>Heading "), nstr, F.lit("</h1><p>"),
-            F.repeat(F.concat(F.lit("token"), nstr, F.lit(" body text ")), 12),
-            F.lit("</p><img src=\"https://img.example.com/"), nstr,
-            F.lit(".png\" alt=\"pic\"><a href=\"https://h1.example.com/p/"), nstr,
-            F.lit("\">go</a><a href=\"https://h2.example.com/p/"), nstr,
-            F.lit("1\">go</a></body></html>"),
-        )
-        return (
-            canonicalize_frame(links, "url")
-            .select("canon_url", html.alias("html"))
-            .repartition(cfg.shuffle_partitions, "canon_url")   # bucketed-store analog
-        )
 
     seen = synth_seen(spark, n, n_hosts).persist()
     n_seen = seen.count()
     content = None
     if fetch:
-        content = mk_content(synth_frontier(spark, n, n_hosts)).persist()
+        content = synth_store(spark, n, n_hosts).persist()
         content.count()
 
     def run_pipeline(links: DataFrame, n_links: int) -> None:
         admitted = schedule_links(spark, cfg, store, links, n_links, seen,
                                   n_seen)
-        if not fetch:
-            force(admitted)
-            return
-        fetched = (
-            # pre-align the (html-free) admitted side with the store's
-            # hash partitioning, as the engine does: the join output
-            # inherits uniform partitions and the Arrow extraction fuses
-            # into the join stage
-            admitted.repartition(cfg.shuffle_partitions, F.col("canon_url"))
-            .join(content, "canon_url", "left")
-            .withColumn("is_error", F.col("html").isNull())
-        )
-        pages = extract_pages(fetched, cfg)
-        force(pages.select("canon_url", "title", "text_content", "links", "spans"))
+        force(fetch_pages(admitted, content, cfg, 0) if fetch else admitted)
 
     links = synth_frontier(spark, n, n_hosts).persist()
     links.count()

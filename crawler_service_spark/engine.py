@@ -1,16 +1,21 @@
 """The round-based BSP crawl engine (SURVEY §3.1 "Spark lifecycle").
 
 Each reference BFS depth level (/root/reference/app/services/crawler.py:
-103-162) becomes one Spark round:
+103-162) becomes one Spark round (this module's functions in brackets):
 
-    frontier_r --(RL1 politeness rank: virtual fetch times)-->
-      --(S1 fetch join vs content store)--> --(R1/R2 outcome columns)-->
-      --(X1-X8 mapInPandas extraction)--> pages_r  [snapshot]
+    frontier_r [read_frontier] --(RL1 politeness rank: virtual fetch
+      times) [schedule_frontier]--> --(S1 fetch join vs content store)-->
+      --(R1/R2 outcome columns)--> --(X1-X8 mapInPandas extraction)
+      [fetch_pages]--> pages_r  [snapshot]
     pages_r --(J1 posexplode links)--(F1 internal filter + P1
       canonicalize: one URL pass)--(robots)--(D2 first-occurrence)-->
       --(D1 exact anti-join vs url_seen = visited ∪ pending; past the
          large-seen line the batch keys probe the seen scan map-side)-->
-      --(O1 dense discovery_seq)--> frontier_{r+1}  [snapshot]
+      --(O1 dense discovery_seq) [links_to_frontier]-->
+      frontier_{r+1}  [snapshot, write_frontier]
+
+``CrawlEngine.crawl`` runs the loop around them (round sizing, counters,
+virtual clock, seen set, link expansion, resume); ``bench.py`` calls them too.
 
 Level-synchronized BFS is order-equivalent to the reference's serial FIFO
 deque because (a) a FIFO queue seeded at depth 0 pops strictly level by
@@ -154,6 +159,86 @@ def links_to_frontier(
     return cand.select(FRONTIER_COLS)
 
 
+# Frontier snapshots are bucket-sorted on (host, _salt): the rank's
+# repartition is paid once by the snapshot write, and the next round's
+# politeness rank plans with no payload exchange. The depth-major
+# in-bucket sort (CrawlEngine._FRONTIER_SORT) matches rank_presalted's
+# window (partitionBy host, depth, _salt / orderBy discovery_seq),
+# keeping the rank sort-free even when deferral mixes depths per host.
+def write_frontier(storage: SnapshotStore, df: DataFrame, rnd: int,
+                   cfg: CrawlConfig) -> None:
+    """Frontier snapshot ``rnd`` of ``FRONTIER_COLS`` rows, presalted.
+    Bucket count: ``cfg.shuffle_partitions`` of the round that writes
+    the snapshot (recorded in its ``_bucket_spec.json``)."""
+    storage.write_table_bucketed(
+        presalt(df, cfg.frontier_salt_width), "frontier", rnd,
+        cfg.shuffle_partitions, ["host", "_salt"], CrawlEngine._FRONTIER_SORT,
+    )
+
+
+def read_frontier(storage: SnapshotStore, spark: SparkSession, rnd: int,
+                  cfg: CrawlConfig) -> DataFrame:
+    """Bucketed scan of frontier snapshot ``rnd``."""
+    # the snapshot's _bucket_spec.json overrides the count passed here
+    return storage.read_table_bucketed(
+        spark, "frontier", rnd, cfg.shuffle_partitions, ["host", "_salt"],
+        CrawlEngine._FRONTIER_SORT,
+    )
+
+
+def schedule_frontier(
+    frontier: DataFrame, policy: DataFrame | None, cfg: CrawlConfig,
+    epoch: float,
+) -> tuple[DataFrame, DataFrame]:
+    """RL1 over a ``read_frontier`` scan from virtual time ``epoch``:
+    ``(admitted, deferred)``, the admitted rows without ``_salt``."""
+    # the reference's `rate_limiting_enabled=False` (can_make_request
+    # always True): unbounded limits — no politeness windows, no
+    # deferral caps — while robots rules (disallow prefixes, crawl
+    # delay) still apply. Per-host limits are nulled so the coalesce
+    # falls through to the unbounded default.
+    default_limit = cfg.default_rate_limit
+    if not cfg.rate_limiting_enabled:
+        default_limit = 1 << 31
+        if policy is not None:
+            policy = policy.withColumn("rate_limit", F.lit(None).cast("int"))
+    # over a bucket-sorted frontier snapshot the presalted rank plans
+    # with no payload exchange/sort/driver barrier
+    admitted, deferred = schedule_round(
+        frontier, policy, default_limit=default_limit,
+        default_window_s=cfg.rate_limit_window_s, round_epoch=epoch,
+        budget_rounds=cfg.budget_rounds, priority_col="depth",
+        rank_strategy="presalted",
+    )
+    return admitted.drop("_salt"), deferred
+
+
+def fetch_pages(admitted: DataFrame, store: DataFrame, cfg: CrawlConfig,
+                rnd: int) -> DataFrame:
+    """Round ``rnd``'s pages: S1 fetch join of the ``admitted`` rows
+    against the content ``store`` (``doc_id``, ``status_code``,
+    ``fail_times``, ``response_time_ms``, ``html``), R1/R2 outcome
+    columns and X1-X8 extraction, on ``cfg.shuffle_partitions`` tasks."""
+    # both join sides are hash-partitioned on canon_url with one count,
+    # so the join adds no exchange and the Arrow extraction fuses into
+    # the join stage; a post-join repartition would push every
+    # html-bearing row through a second exchange (measured 9-13% of the
+    # fetch+extract phase; A/B script in commit 39ef1e8,
+    # scripts/exp_fetch_join.py). The store side is re-shuffled every
+    # round (the cluster analog is a bucketed store table). The explicit
+    # count also pins the stage against AQE byte-based coalescing:
+    # extraction cost is per ROW, and byte-coalescing once shrank this
+    # stage to ~5 tasks; round_partitions never sizes it below the cores.
+    parts = cfg.shuffle_partitions
+    store = store.select(F.col("doc_id").alias("canon_url"), "status_code",
+                         "fail_times", "response_time_ms", "html")
+    fetched = admitted.repartition(parts, F.col("canon_url")).join(
+        store.repartition(parts, F.col("canon_url")), "canon_url", "left")
+    fetched = resolve_fetch_outcome(fetched, cfg)
+    pages = extract_pages(fetched, cfg).withColumn("round", F.lit(rnd))
+    return pages.drop("html", "status_code", "fail_times")
+
+
 @dataclass
 class CrawlTables:
     pages: DataFrame          # all rounds, unordered; order key = (task_id, depth, discovery_seq)
@@ -180,7 +265,7 @@ class CrawlEngine:
         # re-sorts data the snapshot layout already sorted.
         # SESSION-LEVEL side effect, deliberately not restored: the flag
         # must be live at PLANNING time of every downstream query that
-        # scans a frontier snapshot (not just inside _read_frontier), and
+        # scans a frontier snapshot (not just inside read_frontier), and
         # it is harmless-but-nonfree for unrelated bucketed scans sharing
         # the session (planning-time file listing). Engines in this repo
         # run in their own sessions; callers embedding CrawlEngine in a
@@ -190,16 +275,7 @@ class CrawlEngine:
             "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         self.storage = SnapshotStore(checkpoint_dir)
         self.max_rounds = max_rounds
-        # content store projected to fetch-join shape, keyed by canon
-        # URL; each round hash-partitions it on the join key with the
-        # round's partition count (see the fetch join)
-        self.store = store.select(
-            F.col("doc_id").alias("canon_url"),
-            "status_code",
-            "fail_times",
-            "response_time_ms",
-            "html",
-        )
+        self.store = store
 
     # ------------------------------------------------------------------ seen
     @staticmethod
@@ -244,32 +320,8 @@ class CrawlEngine:
         ).drop("seed_seq")
         return f.select(FRONTIER_COLS), cfg
 
-    # ------------------------------------------------------ frontier layout
-    # Frontier snapshots are bucket-sorted on (host, _salt): the rank's
-    # repartition is paid once by the snapshot write, and the next
-    # round's politeness rank plans with no payload exchange. The
-    # depth-major in-bucket sort matches rank_presalted's window
-    # (partitionBy host, depth, _salt / orderBy discovery_seq), keeping
-    # the rank sort-free even when deferral mixes depths per host.
+    # the frontier snapshot's in-bucket sort (see write_frontier)
     _FRONTIER_SORT = ["host", "depth", "_salt", "discovery_seq"]
-
-    def _write_frontier(self, df: DataFrame, rnd: int,
-                        cfg: CrawlConfig) -> None:
-        """Bucket count: ``cfg.shuffle_partitions`` of the round that
-        writes the snapshot (recorded in its ``_bucket_spec.json``)."""
-        self.storage.write_table_bucketed(
-            presalt(df, cfg.frontier_salt_width), "frontier", rnd,
-            cfg.shuffle_partitions, ["host", "_salt"],
-            self._FRONTIER_SORT,
-        )
-
-    def _read_frontier(self, rnd: int) -> DataFrame:
-        # the snapshot's _bucket_spec.json overrides the count passed here
-        return self.storage.read_table_bucketed(
-            self.spark, "frontier", rnd,
-            self.cfg.shuffle_partitions, ["host", "_salt"],
-            self._FRONTIER_SORT,
-        )
 
     # ----------------------------------------------------------------- crawl
     def crawl(self, seeds: DataFrame | None = None, resume: bool = False) -> CrawlTables:
@@ -300,7 +352,7 @@ class CrawlEngine:
             visited = seen_total - last["frontier"] + last["n_pages"]
             vclock = float(last["vclock_next"])
             rnd = latest + 1
-            frontier = self._read_frontier(rnd)
+            frontier = read_frontier(self.storage, self.spark, rnd, cfg)
         else:
             if seeds is None:
                 raise ValueError("seeds required when not resuming")
@@ -317,26 +369,10 @@ class CrawlEngine:
             prev_base, seen_total, visited = 0, 0, 0
             vclock = float(cfg.round_epoch)
             seed_frontier, seed_cfg = self._initial_frontier(seeds)
-            self._write_frontier(seed_frontier, 0, seed_cfg)
-            frontier = self._read_frontier(0)
+            write_frontier(self.storage, seed_frontier, 0, seed_cfg)
+            frontier = read_frontier(self.storage, self.spark, 0, cfg)
 
         deferral = cfg.budget_rounds is not None
-        # R-disabled mirror of the reference's `rate_limiting_enabled`
-        # flag (can_make_request always True): limits become unbounded —
-        # no politeness windows, no deferral caps — while robots rules
-        # (disallow prefixes, crawl delay) still apply, they are not the
-        # rate limiter's. Custom per-host limits are nulled so the
-        # coalesce falls through to the unbounded default.
-        if cfg.rate_limiting_enabled:
-            eff_default_limit = cfg.default_rate_limit
-            eff_policy = self.policy
-        else:
-            eff_default_limit = 1 << 31
-            eff_policy = (
-                self.policy.withColumn(
-                    "rate_limit", F.lit(None).cast("int"))
-                if self.policy is not None else None
-            )
         # cross-round virtual-clock advance gap: the next round's epoch
         # must clear every host's last politeness window AND crawl-delay
         # spacing, so the gap is the largest window/delay any host can
@@ -391,47 +427,13 @@ class CrawlEngine:
                 + rnd * cfg.budget_rounds * cfg.rate_limit_window_s
                 if deferral else vclock
             )
-            admitted, deferred = schedule_round(
-                frontier,
-                eff_policy,
-                default_limit=eff_default_limit,
-                default_window_s=cfg.rate_limit_window_s,
-                round_epoch=epoch,
-                budget_rounds=cfg.budget_rounds,
-                priority_col="depth",
-                # over a bucket-sorted frontier snapshot the rank plans
-                # with no payload exchange/sort/driver barrier
-                rank_strategy="presalted",
-            )
-            admitted = admitted.drop("_salt")
-
-            # both join sides are hash-partitioned on canon_url with the
-            # round's partition count (one count on both sides, so the
-            # join adds no exchange): the join output inherits that many
-            # uniform partitions (canon_url hashes uniformly) and the
-            # Arrow extraction fuses into the join stage — a post-join
-            # repartition would push every html-bearing row through a
-            # second full exchange (measured 9-13% of the fetch+extract
-            # phase; A/B script in commit 39ef1e8,
-            # scripts/exp_fetch_join.py). The store side is re-shuffled
-            # every round (the cluster analog is a bucketed store table).
-            # The explicit count also pins the stage against AQE
-            # byte-based coalescing: extraction cost is per ROW (Python
-            # parse per page) — byte-coalescing once shrank this stage to
-            # ~5 tasks and capped the whole round at ~5 cores — and
-            # round_partitions never sizes it below the core count.
-            parts = rcfg.shuffle_partitions
-            fetched = admitted.repartition(parts, F.col("canon_url")).join(
-                self.store.repartition(parts, F.col("canon_url")),
-                "canon_url", "left")
-            fetched = resolve_fetch_outcome(fetched, cfg)
-            pages = extract_pages(fetched, cfg).withColumn("round", F.lit(rnd))
-            pages = pages.drop("html", "status_code", "fail_times")
+            admitted, deferred = schedule_frontier(
+                frontier, self.policy, cfg, epoch)
 
             # observed metrics ride the snapshot write — no extra scan
             # (the Spark Observation API evaluates during the action)
             obs = Observation(f"round_{rnd}")
-            pages = pages.observe(
+            pages = fetch_pages(admitted, self.store, rcfg, rnd).observe(
                 obs,
                 F.count(F.lit(1)).alias("n_pages"),
                 F.sum(F.col("is_error").cast("long")).alias("n_errors"),
@@ -483,7 +485,8 @@ class CrawlEngine:
                 frontier_parts.append(deferred.select(FRONTIER_COLS))
             wrote_frontier = bool(frontier_parts)
             if wrote_frontier:
-                self._write_frontier(
+                write_frontier(
+                    self.storage,
                     reduce(DataFrame.unionByName, frontier_parts), rnd + 1,
                     rcfg)
 
@@ -492,7 +495,7 @@ class CrawlEngine:
                 "depth": depth_of_round,
                 # the round's derived partition count (informational:
                 # resume reads bucket counts from the snapshots' specs)
-                "parts": parts,
+                "parts": rcfg.shuffle_partitions,
                 # resume reads seq_base, vclock_next, seen_total,
                 # frontier and n_pages back: the seq high-water mark and
                 # the virtual clock cannot be re-derived from the
@@ -518,7 +521,7 @@ class CrawlEngine:
             prev_base = seq_base
             if not wrote_frontier:
                 break
-            frontier = self._read_frontier(rnd + 1)
+            frontier = read_frontier(self.storage, self.spark, rnd + 1, cfg)
             rnd += 1
 
         latest = self.storage.latest_round()

@@ -13,6 +13,7 @@ Layout::
 
     <root>/manifest.json                 # {"rounds": [...], "latest": k}
     <root>/<table>/round=<k>/*.parquet   # table: pages | frontier
+    <root>/<table>/round=<k>/_schema.json  # its schema, read back with it
 
 A round's manifest entry is written only after every table write for that
 round succeeds, so a killed job resumes from the last complete round with
@@ -30,6 +31,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class SnapshotStore:
@@ -96,13 +98,28 @@ class SnapshotStore:
         literal (LOCATION '...') — apostrophes are legal in paths."""
         return s.replace("\\", "\\\\").replace("'", "\\'")
 
+    # Every snapshot records its schema in a `_schema.json` sidecar
+    # (Spark's file listing skips `_`-prefixed files) and is read back
+    # with it: a parquet read without a schema runs a one-task job to
+    # infer one from the footers.
+    @staticmethod
+    def _write_schema(df: DataFrame, path: str) -> None:
+        (Path(path) / "_schema.json").write_text(df.schema.json())
+
+    @staticmethod
+    def _read(spark: SparkSession, *paths: str) -> DataFrame:
+        schema = (Path(paths[0]) / "_schema.json").read_text()
+        return spark.read.schema(
+            StructType.fromJson(json.loads(schema))).parquet(*paths)
+
     def write_table(self, df: DataFrame, table: str, rnd: int) -> str:
         path = self._table_path(table, rnd)
         df.write.mode("overwrite").parquet(path)
+        self._write_schema(df, path)
         return path
 
     def read_table(self, spark: SparkSession, table: str, rnd: int) -> DataFrame:
-        return spark.read.parquet(self._table_path(table, rnd))
+        return self._read(spark, self._table_path(table, rnd))
 
     # -- bucketed snapshots (frontier layout) --------------------------------
     def _bucket_table_prefix(self) -> str:
@@ -190,6 +207,7 @@ class SnapshotStore:
          .sortWithinPartitions(*sort_cols)
          .write.mode("overwrite").parquet(path))
         self._bucketize_files(path, buckets)
+        self._write_schema(df, path)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         spark.sql(
             f"CREATE TABLE {name} ({df.schema.toDDL()}) USING parquet "
@@ -215,9 +233,9 @@ class SnapshotStore:
         """Bucketed-scan read of a snapshot written by
         ``write_table_bucketed``. On resume in a fresh session the
         catalog entry is gone while the files remain — re-register the
-        external table over them (schema from the parquet footers) so
-        the layout metadata survives restarts, like an Iceberg table's
-        spec does.
+        external table over them (schema from the ``_schema.json``
+        sidecar) so the layout metadata survives restarts, like an
+        Iceberg table's spec does.
 
         The recorded ``_bucket_spec.json`` (written with the data) is
         authoritative over the caller's arguments: a resume under a
@@ -232,8 +250,8 @@ class SnapshotStore:
             sort_cols = list(spec["sort_cols"])
         name = self._bucket_table_name(table, rnd)
         if not spark.catalog.tableExists(name):
-            schema = spark.read.parquet(
-                self._table_path(table, rnd)).schema.toDDL()
+            schema = self._read(
+                spark, self._table_path(table, rnd)).schema.toDDL()
             spark.sql(
                 f"CREATE TABLE {name} ({schema}) USING parquet "
                 f"CLUSTERED BY ({', '.join(cols)}) "
@@ -271,4 +289,4 @@ class SnapshotStore:
         ]
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return self._read(spark, *paths)

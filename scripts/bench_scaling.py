@@ -248,7 +248,7 @@ def save_history(history: list[dict]) -> None:
         json.dump(history, f, indent=1)
 
 
-WORKLOAD_REV = 12    # bump when the measured work graph changes (r3:
+WORKLOAD_REV = 13    # bump when the measured work graph changes (r3:
                      # window-strategy frontier dedup; r4: bucket-sorted
                      # snapshot + presalted rank, pre-join-aligned fetch
                      # join, level-independent input partitioning; r5:
@@ -270,7 +270,10 @@ WORKLOAD_REV = 12    # bump when the measured work graph changes (r3:
                      # salt width; r11: assign_dense_seq runs its input
                      # once, and the jobs size partitions per round with
                      # round_partitions; r12: past large_seen_threshold
-                     # the batch keys probe the seen scan, no bloom)
+                     # the batch keys probe the seen scan, no bloom;
+                     # r13: the round job runs the engine's fetch join,
+                     # engine.fetch_pages — the store exchange and the
+                     # outcome columns are inside the timed region)
                      # — stats pool only same-rev runs; cross-rev
                      # medians would mix different engines/timed regions
 PROBE_SLACK = 1.15   # keep runs within 15% of the fastest observed host speed
@@ -297,11 +300,6 @@ def runs_for(history: list[dict], job: str, cpus: int, n_urls: int) -> list[dict
              if r["probe_sec"] <= best_probe * PROBE_SLACK
              and r.get("steal_pct", 0.0) <= STEAL_MAX]
     return clean or probed
-
-
-def best_for(history: list[dict], job: str, cpus: int, n_urls: int) -> dict | None:
-    runs = runs_for(history, job, cpus, n_urls)
-    return max(runs, key=lambda r: r["urls_per_sec"]) if runs else None
 
 
 def stats_for(history: list[dict], job: str, cpus: int, n_urls: int) -> dict | None:

@@ -133,34 +133,33 @@ def main() -> None:
     )
 
     # 4b. presalted rank over a bucket-sorted frontier snapshot — the
-    # engine's layout path (CrawlEngine._write_frontier)
+    # engine's layout path (engine.write_frontier / read_frontier)
     import tempfile
 
-    from crawler_service_spark.operators.politeness import presalt
+    from crawler_service_spark.engine import (
+        read_frontier, schedule_frontier, write_frontier)
+    from crawler_service_spark.sources.storage import SnapshotStore
 
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    bs_dir = tempfile.mkdtemp(prefix="plans_bsnap_")
-    spark.sql("DROP TABLE IF EXISTS plans_bucket_snap")
-    (presalt(frontier, 2000).repartition(8, F.col("host"), F.col("_salt"))
-     .write.mode("overwrite").format("parquet")
-     .bucketBy(8, "host", "_salt")
-     .sortBy("host", "depth", "_salt", "discovery_seq")
-     .option("path", bs_dir).saveAsTable("plans_bucket_snap"))
-    sched_ps, _ = schedule_round(
-        spark.table("plans_bucket_snap"), None, rank_strategy="presalted")
+    snaps = SnapshotStore(tempfile.mkdtemp(prefix="plans_bsnap_"))
+    snap_cfg = CrawlConfig(shuffle_partitions=8, frontier_salt_width=2000)
+    write_frontier(snaps, frontier, 0, snap_cfg)
+    sched_ps, _ = schedule_frontier(read_frontier(snaps, spark, 0, snap_cfg),
+                                    None, snap_cfg, snap_cfg.round_epoch)
     add(
         "RL1 politeness rank over a bucket-sorted frontier snapshot "
         "(engine layout path)",
-        "The snapshot is written repartitioned on (host, _salt) into "
-        "bucketBy+sortBy parquet — exactly one file per bucket — so the "
-        "scan itself reports the rank's required clustering AND ordering: "
+        "The engine's `write_frontier` writes the snapshot repartitioned "
+        "on (host, _salt) and sorted within each partition — exactly one "
+        "file per bucket, registered as a bucketed table — so the scan "
+        "itself reports the rank's required clustering AND ordering: "
         "the payload side has NO Exchange and NO Sort; the only exchange "
         "feeds the tiny per-bucket offsets branch behind the "
         "BroadcastHashJoin. This is the per-round shape of the 10^10 "
         "frontier (Iceberg table bucket-sorted on host-hash/seq-range).",
         sched_ps,
     )
-    spark.sql("DROP TABLE IF EXISTS plans_bucket_snap")
+    snaps.drop_bucketed(spark, "frontier", 0)
 
     # 5. sharded bloom probe — the seen-side D1 prefilter
     from crawler_service_spark.operators.dedup import ShardedBloomFilter

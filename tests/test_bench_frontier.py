@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 import bench
 from crawler_service_spark.config import CrawlConfig
-from crawler_service_spark.engine import FRONTIER_COLS
+from crawler_service_spark.engine import FRONTIER_COLS, fetch_pages
 from crawler_service_spark.functions.urls import canonicalize_frame, host_frame
 from crawler_service_spark.operators.dedup import anti_join_seen, first_occurrence
 from crawler_service_spark.operators.politeness import schedule_round
@@ -63,4 +63,33 @@ def test_frontier_job_matches_plain_path(spark, tmp_path, past_line):
     n_parents = -(-N_LINKS // bench.LINKS_PER_PARENT)
     assert got == _reference_digest(cfg, links, seen, n_parents)
     links.unpersist()
+    seen.unpersist()
+
+
+def test_round_job_fetches_every_admitted_row(spark, tmp_path):
+    """bench.py's round job runs the engine's fetch join over the
+    synthetic store: every admitted row becomes one successful page
+    whose title names its link, so the store has the engine's store
+    schema and holds every admitted URL."""
+    n_links = 2_000
+    cfg = CrawlConfig(shuffle_partitions=4)
+    links = bench.synth_frontier(spark, n_links, N_HOSTS)
+    seen = bench.synth_seen(spark, n_links, N_HOSTS).persist()
+    admitted = bench.schedule_links(
+        spark, cfg, SnapshotStore(str(tmp_path)), links, n_links, seen,
+        seen.count()).persist()
+    pages = fetch_pages(admitted, bench.synth_store(spark, n_links, N_HOSTS),
+                        cfg, 0)
+    link_id = F.regexp_extract("url", r"/p/(\d+)", 1)
+    row = pages.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_distinct("canon_url").alias("urls"),
+        F.sum(F.col("is_error").cast("int")).alias("errors"),
+        F.sum((F.col("effective_status") != 200).cast("int")).alias("not_ok"),
+        F.sum((F.col("title") != F.concat(F.lit("Doc "), link_id))
+              .cast("int")).alias("bad_title"),
+    ).collect()[0]
+    assert row["n"] == row["urls"] == admitted.count() > 0
+    assert (row["errors"], row["not_ok"], row["bad_title"]) == (0, 0, 0)
+    admitted.unpersist()
     seen.unpersist()

@@ -1,10 +1,12 @@
-"""Bucket-sorted frontier snapshots (CrawlEngine._write_frontier).
+"""Bucket-sorted frontier snapshots (engine.write_frontier).
 
 The layout is a pure physical-plan property: the rank over a layout
 snapshot must plan with no payload exchange and no sort, the layout's
 ``_salt`` column never reaches the pages, consumed snapshots release
 their catalog entries, and a resume in a session whose catalog lost the
 table must re-register it from the files (the Iceberg-spec analog).
+Every snapshot reads back with the schema recorded at its write, with no
+schema-inference job.
 """
 from __future__ import annotations
 
@@ -13,7 +15,8 @@ import os
 import pytest
 
 from crawler_service_spark.config import CrawlConfig
-from crawler_service_spark.engine import CrawlEngine, fetch_order
+from crawler_service_spark.engine import (
+    CrawlEngine, fetch_order, read_frontier)
 from crawler_service_spark.sources.corpus import build_seeds_df, build_store_df
 from crawler_service_spark.sources.storage import SnapshotStore
 
@@ -51,7 +54,7 @@ def test_layout_frontier_scan_rank_plan(spark, tmp_path):
     eng = CrawlEngine(spark, cfg, build_store_df(spark, 60, 3),
                       checkpoint_dir=str(tmp_path / "p"))
     eng.crawl(build_seeds_df(spark, 60, 3, 2))
-    snap = eng._read_frontier(0)
+    snap = read_frontier(eng.storage, spark, 0, eng.cfg)
     from crawler_service_spark.operators.politeness import rank_presalted
     ranked = rank_presalted(snap, "depth")
     plan = ranked._jdf.queryExecution().executedPlan().toString()
@@ -138,3 +141,31 @@ def test_layout_checkpoint_dir_with_apostrophe(spark, tmp_path):
     t = _engine(spark, tmp_path, "bob's crawl").crawl(
         build_seeds_df(spark, 120, 5, 3))
     assert fetch_order(t.pages).count() > 0
+
+
+def test_snapshot_reads_launch_no_job(spark, tmp_path):
+    """read_table and pages_glob read a committed crawl's snapshots with
+    the schema recorded at write: they plan without a Spark job, and the
+    schema equals the one Spark infers from the files."""
+    eng = _engine(spark, tmp_path, "ck")
+    eng.crawl(build_seeds_df(spark, 120, 5, 3))
+    storage = eng.storage
+    latest = storage.latest_round()
+    assert latest >= 1
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-reads", "snapshot reads")
+    try:
+        reads = [
+            (storage.read_table(spark, "pages", 0),
+             [storage.table_path("pages", 0)]),
+            (storage.read_table(spark, "frontier", 1),
+             [storage.table_path("frontier", 1)]),
+            (storage.pages_glob(spark, latest),
+             [storage.table_path("pages", r) for r in range(latest + 1)]),
+        ]
+        jobs = sc.statusTracker().getJobIdsForGroup("snapshot-reads")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    for df, paths in reads:
+        assert df.schema == spark.read.parquet(*paths).schema
