@@ -213,7 +213,7 @@ def schedule_links(spark: SparkSession, cfg: CrawlConfig, store: SnapshotStore,
     frontier = links_to_frontier(links, seen, cfg, seen_total=n_seen,
                                  seq_base=n_parents, seq_min=0)
     write_frontier(store, frontier, 0, cfg)
-    admitted, _ = schedule_frontier(read_frontier(store, spark, 0, cfg),
+    admitted, _ = schedule_frontier(read_frontier(store, spark, 0),
                                     None, cfg, cfg.round_epoch)
     return admitted
 

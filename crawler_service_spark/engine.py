@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
 from crawler_service_spark.functions.classify import resolve_fetch_outcome
-from crawler_service_spark.functions.urls import host_frame, url_pass
+from crawler_service_spark.functions.urls import host_frame, takes_udf, url_pass
 from crawler_service_spark.operators.dedup import (
     anti_join_seen,
     first_occurrence,
@@ -58,6 +58,7 @@ from crawler_service_spark.operators.links import (
     expand_links,
     filter_internal,
     filter_robots,
+    ineligible_links,
 )
 from crawler_service_spark.operators.politeness import presalt, schedule_round
 from crawler_service_spark.operators.sequence import assign_dense_seq
@@ -154,8 +155,10 @@ def links_to_frontier(
         "discovery_seq", F.col("discovery_seq") + F.lit(seq_base)
     )
     # recompute host only for rows that survived dedup + seen
-    # filtering (deferred frontier rows keep theirs)
-    cand = host_frame(cand, "url")
+    # filtering (deferred frontier rows keep theirs), natively from
+    # canon_url: the filter kept only links whose netloc is their seed's
+    cand = host_frame(cand, "url", canon_col="canon_url",
+                      netloc_col="seed_netloc")
     return cand.select(FRONTIER_COLS)
 
 
@@ -166,24 +169,36 @@ def links_to_frontier(
 # window (partitionBy host, depth, _salt / orderBy discovery_seq),
 # keeping the rank sort-free even when deferral mixes depths per host.
 def write_frontier(storage: SnapshotStore, df: DataFrame, rnd: int,
-                   cfg: CrawlConfig) -> None:
+                   cfg: CrawlConfig) -> dict:
     """Frontier snapshot ``rnd`` of ``FRONTIER_COLS`` rows, presalted.
     Bucket count: ``cfg.shuffle_partitions`` of the round that writes
-    the snapshot (recorded in its ``_bucket_spec.json``)."""
+    the snapshot (recorded in its ``_bucket_spec.json``). Returns its
+    ``rows`` and ``discovery_seq`` range (``seq_min``, ``seq_max``;
+    ``None`` when empty), observed on the write."""
+    obs = Observation(f"frontier_{rnd}")
     storage.write_table_bucketed(
-        presalt(df, cfg.frontier_salt_width), "frontier", rnd,
+        presalt(df, cfg.frontier_salt_width).observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.min("discovery_seq").alias("seq_min"),
+            F.max("discovery_seq").alias("seq_max"),
+        ), "frontier", rnd,
         cfg.shuffle_partitions, ["host", "_salt"], CrawlEngine._FRONTIER_SORT,
     )
+    # when the optimizer proves the frame empty (say, an empty link
+    # batch and no deferred rows), it prunes the metrics node and Spark
+    # completes the observation with a schema-less empty row, which
+    # PySpark's `get` cannot convert
+    if obs._jo.getRow().length() == 0:
+        return {"rows": 0, "seq_min": None, "seq_max": None}
+    return dict(obs.get)
 
 
-def read_frontier(storage: SnapshotStore, spark: SparkSession, rnd: int,
-                  cfg: CrawlConfig) -> DataFrame:
-    """Bucketed scan of frontier snapshot ``rnd``."""
-    # the snapshot's _bucket_spec.json overrides the count passed here
-    return storage.read_table_bucketed(
-        spark, "frontier", rnd, cfg.shuffle_partitions, ["host", "_salt"],
-        CrawlEngine._FRONTIER_SORT,
-    )
+def read_frontier(storage: SnapshotStore, spark: SparkSession,
+                  rnd: int) -> DataFrame:
+    """Bucketed scan of frontier snapshot ``rnd``, with the layout its
+    ``_bucket_spec.json`` recorded."""
+    return storage.read_table_bucketed(spark, "frontier", rnd)
 
 
 def schedule_frontier(
@@ -309,9 +324,16 @@ class CrawlEngine:
     ) -> tuple[DataFrame, CrawlConfig]:
         """The seed frontier, and the config sized by the seed count
         that it is numbered and written with."""
-        n_seeds = seeds.count()
+        # one aggregate counts the seeds and those the URL pass sends to
+        # its UDF: with none, it plans no Python stage
+        row = seeds.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(takes_udf(F.col("url")).cast("long")).alias("slow"),
+        ).collect()[0]
+        n_seeds = int(row["n"])
         cfg = self._round_config(n_seeds)
-        f = url_pass(seeds, "url", cfg.sort_query_params).select(
+        f = url_pass(seeds, "url", cfg.sort_query_params,
+                     int(row["slow"] or 0)).select(
             "task_id", F.col("netloc").alias("seed_netloc"), "url",
             "canon_url", "host", F.lit(0).alias("depth"), "seed_seq",
         )
@@ -341,7 +363,8 @@ class CrawlEngine:
             # from the snapshots
             last = meta["counters"]
             missing = {"seq_base", "vclock_next", "seen_total", "frontier",
-                       "n_pages"} - set(last)
+                       "n_pages", "next_frontier", "next_seq_min",
+                       "next_seq_max"} - set(last)
             if missing:
                 raise ValueError(
                     f"round {latest} lacks the counters {sorted(missing)}: "
@@ -352,7 +375,10 @@ class CrawlEngine:
             visited = seen_total - last["frontier"] + last["n_pages"]
             vclock = float(last["vclock_next"])
             rnd = latest + 1
-            frontier = read_frontier(self.storage, self.spark, rnd, cfg)
+            front = {"rows": last["next_frontier"],
+                     "seq_min": last["next_seq_min"],
+                     "seq_max": last["next_seq_max"]}
+            frontier = read_frontier(self.storage, self.spark, rnd)
         else:
             if seeds is None:
                 raise ValueError("seeds required when not resuming")
@@ -369,8 +395,8 @@ class CrawlEngine:
             prev_base, seen_total, visited = 0, 0, 0
             vclock = float(cfg.round_epoch)
             seed_frontier, seed_cfg = self._initial_frontier(seeds)
-            write_frontier(self.storage, seed_frontier, 0, seed_cfg)
-            frontier = read_frontier(self.storage, self.spark, 0, cfg)
+            front = write_frontier(self.storage, seed_frontier, 0, seed_cfg)
+            frontier = read_frontier(self.storage, self.spark, 0)
 
         deferral = cfg.budget_rounds is not None
         # cross-round virtual-clock advance gap: the next round's epoch
@@ -385,12 +411,9 @@ class CrawlEngine:
             ).collect()[0]
             vgap = max(vgap, float(row["w"] or 0), float(row["d"] or 0))
         while rnd < self.max_rounds:
-            agg = frontier.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max("discovery_seq").alias("mx"),
-                F.min("discovery_seq").alias("mn"),
-            ).collect()[0]
-            n_frontier = int(agg["n"])
+            # the frontier's size and discovery_seq range, observed on
+            # its write (persisted as next_* for resume)
+            n_frontier = int(front["rows"])
             if n_frontier == 0:
                 break
             # next fresh discovery_seq — MONOTONE across rounds: when a
@@ -400,8 +423,8 @@ class CrawlEngine:
             # reissue seqs carried by pages fetched earlier (duplicate
             # (depth, seq) order keys). prev_base is the running
             # high-water mark, persisted per round for resume.
-            seq_base = max(int(agg["mx"]) + 1, prev_base)
-            seq_min = int(agg["mn"])
+            seq_base = max(int(front["seq_max"]) + 1, prev_base)
+            seq_min = int(front["seq_min"])
             depth_of_round = rnd  # == frontier depth in non-deferral mode
             # this round's partitioning, sized from its frontier: the
             # fetch join and extraction stage (so the pages files), the
@@ -442,6 +465,9 @@ class CrawlEngine:
                 # feeds the cross-round virtual clock — rides the write,
                 # no extra scan
                 F.max("virtual_fetch_time").alias("max_vft"),
+                # link entries the URL pass would send to its UDF: at 0
+                # the link path plans no Python stage
+                ineligible_links().alias("ineligible_links"),
             )
             self.storage.write_table(pages, "pages", rnd)
             obs_vals = dict(obs.get)
@@ -465,16 +491,17 @@ class CrawlEngine:
                 if deferral and cfg.max_depth > 0:
                     success = success.filter(F.col("depth") < cfg.max_depth)
                 cand = expand_links(success)
-                cand = filter_internal(cand, cfg)
+                cand = filter_internal(
+                    cand, cfg, observed["ineligible_links"])
                 if cfg.respect_robots:
                     cand = filter_robots(cand, self.policy)
                 # host and path are pure functions of the URL: drop them
                 # before the dedup + anti-join + dense-seq exchanges
-                # (links_to_frontier recomputes host with `host_frame`,
-                # byte-equal to the filter's value) so the round's
-                # biggest shuffles move ~40B/row less — the schedule-core
-                # A/B measured post-dedup host extraction worth ~9% at
-                # 16 cores
+                # (links_to_frontier recomputes host from canon_url with
+                # `host_frame`, byte-equal to the filter's value) so the
+                # round's biggest shuffles move ~40B/row less — the
+                # schedule-core A/B measured post-dedup host extraction
+                # worth ~9% at 16 cores
                 # (A/B script in commit ec1bc1b, scripts/exp_host_late.py)
                 cand = cand.drop("host", "path")
                 frontier_parts.append(links_to_frontier(
@@ -485,7 +512,7 @@ class CrawlEngine:
                 frontier_parts.append(deferred.select(FRONTIER_COLS))
             wrote_frontier = bool(frontier_parts)
             if wrote_frontier:
-                write_frontier(
+                front = write_frontier(
                     self.storage,
                     reduce(DataFrame.unionByName, frontier_parts), rnd + 1,
                     rcfg)
@@ -497,9 +524,10 @@ class CrawlEngine:
                 # resume reads bucket counts from the snapshots' specs)
                 "parts": rcfg.shuffle_partitions,
                 # resume reads seq_base, vclock_next, seen_total,
-                # frontier and n_pages back: the seq high-water mark and
-                # the virtual clock cannot be re-derived from the
-                # frontier alone in every shape (see seq_base above)
+                # frontier, n_pages and the next_* values back: the seq
+                # high-water mark and the virtual clock cannot be
+                # re-derived from the frontier alone in every shape (see
+                # seq_base above)
                 "seq_base": seq_base,
                 "vclock_next": vclock,
                 # rows this round added to the seen set (its frontier's
@@ -508,6 +536,13 @@ class CrawlEngine:
                 "seen_total": seen_total,
                 **observed,
             }
+            if wrote_frontier:
+                # the next frontier's size and discovery_seq range
+                round_counters.update({
+                    "next_frontier": front["rows"],
+                    "next_seq_min": front["seq_min"],
+                    "next_seq_max": front["seq_max"],
+                })
             self.storage.commit_round(
                 rnd,
                 ["pages"] + (["frontier"] if wrote_frontier else []),
@@ -521,7 +556,7 @@ class CrawlEngine:
             prev_base = seq_base
             if not wrote_frontier:
                 break
-            frontier = read_frontier(self.storage, self.spark, rnd + 1, cfg)
+            frontier = read_frontier(self.storage, self.spark, rnd + 1)
             rnd += 1
 
         latest = self.storage.latest_round()

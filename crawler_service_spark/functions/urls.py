@@ -23,10 +23,19 @@ Two dispatches between them:
   parquet pages snapshot on a 4-core VM (local[4]), `filter_internal`
   took 0.80 s split and 1.01 s as a nulled single scan of the same
   UDF (median of 6; an earlier prototype measured 0.87 vs 1.99 s).
-* **nulled** (`canonicalize_frame`, `host_frame`): one scan; the UDF
-  input is nulled for eligible rows, so every row crosses into Python
-  (as a null) but the input runs once. The engine's `host_frame` runs
-  after the dense sequence, where a split would run the rank twice.
+  A caller that has counted the ineligible rows (`takes_udf`) passes
+  the count: at 0 the UDF branch is not planned at all, so no Python
+  worker starts for an empty input. The engine counts them for free:
+  the pages write's ``Observation`` counts the ineligible entries of
+  ``links``, and the seed-count aggregate counts ineligible seeds.
+* **nulled** (`canonicalize_frame`, `host_frame` over a raw URL): one
+  scan; the UDF input is nulled for eligible rows, so every row crosses
+  into Python (as a null) but the input runs once.
+
+The host of a URL whose canonical form is known needs no Python at all:
+`host_frame` with ``canon_col`` reads it from ``canon_url`` natively.
+The engine's link path therefore plans no Python stage when every URL
+is eligible.
 """
 
 from __future__ import annotations
@@ -154,17 +163,37 @@ def url_parts_udf(urls: pd.Series) -> pd.DataFrame:
 # tests/test_native_canon.py.
 # ---------------------------------------------------------------------------
 
-def host_frame(df, url_col: str = "url", out_col: str = "host"):
-    """P2 as a hybrid single-scan projection: the exact host `url_pass`
-    computes (fast path ``lower(substring_index(netloc, ':', 1))``; slow
-    path ``url_parts_udf(...).host`` — `_parts_row` lowercases the netloc
-    and takes the text before the first ':', so the two branches agree
-    and the dispatch on `native_canon_eligible` preserves byte equality).
+def host_frame(df, url_col: str = "url", out_col: str = "host", *,
+               canon_col: str | None = None, netloc_col: str | None = None):
+    """P2: ``host_of(url)`` as a column.
+
+    Over a raw URL it is a nulled single-scan projection: the exact host
+    `url_pass` computes (fast path ``lower(substring_index(netloc, ':',
+    1))``; slow path ``url_parts_udf(...).host`` — `_parts_row`
+    lowercases the netloc and takes the text before the first ':', so
+    the two branches agree and the dispatch on `native_canon_eligible`
+    preserves byte equality).
+
+    With ``canon_col`` (the URL's ``canonicalize_url`` form) and
+    ``netloc_col`` (a column equal to the URL's raw netloc wherever that
+    is empty, e.g. the ``seed_netloc`` of `filter_internal`'s rows) it
+    is native: ``substring_index(netloc of canon_url, ':', 1)``, or
+    ``""`` for an empty netloc. Exact because the canonical netloc is
+    the parsed netloc already lowercased (by Python on the UDF branch,
+    so Spark's ``lower``, which differs on some non-ASCII code points,
+    is never applied) less a ``:80``/``:443`` suffix, which cannot move
+    the first ':'. An empty netloc needs the guard: ``http:////x``
+    canonicalizes to ``http://x``.
 
     Exists so the engine can compute ``host`` AFTER the link-dedup and
     seen-anti-join exchanges instead of carrying ~18B/row of host
     strings through them (host is a pure function of the URL; A/B
     script in commit ec1bc1b, scripts/exp_host_late.py)."""
+    if canon_col is not None:
+        netloc = F.regexp_extract(F.col(canon_col), _NETLOC_RE, 1)
+        return df.withColumn(out_col, F.when(
+            F.col(netloc_col) == "", F.lit("")
+        ).otherwise(F.substring_index(netloc, ":", 1)))
     eligible = native_canon_eligible(F.col(url_col))
     netloc = F.regexp_extract(F.col(url_col), _NETLOC_RE, 1)
     fast = F.lower(F.substring_index(netloc, ":", 1))
@@ -288,17 +317,28 @@ def _url_pass_udf(sort_query: bool):
     return parts.asNondeterministic()
 
 
-def url_pass(df, url_col: str = "url", sort_query: bool = True):
+def takes_udf(url_col):
+    """True where `url_pass` sends the row to its UDF: the URL is not
+    `native_canon_eligible` (null URLs included)."""
+    return ~F.coalesce(native_canon_eligible(url_col), F.lit(False))
+
+
+def url_pass(df, url_col: str = "url", sort_query: bool = True,
+             n_ineligible: int | None = None):
     """P1, P2 and F1's URL parts in one split pass (module docstring;
     null URLs take the UDF): adds `URL_PASS_COLS` — lowercased scheme,
     raw netloc, `host_of` host, raw path and fragment as `urlparse`
     splits them, and ``canonicalize_url``'s canon_url. A filter on the
     result over the parts reaches below the native canonicalization and
-    above the UDF."""
+    above the UDF.
+
+    ``n_ineligible`` is the number of ``df`` rows `takes_udf` holds for
+    (or an upper bound on it), if the caller has counted them: at 0 the
+    UDF branch is not planned. ``None`` (not counted) plans it."""
     url = F.col(url_col)
-    eligible = F.coalesce(native_canon_eligible(url), F.lit(False))
+    slow_rows = takes_udf(url)
     netloc = F.regexp_extract(url, _NETLOC_RE, 1)
-    fast = df.filter(eligible).withColumns({
+    fast = df.filter(~slow_rows).withColumns({
         "scheme": F.lower(F.regexp_extract(url, _SCHEME_RE, 1)),
         "netloc": netloc,
         "host": F.lower(F.substring_index(netloc, ":", 1)),
@@ -306,7 +346,9 @@ def url_pass(df, url_col: str = "url", sort_query: bool = True):
         "fragment": F.regexp_extract(url, r"#(.*)$", 1),
         "canon_url": canonicalize_native(url, sort_query),
     })
-    slow = df.filter(~eligible).withColumn("_u", _url_pass_udf(sort_query)(url))
+    if n_ineligible == 0:
+        return fast
+    slow = df.filter(slow_rows).withColumn("_u", _url_pass_udf(sort_query)(url))
     slow = slow.withColumns({c: F.col("_u")[c] for c in URL_PASS_COLS}).drop("_u")
     return fast.unionByName(slow)
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from crawler_service_spark.config import CrawlConfig
 from crawler_service_spark.functions.urls import (
     skip_extension_predicate,
+    takes_udf,
     url_pass,
 )
 
@@ -41,13 +42,26 @@ def expand_links(pages: DataFrame) -> DataFrame:
     )
 
 
-def filter_internal(candidates: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def ineligible_links(links_col: str = "links"):
+    """Aggregate: the entries of the ``links`` arrays that `url_pass`
+    sends to its UDF (`takes_udf`), summed over the rows. Over pages it
+    bounds from above the `expand_links` candidates that need Python;
+    a null array counts 0."""
+    links = F.coalesce(F.col(links_col), F.array().cast("array<string>"))
+    return F.sum(F.size(F.filter(links, takes_udf)))
+
+
+def filter_internal(candidates: DataFrame, cfg: CrawlConfig,
+                    n_ineligible: int | None = None) -> DataFrame:
     """F1 + F3 + P1: keep same-seed-netloc, non-skip, fragment-free
     http(s) links, with their ``canon_url``, ``host`` and ``path``.
 
     Links are the highest-volume rows of a round (fan-out ≫ pages), so
     this is `url_pass`'s split: eligible URLs take native expressions and
-    only the weird remainder crosses into Python.
+    only the weird remainder crosses into Python. ``n_ineligible`` (an
+    upper bound on the candidates `takes_udf` holds for, e.g. counted
+    over the pages' ``links``) goes to `url_pass`: at 0 no Python stage
+    is planned.
 
     NB: the reference compares raw netloc (case-sensitive,
     crawler.py:487); corpus URLs keep hosts lowercase so engine and
@@ -60,8 +74,9 @@ def filter_internal(candidates: DataFrame, cfg: CrawlConfig) -> DataFrame:
         & ~skip_extension_predicate(F.col("path"), cfg.skip_extensions)
         & (F.col("fragment") == "")
     )
-    return url_pass(candidates, "url", cfg.sort_query_params).filter(
-        keep).drop("scheme", "netloc", "fragment")
+    return url_pass(
+        candidates, "url", cfg.sort_query_params, n_ineligible,
+    ).filter(keep).drop("scheme", "netloc", "fragment")
 
 
 def filter_robots(candidates: DataFrame, policy: DataFrame | None) -> DataFrame:

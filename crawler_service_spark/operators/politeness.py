@@ -47,13 +47,17 @@ def with_host_policy(
     default_limit: int,
     default_window_s: int,
 ) -> DataFrame:
-    """J2: broadcast-join per-host policy; coalesce custom → default."""
+    """J2: broadcast-join per-host policy; coalesce custom → default.
+    The policy holds one row per host (`set_host_policy` keeps it so),
+    so the left join keeps the batch's rows one for one."""
+    empty = F.array().cast("array<string>")
     if policy is None:
-        return (
-            batch.withColumn("rate_limit", F.lit(default_limit))
-            .withColumn("window_s", F.lit(default_window_s))
-            .withColumn("crawl_delay_s", F.lit(0.0))
-            .withColumn("disallow_prefixes", F.array().cast("array<string>"))
+        return batch.select(
+            "*",
+            F.lit(default_limit).alias("rate_limit"),
+            F.lit(default_window_s).alias("window_s"),
+            F.lit(0.0).alias("crawl_delay_s"),
+            empty.alias("disallow_prefixes"),
         )
     pol = policy.select(
         "host",
@@ -62,16 +66,12 @@ def with_host_policy(
         F.col("crawl_delay_s").alias("_pol_delay"),
         F.col("disallow_prefixes").alias("_pol_disallow"),
     )
-    return (
-        batch.join(F.broadcast(pol), "host", "left")
-        .withColumn("rate_limit", F.coalesce(F.col("_pol_limit"), F.lit(default_limit)))
-        .withColumn("window_s", F.coalesce(F.col("_pol_window"), F.lit(default_window_s)))
-        .withColumn("crawl_delay_s", F.coalesce(F.col("_pol_delay"), F.lit(0.0)))
-        .withColumn(
-            "disallow_prefixes",
-            F.coalesce(F.col("_pol_disallow"), F.array().cast("array<string>")),
-        )
-        .drop("_pol_limit", "_pol_window", "_pol_delay", "_pol_disallow")
+    return batch.join(F.broadcast(pol), "host", "left").select(
+        *batch.columns,
+        F.coalesce("_pol_limit", F.lit(default_limit)).alias("rate_limit"),
+        F.coalesce("_pol_window", F.lit(default_window_s)).alias("window_s"),
+        F.coalesce("_pol_delay", F.lit(0.0)).alias("crawl_delay_s"),
+        F.coalesce("_pol_disallow", empty).alias("disallow_prefixes"),
     )
 
 
@@ -192,17 +192,19 @@ def schedule_round(
     * ``skew_safe=False`` — one plain per-host window, kept as the
       parity reference; ``shuffle_partitions`` sizes its exchange.
     """
-    b = with_host_policy(batch, policy, default_limit, default_window_s)
-
     if rank_strategy == "presalted":
-        b = rank_presalted(b, priority_col)
+        b = rank_presalted(batch, priority_col)
     elif skew_safe:
-        b = rank_presalted(presalt(b, salt_width), priority_col).drop("_salt")
+        b = rank_presalted(presalt(batch, salt_width), priority_col).drop("_salt")
     else:
+        b = batch
         if shuffle_partitions:
             b = b.repartition(shuffle_partitions, F.xxhash64("host"))
         w = Window.partitionBy("host").orderBy(priority_col, "discovery_seq")
         b = b.withColumn("host_rank", F.row_number().over(w).cast("long"))
+    # the rank reads only host, priority, _salt and discovery_seq: the
+    # policy joins its output, so the rank's count branch scans no join
+    b = with_host_policy(b, policy, default_limit, default_window_s)
 
     window_slot = F.floor((F.col("host_rank") - 1) / F.col("rate_limit")).cast("double")
     vtime = F.lit(float(round_epoch)) + F.greatest(

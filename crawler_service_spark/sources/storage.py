@@ -228,7 +228,8 @@ class SnapshotStore:
 
     def read_table_bucketed(
         self, spark: SparkSession, table: str, rnd: int,
-        buckets: int, cols: list[str], sort_cols: list[str],
+        buckets: int | None = None, cols: list[str] | None = None,
+        sort_cols: list[str] | None = None,
     ) -> DataFrame:
         """Bucketed-scan read of a snapshot written by
         ``write_table_bucketed``. On resume in a fresh session the
@@ -237,26 +238,30 @@ class SnapshotStore:
         sidecar) so the layout metadata survives restarts, like an
         Iceberg table's spec does.
 
-        The recorded ``_bucket_spec.json`` (written with the data) is
-        authoritative over the caller's arguments: a resume under a
-        changed ``shuffle_partitions`` must register the count the
-        files were written with, or the scan silently loses/misgroups
-        rows (ADVICE r02)."""
+        The layout is the one ``_bucket_spec.json`` recorded with the
+        data: a resume under a changed ``shuffle_partitions`` must
+        register the count the files were written with, or the scan
+        silently loses/misgroups rows (ADVICE r02). The layout
+        arguments are not read (callers may still pass the layout they
+        wrote with); a snapshot without a spec raises ``ValueError``.
+        Every committed snapshot has one: it is written right after the
+        ``CREATE TABLE``, and a snapshot cut before it belongs to an
+        uncommitted round, which resume re-runs."""
         spec_path = Path(self._table_path(table, rnd)) / "_bucket_spec.json"
-        if spec_path.exists():
-            spec = json.loads(spec_path.read_text())
-            buckets = int(spec["buckets"])
-            cols = list(spec["cols"])
-            sort_cols = list(spec["sort_cols"])
+        if not spec_path.exists():
+            raise ValueError(
+                f"{table} snapshot {rnd} has no _bucket_spec.json: not a "
+                f"complete bucketed snapshot")
+        spec = json.loads(spec_path.read_text())
         name = self._bucket_table_name(table, rnd)
         if not spark.catalog.tableExists(name):
             schema = self._read(
                 spark, self._table_path(table, rnd)).schema.toDDL()
             spark.sql(
                 f"CREATE TABLE {name} ({schema}) USING parquet "
-                f"CLUSTERED BY ({', '.join(cols)}) "
-                f"SORTED BY ({', '.join(sort_cols)}) "
-                f"INTO {buckets} BUCKETS "
+                f"CLUSTERED BY ({', '.join(spec['cols'])}) "
+                f"SORTED BY ({', '.join(spec['sort_cols'])}) "
+                f"INTO {int(spec['buckets'])} BUCKETS "
                 f"LOCATION '{self._sql_str(self._table_path(table, rnd))}'"
             )
         return spark.table(name)

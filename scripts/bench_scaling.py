@@ -248,7 +248,7 @@ def save_history(history: list[dict]) -> None:
         json.dump(history, f, indent=1)
 
 
-WORKLOAD_REV = 13    # bump when the measured work graph changes (r3:
+WORKLOAD_REV = 14    # bump when the measured work graph changes (r3:
                      # window-strategy frontier dedup; r4: bucket-sorted
                      # snapshot + presalted rank, pre-join-aligned fetch
                      # join, level-independent input partitioning; r5:
@@ -273,7 +273,10 @@ WORKLOAD_REV = 13    # bump when the measured work graph changes (r3:
                      # the batch keys probe the seen scan, no bloom;
                      # r13: the round job runs the engine's fetch join,
                      # engine.fetch_pages — the store exchange and the
-                     # outcome columns are inside the timed region)
+                     # outcome columns are inside the timed region;
+                     # r14: links_to_frontier takes host natively from
+                     # canon_url, and the rank joins the host policy
+                     # after ranking)
                      # — stats pool only same-rev runs; cross-rev
                      # medians would mix different engines/timed regions
 PROBE_SLACK = 1.15   # keep runs within 15% of the fastest observed host speed
@@ -481,9 +484,11 @@ first-occurrence dedup → exact anti-join vs the URL-seen set (past
 `large_seen_threshold` the batch keys probe the seen scan map-side) →
 dense discovery_seq →
 post-dedup host) → **bucket-sorted round
-snapshot** (repartition on (host, seq-salt) feeding a bucketBy+sortBy
-write, one file per bucket — the rank's exchange+sort moved into
-write-side work that scales) → presalted politeness rank (zero payload
+snapshot** (repartition on (host, seq-salt) feeding a plain sorted
+parquet write, one file per bucket; each part file is renamed to carry
+its bucket id and one `CREATE TABLE ... CLUSTERED BY ... SORTED BY`
+registers the layout — the rank's exchange+sort moved into write-side
+work that scales) → presalted politeness rank (zero payload
 exchange, zero sort, no driver stats barrier over the layout-bearing
 scan) → fetch join vs the content store with the html-free admitted
 side pre-aligned to the store's hash partitioning (extraction fuses
@@ -527,8 +532,10 @@ A/Bs (host drift cancels pair-wise):
    rank over a flat snapshot measured FLAT across cores (9.6 s at c4 →
    9.2 s at c16 on 5.3M rows — driver stats collect, exchange and sort
    are fixed-ish latency). Writing the snapshot repartitioned on
-   (host, seq-salt) with bucketBy+sortBy (one file per bucket) makes
-   the rank exchange-free and sort-free; the moved work rides the
+   (host, seq-salt) and sorted within each partition (one file per
+   bucket, renamed to carry its bucket id, then registered with one
+   `CREATE TABLE`) makes the rank exchange-free and sort-free; the
+   moved work rides the
    write, which scales (A/B scripts in commit 39ef1e8,
    scripts/exp_bucketed_phases.py and exp_round_phases.py).
 3. **Pre-join alignment of the fetch join**: repartitioning the
@@ -546,8 +553,9 @@ A/Bs (host drift cancels pair-wise):
    by the 2×2 matrix (commit 2ee2c90, scripts/exp_sched_matrix.py): it
    pays most exactly where shuffle bandwidth is the contended resource.
    The engine ships the same shape (engine.py drops host+path before
-   the expansion dedup and `links_to_frontier` recomputes host via the
-   hybrid `host_frame`); since rev 10 the bench runs that function.
+   the expansion dedup and `links_to_frontier` recomputes host with
+   `host_frame`, now natively from `canon_url`); since rev 10 the bench
+   runs that function.
 5. **A documented negative** (rev 8): serving the rank's bucket counts
    from a plain column-pruned re-read of the snapshot (instead of the
    one-task-per-bucket bucketed scan) looked attractive from event-log

@@ -88,7 +88,8 @@ def main() -> None:
         fo,
     )
 
-    # 3b. the link URL pass (F1 + P1) — split dispatch
+    # 3b. the link URL pass (F1 + P1) — split dispatch, gated by the
+    # engine's count of ineligible links
     from crawler_service_spark.config import CrawlConfig
     from crawler_service_spark.operators.links import filter_internal
 
@@ -99,19 +100,32 @@ def main() -> None:
         F.concat(F.lit("https://h.example.com/p/"),
                  F.col("id").cast("string")).alias("url"),
     )
+    # every 100th link percent-encoded: native-ineligible
+    mixed = links.withColumn("url", F.when(
+        F.col("parent_seq") % 100 == 0, F.concat("url", F.lit("%20x"))
+    ).otherwise(F.col("url")))
     add(
-        "F1 + P1 link URL pass (split: Python for ineligible links only)",
-        "`filter_internal` runs `url_pass`: the `native_canon_eligible` "
-        "branch computes scheme, netloc, host, path, fragment and "
-        "`canon_url` with native expressions (keep predicate first, so "
-        "only kept links are canonicalized); the other branch filters "
-        "on NOT eligible and makes ONE `ArrowEvalPython` call whose "
-        "struct feeds both the keep filter and the projection (the UDF "
-        "is nondeterministic, so the optimizer does not copy it into "
-        "each consumer). The two branches meet in a `Union`; the "
-        "engine's link path has no other Python stage before the "
-        "dense-sequence checkpoint.",
-        filter_internal(links, CrawlConfig()),
+        "F1 + P1 link URL pass, no ineligible link counted (no Python)",
+        "`filter_internal(..., n_ineligible=0)`: the pages write's "
+        "`Observation` counted no native-ineligible entry in `links`, so "
+        "`url_pass` plans only its native branch — scheme, netloc, host, "
+        "path, fragment and `canon_url` as JVM expressions (keep "
+        "predicate first, so only kept links are canonicalized) — and "
+        "no `ArrowEvalPython`: the engine's link path then plans no "
+        "Python stage at all (`links_to_frontier` takes host natively "
+        "from `canon_url`).",
+        filter_internal(links, CrawlConfig(), 0),
+    )
+    add(
+        "F1 + P1 link URL pass, ineligible links counted "
+        "(split: Python for ineligible links only)",
+        "With a nonzero count the branch on NOT eligible is planned "
+        "too: it makes ONE `ArrowEvalPython` call whose struct feeds "
+        "both the keep filter and the projection (the UDF is "
+        "nondeterministic, so the optimizer does not copy it into each "
+        "consumer). The two branches meet in a `Union`; only the "
+        "ineligible rows cross into Python.",
+        filter_internal(mixed, CrawlConfig(), 100),
     )
 
     # 4. politeness schedule — skew-safe salted rank
@@ -144,7 +158,7 @@ def main() -> None:
     snaps = SnapshotStore(tempfile.mkdtemp(prefix="plans_bsnap_"))
     snap_cfg = CrawlConfig(shuffle_partitions=8, frontier_salt_width=2000)
     write_frontier(snaps, frontier, 0, snap_cfg)
-    sched_ps, _ = schedule_frontier(read_frontier(snaps, spark, 0, snap_cfg),
+    sched_ps, _ = schedule_frontier(read_frontier(snaps, spark, 0),
                                     None, snap_cfg, snap_cfg.round_epoch)
     add(
         "RL1 politeness rank over a bucket-sorted frontier snapshot "

@@ -13,10 +13,11 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
 from crawler_service_spark.engine import (
-    CrawlEngine, fetch_order, read_frontier)
+    FRONTIER_COLS, CrawlEngine, fetch_order, read_frontier, write_frontier)
 from crawler_service_spark.sources.corpus import build_seeds_df, build_store_df
 from crawler_service_spark.sources.storage import SnapshotStore
 
@@ -54,7 +55,7 @@ def test_layout_frontier_scan_rank_plan(spark, tmp_path):
     eng = CrawlEngine(spark, cfg, build_store_df(spark, 60, 3),
                       checkpoint_dir=str(tmp_path / "p"))
     eng.crawl(build_seeds_df(spark, 60, 3, 2))
-    snap = read_frontier(eng.storage, spark, 0, eng.cfg)
+    snap = read_frontier(eng.storage, spark, 0)
     from crawler_service_spark.operators.politeness import rank_presalted
     ranked = rank_presalted(snap, "depth")
     plan = ranked._jdf.queryExecution().executedPlan().toString()
@@ -169,3 +170,30 @@ def test_snapshot_reads_launch_no_job(spark, tmp_path):
     assert jobs == []
     for df, paths in reads:
         assert df.schema == spark.read.parquet(*paths).schema
+
+
+def test_write_frontier_observes_rows_and_seq_range(spark, tmp_path):
+    """write_frontier returns the snapshot's row count and discovery_seq
+    range, observed on its write, for an empty frame too; read_frontier
+    registers the layout its _bucket_spec.json recorded and raises on a
+    snapshot without one."""
+    storage = SnapshotStore(str(tmp_path / "ck"))
+    cfg = CrawlConfig(shuffle_partitions=4)
+    rows = spark.range(10, 30).select(
+        F.lit("t").alias("task_id"), F.lit("h").alias("seed_netloc"),
+        F.concat(F.lit("https://h/"), F.col("id").cast("string")).alias("url"),
+        F.concat(F.lit("https://h/"), F.col("id").cast("string")).alias(
+            "canon_url"),
+        F.lit("h").alias("host"), F.lit(1).alias("depth"),
+        F.col("id").alias("discovery_seq"),
+    ).select(FRONTIER_COLS)
+    assert write_frontier(storage, rows, 0, cfg) == {
+        "rows": 20, "seq_min": 10, "seq_max": 29}
+    assert read_frontier(storage, spark, 0).count() == 20
+    assert write_frontier(storage, rows.filter("id < 0"), 1, cfg) == {
+        "rows": 0, "seq_min": None, "seq_max": None}
+    os.remove(os.path.join(storage.table_path("frontier", 1),
+                           "_bucket_spec.json"))
+    storage.drop_bucketed(spark, "frontier", 1)
+    with pytest.raises(ValueError, match="_bucket_spec"):
+        read_frontier(storage, spark, 1)

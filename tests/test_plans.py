@@ -297,9 +297,10 @@ def _clean_links(spark, n=200):
 
 
 def test_filter_internal_plans_one_python_stage(spark):
-    """On an all-eligible batch the link filter plans one Python stage,
-    in its ineligible branch (the UDF's fields feed both the keep filter
-    and the projection without a second call)."""
+    """Given no count of ineligible links, the link filter plans one
+    Python stage even on an all-eligible batch, in its ineligible branch
+    (the UDF's fields feed both the keep filter and the projection
+    without a second call)."""
     from crawler_service_spark.config import CrawlConfig
     from crawler_service_spark.operators.links import filter_internal
 
@@ -325,25 +326,36 @@ def _spy_dense_seq(monkeypatch):
     return seen
 
 
-def test_engine_link_path_plans_two_python_stages(spark, tmp_path,
-                                                  monkeypatch):
-    """expand_links → filter_internal → filter_robots → links_to_frontier
-    plans one Python stage before the dense-sequence checkpoint (the
-    filter's ineligible branch) and one after it (`host_frame`)."""
+@pytest.mark.parametrize("dirty", [False, True])
+def test_engine_link_path_plans_python_only_for_ineligible_links(
+        spark, tmp_path, monkeypatch, dirty):
+    """expand_links → filter_internal → filter_robots → links_to_frontier,
+    with the ineligible-link count the pages write observes: on
+    all-eligible links no Python stage is planned anywhere; with one
+    ineligible link, exactly one, before the dense-sequence checkpoint
+    and over the ineligible rows only. After the checkpoint `host_frame`
+    takes the host from canon_url natively."""
     import crawler_service_spark.engine as engine
     from crawler_service_spark.config import CrawlConfig
     from crawler_service_spark.operators.links import (
         expand_links,
         filter_internal,
         filter_robots,
+        ineligible_links,
     )
 
     cfg = CrawlConfig(shuffle_partitions=4, seq_buckets=4)
-    pages = _clean_links(spark, 64).groupBy("task_id", "seed_netloc").agg(
+    links = _clean_links(spark, 64)
+    if dirty:
+        links = links.unionByName(links.limit(1).withColumn(
+            "url", F.lit("https://h.example.com/p/a%20b")))
+    pages = links.groupBy("task_id", "seed_netloc").agg(
         F.min("parent_seq").alias("discovery_seq"),
         F.lit(0).alias("depth"),
         F.collect_list("url").alias("links"),
     )
+    n_ineligible = pages.agg(ineligible_links()).first()[0]
+    assert n_ineligible == int(dirty)
     policy = spark.createDataFrame(
         [("h.example.com", ["/p/1"])], "host string, disallow_prefixes array<string>")
     path = str(tmp_path / "seen")
@@ -351,23 +363,27 @@ def test_engine_link_path_plans_two_python_stages(spark, tmp_path,
                           "task_id string, canon_url string").write.parquet(path)
     checkpointed = _spy_dense_seq(monkeypatch)
 
-    cand = filter_robots(filter_internal(expand_links(pages), cfg), policy)
+    cand = filter_robots(
+        filter_internal(expand_links(pages), cfg, n_ineligible), policy)
     out = engine.links_to_frontier(
         cand.drop("host", "path"), spark.read.parquet(path), cfg,
         seen_total=1, seq_base=100, seq_min=0)
     (pre,) = checkpointed
     stages = _python_stages(pre)
-    assert len(stages) == 1, explain_str(pre)
-    assert _over_ineligible_only(stages[0]), explain_str(pre)
-    assert len(_python_stages(out)) == 1, explain_str(out)
+    assert len(stages) == int(dirty), explain_str(pre)
+    assert all(_over_ineligible_only(s) for s in stages), explain_str(pre)
+    assert _python_stages(out) == [], explain_str(out)
     assert out.count() > 0
 
 
-def test_seed_frontier_plans_one_python_stage(spark, tmp_path, monkeypatch):
-    """The seed frontier plans one Python stage, over ineligible seeds
-    only. (The seeds are a computed frame: over a local one the optimizer
-    folds the native branch into the scan and drops an empty Python
-    branch altogether.)"""
+@pytest.mark.parametrize("dirty", [False, True])
+def test_seed_frontier_plans_python_only_for_ineligible_seeds(
+        spark, tmp_path, monkeypatch, dirty):
+    """The seed pass plans no Python stage over all-eligible seeds, and
+    one, over the ineligible seeds only, when a seed is ineligible (the
+    seed-count aggregate counts them). (The seeds are a computed frame:
+    over a local one the optimizer folds the native branch into the
+    scan and drops an empty Python branch altogether.)"""
     from crawler_service_spark.config import CrawlConfig
     from crawler_service_spark.engine import CrawlEngine
     from crawler_service_spark.sources.corpus import build_store_df
@@ -377,12 +393,15 @@ def test_seed_frontier_plans_one_python_stage(spark, tmp_path, monkeypatch):
     seeds = spark.range(4).select(
         F.concat(F.lit("task"), F.col("id").cast("string")).alias("task_id"),
         F.concat(F.lit("https://h"), F.col("id").cast("string"),
-                 F.lit(".example.com/page/0")).alias("url"),
+                 F.lit(".example.com/page/0"),
+                 # seed 3 percent-encoded: native-ineligible
+                 F.when((F.col("id") == 3) & F.lit(dirty), F.lit("%20x"))
+                 .otherwise(F.lit(""))).alias("url"),
         F.col("id").alias("seed_seq"),
     )
     checkpointed = _spy_dense_seq(monkeypatch)
     engine._initial_frontier(seeds)
     (pre,) = checkpointed
     stages = _python_stages(pre)
-    assert len(stages) == 1, explain_str(pre)
-    assert _over_ineligible_only(stages[0]), explain_str(pre)
+    assert len(stages) == int(dirty), explain_str(pre)
+    assert all(_over_ineligible_only(s) for s in stages), explain_str(pre)

@@ -207,10 +207,12 @@ def test_kill_after_pages_write_then_resume_on_probe_path(
 
 
 @pytest.mark.parametrize("counter", [
-    "seq_base", "vclock_next", "seen_total", "frontier", "n_pages"])
+    "seq_base", "vclock_next", "seen_total", "frontier", "n_pages",
+    "next_frontier", "next_seq_min", "next_seq_max"])
 def test_resume_without_a_round_counter_fails(spark, tmp_path, counter):
     """Resume reads the seq high-water mark, the virtual clock, the
-    seen count, the frontier size and the page count only from the last
+    seen count, the frontier size, the page count and the next
+    frontier's size and discovery_seq range only from the last
     committed round; a manifest that lacks one fails loudly instead of
     being reconstructed."""
     store = build_store_df(spark, 150, 5)
