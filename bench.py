@@ -5,9 +5,11 @@ Default mode runs the headline query suite at ``$SPARK_GRAFT_SF_DIR``
 ONE JSON line ``{"metric", "value", "unit": "sec", "queries", "sf"}``.
 
 ``--job schedule`` runs only the north-rule job: a common-host-skewed
-synthetic link batch through the engine's round functions
-(``engine.links_to_frontier``, ``write_frontier``/``read_frontier`` and
-``schedule_frontier``); it reports URLs scheduled/sec. ``--job round``
+synthetic link batch, canonicalized by the engine's split URL pass
+(``url_pass``, as ``filter_internal`` runs it), through the engine's
+round functions (``engine.links_to_frontier``,
+``write_frontier``/``read_frontier`` and ``schedule_frontier``); it
+reports URLs scheduled/sec. ``--job round``
 adds ``engine.fetch_pages`` against a synthetic content store in the
 corpus store schema: the fetch join with its store-side exchange, the
 outcome columns and the extraction stage, all inside the timed region.
@@ -48,7 +50,7 @@ from crawler_service_spark.engine import (
     schedule_frontier,
     write_frontier,
 )
-from crawler_service_spark.functions.urls import canonicalize_frame
+from crawler_service_spark.functions.urls import url_pass
 from crawler_service_spark.sources.storage import SnapshotStore
 from scripts.bench_scaling import cpu_probe
 
@@ -157,7 +159,10 @@ def synth_frontier(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
     is its own task (so every link is internal to its seed's host), and
     row id = parent_seq * LINKS_PER_PARENT + link_pos. URLs carry the
     dirty-variant cycle exercised by the canonicalizer (ports, case,
-    trailing slash, unsorted query).
+    trailing slash, unsorted query), every variant native-eligible: its
+    callers canonicalize with ``url_pass(..., n_ineligible=0)``, as
+    ``filter_internal`` runs on a round whose pages counted no
+    ineligible link, so no Python stage is planned.
 
     Partition count is pinned to SPARK_GRAFT_SHUFFLE_PARTS (not
     defaultParallelism): the scaling comparison needs the IDENTICAL
@@ -196,20 +201,22 @@ def _link_id():
 def synth_seen(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
     """A seen set holding every third URL of ``synth_frontier(n)``."""
     links = synth_frontier(spark, n, n_hosts).filter(_link_id() % 3 == 0)
-    return canonicalize_frame(links, "url").select("task_id", "canon_url")
+    return url_pass(links, "url", n_ineligible=0).select("task_id", "canon_url")
 
 
 def schedule_links(spark: SparkSession, cfg: CrawlConfig, store: SnapshotStore,
                    links: DataFrame, n_links: int, seen: DataFrame,
                    n_seen: int) -> DataFrame:
     """The engine's link-to-frontier step over ``links`` (the output of
-    ``synth_frontier(n_links)``, canonicalized here: the engine's links
-    arrive canonical from ``filter_internal``), then its frontier
-    snapshot in ``store`` and the politeness rank over the read-back
-    scan, as a crawl round runs them. Returns the admitted rows."""
+    ``synth_frontier(n_links)``, canonicalized here by ``url_pass``:
+    the engine's links arrive canonical from ``filter_internal``), then
+    its frontier snapshot in ``store`` and the politeness rank over the
+    read-back scan, as a crawl round runs them. Returns the admitted
+    rows."""
     n_parents = -(-n_links // LINKS_PER_PARENT)
-    links = canonicalize_frame(links, "url", "canon_url",
-                               cfg.sort_query_params)
+    # only canon_url rides into the dedup exchanges, as in the engine
+    links = url_pass(links, "url", cfg.sort_query_params,
+                     n_ineligible=0).select(*links.columns, "canon_url")
     frontier = links_to_frontier(links, seen, cfg, seen_total=n_seen,
                                  seq_base=n_parents, seq_min=0)
     write_frontier(store, frontier, 0, cfg)
@@ -255,7 +262,8 @@ def synth_store(spark: SparkSession, n: int, n_hosts: int) -> DataFrame:
         F.lit("\">go</a><a href=\"https://h2.example.com/p/"), nstr,
         F.lit("1\">go</a></body></html>"),
     )
-    return canonicalize_frame(synth_frontier(spark, n, n_hosts), "url").select(
+    return url_pass(synth_frontier(spark, n, n_hosts), "url",
+                    n_ineligible=0).select(
         F.col("canon_url").alias("doc_id"),
         F.lit(200).alias("status_code"),
         F.lit(0).alias("fail_times"),

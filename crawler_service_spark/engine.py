@@ -258,7 +258,7 @@ def fetch_pages(admitted: DataFrame, store: DataFrame, cfg: CrawlConfig,
 class CrawlTables:
     pages: DataFrame          # all rounds, unordered; order key = (task_id, depth, discovery_seq)
     seen: DataFrame           # (task_id, canon_url)
-    round_counters: list[dict]
+    round_counters: list[dict]  # every committed round's, from the manifest
 
 
 class CrawlEngine:
@@ -302,10 +302,14 @@ class CrawlEngine:
         return reduce(DataFrame.unionByName, [
             df.select(keys) for df in (visited, pending) if df is not None])
 
-    def _tables(self, latest: int, counters: list[dict]) -> CrawlTables:
-        """The crawl as of committed round ``latest``. Its seen set
-        includes the committed next frontier, if any: URLs enqueued but
-        not fetched when ``max_rounds`` stopped the crawl."""
+    def _tables(self, latest: int) -> CrawlTables:
+        """The crawl as of committed round ``latest``, with the counters
+        of every committed round (those before a resume included). Its
+        seen set includes the committed next frontier, if any: URLs
+        enqueued but not fetched when ``max_rounds`` stopped the
+        crawl."""
+        counters = [{"round": r, **self.storage.round_meta(r)["counters"]}
+                    for r in range(latest + 1)]
         pending = (
             self.storage.read_table(self.spark, "frontier", latest + 1)
             if "frontier" in self.storage.round_meta(latest)["tables"]
@@ -348,7 +352,6 @@ class CrawlEngine:
     # ----------------------------------------------------------------- crawl
     def crawl(self, seeds: DataFrame | None = None, resume: bool = False) -> CrawlTables:
         cfg = self.cfg
-        counters: list[dict] = []
 
         if resume:
             latest = self.storage.latest_round()
@@ -357,7 +360,7 @@ class CrawlEngine:
             meta = self.storage.round_meta(latest)
             if "frontier" not in meta["tables"]:
                 # crawl already complete; just return assembled tables
-                return self._tables(latest, [])
+                return self._tables(latest)
             # resume reads back the exact values the last committed round
             # persisted (round_counters below); none is reconstructed
             # from the snapshots
@@ -548,7 +551,6 @@ class CrawlEngine:
                 ["pages"] + (["frontier"] if wrote_frontier else []),
                 round_counters,
             )
-            counters.append({"round": rnd, **round_counters})
             # this round's frontier is consumed: release its catalog entry
             # (the files stay; resume re-registers what it reads)
             self.storage.drop_bucketed(self.spark, "frontier", rnd)
@@ -566,7 +568,7 @@ class CrawlEngine:
             # CrawlTables(pages=None, ...) that crashes every consumer
             raise ValueError(
                 "crawl fetched no pages: the seed frontier was empty")
-        return self._tables(latest, counters)
+        return self._tables(latest)
 
 
 def fetch_order(pages: DataFrame) -> DataFrame:

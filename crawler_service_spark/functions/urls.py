@@ -3,23 +3,24 @@
 Re-implements the *semantics* of the reference's ``_normalize_url``
 (/root/reference/app/services/crawler.py:439-474) and ``_get_domain``
 (/root/reference/app/services/rate_limiter.py:40-51) from their spec —
-not a code copy — and lifts them into vectorized pandas/Arrow UDFs
+not a code copy — and lifts them into one vectorized pandas/Arrow UDF
 (`input_hint`: no per-row Python UDFs; Arrow batches keep the JVM↔Python
 crossing amortized over thousands of rows).
 
-Two tiers: **pandas UDFs** (`make_canon_udf`, `url_parts_udf`,
-`host_udf`) give exact `urllib.parse` parity, the source of truth;
-**native column expressions** (`canonicalize_native` and the native
-branches below) run JVM-side, only on rows `native_canon_eligible`
-proves byte-identical (tests pin them to the UDFs).
+Two tiers: **one pandas UDF** (`_url_pass_udf`: `URL_PASS_COLS` from
+`_parts_row` and `canonicalize_url`) gives exact `urllib.parse` parity,
+the source of truth; **native column expressions**
+(`canonicalize_native` and the native branches below) run JVM-side,
+only on rows `native_canon_eligible` proves byte-identical (tests pin
+them to the UDF). Rows go to the UDF where `takes_udf` holds.
 
 Two dispatches between them:
 
 * **split** (`url_pass`): eligible rows take the native branch, the rest
-  one UDF, and the branches are unioned, so only ineligible rows cross
-  into Python; each branch scans the input. Used where that scan is
-  cheap: the link explode over the pages snapshot (`filter_internal`)
-  and the seed list. Over 60k all-eligible links exploded from a
+  the UDF, and the branches are unioned, so only ineligible rows cross
+  into Python; each branch scans the input. The engine (the link
+  explode in `filter_internal`, the seed list), ``bench.py`` and the
+  registry run it. Over 60k all-eligible links exploded from a
   parquet pages snapshot on a 4-core VM (local[4]), `filter_internal`
   took 0.80 s split and 1.01 s as a nulled single scan of the same
   UDF (median of 6; an earlier prototype measured 0.87 vs 1.99 s).
@@ -30,7 +31,9 @@ Two dispatches between them:
   ``links``, and the seed-count aggregate counts ineligible seeds.
 * **nulled** (`canonicalize_frame`, `host_frame` over a raw URL): one
   scan; the UDF input is nulled for eligible rows, so every row crosses
-  into Python (as a null) but the input runs once.
+  into Python (as a null, answered from one precomputed row) but the
+  input runs once. Only perfbench's frontier workload still calls
+  them; they go when the benchmark moves to `url_pass`.
 
 The host of a URL whose canonical form is known needs no Python at all:
 `host_frame` with ``canon_col`` reads it from ``canon_url`` natively.
@@ -61,8 +64,6 @@ def canonicalize_url(url: str, sort_query: bool = True) -> str:
     contracts hold either way.
     """
     if url is None:
-        # fast path for the single-scan hybrid: eligible rows reach the
-        # UDF as nulls (their result comes from the native branch)
         return None
     try:
         parsed = urlparse(url)
@@ -103,17 +104,6 @@ _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
 _NETLOC_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)"
 _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)"
 
-URL_PARTS_SCHEMA = StructType(
-    [
-        StructField("scheme", StringType()),
-        StructField("netloc", StringType()),
-        StructField("host", StringType()),
-        StructField("path", StringType()),
-        StructField("query", StringType()),
-        StructField("fragment", StringType()),
-    ]
-)
-
 
 def _parts_row(url: str) -> dict:
     try:
@@ -135,31 +125,38 @@ def _parts_row(url: str) -> dict:
         }
 
 
-def make_canon_udf(sort_query: bool = True):
-    """Series→Series pandas UDF for P1 canonicalization."""
-
-    @F.pandas_udf(StringType())
-    def canon(urls: pd.Series) -> pd.Series:
-        return urls.map(lambda u: canonicalize_url(u, sort_query))
-
-    return canon
+URL_PASS_COLS = ["scheme", "netloc", "host", "path", "fragment", "canon_url"]
 
 
-@F.pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    """P2: host extraction, exact urllib parity."""
-    return urls.map(host_of)
+def _url_pass_udf(sort_query: bool):
+    """The one pandas UDF: `URL_PASS_COLS` of each URL — lowercased
+    scheme, raw netloc, `host_of` host, raw path and fragment as
+    `urlparse` splits them, and ``canonicalize_url``'s canon_url. A null
+    URL (every eligible row of a nulled dispatch) is answered from one
+    precomputed row: host "unknown", canon_url null."""
+    null_row = {**_parts_row(None), "canon_url": None}
+
+    @F.pandas_udf(StructType([StructField(c, StringType()) for c in URL_PASS_COLS]))
+    def parts(urls: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            [null_row if u is None else
+             {**_parts_row(u), "canon_url": canonicalize_url(u, sort_query)}
+             for u in urls],
+            columns=URL_PASS_COLS,
+        )
+
+    return parts
 
 
-@F.pandas_udf(URL_PARTS_SCHEMA)
-def url_parts_udf(urls: pd.Series) -> pd.DataFrame:
-    """One Arrow round-trip yielding all URL parts (feeds F1/F2/robots)."""
-    return pd.DataFrame([_parts_row(u) for u in urls])
+def takes_udf(url_col):
+    """True where the URL goes to the UDF: it is not
+    `native_canon_eligible` (null URLs included)."""
+    return ~F.coalesce(native_canon_eligible(url_col), F.lit(False))
 
 
 # ---------------------------------------------------------------------------
 # Native (JVM/codegen) fast paths, applied only to `native_canon_eligible`
-# rows; pinned to the pandas UDFs by tests/test_urls.py and
+# rows; pinned to the UDF by tests/test_urls.py and
 # tests/test_native_canon.py.
 # ---------------------------------------------------------------------------
 
@@ -167,12 +164,11 @@ def host_frame(df, url_col: str = "url", out_col: str = "host", *,
                canon_col: str | None = None, netloc_col: str | None = None):
     """P2: ``host_of(url)`` as a column.
 
-    Over a raw URL it is a nulled single-scan projection: the exact host
+    Over a raw URL it is a nulled single-scan projection of the host
     `url_pass` computes (fast path ``lower(substring_index(netloc, ':',
-    1))``; slow path ``url_parts_udf(...).host`` — `_parts_row`
-    lowercases the netloc and takes the text before the first ':', so
-    the two branches agree and the dispatch on `native_canon_eligible`
-    preserves byte equality).
+    1))``; slow path the UDF's ``host`` — `_parts_row` lowercases the
+    netloc and takes the text before the first ':', so the two branches
+    agree and the dispatch on `takes_udf` preserves byte equality).
 
     With ``canon_col`` (the URL's ``canonicalize_url`` form) and
     ``netloc_col`` (a column equal to the URL's raw netloc wherever that
@@ -183,22 +179,21 @@ def host_frame(df, url_col: str = "url", out_col: str = "host", *,
     so Spark's ``lower``, which differs on some non-ASCII code points,
     is never applied) less a ``:80``/``:443`` suffix, which cannot move
     the first ':'. An empty netloc needs the guard: ``http:////x``
-    canonicalizes to ``http://x``.
-
-    Exists so the engine can compute ``host`` AFTER the link-dedup and
-    seen-anti-join exchanges instead of carrying ~18B/row of host
-    strings through them (host is a pure function of the URL; A/B
-    script in commit ec1bc1b, scripts/exp_host_late.py)."""
+    canonicalizes to ``http://x``. The engine's `links_to_frontier`
+    computes ``host`` this way, AFTER the link-dedup and seen-anti-join
+    exchanges instead of carrying ~18B/row of host strings through them
+    (A/B script in commit ec1bc1b, scripts/exp_host_late.py)."""
     if canon_col is not None:
         netloc = F.regexp_extract(F.col(canon_col), _NETLOC_RE, 1)
         return df.withColumn(out_col, F.when(
             F.col(netloc_col) == "", F.lit("")
         ).otherwise(F.substring_index(netloc, ":", 1)))
-    eligible = native_canon_eligible(F.col(url_col))
-    netloc = F.regexp_extract(F.col(url_col), _NETLOC_RE, 1)
-    fast = F.lower(F.substring_index(netloc, ":", 1))
-    slow = url_parts_udf(F.when(~eligible, F.col(url_col)))["host"]
-    return df.withColumn(out_col, F.when(eligible, fast).otherwise(slow))
+    url = F.col(url_col)
+    slow = takes_udf(url)
+    netloc = F.regexp_extract(url, _NETLOC_RE, 1)
+    return df.withColumn(out_col, F.when(
+        slow, _url_pass_udf(True)(F.when(slow, url))["host"]
+    ).otherwise(F.lower(F.substring_index(netloc, ":", 1))))
 
 
 def native_canon_eligible(url_col):
@@ -208,14 +203,16 @@ def native_canon_eligible(url_col):
     parse_qsl re-encoding or IPv6/params paths), and a query that is
     either empty or strictly ``k=v(&k=v)*`` over urlencode-safe chars
     (anything else gets re-encoded by ``urlencode`` and must take the
-    exact Python path)."""
+    exact Python path). An empty authority followed by ``//``
+    (``http:////x``) is ineligible: ``urlunparse`` drops that
+    authority's ``//`` (``http://x``)."""
     # one anchored regex pass (keep it a single scan of the string):
-    # scheme :// authority+path (printable ASCII minus %+;[]\?#)
+    # scheme :// [not //] authority+path (printable ASCII minus %+;[]\?#)
     # [? query of strict k=v pairs] [# printable-clean fragment]
     cls = r"[\x21-\x7E&&[^%+;\[\]\\?#]]"
     kv = r"[A-Za-z0-9_.~\-]+=[A-Za-z0-9_.~\-]*"
     return url_col.rlike(
-        r"^[A-Za-z][A-Za-z0-9+.\-]*://" + cls + r"*"
+        r"^[A-Za-z][A-Za-z0-9+.\-]*://(?!//)" + cls + r"*"
         r"(\?(" + kv + r"(&" + kv + r")*)?)?"
         r"(#[\x21-\x7E&&[^%+;\[\]\\]]*)?$"
     )
@@ -281,54 +278,25 @@ def canonicalize_frame(
     sort_query: bool = True,
     single_scan: bool = True,
 ):
-    """Hybrid P1: JVM-native fast path for eligible rows, exact pandas-UDF
-    fallback for the rest. Equality is preserved because the native
-    expression is byte-identical on exactly the rows it is applied to.
-
-    The nulled dispatch (module docstring). ``single_scan`` must be True
+    """P1 as the nulled dispatch (module docstring): JVM-native fast path
+    for eligible rows, the UDF's ``canon_url`` for the rest. Equality is
+    preserved because the native expression is byte-identical on
+    exactly the rows it is applied to. ``single_scan`` must be True
     (False raises); it stays for callers that pass it.
     """
     if not single_scan:
         raise ValueError("canonicalize_frame: single_scan=False is not supported")
-    eligible = native_canon_eligible(F.col(url_col))
-    slow_out = make_canon_udf(sort_query)(F.when(~eligible, F.col(url_col)))
-    return df.withColumn(
-        out_col,
-        F.when(eligible, canonicalize_native(F.col(url_col), sort_query))
-        .otherwise(slow_out),
-    )
-
-
-URL_PASS_COLS = ["scheme", "netloc", "host", "path", "fragment", "canon_url"]
-
-
-def _url_pass_udf(sort_query: bool):
-    @F.pandas_udf(StructType([StructField(c, StringType()) for c in URL_PASS_COLS]))
-    def parts(urls: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            [{**_parts_row(u), "canon_url": canonicalize_url(u, sort_query)}
-             for u in urls],
-            columns=URL_PASS_COLS,
-        )
-
-    # nondeterministic, so the optimizer cannot copy the call into each
-    # consumer of its fields (a filter and a projection would otherwise
-    # plan one ArrowEvalPython each)
-    return parts.asNondeterministic()
-
-
-def takes_udf(url_col):
-    """True where `url_pass` sends the row to its UDF: the URL is not
-    `native_canon_eligible` (null URLs included)."""
-    return ~F.coalesce(native_canon_eligible(url_col), F.lit(False))
+    url = F.col(url_col)
+    slow = takes_udf(url)
+    return df.withColumn(out_col, F.when(
+        slow, _url_pass_udf(sort_query)(F.when(slow, url))["canon_url"]
+    ).otherwise(canonicalize_native(url, sort_query)))
 
 
 def url_pass(df, url_col: str = "url", sort_query: bool = True,
              n_ineligible: int | None = None):
     """P1, P2 and F1's URL parts in one split pass (module docstring;
-    null URLs take the UDF): adds `URL_PASS_COLS` — lowercased scheme,
-    raw netloc, `host_of` host, raw path and fragment as `urlparse`
-    splits them, and ``canonicalize_url``'s canon_url. A filter on the
+    null URLs take the UDF): adds `URL_PASS_COLS`. A filter on the
     result over the parts reaches below the native canonicalization and
     above the UDF.
 
@@ -348,7 +316,11 @@ def url_pass(df, url_col: str = "url", sort_query: bool = True,
     })
     if n_ineligible == 0:
         return fast
-    slow = df.filter(slow_rows).withColumn("_u", _url_pass_udf(sort_query)(url))
+    # nondeterministic, so the optimizer cannot copy the call into each
+    # consumer of its fields (a filter and a projection would otherwise
+    # plan one ArrowEvalPython each)
+    udf = _url_pass_udf(sort_query).asNondeterministic()
+    slow = df.filter(slow_rows).withColumn("_u", udf(url))
     slow = slow.withColumns({c: F.col("_u")[c] for c in URL_PASS_COLS}).drop("_u")
     return fast.unionByName(slow)
 

@@ -12,7 +12,7 @@ name, so names AND types must line up):
   timezone pinned to UTC);
 * md5 is the only hash used cross-engine (identical hex in both).
 
-The Spark side exercises the REAL operators (pandas-UDF canonicalizer,
+The Spark side exercises the REAL operators (the URL pass,
 first_occurrence, anti_join_seen, schedule_round, classify columns…);
 the DuckDB side re-derives the expected answer independently in SQL.
 """
@@ -31,9 +31,9 @@ from crawler_service_spark.functions.classify import (
     retry_delay_col,
 )
 from crawler_service_spark.functions.urls import (
-    host_udf,
-    make_canon_udf,
+    _url_pass_udf,
     skip_extension_predicate,
+    url_pass,
 )
 from crawler_service_spark.operators.dedup import anti_join_seen, first_occurrence
 from crawler_service_spark.operators.politeness import schedule_round
@@ -81,25 +81,25 @@ _SYNTH_URLS_SQL = """
 
 
 # ---------------------------------------------------------------------------
-# P1 / P2 — canonicalization + host extraction (pandas UDFs under test)
+# P1 / P2 — canonicalization + host extraction (the URL pass under test)
 # ---------------------------------------------------------------------------
 
 def q_p1_canonicalize(spark, sf_dir):
-    canon = make_canon_udf(sort_query=True)
+    """P1 with every row through the URL pass's pandas UDF, the exact
+    `urllib.parse` source of truth."""
+    parts = _url_pass_udf(sort_query=True)
     return _synth_urls(load(spark, sf_dir, "orders")).select(
-        "id", canon("url").alias("canon_url")
+        "id", parts("url")["canon_url"].alias("canon_url")
     )
 
 
 def q_p1_canonicalize_hybrid(spark, sf_dir):
-    """P1 through the nulled hybrid (canonicalize_frame): JVM-native
-    fast path + pandas-UDF fallback — same oracle as the pure-UDF P1,
-    proving byte parity of the native canonicalizer the engine's URL
-    pass shares."""
-    from crawler_service_spark.functions.urls import canonicalize_frame
-
+    """P1 through the engine's split URL pass (`url_pass`): eligible
+    rows take the JVM-native canonicalizer, the rest the pandas UDF —
+    same oracle as the all-UDF P1, proving byte parity of the native
+    branch."""
     urls = _synth_urls(load(spark, sf_dir, "orders"))
-    return canonicalize_frame(urls, "url").select("id", "canon_url")
+    return url_pass(urls, "url").select("id", "canon_url")
 
 
 SQL_P1 = f"""
@@ -112,9 +112,10 @@ SQL_P1 = f"""
 
 
 def q_p2_host_extract(spark, sf_dir):
-    return _synth_urls(load(spark, sf_dir, "orders")).select(
-        "id", host_udf(F.col("url")).alias("host")
-    )
+    """P2 through the split URL pass: the `host_of` host, native for
+    eligible rows."""
+    return url_pass(_synth_urls(load(spark, sf_dir, "orders")), "url").select(
+        "id", "host")
 
 
 SQL_P2 = f"""

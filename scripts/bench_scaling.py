@@ -248,7 +248,7 @@ def save_history(history: list[dict]) -> None:
         json.dump(history, f, indent=1)
 
 
-WORKLOAD_REV = 14    # bump when the measured work graph changes (r3:
+WORKLOAD_REV = 15    # bump when the measured work graph changes (r3:
                      # window-strategy frontier dedup; r4: bucket-sorted
                      # snapshot + presalted rank, pre-join-aligned fetch
                      # join, level-independent input partitioning; r5:
@@ -276,7 +276,12 @@ WORKLOAD_REV = 14    # bump when the measured work graph changes (r3:
                      # outcome columns are inside the timed region;
                      # r14: links_to_frontier takes host natively from
                      # canon_url, and the rank joins the host policy
-                     # after ranking)
+                     # after ranking; r15: the synthetic links, seen set
+                     # and store are canonicalized by the engine's split
+                     # url_pass, which plans no Python stage on these
+                     # all-eligible URLs, instead of the nulled
+                     # canonicalize_frame, which sent every row through
+                     # Python as a null)
                      # — stats pool only same-rev runs; cross-rev
                      # medians would mix different engines/timed regions
 PROBE_SLACK = 1.15   # keep runs within 15% of the fastest observed host speed

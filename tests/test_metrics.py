@@ -54,6 +54,26 @@ def test_report_shape(spark):
     assert r2["config"]["timeout"] == 7.5
 
 
+def test_report_of_a_resumed_crawl_counts_every_round(spark, tmp_path):
+    """Killed after round 0 and resumed, and resumed again once complete:
+    the report's rounds are every committed round, so their pages add up
+    to the pages the report summarizes."""
+    cfg = CrawlConfig(max_depth=2, follow_links=True)
+    store = build_store_df(spark, 120, 5)
+
+    def engine(max_rounds=200):
+        return CrawlEngine(spark, cfg, store, checkpoint_dir=str(tmp_path),
+                           max_rounds=max_rounds)
+
+    engine(max_rounds=1).crawl(build_seeds_df(spark, 120, 5, 2))
+    for t in (engine().crawl(resume=True), engine().crawl(resume=True)):
+        r = report(t)
+        rounds = [rc["round"] for rc in r["rounds"]]
+        assert rounds == list(range(len(rounds))) and len(rounds) > 1
+        assert sum(rc["n_pages"] for rc in r["rounds"]) \
+            == r["summary"]["total_pages"] > 0
+
+
 def test_crawl_summary_empty_pages(spark):
     """Empty pages table: all counters 0, no TypeError (ADVICE r01)."""
     empty = spark.createDataFrame(

@@ -43,13 +43,14 @@ DIRTY_URLS = [
 
 
 def test_native_matches_python_on_eligible(spark):
-    df = spark.createDataFrame(pd.DataFrame({"url": DIRTY_URLS}))
+    urls = DIRTY_URLS + HOST_SHAPES
+    df = spark.createDataFrame(pd.DataFrame({"url": urls}))
     rows = (
         canonicalize_frame(df, "url", "canon_url", sort_query=True)
         .withColumn("eligible", native_canon_eligible(F.col("url")))
         .collect()
     )
-    assert len(rows) == len(DIRTY_URLS)
+    assert len(rows) == len(urls)
     n_fast = 0
     for r in rows:
         expected = canonicalize_url(r["url"], sort_query=True)
@@ -66,12 +67,6 @@ def test_native_matches_python_without_sort(spark):
         assert r["canon_url"] == canonicalize_url(r["url"], sort_query=False)
     with pytest.raises(ValueError, match="single_scan"):
         canonicalize_frame(df, "url", single_scan=False)
-
-
-def test_host_frame_matches_python(spark):
-    df = spark.createDataFrame(pd.DataFrame({"url": DIRTY_URLS}))
-    for r in host_frame(df, "url", "h").collect():
-        assert r["h"] == host_of(r["url"]), r["url"]
 
 
 # ineligible and dirty shapes beyond DIRTY_URLS: percent-encoding, '+',
@@ -102,7 +97,7 @@ def test_filter_internal_matches_oracle_predicate(spark):
     from crawler_service_spark.oracle import _is_internal_link
 
     seed = "https://host.example.com/page/0"
-    urls = DIRTY_URLS + PASS_SHAPES + [
+    urls = DIRTY_URLS + PASS_SHAPES + HOST_SHAPES + [
         "https://host.example.com/ok/page",
         "https://host.example.com/doc.PDF",
         "http://host.example.com/other",        # http scheme, same netloc
@@ -197,6 +192,28 @@ def test_host_from_canon_matches_host_of(spark):
         assert set(HOST_SHAPES) <= {r["url"] for r in rows}
         for r in rows:
             assert r["host"] == host_of(r["url"]), r["url"]
+
+
+@pytest.mark.parametrize("sort", [False, True])
+def test_url_calls_match_python(spark, sort):
+    """`url_pass`, `canonicalize_frame` and `host_frame` over a raw URL
+    equal `canonicalize_url` / `host_of` row for row, on eligible,
+    ineligible and null URLs (a null URL: host "unknown", canon_url
+    null)."""
+    from crawler_service_spark.functions.urls import url_pass
+
+    urls = DIRTY_URLS + PASS_SHAPES + HOST_SHAPES + [None]
+    df = spark.createDataFrame(list(enumerate(urls)), "id long, url string")
+    want = {i: (canonicalize_url(u, sort), host_of(u))
+            for i, u in enumerate(urls)}
+    assert want[len(urls) - 1] == (None, "unknown")
+
+    def got(out):
+        return {r["id"]: (r["canon_url"], r["host"]) for r in out.collect()}
+
+    assert got(url_pass(df, "url", sort)) == want
+    assert got(host_frame(canonicalize_frame(df, "url", sort_query=sort),
+                          "url")) == want
 
 
 def test_seed_frontier_matches_python(spark, tmp_path):

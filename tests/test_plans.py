@@ -311,6 +311,50 @@ def test_filter_internal_plans_one_python_stage(spark):
     assert {"canon_url", "host", "path"} <= set(out.columns)
 
 
+def _evaluates_the_url_pass_udf(stage):
+    """True when the Python stage evaluates exactly the URL pass's one
+    UDF, whose output is `URL_PASS_COLS`."""
+    from crawler_service_spark.functions.urls import URL_PASS_COLS
+
+    udfs = stage.udfs()
+    return udfs.size() == 1 and list(
+        udfs.apply(0).dataType().fieldNames()) == URL_PASS_COLS
+
+
+@pytest.mark.parametrize("call", ["canonicalize_frame", "host_frame"])
+def test_nulled_url_calls_plan_one_python_stage(spark, call):
+    """`canonicalize_frame` and `host_frame` over a raw URL keep their
+    single-scan plan: one Python stage, evaluating the URL pass's UDF,
+    and no Union (the plan shape perfbench's frontier workload runs)."""
+    from crawler_service_spark.functions.urls import (
+        canonicalize_frame,
+        host_frame,
+    )
+
+    links = _clean_links(spark)
+    out = (canonicalize_frame(links, "url") if call == "canonicalize_frame"
+           else host_frame(links, "url"))
+    stages = _python_stages(out)
+    assert len(stages) == 1, explain_str(out)
+    assert _evaluates_the_url_pass_udf(stages[0]), explain_str(out)
+    assert "Union" not in {n.nodeName() for n, _ in _plan_nodes(out)}, \
+        explain_str(out)
+
+
+def test_hybrid_canonicalize_entry_plans_the_split_url_pass(spark):
+    """The registry's hybrid P1 runs `url_pass`: a Union of the native
+    branch and one Python stage over the ineligible rows only."""
+    from crawler_service_spark.queries import q_p1_canonicalize_hybrid
+
+    out = q_p1_canonicalize_hybrid(spark, SF_DIR)
+    stages = _python_stages(out)
+    assert len(stages) == 1, explain_str(out)
+    assert _evaluates_the_url_pass_udf(stages[0]), explain_str(out)
+    assert _over_ineligible_only(stages[0]), explain_str(out)
+    assert "Union" in {n.nodeName() for n, _ in _plan_nodes(out)}, \
+        explain_str(out)
+
+
 def _spy_dense_seq(monkeypatch):
     """Records each frame the engine hands to `assign_dense_seq` (the
     frame its checkpoint materializes)."""

@@ -345,7 +345,8 @@ def test_kill_anywhere_in_a_round_then_resume(
         frontier = eng.storage.read_table(spark, "frontier", kill_rnd)
         assert frontier.filter(F.col("discovery_seq") < seq_base).count()
     resumed = eng.crawl(resume=True)
-    assert resumed.round_counters[0]["round"] == kill_rnd
+    rounds = [c["round"] for c in resumed.round_counters]
+    assert rounds == list(range(len(rounds))) and len(rounds) > kill_rnd
 
     results = _oracle_results(cfg, corpus, deferral)
     want = sorted(

@@ -124,9 +124,11 @@ def test_resume_under_a_different_cap(spark, tmp_path):
     resumed_eng = engine("part")
     resumed = resumed_eng.crawl(resume=True)
     cores = spark.sparkContext.defaultParallelism
-    assert [c["parts"] for c in resumed.round_counters] == [
-        round_partitions(c["frontier"], cores, 32)
-        for c in resumed.round_counters]
+    counters = resumed.round_counters
+    assert [c["round"] for c in counters] == list(range(len(counters)))
+    assert counters[0]["parts"] == 2
+    assert [c["parts"] for c in counters[1:]] == [
+        round_partitions(c["frontier"], cores, 32) for c in counters[1:]]
     with open(os.path.join(resumed_eng.storage.table_path("frontier", 1),
                            "_bucket_spec.json")) as f:
         assert json.load(f)["buckets"] == 2

@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 
 from crawler_service_spark.config import CrawlConfig
 from crawler_service_spark.functions.urls import (
+    _url_pass_udf,
     canonicalize_url,
     host_of,
-    make_canon_udf,
     skip_extension_predicate,
 )
 from crawler_service_spark.oracle import _is_internal_link
@@ -74,12 +74,16 @@ def test_host_of():
 
 
 def test_udfs_match_python(spark):
+    """The URL pass's UDF, over every row: canon_url and host equal the
+    Python functions."""
     urls = [c[0] for c in REFERENCE_CASES + SORTED_CASES]
     df = spark.createDataFrame(pd.DataFrame({"url": urls}))
-    canon = make_canon_udf(sort_query=True)
-    got = df.select("url", canon("url").alias("c")).collect()
+    parts = _url_pass_udf(sort_query=True)("url")
+    got = df.select("url", parts["canon_url"].alias("c"),
+                    parts["host"].alias("h")).collect()
     for row in got:
         assert row["c"] == canonicalize_url(row["url"], True)
+        assert row["h"] == host_of(row["url"])
 
 
 def test_host_frame_matches_host_of(spark):
@@ -101,11 +105,11 @@ def test_host_frame_matches_host_of(spark):
 
 
 def test_host_frame_matches_udf_host(spark):
-    """ADVICE r03: pin host_frame's native fast path to the
-    url_parts_udf slow path byte-for-byte on the representative corpus —
+    """ADVICE r03: pin host_frame's native fast path to the URL pass's
+    UDF over every row, byte-for-byte on the representative corpus —
     ports, userinfo, mixed case, and ineligible shapes (percent
     escapes, '+', params, brackets) that force the pandas-UDF branch."""
-    from crawler_service_spark.functions.urls import host_frame, url_parts_udf
+    from crawler_service_spark.functions.urls import host_frame
 
     urls = [c[0] for c in REFERENCE_CASES + SORTED_CASES] + [
         "https://Host3.Example.COM:443/page/1",
@@ -121,7 +125,7 @@ def test_host_frame_matches_udf_host(spark):
     ]
     df = spark.createDataFrame(pd.DataFrame({"url": urls}))
     got = host_frame(df, "url", "host").select("url", "host")
-    want = df.select("url", url_parts_udf(F.col("url"))["host"].alias("host"))
+    want = df.select("url", _url_pass_udf(True)(F.col("url"))["host"].alias("host"))
     g = {r["url"]: r["host"] for r in got.collect()}
     w = {r["url"]: r["host"] for r in want.collect()}
     assert g == w
